@@ -154,14 +154,9 @@ def test_negative_coord_floor_binning(spark, accidents_csv):
     assert r2["bbox_label"] == "bbox_-80.5_35.0"
 
 
-def test_run_pipeline_end_to_end_and_idempotent(spark, accidents_csv, tmp_path):
-    """The DAG-equivalent job: ingest → OSM summary → merge → star, twice
-    through the same out_dir — the second run must be a no-op (memoized
-    stages skip, upserts insert zero)."""
-    from traffic_accidents_airflow_kafka_spark.pipeline.job import run_pipeline
-
-    # One OSM raw file for the bbox id=1 lands in (filename carries the
-    # label, matching the reference's per-file loop).
+def _osm_and_geocode(spark, tmp_path, postcode="28054"):
+    """One OSM raw file for bbox_35.0_-81.0 (the filename carries the
+    label, matching the reference's per-file loop) and its geocode row."""
     osm_dir = tmp_path / "osm"
     osm_dir.mkdir()
     (osm_dir / "bbox_35.0_-81.0_osm.csv").write_text(
@@ -170,12 +165,22 @@ def test_run_pipeline_end_to_end_and_idempotent(spark, accidents_csv, tmp_path):
         '35.0_-81.0,school,35.2,-80.8,"{\'amenity\': \'school\'}"\n'
     )
     geocode = spark.createDataFrame(
-        [("bbox_35.0_-81.0", "Gastonia", "Gaston County", "North Carolina", "28054")],
+        [("bbox_35.0_-81.0", "Gastonia", "Gaston County", "North Carolina", postcode)],
         "bbox_label string, city string, county string, state string, postcode string",
     )
+    return str(osm_dir / "bbox_*_osm.csv"), geocode
+
+
+def test_run_pipeline_end_to_end_and_idempotent(spark, accidents_csv, tmp_path):
+    """The DAG-equivalent job: ingest → OSM summary → merge → star, twice
+    through the same out_dir — the second run must be a no-op (memoized
+    stages skip, upserts insert zero)."""
+    from traffic_accidents_airflow_kafka_spark.pipeline.job import run_pipeline
+
+    osm_glob, geocode = _osm_and_geocode(spark, tmp_path)
     out = str(tmp_path / "warehouse")
 
-    r1 = run_pipeline(spark, accidents_csv, str(osm_dir / "bbox_*_osm.csv"), geocode, out)
+    r1 = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
     assert r1["ingest_wrote"] and r1["summary_wrote"]
     assert r1["ingest_rows"] == 2 and r1["ingest_parse_failures"] == 1
     assert r1["summary_rows"] == 1
@@ -184,8 +189,139 @@ def test_run_pipeline_end_to_end_and_idempotent(spark, accidents_csv, tmp_path):
     assert all(v == 0 for v in r1["fk_violations"].values())
     assert r1["dim_weather_rows"] == 1 and r1["dim_date_rows"] == 1
 
-    r2 = run_pipeline(spark, accidents_csv, str(osm_dir / "bbox_*_osm.csv"), geocode, out)
+    r2 = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
     assert not r2["ingest_wrote"] and not r2["summary_wrote"]  # memoized skip
     assert r2["final_new_rows"] == 0 and r2["fact_new_rows"] == 0  # upsert no-op
     assert r2["final_rows"] == 1 and r2["fact_rows"] == 1
     assert all(v == 0 for v in r2["fk_violations"].values())
+
+
+@pytest.fixture()
+def star_csv(tmp_path):
+    """Four accidents inside bbox_35.0_-81.0: id=2 has an unparseable
+    crash_date (NULL date-key parts), id=3 an empty alignment (a NULL
+    accident-type part); ids 1 and 4 share their date and accident type."""
+    rows = [
+        '1,07/29/2023 01:45:00 PM,SIGNAL,RAIN,DAYLIGHT,REAR END,DIVIDED,LEVEL,'
+        'WET,NONE,INJURY,Y,OVER $1500,FOLLOWED TOO CLOSELY,2,INCAPACITATING INJURY,'
+        "1.0,0.0,1.0,0.0,0.0,1.0,13,7,7,35.2,-80.9",
+        '2,not a date,STOP SIGN,CLEAR,DARKNESS,ANGLE,UNDIVIDED,CURVE,DRY,NONE,'
+        "NO INJURY,N,$500 OR LESS,WEATHER,1,NO INDICATION OF INJURY,"
+        "0.0,0.0,0.0,0.0,0.0,2.0,3,2,1,35.3,-80.6",
+        '3,07/30/2023 09:15:00 AM,SIGNAL,CLEAR,DAYLIGHT,TURNING,DIVIDED,,'
+        "DRY,NONE,NO INJURY,N,$500 OR LESS,NOT APPLICABLE,2,NO INDICATION OF INJURY,"
+        "0.0,0.0,0.0,0.0,0.0,2.0,9,1,7,35.4,-80.7",
+        '4,07/29/2023 01:45:00 PM,SIGNAL,SNOW,DAYLIGHT,REAR END,DIVIDED,LEVEL,'
+        'SNOW,NONE,INJURY,Y,OVER $1500,FOLLOWED TOO CLOSELY,2,INCAPACITATING INJURY,'
+        "1.0,0.0,1.0,0.0,0.0,1.0,13,7,7,35.1,-80.8",
+    ]
+    p = tmp_path / "star.csv"
+    p.write_text(ACC_CSV_HEADER + "\n" + "\n".join(rows) + "\n")
+    return str(p)
+
+
+def test_fact_fks_resolve_to_the_written_dims(spark, star_csv, tmp_path):
+    """Every non-null FK in ``fact_accidents`` names a row of the written
+    ``dim_*`` parquet, and that row carries the fact row's own natural key:
+    the concurrently written dims and the cached dims the fact was resolved
+    against are the same rows."""
+    from traffic_accidents_airflow_kafka_spark.pipeline import star_domain
+    from traffic_accidents_airflow_kafka_spark.pipeline.job import run_pipeline
+
+    osm_glob, geocode = _osm_and_geocode(spark, tmp_path)
+    out = str(tmp_path / "warehouse")
+    report = run_pipeline(spark, star_csv, osm_glob, geocode, out)
+    assert report["fact_rows"] == 4
+
+    keyed = star_domain._with_dim_keys(spark.read.parquet(f"{out}/accidents_final")).collect()
+    fact = spark.read.parquet(f"{out}/fact_accidents").collect()
+    unresolved = {}
+    for name, (cols, id_col) in star_domain.DIMENSIONS.items():
+        own = {r["id"]: tuple(r[c] for c in cols) for r in keyed}
+        dim_rows = spark.read.parquet(f"{out}/{name}").collect()
+        dim = {r[id_col]: tuple(r[c] for c in cols) for r in dim_rows}
+        assert len(dim) == len(dim_rows) == report[f"{name}_rows"]
+        for r in fact:
+            if r[id_col] is None:
+                unresolved.setdefault(name, []).append(r["id"])
+            else:
+                assert dim[r[id_col]] == own[r["id"]], (name, r["id"])
+    assert unresolved == {"dim_date": [2], "dim_accident_type": [3]}
+    assert report["fk_violations"] == {
+        name: len(unresolved.get(name, [])) for name in star_domain.DIMENSIONS
+    }
+
+
+def test_fk_report_matches_anti_join_counts_with_null_key_parts(spark, star_csv):
+    """The single-aggregate FK report equals one anti-join count per
+    dimension when natural keys carry NULL parts (unparseable date, empty
+    postcode, empty alignment). Both are null-unsafe: a key with a NULL
+    part matches no dimension row, even the dimension's own NULL row."""
+    from traffic_accidents_airflow_kafka_spark.operators.star import fk_violations
+    from traffic_accidents_airflow_kafka_spark.pipeline import star_domain
+
+    cleaned = ingest.clean_accidents(ingest.read_accidents_csv(spark, star_csv))
+    summary = spark.createDataFrame(
+        [{"bbox_label": "bbox_35.0_-81.0", **{c: 0 for c in BBOX_COUNT_COLUMNS},
+          "city": "Gastonia", "county": "Gaston County", "state": "North Carolina",
+          "postcode": ""}]
+    )
+    merged = merge.merge_accidents(cleaned, summary)
+    dims = star_domain.build_dimensions(merged)
+    keyed = star_domain._with_dim_keys(merged)
+    anti = {
+        name: fk_violations(keyed, dims[name], list(cols)).count()
+        for name, (cols, _id) in star_domain.DIMENSIONS.items()
+    }
+    assert anti == {
+        name: {"dim_date": 1, "dim_location": 4, "dim_accident_type": 1}.get(name, 0)
+        for name in star_domain.DIMENSIONS
+    }
+    assert star_domain.fk_integrity_report(merged, dims) == anti
+    fact = star_domain.build_fact(merged, dims)
+    assert star_domain.fk_integrity_report(merged, dims, fact=fact) == anti
+
+
+def _marker_job_id(sc, group: str) -> int:
+    """Submit a one-task job under ``group`` and read its id back from the
+    status store. Job ids are sequential, so two markers bracket the number
+    of jobs submitted between them."""
+    import time
+
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, group)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    deadline = time.monotonic() + 30
+    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+        assert time.monotonic() < deadline, "marker job never reached the status store"
+        time.sleep(0.05)
+    return max(ids)
+
+
+#: Spark jobs one replay of the fixture pipeline may submit (local[4],
+#: 8 shuffle partitions). With each dimension computed once and cached the
+#: replay measured 66 jobs; the ceiling is that plus 10%. Recomputing the
+#: dimensions for the fact join and again for 8 per-dimension FK
+#: anti-joins measured 129.
+REPLAY_JOB_CEILING = 72
+
+
+def test_run_pipeline_replay_job_count(spark, accidents_csv, tmp_path):
+    """Guard against dimension recomputation creeping back into the star
+    load: count the Spark jobs the replay submits."""
+    import uuid
+
+    from traffic_accidents_airflow_kafka_spark.pipeline.job import run_pipeline
+
+    osm_glob, geocode = _osm_and_geocode(spark, tmp_path)
+    out = str(tmp_path / "warehouse")
+    run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
+    sc, tag = spark.sparkContext, uuid.uuid4().hex
+    before = _marker_job_id(sc, f"before-{tag}")
+    report = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
+    jobs = _marker_job_id(sc, f"after-{tag}") - before - 1
+    assert report["fact_new_rows"] == 0
+    assert 0 < jobs <= REPLAY_JOB_CEILING, f"replay submitted {jobs} Spark jobs"

@@ -38,6 +38,19 @@ def test_upsert_append_inserts_only_novel_keys(spark, tmp_path):
     assert rows == {1: "a", 2: "b", 3: "c"}  # first writer wins, like the reference
 
 
+def test_upsert_append_leaves_a_caller_cached_batch_cached(spark, tmp_path):
+    """A batch its caller cached (to reuse after the upsert) keeps its
+    cache; only a batch the upsert cached itself is released."""
+    from pyspark import StorageLevel
+
+    batch = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string").persist()
+    try:
+        assert sinks.upsert_append(batch, str(tmp_path / "u"), "id", spark) == 2
+        assert batch.storageLevel != StorageLevel.NONE
+    finally:
+        batch.unpersist()
+
+
 def test_memoized_write_skips_existing(spark, tmp_path):
     path = str(tmp_path / "m")
     df1 = spark.range(5)
@@ -45,6 +58,17 @@ def test_memoized_write_skips_existing(spark, tmp_path):
     df2 = spark.range(99)
     assert sinks.memoized_write(df2, path) is False  # skipped: data exists
     assert spark.read.parquet(path).count() == 5
+
+
+def test_memoized_write_rewrites_an_uncommitted_dir(spark, tmp_path):
+    """A stage killed mid-commit leaves part files without Spark's
+    ``_SUCCESS`` marker; the retry must rewrite them, not trust them."""
+    path = tmp_path / "m"
+    spark.range(5).write.parquet(str(path))
+    os.remove(path / "_SUCCESS")
+    assert sinks.memoized_write(spark.range(7), str(path)) is True
+    assert (path / "_SUCCESS").exists()
+    assert spark.read.parquet(str(path)).count() == 7
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_path):

@@ -14,7 +14,7 @@ equivalents:
 - ``save_bucketed`` is the 100 TB lever for the catalog's one big-big join
   (lineitem ⨝ orders on orderkey): co-bucketing both sides by the join key
   removes the shuffle entirely.
-- ``memoized_write`` (S12) = idempotent skip-if-exists, replacing the
+- ``memoized_write`` (S12) = idempotent skip-if-committed, replacing the
   reference's os.path.exists guards (:170-173, 369-372).
 """
 
@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -100,24 +101,32 @@ def upsert_append(
         novel = new_rows.join(existing_keys, key, "left_anti")
     else:
         novel = new_rows
-    # Count once, write what was counted (avoid double computation).
-    novel = novel.persist()
+    # Count once, write what was counted (avoid double computation). A
+    # batch the caller already cached stays cached: its owner unpersists it.
+    owned = novel.storageLevel == StorageLevel.NONE
+    if owned:
+        novel = novel.persist()
     try:
         n = novel.count()
         if n:
             novel.write.mode("append").parquet(path)
     finally:
-        novel.unpersist()
+        if owned:
+            novel.unpersist()
     return n
 
 
 def memoized_write(
     df: DataFrame, path: str, fmt: str = "parquet"
 ) -> bool:
-    """S12 — idempotent skip: write only if ``path`` holds no data yet.
-    Returns True when a write happened. (The reference's
-    ``os.path.exists`` guard, made format-aware.)"""
-    if _path_has_data(path):
+    """S12 — idempotent skip: write only if ``path`` holds no committed
+    output yet. Returns True when a write happened. (The reference's
+    ``os.path.exists`` guard, made format-aware.)
+
+    Committed means Spark's ``_SUCCESS`` marker is present: the job
+    commit writes it last, so part files without it are the leftovers of
+    a killed write and get overwritten, never trusted."""
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
         return False
     if fmt == "parquet":
         df.write.mode("overwrite").parquet(path)
