@@ -6,7 +6,11 @@ and diffs the pivoted counts against its committed output
 ``data/processed/combined_bbox_summary_final.csv`` — the only golden data
 the reference ships (SURVEY.md §5 test plan item 2). Geocode columns come
 from that same committed file (the S9 static-lookup contract), so only
-the 16 count columns are computed and compared.
+the 16 count columns are computed and compared. Those tests skip when
+the reference checkout is absent;
+``test_bbox_summary_matches_pandas_reference_transform`` runs everywhere
+and diffs the summary against a pandas re-implementation of the
+reference's ``transform_bbox_data`` over planted edge cases.
 """
 
 from __future__ import annotations
@@ -39,8 +43,7 @@ def _golden_rows() -> dict[str, dict[str, int]]:
 
 @needs_reference_data
 def test_bbox_summary_matches_reference_golden_file(spark):
-    counts = osm.classified_counts(osm.read_osm_raw(spark, RAW_GLOB))
-    summary = osm.pivot_summary(counts)
+    summary = osm.bbox_counts(osm.read_osm_raw(spark, RAW_GLOB))
     got = {
         r["bbox_label"]: {c: r[c] for c in BBOX_COUNT_COLUMNS}
         for r in summary.collect()
@@ -60,8 +63,7 @@ def test_bbox_summary_matches_reference_golden_file(spark):
 
 @needs_reference_data
 def test_geocode_lookup_attach(spark):
-    counts = osm.classified_counts(osm.read_osm_raw(spark, RAW_GLOB))
-    summary = osm.pivot_summary(counts)
+    summary = osm.bbox_counts(osm.read_osm_raw(spark, RAW_GLOB))
     lookup = (
         spark.read.option("header", "true")
         .csv(GOLDEN)
@@ -78,6 +80,162 @@ def test_geocode_lookup_attach(spark):
     # Every row has non-null geo strings after the fillna contract.
     assert all(x["city"] is not None and x["postcode"] is not None for x in rows.values())
 
+
+#: Planted OSM nodes per bbox file: (category, tags cell). Tags carry
+#: quote-embedding, padded, mixed-case and malformed values; the
+#: crossings include ';' combinations and a known class outside the
+#: pinned vocabulary (pelican); parking_entrance and bus_stop nodes are
+#: not kept.
+_PLANTED_BBOXES = {
+    "bbox_35.0_-81.0": [
+        ("school", "{'amenity': 'school', 'name': 'Test School'}"),
+        ("school", "{'amenity': 'school'}"),
+        ("hospital", "{'amenity': 'hospital', 'name': 'St. Mary\\'s'}"),
+        ("traffic_signals", "{'highway': 'traffic_signals', 'traffic_signals': 'signal'}"),
+        ("traffic_signals", "{'highway': 'traffic_signals', 'traffic_signals': ' TRAFFIC_lights '}"),
+        ("traffic_signals", "{'traffic_signals': 'Pedestrian_Crossing'}"),
+        ("traffic_signals", "{'note': 'say \"stop\"', 'traffic_signals': 'emergency'}"),
+        ("traffic_signals", "{'traffic_signals': 'continuous_green'}"),
+        ("traffic_signals", "{'traffic_signals': 'signal;traffic_lights'}"),
+        ("traffic_signals", "{'traffic_signals': '\"signal\"'}"),
+        ("crossing", "{'highway': 'crossing', 'crossing': 'marked;unmarked'}"),
+        ("crossing", "{'crossing': ' Zebra ; Marked '}"),
+        ("crossing", "{'crossing': 'Zebra'}"),
+        ("crossing", "{'crossing': 'UNMARKED '}"),
+        ("crossing", "{'crossing': 'uncontrolled', 'name': 'O\\'Hare \"Gate\"'}"),
+        ("crossing", "{'crossing': 'pelican'}"),
+        ("crossing", "{'crossing': 'marked'"),
+        ("parking_entrance", "{'amenity': 'parking_entrance'}"),
+        ("bus_stop", "{'highway': 'bus_stop', 'crossing': 'zebra'}"),
+    ],
+    # Every kept node maps to an 'unknown' class.
+    "bbox_26.0_-80.5": [
+        ("traffic_signals", "{'highway': 'traffic_signals'}"),
+        ("traffic_signals", "{'traffic_signals': 'blinker'}"),
+        ("traffic_signals", "not a dict"),
+        ("crossing", "{'highway': 'crossing'}"),
+        ("crossing", "['crossing', 'zebra']"),
+        ("crossing", ""),
+        ("bus_stop", "{'highway': 'bus_stop'}"),
+    ],
+    # Only a class outside the pinned vocabulary: a row of zeros.
+    "bbox_-33.5_151.0": [
+        ("crossing", "{'crossing': 'pelican'}"),
+        ("parking_entrance", "{'amenity': 'parking_entrance'}"),
+    ],
+    # No kept node: absent from the summary.
+    "bbox_41.5_-88.5": [
+        ("parking_entrance", "{'amenity': 'parking_entrance'}"),
+        ("bus_stop", "{'highway': 'bus_stop'}"),
+    ],
+}
+
+
+def _reference_transform_bbox_data(paths: list[str]):
+    """The reference's ``transform_bbox_data`` counts in pandas, one file
+    at a time (dags/etl_crash_traffic.py:397-490): ``ast.literal_eval``
+    the tags, expand them to columns, ``fillna('unknown')``, keep four
+    categories, three group-counts, union, ``pivot_table``, then subset
+    to the pinned columns with fill 0. A cell ``ast.literal_eval`` cannot
+    read as a dict parses to ``{}``, the contract of ``parse_tags_exact``."""
+    import ast
+
+    import pandas as pd
+
+    from traffic_accidents_airflow_kafka_spark.functions.scalar import (
+        CROSSING_CLASSES,
+        TRAFFIC_SIGNAL_CLASSES,
+    )
+
+    def literal_dict(cell):
+        try:
+            d = ast.literal_eval(cell) if isinstance(cell, str) else {}
+        except (ValueError, SyntaxError):
+            return {}
+        return d if isinstance(d, dict) else {}
+
+    def map_traffic_signal(x):
+        x = str(x).strip().lower()
+        return x if x in TRAFFIC_SIGNAL_CLASSES else "unknown"
+
+    def map_crossing(x):
+        x = str(x).strip().lower()
+        if ";" in x:
+            return "combinations"
+        return x if x in CROSSING_CLASSES else "unknown"
+
+    def group_count(df, group, value):
+        counts = df.groupby(value).size().reset_index(name="count")
+        return counts.rename(columns={value: "value"}).assign(group=group)
+
+    parts = []
+    for path in paths:
+        df = pd.read_csv(path)
+        tags = df["tags"].apply(literal_dict).apply(pd.Series)
+        df = pd.concat([df.drop(columns=["tags", "bbox_label"]), tags], axis=1)
+        df = df.reindex(columns=df.columns.union(["traffic_signals", "crossing"], sort=False))
+        df = df.fillna("unknown")
+        df = df[df["category"].isin(osm.KEPT_CATEGORIES)]
+        ts = df[df["category"] == "traffic_signals"].copy()
+        ts["traffic_signals"] = ts["traffic_signals"].apply(map_traffic_signal)
+        cr = df[df["category"] == "crossing"].copy()
+        cr["crossing"] = cr["crossing"].apply(map_crossing)
+        combined = pd.concat([
+            group_count(df[df["category"].isin(["school", "hospital"])], "category", "category"),
+            group_count(ts, "traffic_signals", "traffic_signals"),
+            group_count(cr, "crossing", "crossing"),
+        ])
+        combined["bbox_label"] = os.path.basename(path).removesuffix("_osm.csv")
+        parts.append(combined)
+    pivot = pd.concat(parts).pivot_table(
+        index="bbox_label", columns=["group", "value"], values="count", fill_value=0
+    )
+    pivot.columns = [f"{g}_{v}" for g, v in pivot.columns]
+    return pivot.reindex(columns=list(BBOX_COUNT_COLUMNS), fill_value=0).astype(int)
+
+
+def test_bbox_summary_matches_pandas_reference_transform(spark, tmp_path):
+    """In-repo parity for the OSM summary: ``build_bbox_summary`` equals
+    the pandas re-implementation of the reference's transform on planted
+    edge cases, with int count columns and the geocode fill contract."""
+    import pandas as pd
+
+    from pyspark.sql.types import IntegerType
+
+    paths = []
+    for label, nodes in _PLANTED_BBOXES.items():
+        path = tmp_path / f"{label}_osm.csv"
+        pd.DataFrame(
+            [(label.removeprefix("bbox_"), cat, 35.0, -80.0, tags) for cat, tags in nodes],
+            columns=["bbox_label", "category", "latitude", "longitude", "tags"],
+        ).to_csv(path, index=False)
+        paths.append(str(path))
+    geocode = spark.createDataFrame(
+        [("bbox_35.0_-81.0", "Gastonia", "Gaston County", "North Carolina", "28054")],
+        "bbox_label string, city string, county string, state string, postcode string",
+    )
+
+    summary = osm.build_bbox_summary(spark, str(tmp_path / "bbox_*_osm.csv"), geocode)
+    assert all(summary.schema[c].dataType == IntegerType() for c in BBOX_COUNT_COLUMNS)
+    rows = {r["bbox_label"]: r for r in summary.collect()}
+    want = _reference_transform_bbox_data(paths)
+
+    assert sorted(rows) == sorted(want.index) == [
+        "bbox_-33.5_151.0", "bbox_26.0_-80.5", "bbox_35.0_-81.0"
+    ]
+    for label, counts in want.iterrows():
+        assert {c: rows[label][c] for c in BBOX_COUNT_COLUMNS} == counts.to_dict(), label
+    assert want.loc["bbox_26.0_-80.5"].to_dict() == {
+        c: {"traffic_signals_unknown": 3, "crossing_unknown": 3}.get(c, 0)
+        for c in BBOX_COUNT_COLUMNS
+    }
+    assert not want.loc["bbox_-33.5_151.0"].any()
+    assert (rows["bbox_35.0_-81.0"]["city"], rows["bbox_35.0_-81.0"]["postcode"]) == (
+        "Gastonia", "28054"
+    )
+    assert (rows["bbox_26.0_-80.5"]["city"], rows["bbox_26.0_-80.5"]["postcode"]) == (
+        "unknown", ""
+    )
 
 ACC_CSV_HEADER = (
     "id,crash_date,traffic_control_device,weather_condition,lighting_condition,"
@@ -170,6 +328,19 @@ def _osm_and_geocode(spark, tmp_path, postcode="28054"):
     )
     return str(osm_dir / "bbox_*_osm.csv"), geocode
 
+
+
+def test_osm_reader_pushes_the_category_filter_into_the_scan(spark, tmp_path):
+    """The bbox label comes from the scan's deterministic file metadata, so
+    the kept-category filter reaches the CSV scan rather than running
+    above a per-row label projection."""
+    osm_glob, _ = _osm_and_geocode(spark, tmp_path)
+    raw = osm.read_osm_raw(spark, osm_glob)
+    assert raw.columns[-1] == "bbox_label"
+    kept = raw.filter(F.col("category").isin(*osm.KEPT_CATEGORIES))
+    plan = kept._jdf.queryExecution().executedPlan().toString()
+    assert "PushedFilters: [In(category," in plan, plan
+    assert {r["bbox_label"] for r in kept.collect()} == {"bbox_35.0_-81.0"}
 
 def test_run_pipeline_end_to_end_and_idempotent(spark, accidents_csv, tmp_path):
     """The DAG-equivalent job: ingest → OSM summary → merge → star, twice
@@ -308,6 +479,11 @@ def _marker_job_id(sc, group: str) -> int:
 #: anti-joins measured 129.
 REPLAY_JOB_CEILING = 72
 
+#: Spark jobs the OSM summary's memoized write may submit on the fixture
+#: (local[4], 8 shuffle partitions). The one-aggregate summary measured 3;
+#: three group-counts unioned and pivoted measured 7.
+SUMMARY_WRITE_JOBS = 3
+
 
 def test_run_pipeline_replay_job_count(spark, accidents_csv, tmp_path):
     """Guard against dimension recomputation creeping back into the star
@@ -325,3 +501,19 @@ def test_run_pipeline_replay_job_count(spark, accidents_csv, tmp_path):
     jobs = _marker_job_id(sc, f"after-{tag}") - before - 1
     assert report["fact_new_rows"] == 0
     assert 0 < jobs <= REPLAY_JOB_CEILING, f"replay submitted {jobs} Spark jobs"
+
+
+def test_bbox_summary_write_job_count(spark, tmp_path):
+    """Guard the one-pass OSM summary: count the Spark jobs its memoized
+    write submits on the fixture files."""
+    import uuid
+
+    from traffic_accidents_airflow_kafka_spark.pipeline.job import memoized_write
+
+    osm_glob, geocode = _osm_and_geocode(spark, tmp_path)
+    summary = osm.build_bbox_summary(spark, osm_glob, geocode)
+    sc, tag = spark.sparkContext, uuid.uuid4().hex
+    before = _marker_job_id(sc, f"before-{tag}")
+    assert memoized_write(summary, str(tmp_path / "bbox_summary"))
+    jobs = _marker_job_id(sc, f"after-{tag}") - before - 1
+    assert 0 < jobs <= SUMMARY_WRITE_JOBS, f"summary write submitted {jobs} Spark jobs"

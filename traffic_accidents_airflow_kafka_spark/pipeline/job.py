@@ -22,6 +22,12 @@ Task semantics match the scheduler contract the reference relied on
   row_number surrogate keys), so overwrite ≡ ON CONFLICT DO NOTHING
   at a fraction of the bookkeeping.
 
+The DAG's two source branches, extract → transform (the accidents
+ingest) and api_extract → api_transform (the OSM summary), share no
+input and meet only at merge, so they run concurrently: one driver
+thread each, both joined before merge. Each still ends on its own
+materialized parquet.
+
 The star load computes each of the 8 dimensions once (the reference's
 ``load_hechos``: build the lookups, then resolve every fact row): the
 dims are cached, written concurrently (one thread each, row counts
@@ -31,7 +37,7 @@ a null-FK count over that resolved fact — both read it. Everything
 cached is released before the job returns.
 
 Scale: each stage is one declarative plan (scan-project ingest,
-pivot-with-pinned-vocabulary enrichment, broadcast merge join,
+one-aggregate enrichment, broadcast merge join,
 broadcast star joins); the orchestration layer moves no data — it only
 sequences actions and records row counts, exactly what an external
 scheduler (Airflow, cron) would do around spark-submit.
@@ -40,6 +46,7 @@ scheduler (Airflow, cron) would do around spark-submit.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -62,25 +69,15 @@ def run_pipeline(
     S9 static lookup standing in for the reference's rate-limited
     Nominatim loop (dags/etl_crash_traffic.py:378-381).
     """
-    report: dict = {}
-
-    # Task 1-2: extract + transform (CSV → clean typed wide rows).
-    clean_path = f"{out_dir}/accidents_clean"
-    cleaned = ingest.clean_accidents(ingest.read_accidents_csv(spark, accidents_csv))
-    report["ingest_wrote"] = memoized_write(cleaned, clean_path)
-    cleaned = spark.read.parquet(clean_path)
-    counts = cleaned.agg(
-        F.count(F.lit(1)).alias("rows"), F.sum("crash_parse_failed").alias("failed")
-    ).first()
-    report["ingest_rows"] = counts["rows"]
-    report["ingest_parse_failures"] = counts["failed"] or 0
-
-    # Task 3-4: api_extract/api_transform (OSM raw → enriched summary).
-    summary_path = f"{out_dir}/bbox_summary"
-    summary = osm.build_bbox_summary(spark, osm_glob, geocode_lookup)
-    report["summary_wrote"] = memoized_write(summary, summary_path)
-    summary = spark.read.parquet(summary_path)
-    report["summary_rows"] = summary.count()
+    # Tasks 1-4: the DAG's two source branches meet only at merge, so
+    # they run side by side, one thread each.
+    branches = (
+        partial(_ingest, spark, accidents_csv, f"{out_dir}/accidents_clean"),
+        partial(_summarize, spark, osm_glob, geocode_lookup, f"{out_dir}/bbox_summary"),
+    )
+    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+        (cleaned, ingested), (summary, summarized) = pool.map(lambda branch: branch(), branches)
+    report: dict = {**ingested, **summarized}
 
     # Task 5: merge (broadcast inner join) + incremental upsert of the
     # wide table (J4 + S6 — the ON CONFLICT DO NOTHING load).
@@ -110,6 +107,32 @@ def run_pipeline(
         for dim in dims.values():
             dim.unpersist()
     return report
+
+
+def _ingest(spark: SparkSession, accidents_csv: str, path: str) -> tuple[DataFrame, dict]:
+    """Tasks 1-2, extract + transform: CSV → clean typed wide rows, read
+    back from ``path`` with its row and parse-failure counts."""
+    cleaned = ingest.clean_accidents(ingest.read_accidents_csv(spark, accidents_csv))
+    wrote = memoized_write(cleaned, path)
+    cleaned = spark.read.parquet(path)
+    counts = cleaned.agg(
+        F.count(F.lit(1)).alias("rows"), F.sum("crash_parse_failed").alias("failed")
+    ).first()
+    return cleaned, {
+        "ingest_wrote": wrote,
+        "ingest_rows": counts["rows"],
+        "ingest_parse_failures": counts["failed"] or 0,
+    }
+
+
+def _summarize(
+    spark: SparkSession, osm_glob: str, geocode_lookup: DataFrame, path: str
+) -> tuple[DataFrame, dict]:
+    """Tasks 3-4, api_extract + api_transform: OSM raw → enriched
+    summary, read back from ``path`` with its row count."""
+    wrote = memoized_write(osm.build_bbox_summary(spark, osm_glob, geocode_lookup), path)
+    summary = spark.read.parquet(path)
+    return summary, {"summary_wrote": wrote, "summary_rows": summary.count()}
 
 
 def _write_dim(dim: DataFrame, path: str) -> int:

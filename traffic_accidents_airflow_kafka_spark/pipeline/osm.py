@@ -2,22 +2,25 @@
 
 Spark-native re-expression of ``transform_bbox_data``
 (dags/etl_crash_traffic.py:363-494): tags parse (F11) → fillna 'unknown'
-(F9) → category isin filter (P4) → enum normalization (F7) → three
-group-counts (A1) → union (U1) → pivot with PINNED columns + fill 0 (A2)
-→ geocode lookup join (S9, broadcast).
+(F9) → category isin filter (P4) → enum normalization (F7) → per-bbox
+counts under the PINNED 16-column vocabulary with fill 0 (A1 + A2) →
+geocode lookup join (S9, broadcast).
 
 Where the reference loops file-by-file in pandas, this reads ALL bbox
 files in one scan (Spark's CSV source globs; the per-file bbox label is
-recovered from ``input_file_name``) — the whole summary is one job.
+recovered from the scan's ``_metadata.file_name``). The reference's three
+group-counts → union → pivot collapse into one pass: the kept nodes are
+scanned once, their tags parsed once, and one aggregate counts each
+node under its summary column.
 
 Geocoding (Nominatim, 1 req/s — dags/etl_crash_traffic.py:377-381) stays
 out of the engine per SURVEY §2.1 S9: the lookup table (36 keys) arrives
 as a static DataFrame and broadcast-joins on bbox_label, never a per-row
 HTTP call.
 
-Scale: counts are map-side partial aggregates over (label, group, value);
-the pivot shuffles |bboxes| × 16 cells; the geocode join broadcasts 36
-rows. At 1000 executors the only real data motion is the raw scan.
+Scale: the aggregate is a map-side partial over bbox_label, so the
+shuffle moves |bboxes| × 16 counts; the geocode join broadcasts 36 rows.
+At 1000 executors the only real data motion is the raw scan.
 """
 
 from __future__ import annotations
@@ -36,7 +39,11 @@ def read_osm_raw(spark: SparkSession, path_glob: str) -> DataFrame:
     """One scan over every bbox CSV; bbox_label derived from the FILENAME
     (``bbox_35.0_-81.0_osm.csv`` → ``bbox_35.0_-81.0``), matching the
     reference's per-file loop (:401-402) — the in-file bbox_label column
-    lacks the prefix and is ignored, as in the reference."""
+    lacks the prefix and is ignored, as in the reference.
+
+    The label comes from the deterministic ``_metadata.file_name`` column
+    (not ``input_file_name()``), so a downstream filter on ``category``
+    is pushed into the CSV scan."""
     raw = (
         spark.read.schema(OSM_RAW_SCHEMA)
         .option("header", "true")
@@ -44,21 +51,24 @@ def read_osm_raw(spark: SparkSession, path_glob: str) -> DataFrame:
         # reference's files); Spark's default escape is backslash.
         .option("escape", '"')
         .csv(path_glob)
-        .withColumn(
-            "file_label",
-            F.regexp_replace(
-                F.element_at(F.split(F.input_file_name(), "/"), -1),
-                "_osm\\.csv$",
-                "",
-            ),
-        )
     )
-    return raw.drop("bbox_label").withColumnRenamed("file_label", "bbox_label")
+    label = F.regexp_replace(F.col("_metadata.file_name"), "_osm\\.csv$", "")
+    return raw.select(
+        *[c for c in raw.columns if c != "bbox_label"], label.alias("bbox_label")
+    )
 
 
-def classified_counts(raw: DataFrame) -> DataFrame:
-    """Long-form (bbox_label, group, value, count) — the three grouped
-    counts unioned (dags/etl_crash_traffic.py:434-463).
+def bbox_counts(raw: DataFrame) -> DataFrame:
+    """One row per bbox with at least one kept node, one int column per
+    PINNED summary column (dags/etl_crash_traffic.py:434-490).
+
+    Each kept node gets its summary column name from one CASE —
+    ``category_<school|hospital>``, ``traffic_signals_<class>`` or
+    ``crossing_<class>`` — and one aggregate counts the nodes under each
+    name. This equals the reference's three group-counts → union →
+    pivot_table → subset-to-pinned-columns with fill 0 (SURVEY §7 pivot
+    determinism): a class no node maps to counts 0, and a name outside
+    the vocabulary is counted nowhere.
 
     The reference expands ALL tag keys then fills NaN with 'unknown'
     (:427-430); only the 'traffic_signals' and 'crossing' keys matter for
@@ -66,53 +76,29 @@ def classified_counts(raw: DataFrame) -> DataFrame:
     identical without materializing a column per key.
 
     Uses :func:`parse_tags_exact` (the Arrow-batched ast.literal_eval
-    escape hatch) — the golden-file gate requires parity on tag values
-    that embed quote characters, which the native translate+from_json
-    path cannot express (SURVEY §2.7).
+    escape hatch), once per kept node — the golden-file gate requires
+    parity on tag values that embed quote characters, which the native
+    translate+from_json path cannot express (SURVEY §2.7).
     """
-    tags = fn.parse_tags_exact("tags")
-    base = raw.filter(F.col("category").isin(*KEPT_CATEGORIES)).select(
-        "bbox_label",
-        "category",
-        F.coalesce(fn.map_key(tags, "traffic_signals"), F.lit("unknown")).alias("ts_val"),
-        F.coalesce(fn.map_key(tags, "crossing"), F.lit("unknown")).alias("cr_val"),
+    kept = raw.filter(F.col("category").isin(*KEPT_CATEGORIES)).select(
+        "bbox_label", "category", fn.parse_tags_exact("tags").alias("tags")
     )
-    sh = (
-        base.filter(F.col("category").isin("school", "hospital"))
-        .groupBy("bbox_label", F.col("category").alias("value"))
-        .agg(F.count(F.lit(1)).alias("count"))
-        .withColumn("group", F.lit("category"))
-    )
-    ts = (
-        base.filter(F.col("category") == "traffic_signals")
-        .groupBy("bbox_label", fn.map_traffic_signal("ts_val").alias("value"))
-        .agg(F.count(F.lit(1)).alias("count"))
-        .withColumn("group", F.lit("traffic_signals"))
-    )
-    cr = (
-        base.filter(F.col("category") == "crossing")
-        .groupBy("bbox_label", fn.map_crossing("cr_val").alias("value"))
-        .agg(F.count(F.lit(1)).alias("count"))
-        .withColumn("group", F.lit("crossing"))
-    )
-    return sh.unionByName(ts).unionByName(cr)
 
+    def tag(key: str):
+        return F.coalesce(fn.map_key("tags", key), F.lit("unknown"))
 
-def pivot_summary(counts: DataFrame) -> DataFrame:
-    """Pivot to one row per bbox with the PINNED 16-column vocabulary
-    (SURVEY §7 pivot determinism: the reference's pivot_table emits only
-    observed columns then defensively subsets, :488-490; pinning gives the
-    full fact-table schema with zeros for missing classes — and skips
-    Spark's values-discovery scan)."""
-    keyed = counts.withColumn("col_name", F.concat_ws("_", "group", "value"))
-    pivoted = (
-        keyed.groupBy("bbox_label")
-        .pivot("col_name", list(BBOX_COUNT_COLUMNS))
-        .agg(F.first("count"))
-        .na.fill(0, list(BBOX_COUNT_COLUMNS))
+    category = F.col("category")
+    col_name = (
+        F.when(
+            category == "traffic_signals",
+            F.concat(F.lit("traffic_signals_"), fn.map_traffic_signal(tag("traffic_signals"))),
+        )
+        .when(category == "crossing", F.concat(F.lit("crossing_"), fn.map_crossing(tag("crossing"))))
+        .otherwise(F.concat(F.lit("category_"), category))
     )
-    return pivoted.select(
-        "bbox_label", *[F.col(c).cast("int").alias(c) for c in BBOX_COUNT_COLUMNS]
+    named = kept.select("bbox_label", col_name.alias("col_name"))
+    return named.groupBy("bbox_label").agg(
+        *[F.count(F.when(F.col("col_name") == c, 1)).cast("int").alias(c) for c in BBOX_COUNT_COLUMNS]
     )
 
 
@@ -135,4 +121,4 @@ def build_bbox_summary(
     spark: SparkSession, path_glob: str, geocode_lookup: DataFrame
 ) -> DataFrame:
     """The full OSM enrichment stage (the api_transform task, one plan)."""
-    return attach_geocode(pivot_summary(classified_counts(read_osm_raw(spark, path_glob))), geocode_lookup)
+    return attach_geocode(bbox_counts(read_osm_raw(spark, path_glob)), geocode_lookup)
