@@ -146,12 +146,13 @@ def test_bucketed_enrichment_no_exchange_on_orders_side(spark, sf_dir, tmp_path)
 
 def test_fanout_broadcast_fallback_is_loud_and_correct(spark, sf_dir, monkeypatch, capfd):
     """When the bucketed build fails with one of the guarded classes,
-    the drain must (a) still produce exactly the batch answers through
-    the broadcast join, (b) say so on stderr, and (c) record
-    orders_join_path='broadcast' in the run metadata — the r9
-    silent-fallback bug, now pinned from the failure side."""
+    the drain must (a) still produce all 7 dashboards equal to their
+    DuckDB oracles through the broadcast join, (b) say so on stderr, and
+    (c) record orders_join_path='broadcast' in the run metadata — the r9
+    silent-fallback bug, pinned from the failure side."""
     from pyspark.errors import AnalysisException
 
+    from tests.oracle_utils import assert_frames_match, duckdb_conn
     from traffic_accidents_airflow_kafka_spark.plans.registry import (
         QUERY_REGISTRY,
     )
@@ -180,3 +181,11 @@ def test_fanout_broadcast_fallback_is_loud_and_correct(spark, sf_dir, monkeypatc
     )
     want = sorted(tuple(r) for r in batch_df.collect())
     assert got == want
+    con = duckdb_conn(sf_dir)
+    try:
+        assert set(merged) == set(fanout.streaming.TOPICS)
+        for topic, df in merged.items():
+            want = con.execute(QUERY_REGISTRY[topic].oracle).df()
+            assert_frames_match(df.select(*want.columns).toPandas(), want, topic)
+    finally:
+        con.close()

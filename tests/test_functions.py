@@ -31,6 +31,20 @@ def test_map_traffic_signal(spark, raw, expected):
     assert _one(spark, fn.map_traffic_signal(F.lit(raw))) == expected
 
 
+def test_norm_str_strips_what_python_strip_strips(spark):
+    """``norm_str`` is ``str(x).strip().lower()``: every character
+    ``str.isspace`` accepts is stripped from both ends (Spark's ``trim``
+    strips only spaces), and nothing else is, inner whitespace included."""
+    spaces = [chr(c) for c in range(0x110000) if chr(c).isspace()]
+    others = ["​", "﻿", "\x1b", "\x7f", "x"]
+    values = [v for c in spaces + others for v in (c, f"{c}{c}Ab\t c{c}{c}")]
+    df = spark.createDataFrame([(v,) for v in values], "v string")
+    got = [r["n"] for r in df.select(fn.norm_str("v").alias("n")).collect()]
+    assert got == [v.strip().lower() for v in values]
+    assert _one(spark, fn.map_traffic_signal(F.lit("\tsignal"))) == "signal"
+    assert _one(spark, fn.map_traffic_signal(F.lit(" signal\n"))) == "signal"
+
+
 @pytest.mark.parametrize(
     "raw,expected",
     [

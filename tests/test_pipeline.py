@@ -82,10 +82,10 @@ def test_geocode_lookup_attach(spark):
 
 
 #: Planted OSM nodes per bbox file: (category, tags cell). Tags carry
-#: quote-embedding, padded, mixed-case and malformed values; the
-#: crossings include ';' combinations and a known class outside the
-#: pinned vocabulary (pelican); parking_entrance and bus_stop nodes are
-#: not kept.
+#: quote-embedding, padded (spaces, a raw tab, an escaped newline),
+#: mixed-case and malformed values; the crossings include ';'
+#: combinations and a known class outside the pinned vocabulary
+#: (pelican); parking_entrance and bus_stop nodes are not kept.
 _PLANTED_BBOXES = {
     "bbox_35.0_-81.0": [
         ("school", "{'amenity': 'school', 'name': 'Test School'}"),
@@ -98,6 +98,8 @@ _PLANTED_BBOXES = {
         ("traffic_signals", "{'traffic_signals': 'continuous_green'}"),
         ("traffic_signals", "{'traffic_signals': 'signal;traffic_lights'}"),
         ("traffic_signals", "{'traffic_signals': '\"signal\"'}"),
+        ("traffic_signals", "{'traffic_signals': '\tSignal'}"),
+        ("traffic_signals", "{'traffic_signals': 'traffic_lights\\n'}"),
         ("crossing", "{'highway': 'crossing', 'crossing': 'marked;unmarked'}"),
         ("crossing", "{'crossing': ' Zebra ; Marked '}"),
         ("crossing", "{'crossing': 'Zebra'}"),
@@ -352,7 +354,7 @@ def test_run_pipeline_end_to_end_and_idempotent(spark, accidents_csv, tmp_path):
     out = str(tmp_path / "warehouse")
 
     r1 = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
-    assert r1["ingest_wrote"] and r1["summary_wrote"]
+    assert r1["ingest_wrote"] and r1["summary_wrote"] and r1["star_loaded"]
     assert r1["ingest_rows"] == 2 and r1["ingest_parse_failures"] == 1
     assert r1["summary_rows"] == 1
     assert r1["final_new_rows"] == 1 and r1["final_rows"] == 1  # id=2 outside bbox
@@ -365,6 +367,120 @@ def test_run_pipeline_end_to_end_and_idempotent(spark, accidents_csv, tmp_path):
     assert r2["final_new_rows"] == 0 and r2["fact_new_rows"] == 0  # upsert no-op
     assert r2["final_rows"] == 1 and r2["fact_rows"] == 1
     assert all(v == 0 for v in r2["fk_violations"].values())
+    # Tasks 5-7 are served by the stage-file memo: same values, no load.
+    assert r2 == {**_replay_of(r1), "star_loaded": False}
+
+
+def _star_tables(spark, out: str) -> dict[str, list]:
+    """Sorted rows of every table tasks 5-7 write."""
+    from traffic_accidents_airflow_kafka_spark.pipeline.star_domain import DIMENSIONS
+
+    return {
+        name: sorted(map(tuple, spark.read.parquet(f"{out}/{name}").collect()))
+        for name in ("accidents_final", *DIMENSIONS, "fact_accidents")
+    }
+
+
+def _replay_of(report: dict) -> dict:
+    """``report`` as a replay over its own ``out_dir`` that loads the star
+    again must read: no stage rewritten, no new row."""
+    return {**report, "ingest_wrote": False, "summary_wrote": False,
+            "final_new_rows": 0, "fact_new_rows": 0}
+
+
+def test_star_memo_misses_when_a_dim_loses_its_success_marker(spark, accidents_csv, tmp_path):
+    """A dimension without ``_SUCCESS`` is uncommitted: the next run loads
+    the star again, rewrites identical dims and records a fresh marker."""
+    from traffic_accidents_airflow_kafka_spark.pipeline.job import run_pipeline
+
+    osm_glob, geocode = _osm_and_geocode(spark, tmp_path)
+    out = str(tmp_path / "warehouse")
+    r1 = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
+    tables = _star_tables(spark, out)
+    os.remove(f"{out}/dim_weather/_SUCCESS")
+
+    r2 = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
+    assert r2 == _replay_of(r1)
+    assert os.path.exists(f"{out}/dim_weather/_SUCCESS")
+    assert _star_tables(spark, out) == tables
+    assert not run_pipeline(spark, accidents_csv, osm_glob, geocode, out)["star_loaded"]
+
+
+def test_star_memo_misses_after_an_append_to_the_wide_table(spark, accidents_csv, tmp_path):
+    """A row appended to ``accidents_final`` outside the job changes its
+    snapshot: the next run rebuilds the dims, resolves the new row into
+    the fact and counts it."""
+    from traffic_accidents_airflow_kafka_spark.pipeline.job import run_pipeline
+
+    osm_glob, geocode = _osm_and_geocode(spark, tmp_path)
+    out = str(tmp_path / "warehouse")
+    r1 = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
+    final = spark.read.parquet(f"{out}/accidents_final")
+    extra = final.withColumn("id", F.lit(99)).withColumn("weather_condition", F.lit("SNOW"))
+    extra.select(*final.columns).localCheckpoint().write.mode("append").parquet(
+        f"{out}/accidents_final"
+    )
+
+    r2 = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
+    assert r2["star_loaded"] and r2["final_new_rows"] == 0
+    assert r2["final_rows"] == 2 and r2["dim_weather_rows"] == r1["dim_weather_rows"] + 1
+    assert r2["fact_new_rows"] == 1 and r2["fact_rows"] == 2
+    assert all(v == 0 for v in r2["fk_violations"].values())
+    fact = {r["id"] for r in spark.read.parquet(f"{out}/fact_accidents").collect()}
+    assert fact == {1, 99}
+
+
+def test_star_memo_ignores_a_marker_with_another_layout(spark, accidents_csv, tmp_path):
+    """The marker's key holds the declared star layout: a marker recorded
+    under another layout is not trusted, the star is loaded again and the
+    marker rewritten under the current one."""
+    import json
+
+    from traffic_accidents_airflow_kafka_spark.pipeline.job import STAR_MEMO, run_pipeline
+
+    osm_glob, geocode = _osm_and_geocode(spark, tmp_path)
+    out = str(tmp_path / "warehouse")
+    r1 = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
+    tables = _star_tables(spark, out)
+    marker_path = os.path.join(out, STAR_MEMO)
+    with open(marker_path) as fh:
+        marker = json.load(fh)
+    marker["key"]["layout"]["fact_measures"].pop()
+    with open(marker_path, "w") as fh:
+        json.dump(marker, fh)
+
+    r2 = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
+    assert r2 == _replay_of(r1)
+    assert _star_tables(spark, out) == tables
+    assert not run_pipeline(spark, accidents_csv, osm_glob, geocode, out)["star_loaded"]
+
+
+def test_star_memo_records_nothing_for_a_failed_load(spark, accidents_csv, tmp_path, monkeypatch):
+    """A load that raises before its FK report completes leaves no marker
+    (a stale one is dropped before any stage file is touched), and the
+    retry loads the star again."""
+    from traffic_accidents_airflow_kafka_spark.pipeline import job
+
+    osm_glob, geocode = _osm_and_geocode(spark, tmp_path)
+    out = str(tmp_path / "warehouse")
+    marker_path = os.path.join(out, job.STAR_MEMO)
+    r1 = job.run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
+    assert os.path.exists(marker_path)
+    os.remove(f"{out}/dim_date/_SUCCESS")
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("injected FK report failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(job, "fk_integrity_report", fail)
+        with pytest.raises(RuntimeError, match="injected"):
+            job.run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
+    assert not os.path.exists(marker_path)
+
+    r2 = job.run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
+    assert r2 == _replay_of(r1)
+    assert os.path.exists(marker_path)
+    assert not job.run_pipeline(spark, accidents_csv, osm_glob, geocode, out)["star_loaded"]
 
 
 @pytest.fixture()
@@ -473,11 +589,17 @@ def _marker_job_id(sc, group: str) -> int:
 
 
 #: Spark jobs one replay of the fixture pipeline may submit (local[4],
-#: 8 shuffle partitions). With each dimension computed once and cached the
-#: replay measured 66 jobs; the ceiling is that plus 10%. Recomputing the
-#: dimensions for the fact join and again for 8 per-dimension FK
-#: anti-joins measured 129.
-REPLAY_JOB_CEILING = 72
+#: 8 shuffle partitions). With tasks 5-7 served by the stage-file memo the
+#: replay measured 6 jobs (the two source branches' read-backs and
+#: counts); the ceiling is that plus one.
+REPLAY_JOB_CEILING = 7
+
+#: Spark jobs a replay that loads the star again (its memo marker gone)
+#: may submit, same fixture and session. With each dimension computed
+#: once and cached it measured 66; the ceiling is that plus 10%.
+#: Recomputing the dimensions for the fact join and again for 8
+#: per-dimension FK anti-joins measured 129.
+STAR_RELOAD_JOB_CEILING = 72
 
 #: Spark jobs the OSM summary's memoized write may submit on the fixture
 #: (local[4], 8 shuffle partitions). The one-aggregate summary measured 3;
@@ -486,21 +608,29 @@ SUMMARY_WRITE_JOBS = 3
 
 
 def test_run_pipeline_replay_job_count(spark, accidents_csv, tmp_path):
-    """Guard against dimension recomputation creeping back into the star
-    load: count the Spark jobs the replay submits."""
+    """Count the Spark jobs a replay submits: on the memo hit, and again
+    with the marker gone, so dimension recomputation cannot creep back
+    into the star load either."""
     import uuid
 
-    from traffic_accidents_airflow_kafka_spark.pipeline.job import run_pipeline
+    from traffic_accidents_airflow_kafka_spark.pipeline.job import STAR_MEMO, run_pipeline
 
     osm_glob, geocode = _osm_and_geocode(spark, tmp_path)
     out = str(tmp_path / "warehouse")
     run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
-    sc, tag = spark.sparkContext, uuid.uuid4().hex
-    before = _marker_job_id(sc, f"before-{tag}")
-    report = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
-    jobs = _marker_job_id(sc, f"after-{tag}") - before - 1
-    assert report["fact_new_rows"] == 0
-    assert 0 < jobs <= REPLAY_JOB_CEILING, f"replay submitted {jobs} Spark jobs"
+
+    def replay_jobs():
+        sc, tag = spark.sparkContext, uuid.uuid4().hex
+        before = _marker_job_id(sc, f"before-{tag}")
+        report = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
+        assert report["final_new_rows"] == report["fact_new_rows"] == 0
+        return report["star_loaded"], _marker_job_id(sc, f"after-{tag}") - before - 1
+
+    loaded, jobs = replay_jobs()
+    assert not loaded and 0 < jobs <= REPLAY_JOB_CEILING, f"replay submitted {jobs} Spark jobs"
+    os.remove(os.path.join(out, STAR_MEMO))
+    loaded, jobs = replay_jobs()
+    assert loaded and 0 < jobs <= STAR_RELOAD_JOB_CEILING, f"star reload submitted {jobs} jobs"
 
 
 def test_bbox_summary_write_job_count(spark, tmp_path):

@@ -397,3 +397,62 @@ def test_stream_asset_base_survives_missing_passwd_entry(spark, monkeypatch):
 
     assert f"uid{os.getuid()}" in base
     assert spark.sparkContext.applicationId in base
+
+
+def _write_events(path, unit: str) -> None:
+    """A two-row events.parquet whose ``ts`` is stored at ``unit``."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ts = [dt.datetime(2024, 1, 1, 12, 0, 0, 123456), dt.datetime(2024, 1, 2, 8, 30)]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(ts, pa.timestamp(unit)),
+            "user_id": pa.array([7, 8], pa.int64()),
+            "event_type": ["click", "view"],
+            "value": [1.0, 2.0],
+            "props": ["{}", "{}"],
+        }),
+        path,
+    )
+
+
+def test_events_schema_follows_a_rewrite_in_place(spark, tmp_path):
+    """events.parquet rewritten at the same path with the other ``ts``
+    unit: the sniffed stream schema follows the file, and the streamed
+    timestamps stay exact (a stale type reads micros as nanos, 1000×
+    off)."""
+    import datetime as dt
+
+    from pyspark.sql.types import LongType, TimestampNTZType
+
+    sf = str(tmp_path)
+    want = (dt.datetime(2024, 1, 1, 12, 0, 0, 123456), dt.datetime(2024, 1, 2, 8, 30))
+    for unit, ts_type in (("ns", LongType()), ("us", TimestampNTZType())):
+        _write_events(str(tmp_path / "events.parquet"), unit)
+        events = streaming.stream_events(spark, sf)
+        assert streaming._events_stream_schema(spark, sf)["ts"].dataType == ts_type, unit
+        got = streaming.run_available_now(
+            events.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")), spark
+        ).first()
+        assert (got["lo"], got["hi"]) == want, unit
+
+
+def test_fanout_schema_memo_follows_a_rewrite_in_place(spark, tmp_path):
+    """The fan-out's footer-sniff memo is keyed on the file's state: a
+    table rewritten in place with another column set is sniffed again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from traffic_accidents_airflow_kafka_spark.streaming import fanout
+
+    path = str(tmp_path / "orders.parquet")
+    pq.write_table(pa.table({"o_orderkey": [1, 2]}), path)
+    assert fanout._table_schema(spark, str(tmp_path), "orders").names == ["o_orderkey"]
+    pq.write_table(pa.table({"o_orderkey": [1, 2], "o_orderpriority": ["1-URGENT", "5-LOW"]}), path)
+    assert fanout._table_schema(spark, str(tmp_path), "orders").names == [
+        "o_orderkey", "o_orderpriority"
+    ]

@@ -73,9 +73,16 @@ def time_of_day(ts: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 
 
+#: Python's ``str.strip()`` set as a Java regex: Unicode White_Space
+#: (``(?U)\s``) plus U+001C-U+001F, which ``str.isspace`` also counts.
+#: Spark's ``trim`` strips only U+0020.
+_PY_STRIP = r"(?U)^[\s\x1C-\x1F]+|[\s\x1C-\x1F]+$"
+
+
 def norm_str(col: Column | str) -> Column:
-    """F5 — `str(v).strip().lower()` (dags/etl_crash_traffic.py:386, 392)."""
-    return F.lower(F.trim(_c(col)))
+    """F5 — `str(v).strip().lower()` (dags/etl_crash_traffic.py:386, 392):
+    strips every whitespace character, tabs and newlines included."""
+    return F.lower(F.regexp_replace(_c(col), _PY_STRIP, ""))
 
 
 #: Known traffic-signal classes (dags/etl_crash_traffic.py:383-389).

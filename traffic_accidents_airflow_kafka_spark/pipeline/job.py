@@ -17,10 +17,22 @@ Task semantics match the scheduler contract the reference relied on
   (``upsert_append`` — the distributed ``INSERT … ON CONFLICT DO
   NOTHING``): replaying the same input writes zero new rows, so the
   whole job is idempotent end to end.
-- Dimensions are rebuilt-and-overwritten each run: they are
-  deterministic functions of the wide table (dropDuplicates +
+- Dimensions are rebuilt-and-overwritten each run they are loaded:
+  they are deterministic functions of the wide table (dropDuplicates +
   row_number surrogate keys), so overwrite ≡ ON CONFLICT DO NOTHING
   at a fraction of the bookkeeping.
+- Tasks 5-7 (merge upsert, dimension writes, fact upsert, FK report)
+  are **memoized on their stage files**. A completed load writes
+  ``_star_load.json`` under ``out_dir`` (temp file, then rename): the
+  declared star layout, a ``file_snapshot`` of all 12 stage
+  directories they read or write, and the report values they produced.
+  When the layout and every snapshot still match, the job returns those
+  values with zero new rows (``star_loaded: False``) and runs no Spark
+  job for them. This is exact: the tasks are a deterministic function
+  of those files, and after a completed load ``accidents_final`` holds
+  every merged id, so a re-run would append nothing, rewrite identical
+  dims and count the same FK misses. A crash, rewrite, append or
+  deleted ``_SUCCESS`` changes a snapshot, and the full path runs.
 
 The DAG's two source branches, extract → transform (the accidents
 ingest) and api_extract → api_transform (the OSM summary), share no
@@ -45,15 +57,33 @@ scheduler (Airflow, cron) would do around spark-submit.
 
 from __future__ import annotations
 
+import contextlib
+import json
+import os
+import tempfile
 from concurrent.futures import ThreadPoolExecutor
 from functools import partial
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.sinks import memoized_write, observed_metrics, upsert_append
+from ..sources.sinks import file_snapshot, memoized_write, observed_metrics, upsert_append
 from . import ingest, merge, osm
-from .star_domain import DIMENSIONS, build_dimensions, build_fact, fk_integrity_report
+from .star_domain import (
+    DIMENSIONS,
+    FACT_MEASURES,
+    build_dimensions,
+    build_fact,
+    fk_integrity_report,
+)
+
+#: The stage directories tasks 5-7 read or write; their snapshot keys the
+#: star-load memo.
+STAR_STAGES = ("accidents_clean", "bbox_summary", "accidents_final", *DIMENSIONS,
+               "fact_accidents")
+
+#: The star-load memo's marker file under ``out_dir``.
+STAR_MEMO = "_star_load.json"
 
 
 def run_pipeline(
@@ -79,6 +109,24 @@ def run_pipeline(
         (cleaned, ingested), (summary, summarized) = pool.map(lambda branch: branch(), branches)
     report: dict = {**ingested, **summarized}
 
+    # Tasks 5-7 are a deterministic function of their stage files: a
+    # replay over unchanged files returns what the last completed load
+    # recorded, and runs no Spark job.
+    recorded = _recorded_star_load(out_dir)
+    if recorded is not None:
+        return {**report, "star_loaded": False, "final_new_rows": 0, "fact_new_rows": 0,
+                **recorded}
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(os.path.join(out_dir, STAR_MEMO))
+    loaded = _star_load(spark, cleaned, summary, out_dir)
+    _record_star_load(out_dir, {k: v for k, v in loaded.items() if not k.endswith("_new_rows")})
+    return {**report, "star_loaded": True, **loaded}
+
+
+def _star_load(spark: SparkSession, cleaned: DataFrame, summary: DataFrame, out_dir: str) -> dict:
+    """Tasks 5-7: merge + upsert of the wide table, the 8 dimension
+    writes, the fact upsert and the FK report."""
+    report: dict = {}
     # Task 5: merge (broadcast inner join) + incremental upsert of the
     # wide table (J4 + S6 — the ON CONFLICT DO NOTHING load).
     final_path = f"{out_dir}/accidents_final"
@@ -107,6 +155,44 @@ def run_pipeline(
         for dim in dims.values():
             dim.unpersist()
     return report
+
+
+def _star_key(out_dir: str) -> dict | None:
+    """The star-load memo key: the declared star layout and a snapshot of
+    every stage tasks 5-7 read or write (JSON-normalized, as the marker
+    stores it); None when any stage is missing or uncommitted."""
+    snapshot = {name: file_snapshot(f"{out_dir}/{name}") for name in STAR_STAGES}
+    if None in snapshot.values():
+        return None
+    layout = {"dimensions": DIMENSIONS, "fact_measures": FACT_MEASURES,
+              "final_columns": merge.FINAL_COLUMNS}
+    return json.loads(json.dumps({"layout": layout, "snapshot": snapshot}))
+
+
+def _recorded_star_load(out_dir: str) -> dict | None:
+    """The values the marker recorded, if its key matches the stages as
+    they stand; None otherwise."""
+    key = _star_key(out_dir)
+    if key is None:
+        return None
+    try:
+        with open(os.path.join(out_dir, STAR_MEMO)) as fh:
+            marker = json.load(fh)
+    except (OSError, ValueError):
+        return None
+    return marker["values"] if marker.get("key") == key else None
+
+
+def _record_star_load(out_dir: str, values: dict) -> None:
+    """Write the marker atomically (temp file, then rename): a crash
+    leaves the old marker or none, never a partial one."""
+    key = _star_key(out_dir)
+    if key is None:
+        return
+    fd, tmp = tempfile.mkstemp(prefix=STAR_MEMO, dir=out_dir)
+    with os.fdopen(fd, "w") as fh:
+        json.dump({"key": key, "values": values}, fh)
+    os.replace(tmp, os.path.join(out_dir, STAR_MEMO))
 
 
 def _ingest(spark: SparkSession, accidents_csv: str, path: str) -> tuple[DataFrame, dict]:

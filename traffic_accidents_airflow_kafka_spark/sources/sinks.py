@@ -16,6 +16,9 @@ equivalents:
   removes the shuffle entirely.
 - ``memoized_write`` (S12) = idempotent skip-if-committed, replacing the
   reference's os.path.exists guards (:170-173, 369-372).
+- ``file_snapshot`` keys the memos over files (the ETL star-load memo,
+  the streaming footer sniffs), so a rewritten file is never served
+  from a stale entry.
 """
 
 from __future__ import annotations
@@ -135,6 +138,30 @@ def memoized_write(
     else:
         raise ValueError(f"unsupported format: {fmt}")
     return True
+
+
+def file_snapshot(path: str) -> tuple | None:
+    """The memo key for what is stored at ``path``: ``(name, size,
+    mtime_ns)`` of the file itself, or of every data file under a
+    directory. Any rewrite, append or delete changes it.
+
+    ``None`` — a miss, never stored as a key — when ``path`` is missing or
+    is a directory without Spark's ``_SUCCESS`` marker: uncommitted
+    output is never trusted (the ``memoized_write`` rule)."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        return None
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for name in names:
+            if not name.startswith(("_", ".")):
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(files))
 
 
 def _path_has_data(path: str) -> bool:

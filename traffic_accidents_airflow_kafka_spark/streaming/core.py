@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..sources.sinks import file_snapshot
+
 #: The 7 result topics (kafka/consumer.py:6-14).
 TOPICS = (
     "transit_signals_by_state",
@@ -48,13 +50,13 @@ TOPICS = (
     "crossings_vs_lesions",
 )
 
-#: (normalized events path) -> sniffed ``ts`` type. The footer sniff is
-#: a driver-side read costing 0.14-0.26 s, and ~12 streaming entries pay
-#: it on EVERY plan build; a parquet file's physical ``ts`` type cannot
-#: change for a given path within a session, so the resolved type — pure
-#: metadata, never data or results — memoizes per path (r11, guide §7.3
-#: driver-side planning cost; the artifact-memo pattern's metadata-only
-#: sibling).
+#: (normalized events path, ``file_snapshot``) -> sniffed ``ts`` type.
+#: The footer sniff is a driver-side read costing 0.14-0.26 s, and ~12
+#: streaming entries pay it on EVERY plan build; the resolved type — pure
+#: metadata, never data or results — memoizes per file state, so a file
+#: rewritten in place (e.g. with the other timestamp unit) is sniffed
+#: again instead of served a stale type (guide §7.3 driver-side planning
+#: cost; the artifact-memo pattern's metadata-only sibling).
 _EVENTS_TS_TYPE: dict = {}
 
 
@@ -67,14 +69,15 @@ def _events_stream_schema(spark: SparkSession, sf_dir: str) -> StructType:
     Hard-coding either silently corrupts the other by 1000× — so sniff the
     batch reader's resolved schema (footer-only, no data scan) and declare
     the same ``ts`` type for the stream; the sniffed type memoizes per
-    normalized path (see ``_EVENTS_TS_TYPE``).
+    path and file state (see ``_EVENTS_TS_TYPE``).
     """
     path = os.path.join(sf_dir, "events.parquet")
-    key = os.path.normpath(os.path.abspath(path))
+    key = (os.path.normpath(os.path.abspath(path)), file_snapshot(path))
     ts_type = _EVENTS_TS_TYPE.get(key)
     if ts_type is None:
         ts_type = spark.read.parquet(path).schema["ts"].dataType
-        _EVENTS_TS_TYPE[key] = ts_type
+        if key[1] is not None:
+            _EVENTS_TS_TYPE[key] = ts_type
     fields = [
         StructField("event_id", LongType()),
         StructField("ts", ts_type),

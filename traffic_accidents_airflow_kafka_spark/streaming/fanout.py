@@ -56,6 +56,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.scalar import dec2 as _dec
+from ..sources.sinks import file_snapshot
 from ..sources.tables import load_table
 from . import core as streaming
 
@@ -72,9 +73,9 @@ FANOUT_SOURCES = ("orders", "lineitem", "events")
 #: per-topic movers, not the total).
 _LAST_RUN_META: dict = {}
 
-#: (normalized table path) -> resolved parquet schema — driver-side
-#: footer sniffs memoized per path (r11; metadata only, see
-#: run_topics_fanout).
+#: (normalized table path, ``file_snapshot``) -> resolved parquet
+#: schema — driver-side footer sniffs memoized per file state (metadata
+#: only, see ``_table_schema``).
 _SCHEMA_MEMO: dict = {}
 
 
@@ -286,6 +287,22 @@ def enrich_lineitem_bucketed(
     )
 
 
+def _table_schema(spark: SparkSession, sf_dir: str, table: str):
+    """``{table}.parquet``'s resolved schema. The footer sniff costs
+    0.14-0.26 s and repeats on every fan-out run (guide §7.3 driver-side
+    planning cost), so the StructType — metadata only — memoizes per
+    path and file state: a file rewritten in place is sniffed again (the
+    streaming/core.py events-type memo, same key)."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    key = (os.path.normpath(os.path.abspath(path)), file_snapshot(path))
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        if key[1] is not None:
+            _SCHEMA_MEMO[key] = schema
+    return schema
+
+
 def run_topics_fanout(
     spark: SparkSession, sf_dir: str
 ) -> dict[str, DataFrame]:
@@ -294,23 +311,8 @@ def run_topics_fanout(
     EXACTLY the batch topic queries' schemas. Merged results are eagerly
     materialized (localCheckpoint) so the sink directories can be
     reclaimed before the caller consumes them."""
-    # r11 (guide §7.3 driver-side planning cost): the two footer sniffs
-    # cost 0.14-0.26 s each and repeat on every run; a file's schema
-    # cannot change for a given path within a session, so the resolved
-    # StructType — metadata only — memoizes per normalized path (the
-    # streaming/core.py events-type memo, same pattern).
-    def _sniff(table: str):
-        key = os.path.normpath(
-            os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-        )
-        schema = _SCHEMA_MEMO.get(key)
-        if schema is None:
-            schema = spark.read.parquet(key).schema
-            _SCHEMA_MEMO[key] = schema
-        return schema
-
-    orders_schema = _sniff("orders")
-    li_schema = _sniff("lineitem")
+    orders_schema = _table_schema(spark, sf_dir, "orders")
+    li_schema = _table_schema(spark, sf_dir, "lineitem")
     schemas = {"orders": orders_schema, "lineitem": li_schema}
     ev_schema = (
         "event_id long, user_id long, event_type string, value double, "
@@ -358,8 +360,8 @@ def run_topics_fanout(
             prepare_bucketed_orders(spark, sf_dir)
         orders_static = None  # bucketed path active
         _LAST_RUN_META["orders_join_path"] = "bucketed"
-    except (AnalysisException, OSError, Py4JJavaError) as exc:  # pragma: no cover —
-        # warehouse-unwritable: LOCATION_ALREADY_EXISTS-class catalog
+    except (AnalysisException, OSError, Py4JJavaError) as exc:
+        # Warehouse-unwritable: LOCATION_ALREADY_EXISTS-class catalog
         # errors surface as AnalysisException, local file ops as
         # OSError, and a FAILED WRITE JOB (disk full, permissions on an
         # executor) as Py4JJavaError wrapping java.io.IOException — the
