@@ -441,18 +441,17 @@ def test_events_schema_follows_a_rewrite_in_place(spark, tmp_path):
         assert (got["lo"], got["hi"]) == want, unit
 
 
-def test_fanout_schema_memo_follows_a_rewrite_in_place(spark, tmp_path):
-    """The fan-out's footer-sniff memo is keyed on the file's state: a
-    table rewritten in place with another column set is sniffed again."""
+def test_table_schema_memo_follows_a_rewrite_in_place(spark, tmp_path):
+    """The footer-sniff memo the fan-out reads its source schemas from is
+    keyed on the file's state: a table rewritten in place with another
+    column set is sniffed again."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from traffic_accidents_airflow_kafka_spark.streaming import fanout
-
     path = str(tmp_path / "orders.parquet")
     pq.write_table(pa.table({"o_orderkey": [1, 2]}), path)
-    assert fanout._table_schema(spark, str(tmp_path), "orders").names == ["o_orderkey"]
+    assert streaming.table_schema(spark, str(tmp_path), "orders").names == ["o_orderkey"]
     pq.write_table(pa.table({"o_orderkey": [1, 2], "o_orderpriority": ["1-URGENT", "5-LOW"]}), path)
-    assert fanout._table_schema(spark, str(tmp_path), "orders").names == [
+    assert streaming.table_schema(spark, str(tmp_path), "orders").names == [
         "o_orderkey", "o_orderpriority"
     ]

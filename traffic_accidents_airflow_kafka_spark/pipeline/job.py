@@ -116,6 +116,8 @@ def run_pipeline(
     if recorded is not None:
         return {**report, "star_loaded": False, "final_new_rows": 0, "fact_new_rows": 0,
                 **recorded}
+    # The marker never outlives the files it describes: drop it before
+    # the load touches any of them.
     with contextlib.suppress(FileNotFoundError):
         os.remove(os.path.join(out_dir, STAR_MEMO))
     loaded = _star_load(spark, cleaned, summary, out_dir)

@@ -50,14 +50,29 @@ TOPICS = (
     "crossings_vs_lesions",
 )
 
-#: (normalized events path, ``file_snapshot``) -> sniffed ``ts`` type.
-#: The footer sniff is a driver-side read costing 0.14-0.26 s, and ~12
-#: streaming entries pay it on EVERY plan build; the resolved type — pure
-#: metadata, never data or results — memoizes per file state, so a file
-#: rewritten in place (e.g. with the other timestamp unit) is sniffed
-#: again instead of served a stale type (guide §7.3 driver-side planning
-#: cost; the artifact-memo pattern's metadata-only sibling).
-_EVENTS_TS_TYPE: dict = {}
+#: (normalized table path, ``file_snapshot``) -> resolved parquet schema.
+#: The footer sniff is a driver-side read costing 0.14-0.26 s, paid by ~12
+#: streaming entries on EVERY plan build and by every fan-out run; the
+#: schema — pure metadata, never data or results — memoizes per file
+#: state, so a file rewritten in place (e.g. with the other timestamp
+#: unit) is sniffed again instead of served a stale schema (guide §7.3
+#: driver-side planning cost; the artifact-memo pattern's metadata-only
+#: sibling).
+_SCHEMA_MEMO: dict = {}
+
+
+def table_schema(spark: SparkSession, sf_dir: str, table: str) -> StructType:
+    """``{table}.parquet``'s schema as the batch reader resolves it
+    (footer only, no data scan), memoized per path and file state (see
+    ``_SCHEMA_MEMO``)."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    key = (os.path.normpath(os.path.abspath(path)), file_snapshot(path))
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        if key[1] is not None:
+            _SCHEMA_MEMO[key] = schema
+    return schema
 
 
 def _events_stream_schema(spark: SparkSession, sf_dir: str) -> StructType:
@@ -66,18 +81,10 @@ def _events_stream_schema(spark: SparkSession, sf_dir: str) -> StructType:
     readStream requires an explicit schema, but the generator's ``ts``
     physical type has varied across environments (TIMESTAMP(NANOS) → long
     under ``nanosAsLong``; TIMESTAMP(MICROS) → native timestamp_ntz).
-    Hard-coding either silently corrupts the other by 1000× — so sniff the
-    batch reader's resolved schema (footer-only, no data scan) and declare
-    the same ``ts`` type for the stream; the sniffed type memoizes per
-    path and file state (see ``_EVENTS_TS_TYPE``).
+    Hard-coding either silently corrupts the other by 1000× — so declare
+    the ``ts`` type the batch reader resolves (``table_schema``).
     """
-    path = os.path.join(sf_dir, "events.parquet")
-    key = (os.path.normpath(os.path.abspath(path)), file_snapshot(path))
-    ts_type = _EVENTS_TS_TYPE.get(key)
-    if ts_type is None:
-        ts_type = spark.read.parquet(path).schema["ts"].dataType
-        if key[1] is not None:
-            _EVENTS_TS_TYPE[key] = ts_type
+    ts_type = table_schema(spark, sf_dir, "events")["ts"].dataType
     fields = [
         StructField("event_id", LongType()),
         StructField("ts", ts_type),

@@ -56,7 +56,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.scalar import dec2 as _dec
-from ..sources.sinks import file_snapshot
 from ..sources.tables import load_table
 from . import core as streaming
 
@@ -72,11 +71,6 @@ FANOUT_SOURCES = ("orders", "lineitem", "events")
 #: overlap and do not sum to the drain wall time — they adjudicate
 #: per-topic movers, not the total).
 _LAST_RUN_META: dict = {}
-
-#: (normalized table path, ``file_snapshot``) -> resolved parquet
-#: schema — driver-side footer sniffs memoized per file state (metadata
-#: only, see ``_table_schema``).
-_SCHEMA_MEMO: dict = {}
 
 
 def last_run_metadata() -> dict:
@@ -287,22 +281,6 @@ def enrich_lineitem_bucketed(
     )
 
 
-def _table_schema(spark: SparkSession, sf_dir: str, table: str):
-    """``{table}.parquet``'s resolved schema. The footer sniff costs
-    0.14-0.26 s and repeats on every fan-out run (guide §7.3 driver-side
-    planning cost), so the StructType — metadata only — memoizes per
-    path and file state: a file rewritten in place is sniffed again (the
-    streaming/core.py events-type memo, same key)."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    key = (os.path.normpath(os.path.abspath(path)), file_snapshot(path))
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        if key[1] is not None:
-            _SCHEMA_MEMO[key] = schema
-    return schema
-
-
 def run_topics_fanout(
     spark: SparkSession, sf_dir: str
 ) -> dict[str, DataFrame]:
@@ -311,8 +289,8 @@ def run_topics_fanout(
     EXACTLY the batch topic queries' schemas. Merged results are eagerly
     materialized (localCheckpoint) so the sink directories can be
     reclaimed before the caller consumes them."""
-    orders_schema = _table_schema(spark, sf_dir, "orders")
-    li_schema = _table_schema(spark, sf_dir, "lineitem")
+    orders_schema = streaming.table_schema(spark, sf_dir, "orders")
+    li_schema = streaming.table_schema(spark, sf_dir, "lineitem")
     schemas = {"orders": orders_schema, "lineitem": li_schema}
     ev_schema = (
         "event_id long, user_id long, event_type string, value double, "
