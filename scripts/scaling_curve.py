@@ -28,7 +28,7 @@ from traffic_accidents_airflow_kafka_spark.operators.similarity import (  # noqa
 )
 from traffic_accidents_airflow_kafka_spark.plans import QUERY_REGISTRY  # noqa: E402
 from traffic_accidents_airflow_kafka_spark.plans.llm import (  # noqa: E402
-    clear_sq8_artifact_cache,
+    evict_artifacts,
 )
 from traffic_accidents_airflow_kafka_spark.session import get_spark  # noqa: E402
 
@@ -40,7 +40,7 @@ def _clear_memo_caches() -> None:
     first warmup."""
     clear_bpe_merge_cache()
     clear_ivf_centroid_cache()
-    clear_sq8_artifact_cache()
+    evict_artifacts()
 
 SF_DIRS = [
     ("0.001", "/root/testdata/sf0.001"),

@@ -46,7 +46,7 @@ from traffic_accidents_airflow_kafka_spark.operators.similarity import (  # noqa
 from traffic_accidents_airflow_kafka_spark.plans import QUERY_REGISTRY  # noqa: E402
 from traffic_accidents_airflow_kafka_spark.plans.llm import (  # noqa: E402
     artifact_keys,
-    clear_sq8_artifact_cache,
+    evict_artifacts,
 )
 from traffic_accidents_airflow_kafka_spark.session import get_spark  # noqa: E402
 
@@ -186,7 +186,7 @@ def build_sf1(spark: SparkSession, rebuild: bool = False) -> None:
 def _clear_memo_caches() -> None:
     clear_bpe_merge_cache()
     clear_ivf_centroid_cache()
-    clear_sq8_artifact_cache()
+    evict_artifacts()
 
 
 def _time(

@@ -1,17 +1,30 @@
 """Topic fan-out streaming job (streaming/fanout.py): convergence under
 at-least-once redelivery — the guarantee the batch-id-keyed overwrite
-sinks exist for. The value-hash parity of the normal path is pinned by
-the stream_topics_fanout catalog oracle; this test exercises the path
-the oracle can't: a replayed batch id."""
+sinks exist for — and exact merging of partials across micro-batches.
+The value-hash parity of the normal path is pinned by the
+stream_topics_fanout catalog oracle; these tests exercise the paths the
+oracle can't: a replayed batch id, and one micro-batch split into two."""
 
 from __future__ import annotations
 
+import pytest
 
-def test_fanout_converges_under_redelivery(spark, sf_dir, monkeypatch):
-    """Deliver every micro-batch TWICE (foreachBatch's at-least-once
-    contract made concrete) — the batch=<id> overwrite sinks must
-    rewrite identical partials instead of double-appending, so the
-    merged dashboards still equal the batch topic plans exactly."""
+
+@pytest.mark.parametrize("delivery", ["replay", "split"])
+def test_fanout_converges_under_redelivery(spark, sf_dir, monkeypatch, delivery):
+    """``replay``: deliver every micro-batch TWICE (foreachBatch's
+    at-least-once contract made concrete) — the batch=<id> overwrite
+    sinks must rewrite identical partials instead of double-appending,
+    so the merged dashboards still equal the batch topic plans exactly.
+
+    ``split``: deliver every micro-batch as two disjoint batch ids (on
+    ``pmod(hash(payload), 2)``), so each topic's merge adds partials of
+    different batches: topic 6 re-distincts partkeys both halves share,
+    and topic 1 rolls up from each half's own topic-5 partial. All 7
+    dashboards must equal their DuckDB oracles."""
+    import pyspark.sql.functions as F
+
+    from tests.oracle_utils import assert_frames_match, duckdb_conn
     from traffic_accidents_airflow_kafka_spark.plans.registry import (
         QUERY_REGISTRY,
     )
@@ -24,26 +37,41 @@ def test_fanout_converges_under_redelivery(spark, sf_dir, monkeypatch):
             batch_fn(batch, batch_id)
             batch_fn(batch, batch_id)  # the redelivery
 
-        return orig(result, spark_, twice, **kw)
+        def halves(batch, batch_id):
+            half = F.pmod(F.hash("payload"), F.lit(2))
+            for h in (0, 1):
+                batch_fn(batch.filter(half == h), 2 * batch_id + h)
+
+        return orig(result, spark_, twice if delivery == "replay" else halves, **kw)
 
     monkeypatch.setattr(fanout.streaming, "run_foreach_batch", redelivering)
     merged = fanout.run_topics_fanout(spark, sf_dir)
 
-    # One dim-join topic and one binned-events topic cover both partial
-    # shapes (additive sums and grain-partial re-distinct included via
-    # hospitals below).
-    for topic in (
-        "transit_signals_by_state",
-        "accidents_by_time",
-        "hospitals_schools_vs_lesions",
-    ):
-        batch_df = QUERY_REGISTRY[topic].fn(spark, sf_dir)
-        got = sorted(
-            tuple(r)
-            for r in merged[topic].select(*batch_df.columns).collect()
-        )
-        want = sorted(tuple(r) for r in batch_df.collect())
-        assert got == want, f"{topic} diverged under redelivery"
+    if delivery == "replay":
+        # One dim-join topic and one binned-events topic cover both
+        # partial shapes (additive sums and grain-partial re-distinct
+        # included via hospitals below).
+        for topic in (
+            "transit_signals_by_state",
+            "accidents_by_time",
+            "hospitals_schools_vs_lesions",
+        ):
+            batch_df = QUERY_REGISTRY[topic].fn(spark, sf_dir)
+            got = sorted(
+                tuple(r)
+                for r in merged[topic].select(*batch_df.columns).collect()
+            )
+            want = sorted(tuple(r) for r in batch_df.collect())
+            assert got == want, f"{topic} diverged under redelivery"
+    else:
+        con = duckdb_conn(sf_dir)
+        try:
+            assert set(merged) == set(fanout.streaming.TOPICS)
+            for topic, df in merged.items():
+                want = con.execute(QUERY_REGISTRY[topic].oracle).df()
+                assert_frames_match(df.select(*want.columns).toPandas(), want, topic)
+        finally:
+            con.close()
 
     # Run metadata records WHICH topic-3 join path was active (the r9
     # silent-fallback lesson: a failed bucketed build must be visible
@@ -53,6 +81,45 @@ def test_fanout_converges_under_redelivery(spark, sf_dir, monkeypatch):
     assert meta["orders_join_path"] == "bucketed", meta
     assert set(meta["topic_sec"]) == set(fanout.streaming.TOPICS)
     assert all(v > 0 for v in meta["topic_sec"].values()), meta
+
+
+def test_full_tmpfs_keeps_streaming_dirs_on_disk(spark, sf_dir, monkeypatch, capfd):
+    """A tmpfs below the free-space floor must not receive the fan-out's
+    sinks or any availableNow checkpoint: they go to the default temp
+    dir instead, with one stderr line saying so."""
+    import os
+    import tempfile
+
+    from traffic_accidents_airflow_kafka_spark.streaming import core, fanout
+
+    real_statvfs, real_mkdtemp = os.statvfs, tempfile.mkdtemp
+
+    def statvfs(path):
+        st = real_statvfs(path)
+        if not str(path).startswith("/dev/shm"):
+            return st
+        full = list(st)
+        full[3] = full[4] = 0  # f_bfree, f_bavail: no free blocks
+        return os.statvfs_result(full)
+
+    made: list[str] = []
+
+    def mkdtemp(*args, **kwargs):
+        made.append(real_mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(os, "statvfs", statvfs)
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+    merged = fanout.run_topics_fanout(spark, sf_dir)
+    events = core.stream_events(spark, sf_dir)
+    counted = core.run_available_now(events.groupBy("event_type").count(), spark)
+    assert merged["accidents_by_time"].count() > 0 and counted.count() > 0
+
+    names = [os.path.basename(p) for p in made]
+    assert any(n.startswith("fanout_") for n in names), made
+    assert sum(n.startswith("ckpt_") for n in names) >= 2, made
+    assert not [p for p in made if p.startswith("/dev/shm")], made
+    assert "below the" in capfd.readouterr().err
 
 
 def test_parity_collect_refuses_high_cardinality(spark, monkeypatch):
@@ -90,6 +157,10 @@ def test_bucketed_enrichment_no_exchange_on_orders_side(spark, sf_dir, tmp_path)
     from traffic_accidents_airflow_kafka_spark.streaming.core import (
         run_foreach_batch,
     )
+    from traffic_accidents_airflow_kafka_spark.topic_specs import (
+        TOPIC_SPECS,
+        partial,
+    )
 
     table = fanout.prepare_bucketed_orders(spark, sf_dir, num_buckets=8)
     li_schema = spark.read.parquet(f"{sf_dir}/lineitem.parquet").schema
@@ -105,7 +176,10 @@ def test_bucketed_enrichment_no_exchange_on_orders_side(spark, sf_dir, tmp_path)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     def drain(batch, batch_id):
-        enriched = fanout.enrich_lineitem_bucketed(batch, spark, sf_dir)
+        enriched = partial(
+            next(s for s in TOPIC_SPECS if s.name == "weather_light_surface"),
+            {"lineitem": batch, "orders": spark.table(table)},
+        )
         plans.append(
             enriched._jdf.queryExecution().executedPlan().toString()
         )

@@ -50,13 +50,11 @@ from .llm_shared import (  # noqa: F401 — re-exported infra surface
     _SHINGLE_CTE,
     _artifact,
     _neardup_pairs,
-    _sq8_artifact,
     _sql_dot,
     _sql_fold_dot,
     _sql_vnorm,
     artifact_build_times,
     artifact_keys,
-    clear_sq8_artifact_cache,
     evict_artifacts,
 )
 

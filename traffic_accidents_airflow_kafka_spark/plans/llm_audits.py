@@ -25,7 +25,7 @@ from .llm_retrieval import (
     _exact_top3_q20,
     _repeated_span_ctes,
 )
-from .llm_shared import _artifact, _sq8_artifact
+from .llm_shared import _artifact
 
 @register(
     "ivf_nprobe_recall_curve",
@@ -628,7 +628,7 @@ def _sq8_oracle(
 def embedding_sq8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     qids = emb.select("vec_id").filter(F.col("vec_id") < 10)
-    decoded = _sq8_artifact(
+    decoded = _artifact(
         spark,
         sf_dir,
         "pool-full",
@@ -637,7 +637,7 @@ def embedding_sq8_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = similarity.sq8_ann_topk(
         emb, qids, "vec_id", "embedding", dim=64, k=3, decoded=decoded
     )
-    exact = _sq8_artifact(
+    exact = _artifact(
         spark,
         sf_dir,
         "exact-full",
@@ -687,7 +687,7 @@ def incremental_sq8_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     history = emb.filter(F.col("vec_id") % 5 != 4)
     arrivals = emb.filter(F.col("vec_id") % 5 == 4)
     qids = arrivals.select("vec_id").filter(F.col("vec_id") < 100)
-    decoded = _sq8_artifact(
+    decoded = _artifact(
         spark,
         sf_dir,
         "pool-history",
@@ -696,7 +696,7 @@ def incremental_sq8_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = similarity.sq8_ann_topk(
         arrivals, qids, "vec_id", "embedding", dim=64, k=3, decoded=decoded
     )
-    exact = _sq8_artifact(
+    exact = _artifact(
         spark,
         sf_dir,
         "exact-history",

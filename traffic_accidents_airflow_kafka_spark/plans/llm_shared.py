@@ -127,10 +127,6 @@ def artifact_build_times() -> dict[str, float]:
     return out
 
 
-# Backwards-compatible alias used by the SQ8 entries below.
-_sq8_artifact = _artifact
-
-
 def evict_artifacts(sf_dir: str | None = None) -> None:
     """Drop memoized build-once artifacts — ALL of them, or only those
     keyed to one ``sf_dir`` (r6 advisory: a session that walks several
@@ -154,13 +150,6 @@ def evict_artifacts(sf_dir: str | None = None) -> None:
                     v.unpersist()
                 except Exception:
                     pass  # session already stopped — nothing to free
-
-
-def clear_sq8_artifact_cache() -> None:
-    """Drop ALL memoized build-once artifacts — scaling curves call this
-    per timed run so the curve measures the REAL build+consume cost per
-    scale factor, not the memoized steady state the bench reports."""
-    evict_artifacts()
 
 
 def artifact_keys() -> set[str]:

@@ -969,24 +969,20 @@ def _bounded_collect(df: DataFrame, name: str) -> list:
     "and events file-streamed, JSON-enveloped and UNIONED into one "
     "heterogeneous record stream (the wire shape of one Kafka topic), "
     "drained with trigger(availableNow=True) through foreachBatch into "
-    "seven parquet sinks of MERGEABLE partial aggregates (counts and "
-    "exact decimal sums add across micro-batches; the one distinct "
-    "count keeps (brand, partkey)-grain partials and re-distincts at "
-    "merge — the two-phase discipline that keeps restarts exact). Each "
-    "merged sink is then compared multiset-exactly (row-tuple Counter "
-    "equality over the dim-bounded dashboards, same contract as "
-    "exceptAll both ways) against the BATCH topic plan from "
-    "plans/topics.py and "
-    "the per-topic row count + parity flag is what the oracle "
-    "value-hashes — streaming in, batch answer out, for the WHOLE "
-    "dashboard surface at once. Scale: per-batch work is the topic "
-    "queries' own broadcast-join/binning shape; sinks hold |groups|-"
-    "sized partials, never raw facts; the lineitem-orders enrichment "
-    "runs against the BUCKETED orders table by default since r9 (zero "
-    "Exchange above the at-rest scan — the 100 TB form; broadcast only "
-    "as warehouse-unwritable fallback), and every parity collect is "
-    "count-guarded by PARITY_COLLECT_CEILING so the dim-bounded "
-    "contract is enforced, not assumed.",
+    "seven parquet sinks. The per-batch partials, the topic-1 roll-up "
+    "from topic 5's partial and the final merges are generated from the "
+    "same spec table as the batch topic queries (topic_specs.py): counts "
+    "and exact decimal sums add across micro-batches, and the one "
+    "distinct count keeps (brand, partkey)-grain partials and "
+    "re-distincts at merge. Each merged dashboard is then compared "
+    "multiset-exactly (row-tuple Counter equality over the dim-bounded "
+    "dashboards) against its batch topic query, and the per-topic row "
+    "count + parity flag is what the oracle value-hashes. Scale: sinks "
+    "hold |groups|-sized partials, never raw facts; topic 3 joins the "
+    "lineitem stream to orders-at-rest bucketed on o_orderkey (no "
+    "Exchange above the at-rest scan; broadcast only as the "
+    "warehouse-unwritable fallback), and every parity collect is capped "
+    "by PARITY_COLLECT_CEILING.",
 )
 def stream_topics_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections import Counter

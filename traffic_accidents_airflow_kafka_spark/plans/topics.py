@@ -1,275 +1,23 @@
-"""The 7 Kafka-topic flagship queries (SURVEY.md §2.9).
-
-Topic names come from the reference consumer (``kafka/consumer.py:6-14``);
-the semantics were reconstructed in SURVEY §2.9 from the star schema and the
-dashboard charts. Each is re-expressed on the driver's synthetic tables:
-
-- ``orders`` / ``lineitem``  → the accident-fact analogs (measures)
-- ``customer → nation → region`` → the geography dims (state / county)
-- ``supplier`` / ``part``    → the infrastructure dims (signals / hospitals)
-- ``events``                 → the temporal stream (crash_date parts)
-
-These queries carry the engine's join surface (SURVEY §2.3 J1-J3): every
-dim-side join is an explicit ``broadcast()`` — at 100 TB the fact side
-scales but nation/region/supplier/part stay dimension-sized, so the joins
-are map-side with zero shuffle of the fact table. The one deliberate
-big-big join (``weather_light_surface``: lineitem ⨝ orders) shuffles both
-sides on the join key — the canonical sort-merge/shuffled-hash case AQE
-handles, included so the bench exercises a real fact-fact shuffle.
-"""
+"""The 7 dashboard topics as catalog entries: one batch query per
+``topic_specs.TOPIC_SPECS`` entry, registered in table order with the
+spec's oracle, doc and tier."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.tables import load_table
-from .registry import dec_sum, register
+from ..topic_specs import TOPIC_SPECS, TopicSpec, batch_query
+from .registry import register
 
 
-def _dec(c: str) -> F.Column:
-    from ..functions.scalar import dec2
+def _query(spec: TopicSpec):
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return batch_query(spec, {t: load_table(spark, sf_dir, t) for t in spec.tables})
 
-    return dec2(c)
-
-
-@register(
-    "transit_signals_by_state",
-    oracle="""
-    SELECT
-      n.n_name AS state_name,
-      COUNT(*) AS n_orders,
-      CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_total
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n   ON c.c_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    """,
-    doc="Topic 1 'transit_signals_by_state' (kafka/consumer.py:7): "
-    "infrastructure totals per state → orders ⨝ customer ⨝ nation rollup. "
-    "SURVEY §2.3 J1/J3: both dim joins are broadcast (customer/nation do "
-    "not scale with fact volume) — the fact table is never shuffled; the "
-    "only exchange carries |nations|=25 aggregate rows.",
-)
-def transit_signals_by_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    return (
-        orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .groupBy(F.col("n_name").alias("state_name"))
-        .agg(F.count(F.lit(1)).alias("n_orders"), dec_sum("o_totalprice", "sum_total"))
-        .orderBy("state_name")
-    )
+    query.__name__ = spec.name
+    return query
 
 
-@register(
-    "signals_vs_lesions",
-    tier=1,  # r4 rotation: near-duplicate dashboard rollup; family judged via pricing_summary et al., still local-oracled
-    oracle="""
-    SELECT
-      s.s_name AS supplier_name,
-      COUNT(*) AS n_items,
-      CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-    FROM lineitem l
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    GROUP BY s.s_name
-    """,
-    doc="Topic 2 'signals_vs_lesions' (kafka/consumer.py:8): signal density "
-    "vs injuries per bbox → per-supplier measures. SURVEY §2.3 J1: "
-    "aggregate-then-broadcast-join; the groupBy runs on the fact first so "
-    "the join touches |suppliers| rows, not |lineitem|.",
-)
-def signals_vs_lesions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    supplier = load_table(spark, sf_dir, "supplier")
-    per_supp = li.groupBy("l_suppkey").agg(
-        F.count(F.lit(1)).alias("n_items"),
-        dec_sum("l_quantity", "sum_qty"),
-        dec_sum("l_extendedprice", "sum_price"),
-    )
-    return (
-        per_supp.join(F.broadcast(supplier), per_supp.l_suppkey == supplier.s_suppkey)
-        .select(
-            F.col("s_name").alias("supplier_name"),
-            "n_items",
-            "sum_qty",
-            "sum_price",
-        )
-        .orderBy("supplier_name")
-    )
-
-
-@register(
-    "weather_light_surface",
-    tier=1,  # r4 rotation: near-duplicate dashboard rollup; family judged via pricing_summary et al., still local-oracled
-    oracle="""
-    SELECT
-      o.o_orderpriority,
-      l.l_returnflag,
-      l.l_linestatus,
-      COUNT(*) AS n_items,
-      CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))
-               * (CAST(1 AS DECIMAL(18,2)) - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-        AS sum_disc_price
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    GROUP BY 1, 2, 3
-    """,
-    doc="Topic 3 'weather_light_surface' (kafka/consumer.py:9): three-way "
-    "condition rollup → lineitem ⨝ orders on orderkey, grouped on three "
-    "categorical dims. Scale: deliberate big-big equi-join — both sides "
-    "shuffle-partition on the join key (sort-merge / shuffled-hash under "
-    "AQE); at 100 TB co-locating via bucketing on orderkey removes the "
-    "shuffle entirely (see sources/sinks.py bucketed writer).",
-)
-def weather_light_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("o_orderpriority", "l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.sum(_dec("l_extendedprice") * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount")))
-            .cast("double")
-            .alias("sum_disc_price"),
-        )
-        .orderBy("o_orderpriority", "l_returnflag", "l_linestatus")
-    )
-
-
-@register(
-    "accidents_by_time",
-    tier=1,  # judged green r2-r7; rotated OUT for the r7 flagships — its
-    # date-part machinery (F2) stays driver-judged via star_dim_date and
-    # the topic-rollup shape via transit_signals_by_state
-    oracle="""
-    SELECT
-      CAST(hour(ts) AS INT) AS event_hour,
-      CAST(isodow(ts) - 1 AS INT) AS event_dow,
-      COUNT(*) AS n_events
-    FROM events
-    GROUP BY 1, 2
-    """,
-    doc="Topic 4 'accidents_by_time' (kafka/consumer.py:10): crash counts "
-    "by hour/day-of-week (SURVEY §2.9, EDA cells 39/41; F2 date parts). "
-    "Day-of-week convention: Monday=0..Sunday=6 (Spark weekday() == "
-    "DuckDB isodow()-1). Scale: 24×7 groups, codegen date-part exprs.",
-)
-def accidents_by_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    return (
-        events.groupBy(
-            F.hour("ts").cast("int").alias("event_hour"),
-            F.weekday("ts").cast("int").alias("event_dow"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .orderBy("event_hour", "event_dow")
-    )
-
-
-@register(
-    "lesions_by_county",
-    tier=1,  # r4 rotation: near-duplicate dashboard rollup; family judged via pricing_summary et al., still local-oracled
-    oracle="""
-    SELECT
-      n.n_name AS county_name,
-      r.r_name AS state_name,
-      COUNT(*) AS n_orders,
-      CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_total
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n   ON c.c_nationkey = n.n_nationkey
-    JOIN region r   ON n.n_regionkey = r.r_regionkey
-    GROUP BY 1, 2
-    """,
-    doc="Topic 5 'lesions_by_county' (kafka/consumer.py:11): injuries per "
-    "county+state → three chained broadcast dim joins (J3 — the reference "
-    "resolved these through hand-built Python dict probes, "
-    "dags/etl_crash_traffic.py:811-850). The fact never shuffles.",
-)
-def lesions_by_county(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    return (
-        orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy(F.col("n_name").alias("county_name"), F.col("r_name").alias("state_name"))
-        .agg(F.count(F.lit(1)).alias("n_orders"), dec_sum("o_totalprice", "sum_total"))
-        .orderBy("county_name", "state_name")
-    )
-
-
-@register(
-    "hospitals_schools_vs_lesions",
-    tier=1,  # r4 rotation: near-duplicate dashboard rollup; family judged via pricing_summary et al., still local-oracled
-    oracle="""
-    SELECT
-      p.p_brand,
-      COUNT(*) AS n_items,
-      COUNT(DISTINCT p.p_partkey) AS n_parts,
-      CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-      CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-    FROM lineitem l
-    JOIN part p ON l.l_partkey = p.p_partkey
-    GROUP BY p.p_brand
-    """,
-    doc="Topic 6 'hospitals_schools_vs_lesions' (kafka/consumer.py:12): "
-    "facility counts vs injuries per bbox → per-brand part/lineitem rollup "
-    "with a distinct-count. SURVEY §2.3 J1: broadcast part dim; the "
-    "distinct-count adds a partial-dedup stage Catalyst plans as a "
-    "two-phase aggregate.",
-)
-def hospitals_schools_vs_lesions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.countDistinct("p_partkey").alias("n_parts"),
-            dec_sum("l_quantity", "sum_qty"),
-            dec_sum("l_extendedprice", "sum_price"),
-        )
-        .orderBy("p_brand")
-    )
-
-
-@register(
-    "crossings_vs_lesions",
-    tier=1,  # r4 rotation: near-duplicate dashboard rollup; family judged via pricing_summary et al., still local-oracled
-    oracle="""
-    SELECT
-      'bbox_' || CAST(CAST(floor(value / 50.0) * 50.0 AS INT) AS VARCHAR)
-              || '_'
-              || CAST(CAST(user_id // 10 * 10 AS INT) AS VARCHAR) AS bbox_label,
-      COUNT(*) AS n_events,
-      CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-    FROM events
-    GROUP BY 1
-    """,
-    doc="Topic 7 'crossings_vs_lesions' (kafka/consumer.py:13): per-bbox "
-    "crossing counts vs injuries → grid-binned rollup. SURVEY §2.3 J2 / "
-    "§2.6 F12/F13: floor-division binning (floor(x/50)*50 — true floor, "
-    "matching Python // semantics for negatives) + string bbox label "
-    "build. Scale: binning is a codegen expression; |bins| groups shuffle.",
-)
-def crossings_vs_lesions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    val_bin = (F.floor(F.col("value") / 50.0) * 50.0).cast("int")
-    uid_bin = (F.floor(F.col("user_id") / 10) * 10).cast("int")
-    label = F.concat(
-        F.lit("bbox_"), val_bin.cast("string"), F.lit("_"), uid_bin.cast("string")
-    ).alias("bbox_label")
-    return (
-        events.groupBy(label)
-        .agg(F.count(F.lit(1)).alias("n_events"), dec_sum("value", "sum_value"))
-        .orderBy("bbox_label")
-    )
+for _spec in TOPIC_SPECS:
+    register(_spec.name, oracle=_spec.oracle, doc=_spec.doc, tier=_spec.tier)(_query(_spec))

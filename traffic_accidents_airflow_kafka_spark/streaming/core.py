@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import sys
 import tempfile
 import uuid
 
@@ -38,17 +39,39 @@ from pyspark.sql.types import (
 )
 
 from ..sources.sinks import file_snapshot
+from ..topic_specs import TOPIC_SPECS
 
-#: The 7 result topics (kafka/consumer.py:6-14).
-TOPICS = (
-    "transit_signals_by_state",
-    "signals_vs_lesions",
-    "weather_light_surface",
-    "accidents_by_time",
-    "lesions_by_county",
-    "hospitals_schools_vs_lesions",
-    "crossings_vs_lesions",
-)
+#: The 7 result topics (kafka/consumer.py:6-14), in spec-table order.
+TOPICS = tuple(spec.name for spec in TOPIC_SPECS)
+
+#: Free tmpfs below which ephemeral streaming directories go to disk. A
+#: fan-out run holds 46 KB of sinks plus a 1.3 KB checkpoint at sf0.01 and
+#: 350 KB of sinks at sf0.1 (topic 6's part-grain partials grow with the
+#: scale factor); 64 MiB is about 180x the sf0.1 figure, so the sinks fit
+#: to about sf10 at that growth, and a nearly full tmpfs, which other
+#: processes share, is left to them.
+TMPFS_FLOOR_BYTES = 64 << 20
+
+
+def ephemeral_dir(prefix: str) -> str:
+    """A fresh directory for state that dies with its run (availableNow
+    checkpoints, fan-out sinks): on ``/dev/shm`` when it has at least
+    ``TMPFS_FLOOR_BYTES`` free, so per-batch commits never touch disk,
+    else in the default temp dir."""
+    base = None
+    if os.path.isdir("/dev/shm"):
+        st = os.statvfs("/dev/shm")
+        free = st.f_bavail * st.f_frsize
+        if free >= TMPFS_FLOOR_BYTES:
+            base = "/dev/shm"
+        else:
+            print(
+                f"[streaming] /dev/shm has {free >> 20} MiB free, below the "
+                f"{TMPFS_FLOOR_BYTES >> 20} MiB floor; {prefix}* goes to {tempfile.gettempdir()}",
+                file=sys.stderr,
+            )
+    return tempfile.mkdtemp(prefix=prefix, dir=base)
+
 
 #: (normalized table path, ``file_snapshot``) -> resolved parquet schema.
 #: The footer sniff is a driver-side read costing 0.14-0.26 s, paid by ~12
@@ -184,11 +207,9 @@ def run_available_now(
     decision, not a session one. None keeps the session setting.
     """
     name = f"avnow_{uuid.uuid4().hex[:12]}"
-    # Checkpoint on tmpfs when available: availableNow pays checkpoint
-    # fsyncs on every micro-batch, and this checkpoint is as ephemeral as
-    # the returned result. Durable streams pass their own location.
-    ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_", dir=ckpt_base)
+    # availableNow pays checkpoint fsyncs on every micro-batch, and this
+    # checkpoint is as ephemeral as the returned result.
+    checkpoint = ephemeral_dir(f"ckpt_{name}_")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions is not None:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
@@ -280,9 +301,7 @@ def run_foreach_batch(
     # default ephemeral checkpoint serves single-shot drains.
     own_checkpoint = checkpoint is None
     if own_checkpoint:
-        name = f"feb_{uuid.uuid4().hex[:12]}"
-        ckpt_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-        checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_", dir=ckpt_base)
+        checkpoint = ephemeral_dir(f"ckpt_feb_{uuid.uuid4().hex[:12]}_")
     try:
         q = (
             result.writeStream.foreachBatch(batch_fn)

@@ -1,89 +1,94 @@
-"""One-pass streaming fan-out of the 7 dashboard topics (r6 VERDICT #7).
+"""One-pass streaming fan-out of the 7 dashboard topics.
 
 The reference's production shape is ONE ETL pass publishing 7 result
 topics (``kafka/producer.py`` + ``dags/etl_crash_traffic.py``: one job,
 seven ``kafka_producer.send`` fan-outs). This module is that job as a
-single Structured Streaming query — the closest in-sandbox stand-in for
-the missing broker round-trip (S10/S11 are broker-impossible here, see
-streaming/core.py):
+single Structured Streaming query, generated from the topic spec table
+(``topic_specs.TOPIC_SPECS``) — the same table the batch catalog queries
+come from, so the streaming form is not a second hand-written copy:
 
 - **One source.** The accident facts (orders, lineitem, events) are read
   as file streams, JSON-encoded into a ``(src, payload)`` envelope and
-  UNIONED into one streaming relation — the wire shape of a single Kafka
-  topic carrying heterogeneous JSON records, which is exactly what the
-  reference's producer emits.
-- **One availableNow drain, seven sinks.** ``foreachBatch`` splits each
-  micro-batch by record type, computes per-topic PARTIAL aggregates, and
-  writes them to seven parquet sinks. Partials are chosen mergeable:
-  counts and exact DECIMAL sums add across batches; the one distinct
-  count (hospitals' ``n_parts``) keeps (brand, partkey)-grain partials
-  so the final merge can re-distinct. Each delivery OVERWRITES its own
-  ``batch=<id>`` partition of the sink, so foreachBatch's at-least-once
-  contract converges: a replayed batch id rewrites identical partials
-  instead of double-appending them — together the two-phase partials
-  and the batch-keyed overwrite make restarts and multi-batch replays
-  exact, not approximate.
-- **Parity is asserted, not assumed.** After the drain, each sink is
-  merged and compared multiset-exactly (row-tuple Counter equality over
-  the dim-bounded dashboards) against the BATCH topic plan from
-  ``plans/topics.py``. Streaming in, batch answer out — the
-  file-source-twin discipline the rest of §2.8 uses, extended to the
-  whole dashboard fan-out.
+  unioned into one streaming relation — the wire shape of a single Kafka
+  topic carrying heterogeneous JSON records.
+- **One availableNow drain, seven sinks.** ``foreachBatch`` parses each
+  micro-batch by record type, projects each source to the columns its
+  specs read, and writes every topic's generated ``partial`` to its own
+  parquet sink. A topic ``derived_from`` another is rolled up from that
+  topic's just-written partial instead of re-running its joins. Each
+  delivery OVERWRITES its own ``batch=<id>`` partition, so a redelivered
+  batch id rewrites identical partials: with mergeable partials, restarts
+  and multi-batch drains stay exact.
+- **One merge per topic.** After the drain, each sink is reduced by the
+  generated ``merge`` to exactly the batch query's schema.
+  ``stream_topics_fanout`` (``plans/streaming_plans.py``) compares the
+  result multiset-exactly against the batch queries.
 
-Scale: the per-batch work is the topic queries' own shape (broadcast dim
-joins, grid binning); sink state is |groups|-sized partials per batch,
-never raw facts; the final merge reads partials only. The lineitem-orders
-enrichment (topic 3) runs against the BUCKETED orders table by default
-(r9): the at-rest side is saved bucketBy(o_orderkey) once per
-(session, sf_dir) as a memoized artifact and every micro-batch joins it
-with zero Exchange above the at-rest scan — the 100 TB form, where
-orders-at-rest is the big side and a per-batch broadcast/shuffle would
-be the bottleneck; a watermarked stream-stream join is the alternative
-when both sides stream. Broadcast remains only as the fallback when the
-bucketed build cannot write a warehouse.
+Scale: per-batch work is the topic queries' own shape (broadcast dim
+joins, grid binning); sinks hold |groups|-sized partials, never raw
+facts. Topic 3 joins the lineitem stream to orders-at-rest saved
+bucketed on ``o_orderkey`` once per (session, sf_dir), so the at-rest
+side has no Exchange in any micro-batch; a broadcast join is the loud
+fallback when that table cannot be written.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import shutil
-import tempfile
+import sys
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.scalar import dec2 as _dec
 from ..sources.tables import load_table
+from ..topic_specs import TOPIC_SPECS, TopicSpec, merge, partial, rollup
 from . import core as streaming
 
 #: The streamed fact sources and their envelope tags.
 FANOUT_SOURCES = ("orders", "lineitem", "events")
 
+#: Events on the wire: JSON has no timestamp type, so ``ts`` travels as
+#: ``unix_micros`` (exact round trip).
+_EVENTS_WIRE = (
+    "event_id long, user_id long, event_type string, value double, "
+    "props string, ts_us long"
+)
+
+#: Hash keys for respreading single-file sources: a keyless
+#: ``repartition(n)`` sorts every row first (sortBeforeRepartition), while
+#: hash keys are retry-deterministic and spread these ids evenly.
+_RESPREAD_KEYS = {"orders": "o_orderkey", "lineitem": "l_orderkey", "events": "event_id"}
+
 #: Metadata of the LAST run_topics_fanout call in this process:
-#: ``orders_join_path`` ("bucketed" | "broadcast" — so gates and the
-#: bench JSON can ASSERT which topic-3 plan actually ran instead of
-#: inferring it from a stderr line, the r9 silent-fallback lesson) and
-#: ``topic_sec`` (per-topic sink-job wall seconds, summed across the
-#: drain's micro-batches; the seven jobs run CONCURRENTLY, so these
-#: overlap and do not sum to the drain wall time — they adjudicate
-#: per-topic movers, not the total).
+#: ``orders_join_path`` ("bucketed" | "broadcast": which topic-3 plan
+#: ran), ``topic_sec`` (per-topic sink-job seconds summed over
+#: micro-batches; the jobs run concurrently, so compare a topic with
+#: itself across runs, never sum them), and the phase walls ``env_sec``,
+#: ``parse_sec``, ``drain_wall_sec`` and ``merge_sec``.
 _LAST_RUN_META: dict = {}
 
 
 def last_run_metadata() -> dict:
-    """Copy of the last fan-out run's metadata (empty if none ran).
-    bench.py serializes this next to artifact_build_sec so the
-    catalog's heaviest entry is a 7-key breakdown in the run JSON, not
-    one opaque number."""
+    """Copy of the last fan-out run's metadata (empty if none ran)."""
     out = dict(_LAST_RUN_META)
     if "topic_sec" in out:
-        out["topic_sec"] = {
-            k: round(v, 4) for k, v in out["topic_sec"].items()
-        }
+        out["topic_sec"] = {k: round(v, 4) for k, v in out["topic_sec"].items()}
     return out
+
+
+def envelope_parts(spark: SparkSession) -> int:
+    """Partition count of the cached envelope: wide enough that the JSON
+    encode and the three parses use the cores, narrow enough that the
+    seven concurrent topic jobs do not each schedule a core's worth of
+    tasks per partition."""
+    return min(16, max(4, spark.sparkContext.defaultParallelism // 3))
 
 
 def envelope_stream(
@@ -91,76 +96,28 @@ def envelope_stream(
 ) -> DataFrame:
     """The single heterogeneous record stream: each fact table file-
     streamed, JSON-encoded, tagged, unioned — one topic, three record
-    types. Events' nanosecond timestamp travels as ``unix_micros`` (JSON
-    has no timestamp type; micros round-trip exactly). ``schemas``
-    ({source: StructType}) lets a caller that already read the parquet
-    footers (run_topics_fanout does) skip the duplicate driver-side
-    footer reads."""
-    # r10 (guide §2.5 input skew): the file-twin sources are single
-    # parquet files with ONE row group each, so the scan cannot split
-    # and the JSON encode — the envelope's dominant cost, measured at
-    # ~3.5 s of the drain's env phase — ran 3-wide on a 32-core host.
-    # Respread the RAW rows (same bytes the payload would carry) before
-    # to_json so the encode runs wide; the drain's own envelope respread
-    # then becomes a no-op (it is guarded on arrival partition count).
-    # Production multi-part sources arrive wide already — skip the
-    # shuffle there (directory layout ⇒ many part files).
-    #
-    # r11 (guide §2.5 "derive the synthetic key deterministically"): the
-    # respread is HASH-keyed on each source's high-cardinality id column
-    # instead of keyless round-robin. A keyless repartition(n) pays a
-    # local sort of every input row (sortBeforeRepartition, on by
-    # default so retries are deterministic) — measured on the 3-source
-    # envelope drain: round-robin 1.9-2.2 s vs hash 1.3-1.4 s to the
-    # first micro-batch at identical plans otherwise, and end-to-end
-    # count drains read rr 1.9-2.1 s vs hash 1.7-1.75 s. Hash keys are
-    # deterministic under task retry (the guide's SPARK-38388 caveat
-    # does not apply) and 150k+ distinct ids spread evenly over <= 16
-    # partitions.
-    _cores = spark.sparkContext.defaultParallelism
-    spread = int(
-        os.environ.get(
-            "SPARK_GRAFT_FANOUT_ENV_PARTS", str(min(16, max(4, _cores // 3)))
-        )
-    )
-    _RESPREAD_KEYS = {
-        "orders": "o_orderkey",
-        "lineitem": "l_orderkey",
-        "events": "event_id",
-    }
+    types. ``schemas`` ({source: StructType}) skips the footer reads for
+    sources the caller already resolved.
 
-    def _respread(raw: DataFrame, src: str) -> DataFrame:
+    A single-file source has one row group, so its scan cannot split;
+    the raw rows are hash-respread so the JSON encode runs wide and the
+    drain's own respread finds the envelope wide enough already. A
+    directory of part files arrives wide and is left alone."""
+    per_source = max(2, -(-envelope_parts(spark) // len(FANOUT_SOURCES)))
+
+    def respread(raw: DataFrame, src: str) -> DataFrame:
         if os.path.isdir(os.path.join(sf_dir, f"{src}.parquet")):
-            return raw  # directory of part files: already arrives wide
-        # Ceiling-divide so the three sources together arrive at >= the
-        # drain's respread target — otherwise the drain would shuffle
-        # the already-spread envelope a second time.
-        n = -(-spread // len(FANOUT_SOURCES))
-        return raw.repartition(max(2, n), F.col(_RESPREAD_KEYS[src]))
+            return raw
+        return raw.repartition(per_source, F.col(_RESPREAD_KEYS[src]))
 
     parts = []
     for src in ("orders", "lineitem"):
-        schema = (
-            schemas[src]
-            if schemas and src in schemas
-            else spark.read.parquet(os.path.join(sf_dir, f"{src}.parquet")).schema
-        )
-        raw = _respread(streaming.stream_table_source(spark, sf_dir, src, schema), src)
-        parts.append(
-            raw.select(
-                F.lit(src).alias("src"),
-                F.to_json(F.struct(*raw.columns)).alias("payload"),
-            )
-        )
-    ev = _respread(streaming.stream_events(spark, sf_dir), "events").withColumn(
-        "ts_us", F.unix_micros("ts")
-    ).drop("ts")
-    parts.append(
-        ev.select(
-            F.lit("events").alias("src"),
-            F.to_json(F.struct(*[c for c in ev.columns])).alias("payload"),
-        )
-    )
+        schema = (schemas or {}).get(src) or streaming.table_schema(spark, sf_dir, src)
+        raw = respread(streaming.stream_table_source(spark, sf_dir, src, schema), src)
+        parts.append(raw.select(F.lit(src).alias("src"), F.to_json(F.struct(*raw.columns)).alias("payload")))
+    ev = respread(streaming.stream_events(spark, sf_dir), "events")
+    ev = ev.withColumn("ts_us", F.unix_micros("ts")).drop("ts")
+    parts.append(ev.select(F.lit("events").alias("src"), F.to_json(F.struct(*ev.columns)).alias("payload")))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -168,24 +125,15 @@ def envelope_stream(
 
 
 def _parse(batch: DataFrame, src: str, schema) -> DataFrame:
-    return (
-        batch.filter(F.col("src") == src)
-        .select(F.from_json("payload", schema).alias("r"))
-        .select("r.*")
-    )
+    rel = batch.filter(F.col("src") == src).select(F.from_json("payload", schema).alias("r")).select("r.*")
+    return rel.withColumn("ts", F.timestamp_micros("ts_us")) if src == "events" else rel
 
 
 def bucketed_orders_table(sf_dir: str) -> str:
-    """Catalog name of the bucketed orders table for ONE sf_dir —
-    scoped to the FULL normalized path, not just the basename, so a
-    session that touches several scale dirs (scaling_curve/scaling_sf1
-    do) — or two dirs with the same leaf name under different parents
-    (/a/sf0.1 vs /b/sf0.1, the r8 advisory) — can never serve one
-    dir's orders to another's micro-batches through a shared name. The
-    basename stays in the name for human-readable catalogs; the path
-    hash carries the uniqueness."""
-    import hashlib
-
+    """Catalog name of the bucketed orders table for ONE sf_dir, scoped
+    to the full normalized path (a session touching several scale dirs,
+    or two dirs with the same leaf name, must never share one). The
+    basename keeps catalogs readable; the path hash makes it unique."""
     norm = os.path.normpath(os.path.abspath(sf_dir))
     stem = re.sub(r"[^0-9A-Za-z]+", "_", norm.rsplit("/", 1)[-1])
     digest = hashlib.sha256(norm.encode()).hexdigest()[:8]
@@ -195,517 +143,163 @@ def bucketed_orders_table(sf_dir: str) -> str:
 def prepare_bucketed_orders(
     spark: SparkSession, sf_dir: str, num_buckets: int = 8
 ) -> str:
-    """One-time index build for the co-located enrichment: orders at
-    rest saved bucketBy+sortBy o_orderkey (sources/sinks.py:
-    save_bucketed) — pay the bucketing shuffle once at write, skip the
-    at-rest side's exchange on every micro-batch join after. Returns
-    the (sf-scoped) table name.
+    """Save orders at rest bucketBy+sortBy ``o_orderkey``
+    (``sources/sinks.py:save_bucketed``): the bucketing shuffle is paid
+    once here, and every micro-batch join after reads the at-rest side
+    co-located. Returns the (sf-scoped) table name.
 
-    Orphaned-location hygiene: the managed table's warehouse directory
-    outlives the session, but a FRESH session's catalog does not know
-    the table — ``saveAsTable`` then refuses with
-    LOCATION_ALREADY_EXISTS even in overwrite mode (found in round 9:
-    the bench session silently fell back to the broadcast path after a
-    pytest session had left the directory behind). When the catalog
-    DOES know the table, ask IT for the location (robust to warehouse
-    layout changes across Spark versions) before dropping; the
-    hardcoded ``<warehouse>/<table>`` / ``<db>.db/<table>`` layout
-    guess remains only for the orphaned-directory case, where there is
-    no catalog entry to ask."""
-    from urllib.parse import urlparse
-
+    A managed table's directory outlives its session, and a fresh
+    session's catalog then refuses ``saveAsTable`` with
+    LOCATION_ALREADY_EXISTS even in overwrite mode. So the old location
+    is removed first: asked of the catalog when it knows the table, else
+    guessed from the managed layout (``<warehouse>/<table>``, or
+    ``<warehouse>/<db>.db/<table>`` outside the default database)."""
     from ..sources.sinks import save_bucketed
 
     table = bucketed_orders_table(sf_dir)
-    known_loc = None
+    doomed = []
     if spark.catalog.tableExists(table):
         for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect():
             if r["col_name"] == "Location":
                 p = urlparse(r["data_type"])
                 if p.scheme in ("file", ""):
-                    known_loc = p.path
+                    doomed.append(p.path)
                 break
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    if known_loc and os.path.exists(known_loc):
-        shutil.rmtree(known_loc, ignore_errors=True)
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    )
-    parsed = urlparse(warehouse)
-    wpath = parsed.path if parsed.scheme in ("file", "") else None
-    if wpath:
-        # Managed-table layouts: <warehouse>/<table> for the default
-        # database, <warehouse>/<db>.db/<table> otherwise — clear
-        # whichever orphan exists for the CURRENT database.
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
+    if warehouse.scheme in ("file", "") and warehouse.path:
         db = spark.catalog.currentDatabase()
-        cands = [os.path.join(wpath, table.lower())]
         if db and db != "default":
-            cands.insert(
-                0, os.path.join(wpath, f"{db.lower()}.db", table.lower())
-            )
-        for loc in cands:
-            if os.path.exists(loc):
-                shutil.rmtree(loc, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    )
+            doomed.append(os.path.join(warehouse.path, f"{db.lower()}.db", table.lower()))
+        doomed.append(os.path.join(warehouse.path, table.lower()))
+    for loc in doomed:
+        if os.path.exists(loc):
+            shutil.rmtree(loc, ignore_errors=True)
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     save_bucketed(orders, table, "o_orderkey", num_buckets=num_buckets)
     return table
 
 
-def enrich_lineitem_bucketed(
-    lineitem_batch: DataFrame, spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Topic-3 enrichment against the BUCKETED orders table — the
-    100 TB form the module docstring promises: at scale orders-at-rest
-    is the big side, so the per-batch broadcast/shuffle join becomes
-    the scan bottleneck. Reading orders from the bucketed table makes
-    its scan CO-LOCATED (zero Exchange above the at-rest side — only
-    the arrival micro-batch, the small side by construction, shuffles
-    into the bucket layout). Same partial-aggregate contract as the
-    in-drain t3, so sinks/merges/parity are unchanged — asserted, with
-    the plan shape, in tests/test_fanout.py."""
-    orders_b = spark.table(bucketed_orders_table(sf_dir))
-    return (
-        lineitem_batch.join(
-            orders_b, lineitem_batch.l_orderkey == orders_b.o_orderkey
-        )
-        .groupBy("o_orderpriority", "l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n_items"),
-            F.sum(
-                _dec("l_extendedprice")
-                * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount"))
-            ).alias("sum_disc_price"),
-        )
-    )
-
-
-def run_topics_fanout(
-    spark: SparkSession, sf_dir: str
-) -> dict[str, DataFrame]:
-    """Drain the envelope stream once, fan out to 7 partial-aggregate
-    sinks, merge each sink and return {topic: merged DataFrame} with
-    EXACTLY the batch topic queries' schemas. Merged results are eagerly
-    materialized (localCheckpoint) so the sink directories can be
-    reclaimed before the caller consumes them."""
-    orders_schema = streaming.table_schema(spark, sf_dir, "orders")
-    li_schema = streaming.table_schema(spark, sf_dir, "lineitem")
-    schemas = {"orders": orders_schema, "lineitem": li_schema}
-    ev_schema = (
-        "event_id long, user_id long, event_type string, value double, "
-        "props string, ts_us long"
-    )
-
-    # Dimensions at rest, loaded once and broadcast into every batch —
-    # the topic queries' own J1/J3 shape. Orders-at-rest enriches the
-    # lineitem stream (topic 3) through the BUCKETED co-located join by
-    # default (r9, closing the r8 VERDICT #4: the 100 TB form was
-    # implemented and plan-asserted but production still broadcast):
-    # the bucketed table builds ONCE per (session, sf_dir) as a
-    # memoized artifact — pay the bucketing shuffle at write, skip the
-    # at-rest side's Exchange on every micro-batch after. If the build
-    # fails (read-only warehouse, exotic FS), fall back to the
-    # broadcast join — semantics identical, scale profile worse.
-    customer = load_table(spark, sf_dir, "customer")
-    nation = load_table(spark, sf_dir, "nation")
-    region = load_table(spark, sf_dir, "region")
-    supplier = load_table(spark, sf_dir, "supplier")
-    part = load_table(spark, sf_dir, "part")
-    # Import OUTSIDE the fallback guard: an ImportError here is a repo
-    # regression that must fail loudly, never silently change the
-    # measured topic-3 plan (r9 ADVICE — the except below is also
-    # narrowed to the two failure classes an unwritable warehouse
-    # actually produces, so anything unexpected propagates).
+def _orders_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Topic 3's ``orders`` join table: the bucketed table, built once
+    per (session, sf_dir) as a memoized artifact, or the plain table
+    (broadcast by size) when the build fails. Records which in
+    ``orders_join_path``."""
+    # Imported outside the guard: an ImportError is a repo fault and must
+    # not silently switch topic 3 to the fallback plan.
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import AnalysisException
 
-    from ..plans.llm import _artifact
+    from ..plans.llm_shared import _artifact
 
-    _LAST_RUN_META.clear()
-    _LAST_RUN_META["topic_sec"] = {t: 0.0 for t in streaming.TOPICS}
+    table = bucketed_orders_table(sf_dir)
     try:
-        _artifact(
-            spark,
-            sf_dir,
-            "fanout-orders-bucketed",
-            lambda: prepare_bucketed_orders(spark, sf_dir),
-        )
-        # The memo can outlive the table (a test or operator may DROP it
-        # mid-session); trust the catalog, not the memo, before wiring
-        # the drain to it.
-        if not spark.catalog.tableExists(bucketed_orders_table(sf_dir)):
+        _artifact(spark, sf_dir, "fanout-orders-bucketed", lambda: prepare_bucketed_orders(spark, sf_dir))
+        # The memo can outlive the table (a DROP mid-session): trust the
+        # catalog, not the memo.
+        if not spark.catalog.tableExists(table):
             prepare_bucketed_orders(spark, sf_dir)
-        orders_static = None  # bucketed path active
-        _LAST_RUN_META["orders_join_path"] = "bucketed"
     except (AnalysisException, OSError, Py4JJavaError) as exc:
-        # Warehouse-unwritable: LOCATION_ALREADY_EXISTS-class catalog
-        # errors surface as AnalysisException, local file ops as
-        # OSError, and a FAILED WRITE JOB (disk full, permissions on an
-        # executor) as Py4JJavaError wrapping java.io.IOException — the
-        # failure class the fallback was built for (r10 review).
-        # LOUD fallback (r9: a silent one masked
-        # an orphaned-location build failure through an entire bench
-        # run): correctness is unaffected, but the scale posture
-        # changed — say so on stderr AND in the run metadata the bench
-        # JSON serializes, so gates can assert the bucketed path ran.
-        import sys
-
+        # The three ways an unwritable warehouse fails: a catalog refusal,
+        # a local file op, a failed write job (IOException via Py4J).
+        # Anything else propagates.
         print(
             f"[fanout] bucketed orders build failed ({exc}); "
             "falling back to the broadcast join for topic 3",
             file=sys.stderr,
         )
-        orders_static = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderpriority"
-        )
         _LAST_RUN_META["orders_join_path"] = "broadcast"
+        return load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    _LAST_RUN_META["orders_join_path"] = "bucketed"
+    return spark.table(table)
 
-    # r11 (guide §6): the seven parquet sinks are as ephemeral as the
-    # availableNow checkpoint (written by the drain, merged, reclaimed
-    # in the finally below) — put them on tmpfs when available, like
-    # streaming/core.py does for checkpoints, so the 7 sink commits and
-    # the 7 merge scans never touch disk. Durable deployments pass real
-    # sink paths through their own writers; this base holds per-run
-    # partials only.
-    sink_base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    base = tempfile.mkdtemp(
-        prefix=f"fanout_{uuid.uuid4().hex[:8]}_", dir=sink_base
-    )
+
+def _meter(key: str, t0: float) -> None:
+    _LAST_RUN_META[key] = _LAST_RUN_META.get(key, 0.0) + time.perf_counter() - t0
+
+
+def run_topics_fanout(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Drain the envelope stream once into one partial-aggregate sink per
+    topic, merge each sink and return {topic: merged DataFrame} with
+    exactly the batch topic queries' schemas. Merged results are eagerly
+    materialized (localCheckpoint) so the sinks can be reclaimed before
+    the caller reads them."""
+    wire = {src: streaming.table_schema(spark, sf_dir, src) for src in ("orders", "lineitem")}
+    wire["events"] = _EVENTS_WIRE
+    reads = {
+        src: set().union(*(s.columns_read() for s in TOPIC_SPECS if s.source == src))
+        for src in FANOUT_SOURCES
+    }
+    at_rest = {j.table: load_table(spark, sf_dir, j.table) for s in TOPIC_SPECS for j in s.joins if j.broadcast}
+    _LAST_RUN_META.clear()
+    _LAST_RUN_META["topic_sec"] = {t: 0.0 for t in streaming.TOPICS}
+    # The one fact-fact join (topic 3's, not broadcast) reads orders at rest.
+    at_rest["orders"] = _orders_at_rest(spark, sf_dir)
+    derived = {r.name: [s for s in TOPIC_SPECS if s.derived_from and s.derived_from[0] == r.name] for r in TOPIC_SPECS}
+    # A root with derived topics runs a chain of sink jobs, so it is
+    # submitted first: the scheduler is FIFO across concurrent jobs.
+    roots = sorted((s for s in TOPIC_SPECS if s.derived_from is None), key=lambda r: not derived[r.name])
+    parts = envelope_parts(spark)
+    base = streaming.ephemeral_dir(f"fanout_{uuid.uuid4().hex[:8]}_")
     sinks = {t: os.path.join(base, t) for t in streaming.TOPICS}
 
     def drain(batch: DataFrame, batch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        # Seven sink jobs read this micro-batch; without these persists
-        # every job would re-scan the source files, re-encode the
-        # envelope, and re-parse the JSON. Cache the envelope once and
-        # each parsed record type once, then submit the seven sink jobs
-        # CONCURRENTLY — they are independent aggregations over cached
-        # inputs, and concurrent job submission lets the scheduler pack
-        # them instead of paying seven sequential job latencies (the
-        # standard foreachBatch fan-out recipe).
-        #
-        # Two r10 optimizations, both measured on the catalog entry:
-        # (1) The parsed relations are PROJECTED to the union of the
-        #     columns the topics actually read before caching (guide
-        #     §2.3 "project before the exchange"): the JSON parse is
-        #     opaque to the topic jobs' column pruning, so without the
-        #     explicit select the cache held all 9/16/6 parsed columns
-        #     when the topics consume 2/8/3 of them.
-        # (2) The three caches are MATERIALIZED (concurrently) before
-        #     the seven-job pool starts. persist() is lazy: the seven
-        #     concurrent jobs otherwise race on the three unpopulated
-        #     caches, and each lineitem topic recomputed the full JSON
-        #     parse instead of reading the cache — the bench's
-        #     per-topic breakdown showed all three lineitem topics at
-        #     ~6 s (each re-paying the parse) vs ~0.3 s once the cache
-        #     is populated first.
-        # (A 32-way repartition of the envelope before the parses was
-        # tried here and REJECTED by measurement: it cut the three
-        # parse jobs' wall 4.5 → 1.2 s, but the seven concurrent topic
-        # jobs then each scanned 32-partition caches and the in-session
-        # entry regressed 10.5 → 13.6-22.9 s — 232 concurrent tasks of
-        # scheduling/GC pressure outweighed the parse win at this
-        # micro-batch size. A real Kafka source arrives many-partition
-        # and needs no respreading.)
-        env = batch
-        # r10: respread a NARROW micro-batch before caching it. The
-        # file-twin source arrives one-partition-per-file (the stream
-        # source never splits files), so the cached envelope held 3
-        # partitions and the three JSON parse jobs ran ~3 tasks each on
-        # a 32-core host — parse wall 4.8 s; repartitioned to ~cores/3
-        # it reads 0.9 s and the whole drain 11.0 -> 8.3 s (the r9
-        # session's 32-way attempt regressed the topic jobs, which is
-        # why the target stays well below the core count — 7 concurrent
-        # jobs x partitions tasks each). Guarded: a production source
-        # (Kafka) already arrives many-partition and skips the shuffle.
-        # SPARK_GRAFT_FANOUT_ENV_PARTS overrides for knob sweeps.
-        _cores = spark.sparkContext.defaultParallelism
-        _target = int(
-            os.environ.get(
-                "SPARK_GRAFT_FANOUT_ENV_PARTS",
-                str(min(16, max(4, _cores // 3))),
-            )
-        )
-        if env.rdd.getNumPartitions() < _target:
-            env = env.repartition(_target)
-        t_env0 = time.perf_counter()
+        # The topic jobs all read this micro-batch: cache the envelope once
+        # and each source's parse once, projected to the columns its
+        # topics read (the JSON parse hides column use from pruning).
+        env = batch if batch.rdd.getNumPartitions() >= parts else batch.repartition(parts)
+        t0 = time.perf_counter()
         env.persist().count()
-        _LAST_RUN_META["env_sec"] = _LAST_RUN_META.get("env_sec", 0.0) + (
-            time.perf_counter() - t_env0
-        )
-        ob = (
-            _parse(env, "orders", orders_schema)
-            .select("o_custkey", "o_totalprice")
-            .persist()
-        )
-        lb = (
-            _parse(env, "lineitem", li_schema)
-            .select(
-                "l_orderkey",
-                "l_partkey",
-                "l_suppkey",
-                "l_quantity",
-                "l_extendedprice",
-                "l_discount",
-                "l_returnflag",
-                "l_linestatus",
-            )
-            .persist()
-        )
-        eb = (
-            _parse(env, "events", ev_schema)
-            .select(
-                "user_id", "value", F.timestamp_micros("ts_us").alias("ts")
-            )
-            .persist()
-        )
-        # r11 (guide §2.6 overlap independent jobs): the three parse
-        # materializations and the topic sink jobs share ONE pool, and
-        # each topic job GATES on its own record type's parse future
-        # instead of all topics waiting for the slowest parse — the
-        # orders/events topics start while the lineitem parse (the
-        # widest schema, the slowest of the three) is still running.
-        # parse_sec keeps its meaning: wall until all three caches are
-        # materialized.
-        t_parse0 = time.perf_counter()
-        parses: dict = {}
+        _meter("env_sec", t0)
+        parsed = {}
+        for src in FANOUT_SOURCES:
+            rel = _parse(env, src, wire[src])
+            parsed[src] = rel.select(*(c for c in rel.columns if c in reads[src])).persist()
 
-        def publish(df: DataFrame, topic: str) -> DataFrame:
-            # Idempotent under foreachBatch's at-least-once contract:
-            # every delivery of batch id N OVERWRITES its own batch=N
-            # partition of the sink, so a replayed batch rewrites
-            # identical partials instead of double-appending them.
-            df.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(sinks[topic], f"batch={batch_id}")
-            )
-            return df
+        def batch_dir(topic: str) -> str:
+            return os.path.join(sinks[topic], f"batch={batch_id}")
 
-        def t5_then_t1() -> None:
-            # Topics 5 and 1 share the orders→customer→nation join; r11
-            # (guide §1.2 "don't compute things twice"): build the
-            # county/state aggregate ONCE, publish it as topic 5, then
-            # ROLL TOPIC 1 UP from the just-written topic-5 partials
-            # (read back from the tmpfs sink — already materialized, so
-            # the join chain never executes a second time). Exactness:
-            # topic 1 groups by n_name = topic 5's county_name (every
-            # batch row carries exactly one (n_name, r_name) pair, so
-            # the county grain partitions topic 1's groups); summing
-            # bigint counts and DECIMAL sums of the county partials is
-            # exact integer/decimal arithmetic — bit-identical to
-            # aggregating the rows directly. The cast pins the sink
-            # schema to what the direct aggregate produced
-            # (sum(decimal(18,2)) = decimal(28,2)).
-            t0 = time.perf_counter()
-            ob.join(
-                F.broadcast(customer), ob.o_custkey == customer.c_custkey
-            ).join(
-                F.broadcast(nation), customer.c_nationkey == nation.n_nationkey
-            ).join(
-                F.broadcast(region), nation.n_regionkey == region.r_regionkey
-            ).groupBy(
-                F.col("n_name").alias("county_name"),
-                F.col("r_name").alias("state_name"),
-            ).agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum(_dec("o_totalprice")).alias("sum_total"),
-            ).transform(lambda d: publish(d, "lesions_by_county"))
-            t1 = time.perf_counter()
-            _LAST_RUN_META["topic_sec"]["lesions_by_county"] += t1 - t0
-            spark.read.parquet(
-                os.path.join(sinks["lesions_by_county"], f"batch={batch_id}")
-            ).groupBy(F.col("county_name").alias("state_name")).agg(
-                F.sum("n_orders").alias("n_orders"),
-                F.sum("sum_total").cast("decimal(28,2)").alias("sum_total"),
-            ).transform(lambda d: publish(d, "transit_signals_by_state"))
-            _LAST_RUN_META["topic_sec"]["transit_signals_by_state"] += (
-                time.perf_counter() - t1
-            )
-
-        def t2() -> None:
-            # Topic 2: per-supplier measures (lineitem stream).
-            lb.join(
-                F.broadcast(supplier), lb.l_suppkey == supplier.s_suppkey
-            ).groupBy(F.col("s_name").alias("supplier_name")).agg(
-                F.count(F.lit(1)).alias("n_items"),
-                F.sum(_dec("l_quantity")).alias("sum_qty"),
-                F.sum(_dec("l_extendedprice")).alias("sum_price"),
-            ).transform(lambda d: publish(d, "signals_vs_lesions"))
-
-        def t6() -> None:
-            # Topic 6: per-brand rollup with a distinct part count —
-            # partials keep (brand, partkey) grain so the merge can
-            # re-distinct (distinct counts do NOT add; grain-partials do).
-            lb.join(F.broadcast(part), lb.l_partkey == part.p_partkey).groupBy(
-                "p_brand", "p_partkey"
-            ).agg(
-                F.count(F.lit(1)).alias("n_items"),
-                F.sum(_dec("l_quantity")).alias("sum_qty"),
-                F.sum(_dec("l_extendedprice")).alias("sum_price"),
-            ).transform(lambda d: publish(d, "hospitals_schools_vs_lesions"))
-
-        def t3() -> None:
-            # Topic 3: lineitem stream enriched with orders at rest —
-            # bucketed co-located join by default (zero Exchange above
-            # the at-rest scan, asserted in tests/test_fanout.py);
-            # broadcast fallback only when the bucketed build failed.
-            if orders_static is None:
-                enriched = enrich_lineitem_bucketed(lb, spark, sf_dir)
-            else:
-                enriched = lb.join(
-                    orders_static, lb.l_orderkey == orders_static.o_orderkey
-                ).groupBy(
-                    "o_orderpriority", "l_returnflag", "l_linestatus"
-                ).agg(
-                    F.count(F.lit(1)).alias("n_items"),
-                    F.sum(
-                        _dec("l_extendedprice")
-                        * (F.lit(1).cast("decimal(18,2)") - _dec("l_discount"))
-                    ).alias("sum_disc_price"),
-                )
-            publish(enriched, "weather_light_surface")
-
-        def t4() -> None:
-            # Topic 4: hour/day-of-week counts (events stream).
-            eb.groupBy(
-                F.hour("ts").cast("int").alias("event_hour"),
-                F.weekday("ts").cast("int").alias("event_dow"),
-            ).agg(F.count(F.lit(1)).alias("n_events")).transform(lambda d: publish(d, "accidents_by_time"))
-
-        def t7() -> None:
-            # Topic 7: grid-binned rollup (events stream).
-            val_bin = (F.floor(F.col("value") / 50.0) * 50.0).cast("int")
-            uid_bin = (F.floor(F.col("user_id") / 10) * 10).cast("int")
-            eb.groupBy(
-                F.concat(
-                    F.lit("bbox_"),
-                    val_bin.cast("string"),
-                    F.lit("_"),
-                    uid_bin.cast("string"),
-                ).alias("bbox_label")
-            ).agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(_dec("value")).alias("sum_value"),
-            ).transform(lambda d: publish(d, "crossings_vs_lesions"))
-
-        jobs = (
-            ("lesions_by_county", t5_then_t1, "orders"),  # + topic 1
-            ("signals_vs_lesions", t2, "lineitem"),
-            ("hospitals_schools_vs_lesions", t6, "lineitem"),
-            ("weather_light_surface", t3, "lineitem"),
-            ("accidents_by_time", t4, "events"),
-            ("crossings_vs_lesions", t7, "events"),
-        )
-
-        def timed(topic: str, fn, dep: str) -> None:
-            # Per-topic sink-job wall seconds, accumulated across the
-            # drain's micro-batches into the run metadata (VERDICT r9
-            # #5: the catalog's heaviest entry should be adjudicable
-            # per topic, not one opaque number). The topic jobs run
-            # concurrently, so these overlap — compare a topic against
-            # ITSELF across runs, don't sum them. The gate on the
-            # topic's OWN parse future sits before the timer, so the
-            # meter still reads sink-job wall, not parse wait;
-            # t5_then_t1 writes its two topics' meters itself (the only
-            # fused pair).
-            parses[dep].result()
-            t0 = time.perf_counter()
-            fn()
-            if topic not in ("lesions_by_county",):
-                _LAST_RUN_META["topic_sec"][topic] += time.perf_counter() - t0
+        def job(root: TopicSpec) -> None:
+            # Gated on its own source's parse only; the meter starts after
+            # the gate, so it reads sink-job seconds, not parse wait.
+            parses[root.source].result()
+            for spec in (root, *derived[root.name]):
+                t0 = time.perf_counter()
+                if spec.derived_from:
+                    df = rollup(spec, spark.read.parquet(batch_dir(spec.derived_from[0])))
+                else:
+                    df = partial(spec, {**at_rest, spec.source: parsed[spec.source]})
+                df.coalesce(1).write.mode("overwrite").parquet(batch_dir(spec.name))
+                _LAST_RUN_META["topic_sec"][spec.name] += time.perf_counter() - t0
 
         try:
-            with ThreadPoolExecutor(max_workers=9) as pool:
-                for pname, pdf in (
-                    ("orders", ob),
-                    ("lineitem", lb),
-                    ("events", eb),
-                ):
-                    parses[pname] = pool.submit(lambda d=pdf: d.count())
-                futures = [
-                    pool.submit(timed, topic, fn, dep)
-                    for topic, fn, dep in jobs
-                ]
+            t_parse0 = time.perf_counter()
+            with ThreadPoolExecutor(max_workers=len(parsed) + len(roots)) as pool:
+                parses = {src: pool.submit(df.count) for src, df in parsed.items()}
+                jobs = [pool.submit(job, root) for root in roots]
                 for fut in parses.values():
                     fut.result()
-                _LAST_RUN_META["parse_sec"] = _LAST_RUN_META.get(
-                    "parse_sec", 0.0
-                ) + (time.perf_counter() - t_parse0)
-                for fut in futures:
+                _meter("parse_sec", t_parse0)
+                for fut in jobs:
                     fut.result()
         finally:
-            # Unpersist even when a sink thread raises — a failed drain
-            # must not leave the cached envelope + three parsed copies
-            # pinned in executor memory for the rest of the session.
-            for df in (ob, lb, eb, env):
+            # A failed drain must not leave four caches pinned for the
+            # rest of the session.
+            for df in (*parsed.values(), env):
                 df.unpersist()
 
     try:
-        t_drain0 = time.perf_counter()
-        streaming.run_foreach_batch(
-            envelope_stream(spark, sf_dir, schemas), spark, drain
-        )
-        _LAST_RUN_META["drain_wall_sec"] = time.perf_counter() - t_drain0
-        t_merge0 = time.perf_counter()
-        dbl = lambda c: F.sum(c).cast("double")  # noqa: E731
-        merged = {
-            "transit_signals_by_state": spark.read.parquet(
-                sinks["transit_signals_by_state"]
-            )
-            .groupBy("state_name")
-            .agg(F.sum("n_orders").alias("n_orders"), dbl("sum_total").alias("sum_total")),
-            "lesions_by_county": spark.read.parquet(sinks["lesions_by_county"])
-            .groupBy("county_name", "state_name")
-            .agg(F.sum("n_orders").alias("n_orders"), dbl("sum_total").alias("sum_total")),
-            "signals_vs_lesions": spark.read.parquet(sinks["signals_vs_lesions"])
-            .groupBy("supplier_name")
-            .agg(
-                F.sum("n_items").alias("n_items"),
-                dbl("sum_qty").alias("sum_qty"),
-                dbl("sum_price").alias("sum_price"),
-            ),
-            "hospitals_schools_vs_lesions": spark.read.parquet(
-                sinks["hospitals_schools_vs_lesions"]
-            )
-            .groupBy("p_brand")
-            .agg(
-                F.sum("n_items").alias("n_items"),
-                F.countDistinct("p_partkey").alias("n_parts"),
-                dbl("sum_qty").alias("sum_qty"),
-                dbl("sum_price").alias("sum_price"),
-            ),
-            "weather_light_surface": spark.read.parquet(
-                sinks["weather_light_surface"]
-            )
-            .groupBy("o_orderpriority", "l_returnflag", "l_linestatus")
-            .agg(
-                F.sum("n_items").alias("n_items"),
-                dbl("sum_disc_price").alias("sum_disc_price"),
-            ),
-            "accidents_by_time": spark.read.parquet(sinks["accidents_by_time"])
-            .groupBy("event_hour", "event_dow")
-            .agg(F.sum("n_events").alias("n_events")),
-            "crossings_vs_lesions": spark.read.parquet(
-                sinks["crossings_vs_lesions"]
-            )
-            .groupBy("bbox_label")
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                dbl("sum_value").alias("sum_value"),
-            ),
-        }
-        # Eagerly materialize so the sink files can be reclaimed now —
-        # concurrently; the seven merges are independent tiny jobs.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=7) as pool:
+        t0 = time.perf_counter()
+        streaming.run_foreach_batch(envelope_stream(spark, sf_dir, wire), spark, drain)
+        _meter("drain_wall_sec", t0)
+        t0 = time.perf_counter()
+        with ThreadPoolExecutor(max_workers=len(TOPIC_SPECS)) as pool:
             futs = {
-                name: pool.submit(lambda d=df: d.localCheckpoint(eager=True))
-                for name, df in merged.items()
+                s.name: pool.submit(merge(s, spark.read.parquet(sinks[s.name])).localCheckpoint, eager=True)
+                for s in TOPIC_SPECS
             }
             out = {name: fut.result() for name, fut in futs.items()}
-        _LAST_RUN_META["merge_sec"] = time.perf_counter() - t_merge0
+        _meter("merge_sec", t0)
         return out
     finally:
         shutil.rmtree(base, ignore_errors=True)

@@ -13,10 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans import QUERY_REGISTRY
-from .core import TOPICS, kafka_sink_options, to_kafka_array_envelope, to_kafka_payload
+from ..topic_specs import TOPIC_SPECS
+from .core import kafka_sink_options, to_kafka_array_envelope, to_kafka_payload
 
-#: topic → catalog query name (the 7 topic queries, plans/topics.py).
-TOPIC_QUERIES: dict[str, str] = {topic: topic for topic in TOPICS}
+#: topic → catalog query name: each topic spec registers one batch query
+#: under its own name (plans/topics.py).
+TOPIC_QUERIES: dict[str, str] = {spec.name: spec.name for spec in TOPIC_SPECS}
 
 
 def publish_plan(
