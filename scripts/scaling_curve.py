@@ -23,9 +23,6 @@ sys.path.insert(0, ".")
 from traffic_accidents_airflow_kafka_spark.operators.bpe import (  # noqa: E402
     clear_bpe_merge_cache,
 )
-from traffic_accidents_airflow_kafka_spark.operators.similarity import (  # noqa: E402
-    clear_ivf_centroid_cache,
-)
 from traffic_accidents_airflow_kafka_spark.plans import QUERY_REGISTRY  # noqa: E402
 from traffic_accidents_airflow_kafka_spark.plans.llm import (  # noqa: E402
     evict_artifacts,
@@ -35,11 +32,10 @@ from traffic_accidents_airflow_kafka_spark.session import get_spark  # noqa: E40
 
 def _clear_memo_caches() -> None:
     """Scaling curves measure the REAL per-SF cost — trained-index memo
-    caches (BPE merges, IVF centroids, SQ8 decoded pools + exact
-    baselines) would otherwise hide the train/build step behind the
-    first warmup."""
+    caches (BPE merges, and the session artifacts: lattice IVF/PQ
+    indexes, SQ8 decoded pools, exact baselines) would otherwise hide
+    the train/build step behind the first warmup."""
     clear_bpe_merge_cache()
-    clear_ivf_centroid_cache()
     evict_artifacts()
 
 SF_DIRS = [

@@ -40,9 +40,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
 from traffic_accidents_airflow_kafka_spark.operators.bpe import (  # noqa: E402
     clear_bpe_merge_cache,
 )
-from traffic_accidents_airflow_kafka_spark.operators.similarity import (  # noqa: E402
-    clear_ivf_centroid_cache,
-)
 from traffic_accidents_airflow_kafka_spark.plans import QUERY_REGISTRY  # noqa: E402
 from traffic_accidents_airflow_kafka_spark.plans.llm import (  # noqa: E402
     artifact_keys,
@@ -185,7 +182,6 @@ def build_sf1(spark: SparkSession, rebuild: bool = False) -> None:
 
 def _clear_memo_caches() -> None:
     clear_bpe_merge_cache()
-    clear_ivf_centroid_cache()
     evict_artifacts()
 
 

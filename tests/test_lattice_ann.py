@@ -4,7 +4,8 @@ embedding_pq_ann's full value-hash oracles. The cross-engine parity
 itself is proven by those oracles (tests/test_catalog_oracle.py runs
 them); these tests pin the OPERATOR-level contracts the oracles build
 on: bit-determinism of training, the full-probe = brute-force anchor,
-the prefix-growing probe sweep, and recall floors."""
+the prefix-growing probe sweep, recall floors, and the bounds and errors
+of index building."""
 
 from __future__ import annotations
 
@@ -144,6 +145,46 @@ def test_pq_recon_zero_norm_guard(spark):
     assert out, "degenerate corpus still ranks"
     for r in out:
         assert r["approx_cosine"] == -2.0
+
+
+@pytest.mark.parametrize(
+    "build",
+    [similarity.pq_exact_recon, similarity.ivf_pq_exact_index],
+    ids=lambda f: f.__name__,
+)
+def test_pq_rejects_indivisible_dim(emb, build):
+    """m must split the 64-dim vectors into equal subspaces."""
+    with pytest.raises(ValueError, match="not divisible"):
+        build(emb, "vec_id", "embedding", m=7)
+
+
+def test_training_sample_is_capped(spark, emb):
+    """The driver-side training collect is bounded: ``cap`` rows, the
+    lowest sampled ids in id order. A quantizer trained on that capped
+    sample still assigns a cell to every corpus row."""
+    rows = sorted(
+        (r["vec_id"], r["embedding"]) for r in emb.collect() if r["vec_id"] % 4 == 0
+    )[:16]
+    Xq = similarity.collect_lattice_sample(emb, "vec_id", "embedding", cap=16)
+    want = similarity.lattice_quantize_np(np.array([v for _, v in rows]))
+    assert Xq.shape == (16, want.shape[1])
+    assert (Xq == want).all()
+    cent = similarity.train_lattice_kmeans(Xq, 4)
+    cells = similarity.lattice_cell_assign(emb, "vec_id", "embedding", cent)
+    assert cells.filter(F.col("cell").isNotNull()).count() == emb.count()
+
+
+def test_corpus_without_sampled_ids_fails_loudly(spark):
+    """No id is divisible by the sample modulus 4, so training has no
+    input: the build raises rather than serving an untrained index."""
+    tiny = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in (1, 3, 5)],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="empty training sample"):
+        similarity.ivf_ann_topk_exact(
+            tiny, tiny.select("vec_id"), n_centroids=8, n_probe=8, k=1
+        )
 
 
 def _python_lattice_kmeans(rows, k, iters):

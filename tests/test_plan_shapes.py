@@ -107,9 +107,9 @@ STREAMING = {"stream_window_counts"}
 
 #: Queries allowed Arrow-batched Python stages (mapInPandas/pandas_udf):
 #: the documented escape hatches, never row-at-a-time BatchEvalPython.
-#: embedding_ivf_ann: vectorized cell assignment + per-cell matmul search
-#: (higher-order-function folds are interpreted, not codegen — the Arrow
-#: matmul is the scale path for |corpus| × n_centroids arithmetic).
+#: embedding_ivf_ann: the integer-lattice cell assignment is one Arrow
+#: pass (an int64 matmul over |corpus| × n_centroids distances, which an
+#: interpreted higher-order-function fold would make the bottleneck).
 ARROW_OK = {
     "multimodal_meta",
     # Real-bytes decode twins: encode + header-parse are both Arrow map
@@ -136,9 +136,10 @@ ARROW_OK = {
     # PQ encode + ADC search are Arrow map passes by design (the whole
     # point is numpy code-matrix arithmetic over compressed codes).
     "embedding_pq_ann",
-    # IVF-PQ: fused Arrow assign+encode pass + cogrouped per-cell ADC.
+    # IVF-PQ: one fused Arrow assign+encode pass; the search joins
+    # query probes to cell members.
     "embedding_ivfpq_ann",
-    # PQ shortlist stage reuses pq_ann_topk's Arrow encode/ADC passes.
+    # PQ shortlist stage reuses pq_exact_recon's Arrow encode pass.
     "embedding_pq_rerank",
     # Span excision: broadcast work-list + one Arrow pass of imperative
     # token-window surgery (no declarative overlap-resolving form).

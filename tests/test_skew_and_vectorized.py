@@ -1,5 +1,6 @@
-"""Salted-join equivalence, two-phase aggregation equivalence, and the
-vectorized cosine path agreeing with the exact fold."""
+"""Salted-join equivalence, two-phase aggregation equivalence, join
+cardinality prediction, and ANN recall against the exact cosine baseline
+(multi-probe LSH, PQ shortlist re-rank)."""
 
 from __future__ import annotations
 
@@ -78,109 +79,6 @@ def test_join_cardinality_prediction_matches_reality(spark):
     assert st.n_common_keys == 2
 
 
-def test_vectorized_cosine_matches_fold(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    qids = emb.select("vec_id").filter(F.col("vec_id") < 5)
-    exact = {
-        (r["qid"], r["rank"]): (r["nid"], r["cosine"])
-        for r in similarity.cosine_topk(emb, qids, k=3).collect()
-    }
-    vec = {
-        (r["qid"], r["rank"]): (r["nid"], r["cosine"])
-        for r in similarity.cosine_topk_vectorized(emb, qids, k=3).collect()
-    }
-    assert set(exact) == set(vec)
-    for key, (nid, cos) in exact.items():
-        vnid, vcos = vec[key]
-        assert vnid == nid  # same neighbor ranking
-        assert abs(vcos - cos) < 1e-6
-
-
-def test_vectorized_cosine_caps_driver_collect(spark, sf_dir):
-    """The query-side collect is bounded: exceeding max_queries raises
-    instead of silently pulling a corpus to the driver — including the
-    query_ids=None whole-table form."""
-    import pytest
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    with pytest.raises(ValueError, match="max_queries"):
-        similarity.cosine_topk_vectorized(emb, None, k=3, max_queries=10)
-    # A bounded query set under the cap still works.
-    qids = emb.select("vec_id").filter(F.col("vec_id") < 3)
-    rows = similarity.cosine_topk_vectorized(emb, qids, k=3, max_queries=10).collect()
-    assert {r["qid"] for r in rows} == {0, 1, 2}
-
-
-def test_ivf_ann_recall_vs_exact(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    exact_top1 = {
-        r["qid"]: r["nid"]
-        for r in similarity.cosine_topk(emb, k=1).collect()
-    }
-    ivf = similarity.ivf_ann_topk(emb, n_centroids=8, n_probe=3, k=1)
-    ivf_top1 = {r["qid"]: r["nid"] for r in ivf.collect()}
-    # Probing 3/8 cells must recover a solid share of true nearest
-    # neighbors (recall is the tunable; the structure is what we assert).
-    hits = sum(1 for q, n in exact_top1.items() if ivf_top1.get(q) == n)
-    assert hits / len(exact_top1) > 0.5
-    # Every query produced a candidate (probe cells are never empty here).
-    assert set(ivf_top1) == set(exact_top1)
-
-
-def test_ivf_vectorized_matches_exact_fold_path(spark, sf_dir):
-    """The Arrow matmul path and the exact HOF-fold path share centroids,
-    probing, and tie-breaks — same neighbors, cosines within float
-    re-association tolerance."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    vec = similarity.ivf_ann_topk(emb, n_centroids=8, n_probe=3, k=2)
-    hof = similarity.ivf_ann_topk(
-        emb, n_centroids=8, n_probe=3, k=2, vectorized=False
-    )
-    vec_rows = {(r["qid"], r["rank"]): r for r in vec.collect()}
-    hof_rows = {(r["qid"], r["rank"]): r for r in hof.collect()}
-    assert set(vec_rows) == set(hof_rows)
-    agree = sum(
-        1
-        for key, r in vec_rows.items()
-        if r["nid"] == hof_rows[key]["nid"]
-        and abs(r["cosine"] - hof_rows[key]["cosine"]) < 1e-3
-        and r["cell"] == hof_rows[key]["cell"]
-    )
-    # Identical modulo rounding-induced rank swaps on near-equal cosines.
-    assert agree / len(vec_rows) > 0.95
-
-
-def test_ivf_handles_empty_and_tiny_corpora(spark):
-    """A 100 TB pipeline's first backfill starts empty — ANN build must
-    not crash on empty or smaller-than-k corpora."""
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    assert similarity.ivf_ann_topk(empty, n_centroids=4, n_probe=2, k=1).count() == 0
-
-    tiny = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in (1, 3, 5)],  # no id divisible by 4
-        "vec_id long, embedding array<float>",
-    )
-    out = similarity.ivf_ann_topk(tiny, n_centroids=8, n_probe=8, k=1).collect()
-    assert {r["qid"] for r in out} == {1, 3, 5}  # clamped centroids, all served
-
-
-def test_ivf_training_sample_is_capped(spark, sf_dir):
-    """The driver-side training collect must be bounded at any corpus
-    size (round-2 finding: the modulus alone collects 25% of the corpus).
-    A tiny cap must still yield a working quantizer over every query."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    similarity.clear_ivf_centroid_cache()
-    out = similarity.ivf_ann_topk(
-        emb, n_centroids=4, n_probe=4, k=1, max_train_sample=16, refresh=True
-    )
-    got = {r["qid"] for r in out.collect()}
-    assert got == {r["vec_id"] for r in emb.select("vec_id").collect()}
-    # Centroid count is bounded by the capped sample, never above it.
-    key = next(iter(similarity._IVF_CENTROID_CACHE))
-    assert len(similarity._IVF_CENTROID_CACHE[key]) <= 16
-    similarity.clear_ivf_centroid_cache()
-
-
 def test_multiprobe_lsh_recall_at_least_single_probe(spark, sf_dir):
     """Probing the 6 Hamming-1 buckets on top of the home bucket can only
     ADD candidates, so top-1 recall vs the exact baseline must be >= the
@@ -209,54 +107,6 @@ def test_multiprobe_lsh_recall_at_least_single_probe(spark, sf_dir):
     assert set(multi) >= set(single)  # multiprobe never loses a query
 
 
-def test_pq_ann_recall_and_compression(spark, sf_dir):
-    """PQ ADC ranking must recover a solid share of true top-1 neighbors
-    while answering every query, and the code payload must honor the
-    m-codes compression contract."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    qids = emb.select("vec_id").filter(F.col("vec_id") < 60)
-    exact_top1 = {
-        r["qid"]: r["nid"] for r in similarity.cosine_topk(emb, qids, k=1).collect()
-    }
-    pq = similarity.pq_ann_topk(emb, qids, m=32, n_codes=64, k=1)
-    rows = pq.collect()
-    pq_top1 = {r["qid"]: r["nid"] for r in rows}
-    assert set(pq_top1) == set(exact_top1)  # every query answered
-    hits = sum(1 for q, n in exact_top1.items() if pq_top1.get(q) == n)
-    assert hits / len(exact_top1) > 0.5
-    # Determinism: same seed, same answers.
-    again = {r["qid"]: r["nid"] for r in
-             similarity.pq_ann_topk(emb, qids, m=32, n_codes=64, k=1).collect()}
-    assert again == pq_top1
-
-
-def test_ivf_pq_recall_and_determinism(spark, sf_dir):
-    """The composed IVF-PQ index answers every query deterministically and
-    residual-PQ ADC over probed cells recovers a solid share of true
-    top-1 neighbors. Residual encoding + generous probes should land in
-    the same ballpark as flat PQ despite searching only a fraction of
-    the corpus."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    qids = emb.select("vec_id").filter(F.col("vec_id") < 60)
-    exact_top1 = {
-        r["qid"]: r["nid"] for r in similarity.cosine_topk(emb, qids, k=1).collect()
-    }
-    out = similarity.ivf_pq_ann_topk(
-        emb, qids, n_centroids=8, n_probe=4, m=32, n_codes=64, k=1
-    )
-    got = {r["qid"]: r["nid"] for r in out.collect()}
-    assert set(got) == set(exact_top1)  # n_probe=4 of 8 cells: all answered
-    hits = sum(1 for q, n in exact_top1.items() if got.get(q) == n)
-    assert hits / len(exact_top1) > 0.4
-    again = {
-        r["qid"]: r["nid"]
-        for r in similarity.ivf_pq_ann_topk(
-            emb, qids, n_centroids=8, n_probe=4, m=32, n_codes=64, k=1
-        ).collect()
-    }
-    assert again == got
-
-
 def test_pq_rerank_beats_plain_pq_recall(spark, sf_dir):
     """Exact re-ranking of a PQ shortlist must recover recall: top-1
     agreement with the exact baseline is >= plain PQ's, and with a
@@ -266,28 +116,24 @@ def test_pq_rerank_beats_plain_pq_recall(spark, sf_dir):
     exact_top1 = {
         r["qid"]: r["nid"] for r in similarity.cosine_topk(emb, qids, k=1).collect()
     }
+    # One lattice ADC pass: its rank-1 rows are plain PQ's answer, and
+    # all 50 ranks are the re-rank shortlist.
+    shortlist = similarity.pq_ann_topk_exact(
+        emb, qids, m=32, n_codes=64, k=50
+    ).localCheckpoint(eager=True)
     plain = {
         r["qid"]: r["nid"]
-        for r in similarity.pq_ann_topk(emb, qids, m=32, n_codes=64, k=1).collect()
+        for r in shortlist.filter(F.col("rank") == 1).collect()
     }
     rerank = {
         r["qid"]: r["nid"]
-        for r in similarity.pq_rerank_topk(
-            emb, qids, m=32, n_codes=64, candidates=50, k=1
-        ).collect()
+        for r in similarity.pq_rerank_topk(emb, qids, shortlist, k=1).collect()
     }
     assert set(rerank) == set(exact_top1)
     hits_plain = sum(1 for q, n in exact_top1.items() if plain.get(q) == n)
     hits_rerank = sum(1 for q, n in exact_top1.items() if rerank.get(q) == n)
     assert hits_rerank >= hits_plain
     assert hits_rerank / len(exact_top1) > 0.8
-
-
-def test_ivf_pq_rejects_indivisible_dim(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    qids = emb.select("vec_id").filter(F.col("vec_id") < 5)
-    with pytest.raises(ValueError, match="not divisible"):
-        similarity.ivf_pq_ann_topk(emb, qids, m=7)
 
 
 def test_winsorize_and_scale_transform_composition(spark, sf_dir):

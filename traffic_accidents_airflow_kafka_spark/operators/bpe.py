@@ -118,8 +118,8 @@ def apply_merge(syms_col: str | Column, lhs: str, rhs: str) -> Column:
 
 
 #: Trained merge lists keyed on the corpus PLAN (semanticHash) + params —
-#: the FAISS-index idiom the IVF centroid cache also follows: a tokenizer
-#: is trained once and reused across encodes/searches. Like any index, it
+#: the FAISS-index idiom: a tokenizer is trained once and reused across
+#: encodes. Like any index, it
 #: goes stale if the table's files change under the same plan — call
 #: :func:`clear_bpe_merge_cache` after a data refresh.
 _BPE_MERGE_CACHE: dict[tuple, list[tuple[int, str, str, int]]] = {}

@@ -1,19 +1,24 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths, per the scale ladder:
+Paths, per the scale ladder:
 
 - **Brute-force cosine top-k** — the exactness baseline. Queries broadcast
   against the candidate set; all arithmetic is promoted to double with a
   fixed left-to-right summation order so results are bit-identical to a
   SQL oracle computing the same fold.
-- **Random-hyperplane LSH** — the scale path: vectors bucket by the sign
-  pattern of ``n_planes`` fixed projections; top-k runs within buckets
-  only. Planes are generated from a seeded NumPy RNG on the driver and
-  shipped as literal arrays (deterministic across runs; no state).
+- **Random-hyperplane LSH** — vectors bucket by the sign pattern of
+  ``n_planes`` fixed projections; top-k runs within buckets only. Planes
+  are generated from a seeded NumPy RNG on the driver and shipped as
+  literal arrays (deterministic across runs; no state).
+- **SQ8 scalar quantization** — per-dimension 8-bit codes calibrated on
+  exact corpus extremes.
+- **Integer-lattice IVF / PQ / IVF-PQ** (the ``*_exact`` functions) —
+  k-means quantizers trained in int64 so every stage replays bit-for-bit
+  in SQL; see the section banner below.
 
 Never an unbucketed all-pairs crossJoin at scale: brute force is O(Q×N)
 and only sane while Q is small; LSH makes the candidate set per query
-O(N / 2^planes) in expectation.
+O(N / 2^planes) in expectation, IVF ~O(N × n_probe / n_centroids).
 """
 
 from __future__ import annotations
@@ -79,100 +84,6 @@ def cosine_topk(
     )
 
 
-def cosine_topk_vectorized(
-    vectors: DataFrame,
-    query_ids: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    max_queries: int = 100_000,
-) -> DataFrame:
-    """Arrow-vectorized variant of :func:`cosine_topk`: queries collect to
-    the driver (small by contract), broadcast as a NumPy matrix, and each
-    partition computes a whole candidates×queries matmul via
-    ``mapInPandas`` — the 10-100× batch-over-scalar path when the fold
-    expression becomes the bottleneck at higher dimensionality.
-
-    Same ranking as the exact fold (float64 matmul); last-digit rounding
-    may differ from the sequential fold, so the oracle-checked entry stays
-    on :func:`cosine_topk` and this one is bounded against it in tests.
-
-    ``max_queries`` bounds the driver collect (the same discipline as the
-    IVF trainer's ``max_train_sample``): the query side must fit on the
-    driver for the broadcast matmul to make sense at all, so exceeding
-    the cap is an error — pass a bounded ``query_ids`` or raise the cap
-    deliberately, never silently collect a corpus.
-    """
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    q = vectors
-    if query_ids is not None:
-        q = vectors.join(query_ids, id_col, "left_semi")
-    q_rows = q.select(id_col, vec_col).limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
-        raise ValueError(
-            f"cosine_topk_vectorized collects the query side to the driver; "
-            f"got more than max_queries={max_queries} rows "
-            f"({'no query_ids passed — the whole corpus is the query set' if query_ids is None else 'narrow query_ids'} "
-            f"or raise max_queries deliberately)"
-        )
-    q_ids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-
-    out_schema = StructType(
-        [
-            StructField("qid", LongType()),
-            StructField("nid", LongType()),
-            StructField("cosine", DoubleType()),
-            StructField("part_rank", IntegerType()),
-        ]
-    )
-
-    def batches(it):
-        for pdf in it:
-            c_mat = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            sims = (c_mat @ q_mat.T) / np.outer(c_norm, q_norm)  # candidates × queries
-            frames = []
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                mask = c_ids != qid
-                ids, vals = c_ids[mask], col[mask]
-                top = np.argsort(-vals, kind="stable")[: k]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "qid": qid,
-                            "nid": ids[top],
-                            "cosine": vals[top],
-                            "part_rank": np.arange(1, len(top) + 1, dtype=np.int32),
-                        }
-                    )
-                )
-            yield pd.concat(frames) if frames else pd.DataFrame(
-                columns=["qid", "nid", "cosine", "part_rank"]
-            )
-
-    # Per-partition top-k then a global re-rank over the k×partitions
-    # survivors — the classic distributed top-k reduction.
-    partial = vectors.select(id_col, vec_col).mapInPandas(batches, out_schema)
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", F.round("cosine", 4).alias("cosine"))
-    )
-
-
 def hyperplane_planes(dim: int, n_planes: int, seed: int = 7) -> list[list[float]]:
     """Deterministic random hyperplanes (seeded Gaussian)."""
     rng = np.random.default_rng(seed)
@@ -192,384 +103,6 @@ def lsh_bucket(vec_col: Column | str, planes: list[list[float]]) -> Column:
         dot = _dot_double(c, lit_plane)
         bucket = bucket + F.when(dot > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(0)
     return bucket
-
-
-#: Trained coarse quantizers, keyed by (corpus plan hash, cols, k, seed).
-_IVF_CENTROID_CACHE: dict[tuple, list[tuple[int, list[float]]]] = {}
-
-
-def clear_ivf_centroid_cache() -> None:
-    """Drop every cached coarse quantizer (explicit index rebuild).
-
-    The centroid cache keys on the corpus *plan* (semanticHash), which is
-    the right identity for an ANN index — built once, reused across
-    searches — but goes stale if the table's underlying files change
-    under the same plan. Call this after a data refresh, exactly like
-    rebuilding a FAISS index after re-ingesting the corpus.
-    """
-    _IVF_CENTROID_CACHE.clear()
-
-
-def _cell_assignments(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    cent_mat: np.ndarray,
-    n_probe: int = 1,
-) -> DataFrame:
-    """Arrow-vectorized nearest-cell assignment: one ``mapInPandas`` stage
-    computing a whole-batch ``X @ C.T`` instead of an interpreted
-    higher-order-function fold per (row, centroid).
-
-    ``n_probe=1`` → the inverted-file assignment (argmin cell per vector);
-    ``n_probe>1`` → the query-side probe expansion (top-``n_probe`` cells
-    per vector, one output row each). Ties break to the lowest cell id on
-    both paths (np.argmin / stable argsort), matching the exact path's
-    ``array_sort((dist, cell))`` ordering.
-    """
-    import pandas as pd
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    base = df.select(id_col, vec_col)
-    out_schema = StructType(
-        list(base.schema.fields) + [StructField("cell", IntegerType())]
-    )
-    nb = min(n_probe, len(cent_mat))
-    cent_t = cent_mat.T.copy()
-    # ||x - c||^2 = ||x||^2 - 2 x.c + ||c||^2; drop the per-row constant —
-    # it never changes the argmin/ordering over cells.
-    cent_sq = (cent_mat**2).sum(axis=1)
-
-    def fn(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            score = cent_sq - 2.0 * (X @ cent_t)
-            if nb == 1:
-                out = pdf[[id_col, vec_col]].copy()
-                out["cell"] = np.argmin(score, axis=1).astype(np.int32)
-                yield out
-            else:
-                order = np.argsort(score, axis=1, kind="stable")[:, :nb]
-                rep = pdf[[id_col, vec_col]].iloc[
-                    np.repeat(np.arange(len(pdf)), nb)
-                ]
-                rep = rep.copy()
-                rep["cell"] = order.reshape(-1).astype(np.int32)
-                yield rep
-
-    return base.mapInPandas(fn, out_schema)
-
-
-def _cell_search_vectorized(
-    probes: DataFrame,
-    cand: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-) -> DataFrame:
-    """Cogrouped per-cell search: for each cell, ONE queries×members cosine
-    matmul with per-query top-k — the IVF compute shape (|cell| work per
-    probe, never an exploded pair stream of interpreted folds). The shuffle
-    is keyed on cell; Lloyd's roughly-balanced cells keep it even, and a
-    pathologically hot cell is exactly what AQE skew-split handles.
-    """
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_schema = StructType(
-        [
-            StructField("qid", LongType()),
-            StructField("nid", LongType()),
-            StructField("cosine", DoubleType()),
-            StructField("cell", IntegerType()),
-        ]
-    )
-    empty = pd.DataFrame({"qid": [], "nid": [], "cosine": [], "cell": []})
-
-    def fn(key, qpdf, npdf):
-        if not len(qpdf) or not len(npdf):
-            return empty
-        (cell,) = key
-        Q = np.array(qpdf[vec_col].tolist(), dtype=np.float64)
-        N = np.array(npdf[vec_col].tolist(), dtype=np.float64)
-        qids = qpdf[id_col].to_numpy(dtype=np.int64)
-        nids = npdf[id_col].to_numpy(dtype=np.int64)
-        sims = (Q @ N.T) / np.outer(
-            np.linalg.norm(Q, axis=1), np.linalg.norm(N, axis=1)
-        )
-        frames = []
-        for i, qid in enumerate(qids):
-            mask = nids != qid
-            ids, vals = nids[mask], sims[i][mask]
-            if not len(ids):
-                continue
-            # Deterministic per-cell top-k: cosine desc, nid asc.
-            order = np.lexsort((ids, -vals))[:k]
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "qid": qid,
-                        "nid": ids[order],
-                        "cosine": vals[order],
-                        "cell": int(cell),
-                    }
-                )
-            )
-        return pd.concat(frames) if frames else empty
-
-    return (
-        probes.groupBy("cell")
-        .cogroup(cand.groupBy("cell"))
-        .applyInPandas(fn, out_schema)
-    )
-
-
-def train_ivf_centroids(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    seed: int = 7,
-    max_train_sample: int = 100_000,
-    refresh: bool = False,
-) -> list[tuple[int, list[float]]] | None:
-    """Train (or fetch the cached) IVF coarse quantizer: seeded Lloyd
-    k-means over a bounded deterministic sample. Returns ``None`` for an
-    empty corpus.
-
-    Training is DRIVER-SIDE NumPy over a deterministic sample — the
-    FAISS/ScaNN idiom: a coarse quantizer is a sample-size problem
-    (k × dim floats of state, a few Lloyd passes over ~10^5 sampled
-    rows), not a cluster problem. The sample is hard-capped at
-    ``max_train_sample`` rows (default 10^5), so the driver collect is
-    bounded at any corpus size.
-
-    The quantizer is BUILT ONCE per (corpus plan, cols, k, seed) and
-    reused across searches — exactly how ANN serving works (the index
-    persists; only searches repeat). semanticHash is an analysis-time
-    plan hash, so the cache key is the logical corpus, not object
-    identity.
-    """
-    cache_key = (vectors.semanticHash(), id_col, vec_col, n_centroids, seed)
-    if refresh:
-        _IVF_CENTROID_CACHE.pop(cache_key, None)
-    centroids = _IVF_CENTROID_CACHE.get(cache_key)
-    if centroids is not None:
-        return centroids
-    # Deterministic modulus sample, HARD-CAPPED at max_train_sample so
-    # the driver collect is bounded no matter the corpus size (at 10^9
-    # rows the modulus alone would pull 2.5x10^8 vectors). The cap is
-    # a LocalLimit: executors stop producing once the limit is met, so
-    # this never scans the full corpus. Few Lloyd iterations on
-    # purpose: IVF needs roughly-balanced cells, not converged
-    # clusters, and a 10^5-row sample is the FAISS-idiom budget.
-    sample = (
-        vectors.filter(F.col(id_col) % 4 == 0)
-        .select(vec_col)
-        .limit(max_train_sample)
-        .collect()
-    )
-    if not sample:
-        # Modulus missed every id (tiny/sparse corpus): fall back to a
-        # deterministic prefix so training still has input.
-        sample = (
-            vectors.orderBy(id_col)
-            .select(vec_col)
-            .limit(max(4 * n_centroids, 64))
-            .collect()
-        )
-    if not sample:
-        return None
-    X = np.array([r[vec_col] for r in sample], dtype=np.float64)
-    n_centroids = min(n_centroids, len(X))
-    rng = np.random.default_rng(seed)
-    cent = X[rng.choice(len(X), size=n_centroids, replace=False)].copy()
-    for _ in range(5):
-        d2 = _float_d2_chunked(X, cent)
-        labels = d2.argmin(axis=1)
-        for c in range(n_centroids):
-            members = X[labels == c]
-            if len(members):
-                cent[c] = members.mean(axis=0)
-    centroids = [(i, [float(x) for x in c]) for i, c in enumerate(cent)]
-    _IVF_CENTROID_CACHE[cache_key] = centroids
-    return centroids
-
-
-def _float_d2_chunked(
-    X: "np.ndarray", cent: "np.ndarray", chunk: int = 8192
-) -> "np.ndarray":
-    """Float squared distances (n, k), row-chunked: identical float ops
-    (and therefore bit-identical results) to the broadcast
-    (n, k, d) difference tensor, but peak memory is O(chunk*k*d) instead
-    of O(n*k*d) — the r8 advisory's memory bound, applied to the float
-    trainers without touching their arithmetic (the expanded |x|^2 -
-    2x.c + |c|^2 form would round differently in float; the lattice tier
-    uses it because int64 is exact — see _lattice_d2)."""
-    out = np.empty((len(X), len(cent)), dtype=np.float64)
-    for i in range(0, len(X), chunk):
-        blk = X[i : i + chunk]
-        out[i : i + chunk] = (
-            (blk[:, None, :] - cent[None, :, :]) ** 2
-        ).sum(axis=2)
-    return out
-
-
-def ivf_assign(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    seed: int = 7,
-    max_train_sample: int = 100_000,
-    refresh: bool = False,
-) -> DataFrame | None:
-    """The inverted file itself: every corpus vector with its nearest-cell
-    id — (id_col, vec_col, cell). Returns ``None`` for an empty corpus.
-
-    Exposed so callers that search the SAME index repeatedly (the
-    nprobe-tuning / recall-curve pattern, or a query service answering
-    many query batches) can compute the corpus-scale assignment ONCE,
-    ``.cache()`` it, and pass it to :func:`ivf_ann_topk` via ``assigned=``
-    — the FAISS split between ``index.add`` (once) and ``index.search``
-    (many). Assignment ties break to the lowest cell id, identical on the
-    vectorized and fold paths.
-    """
-    centroids = train_ivf_centroids(
-        vectors, id_col, vec_col, n_centroids, seed, max_train_sample, refresh
-    )
-    if centroids is None:
-        return None
-    cent_mat = np.array([c for _, c in centroids], dtype=np.float64)
-    return _cell_assignments(vectors, id_col, vec_col, cent_mat, 1)
-
-
-def ivf_ann_topk(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    n_probe: int = 2,
-    k: int = 3,
-    seed: int = 7,
-    query_ids: DataFrame | None = None,
-    max_train_sample: int = 100_000,
-    refresh: bool = False,
-    vectorized: bool = True,
-    assigned: DataFrame | None = None,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: the coarse-quantizer scale
-    path (the alternative to hyperplane LSH).
-
-    Build: seeded Lloyd k-means clusters the corpus into ``n_centroids``
-    cells; every vector is assigned to its nearest cell — the inverted
-    file. Search: each query probes its ``n_probe`` nearest cells and
-    ranks only those cells' members — candidate set shrinks to
-    ~n_probe/n_centroids of the corpus.
-
-    Training (see :func:`train_ivf_centroids`) is driver-side NumPy over
-    a hard-capped sample. Only the two corpus-scale passes distribute:
-    nearest-centroid assignment (one broadcast-centroid map) and the
-    per-cell search join. Callers searching the same index repeatedly
-    should precompute the assignment once with :func:`ivf_assign`,
-    ``.cache()`` it, and pass it via ``assigned=`` — the corpus-scale
-    pass then runs once across N searches instead of N times.
-
-    Cache contract: centroids cache on the corpus plan (semanticHash) —
-    index-build-once semantics. After the underlying data changes, pass
-    ``refresh=True`` or call :func:`clear_ivf_centroid_cache` to rebuild,
-    exactly as you would rebuild a FAISS index (a passed ``assigned`` is
-    the caller's to refresh).
-    """
-    centroids = train_ivf_centroids(
-        vectors, id_col, vec_col, n_centroids, seed, max_train_sample, refresh
-    )
-    if centroids is None:
-        # Empty corpus (first backfill run): empty result, stable
-        # schema — don't crash the pipeline.
-        return vectors.sparkSession.createDataFrame(
-            [], "qid long, nid long, rank int, cosine double, cell int"
-        )
-
-    q_side = vectors
-    if query_ids is not None:
-        q_side = vectors.join(query_ids, id_col, "left_semi")
-
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    if vectorized:
-        # The scale path: Arrow-batched assignment + per-cell matmul
-        # search. Higher-order-function folds are interpreted (not
-        # codegen), so at |corpus| × n_centroids they dominate runtime;
-        # the matmul form does the same arithmetic 10-100× faster and
-        # never materializes an exploded pair stream.
-        cent_mat = np.array([c for _, c in centroids], dtype=np.float64)
-        if assigned is None:
-            assigned = _cell_assignments(vectors, id_col, vec_col, cent_mat, 1)
-        probes = _cell_assignments(q_side, id_col, vec_col, cent_mat, n_probe)
-        sim = _cell_search_vectorized(probes, assigned, id_col, vec_col, k)
-        return (
-            sim.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "qid", "nid", "rank", F.round("cosine", 4).alias("cosine"), "cell"
-            )
-        )
-
-    def dist2(cent: list[float]) -> Column:
-        lit_c = F.array(*[F.lit(x) for x in cent])
-        diff = F.zip_with(F.col(vec_col), lit_c, lambda a, b: a.cast("double") - b)
-        return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x)
-
-    cell_dists = F.array(
-        *[F.struct(dist2(c).alias("d"), F.lit(i).alias("cell")) for i, c in centroids]
-    )
-    # The inverted file: one broadcast-centroid pass assigns every vector
-    # to its nearest cell (argmin = head of the sorted (d, cell) array;
-    # ties break on cell id, deterministically — identical to the
-    # vectorized np.argmin tiebreak, so a precomputed `assigned` from
-    # either path slots in here unchanged).
-    if assigned is None:
-        assigned = vectors.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.array_sort(cell_dists).getItem(0).getField("cell").alias("cell"),
-        )
-    probes = q_side.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        F.explode(
-            F.slice(F.array_sort(cell_dists), 1, n_probe)
-        ).alias("probe"),
-    ).select("qid", "qvec", F.col("probe.cell").alias("cell"))
-    # Interpreted-HOF cost scales with |probes| x |cell members|; bound the
-    # query set (query_ids) for latency-sensitive paths.
-    probes = probes.withColumn("qnorm", vector_norm("qvec"))
-
-    cand = assigned.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec"), "cell"
-    ).withColumn("nnorm", vector_norm("nvec"))
-
-    sim = (
-        probes.join(cand, "cell")
-        .filter(F.col("qid") != F.col("nid"))
-        .withColumn(
-            "cosine",
-            _dot_double(F.col("qvec"), F.col("nvec")) / (F.col("qnorm") * F.col("nnorm")),
-        )
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", F.round("cosine", 4).alias("cosine"), "cell")
-    )
 
 
 def cosine_near_dup_pairs(
@@ -767,181 +300,6 @@ def group_centroids(
     )
 
 
-def _pq_train(X: "np.ndarray", m: int, n_codes: int, seed: int) -> "np.ndarray":
-    """Per-subspace Lloyd k-means → codebooks of shape (m, n_codes, d/m)."""
-    d = X.shape[1]
-    sub = d // m
-    rng = np.random.default_rng(seed)
-    books = np.empty((m, n_codes, sub), dtype=np.float64)
-    for j in range(m):
-        Xj = X[:, j * sub : (j + 1) * sub]
-        k_eff = min(n_codes, len(Xj))
-        cent = Xj[rng.choice(len(Xj), size=k_eff, replace=False)].copy()
-        for _ in range(5):
-            d2 = ((Xj[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            labels = d2.argmin(axis=1)
-            for c in range(k_eff):
-                members = Xj[labels == c]
-                if len(members):
-                    cent[c] = members.mean(axis=0)
-        if k_eff < n_codes:  # tiny corpus: pad by repeating centroids
-            cent = np.vstack([cent, cent[np.zeros(n_codes - k_eff, dtype=int)]])
-        books[j] = cent
-    return books
-
-
-def pq_ann_topk(
-    vectors: DataFrame,
-    query_ids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 16,
-    n_codes: int = 32,
-    k: int = 3,
-    seed: int = 7,
-    max_train_sample: int = 100_000,
-) -> DataFrame:
-    """Product-quantization ANN (Jégou et al., "Product Quantization for
-    Nearest Neighbor Search", TPAMI'11 — the FAISS memory tier): the
-    corpus is stored as ``m`` one-byte-ish codes per vector instead of
-    ``d`` floats, and queries rank candidates by Asymmetric Distance
-    Computation — exact query vector against quantized corpus — without
-    ever reconstructing the corpus.
-
-    Why it matters at 100 TB: a 64-dim float64 corpus is 512 bytes/row;
-    at m=16 codes it is 16 bytes/row (32×) — the difference between an
-    index that fits executor memory and one that doesn't. Recall is the
-    tradeoff (quantization error); IVF composes with this (IVF-PQ) when
-    both cell pruning and compression are needed.
-
-    Spark shape: training is the same driver-side bounded-sample idiom as
-    IVF (codebooks are m × n_codes × d/m floats — state, not data);
-    encoding is one Arrow ``mapInPandas`` pass over the corpus (argmin
-    per subspace); search broadcasts the BOUNDED query set into a second
-    Arrow pass that gathers per-subspace lookup tables over the code
-    matrix — per-partition top-k, then a global window re-rank. No
-    all-pairs stream, no shuffle of raw vectors at search time.
-
-    Approximate cosine = ADC dot / (|q| × |reconstruction|); the
-    reconstruction norm is computed once at encode time and travels with
-    the codes (8 more bytes).
-    """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    import pandas as pd
-
-    sample = (
-        vectors.filter(F.col(id_col) % 4 == 0)
-        .select(vec_col)
-        .limit(max_train_sample)
-        .collect()
-    )
-    if not sample:
-        sample = vectors.orderBy(id_col).select(vec_col).limit(256).collect()
-    if not sample:
-        return vectors.sparkSession.createDataFrame(
-            [], "qid long, nid long, rank int, approx_cosine double"
-        )
-    X = np.array([r[vec_col] for r in sample], dtype=np.float64)
-    d = X.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    sub = d // m
-    books = _pq_train(X, m, n_codes, seed)
-
-    enc_schema = StructType(
-        [
-            StructField("nid", LongType()),
-            StructField("codes", ArrayType(IntegerType())),
-            StructField("rnorm", DoubleType()),
-        ]
-    )
-
-    def encode(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.empty((len(V), m), dtype=np.int32)
-            recon = np.empty((len(V), d), dtype=np.float64)
-            for j in range(m):
-                Vj = V[:, j * sub : (j + 1) * sub]
-                d2 = ((Vj[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                cj = d2.argmin(axis=1)
-                codes[:, j] = cj
-                recon[:, j * sub : (j + 1) * sub] = books[j][cj]
-            yield pd.DataFrame(
-                {
-                    "nid": pdf[id_col].to_numpy(dtype=np.int64),
-                    "codes": list(codes),
-                    "rnorm": np.linalg.norm(recon, axis=1),
-                }
-            )
-
-    encoded = vectors.select(id_col, vec_col).mapInPandas(encode, enc_schema)
-
-    q_rows = (
-        vectors.join(F.broadcast(query_ids.select(id_col)), id_col)
-        .select(id_col, vec_col)
-        .collect()
-    )  # bounded-Q contract, same as cosine_topk
-    qids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    Q = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    qnorms = np.linalg.norm(Q, axis=1)
-    # Per-query, per-subspace lookup tables: LUT[q, j, c] = q_j . book[j][c]
-    lut = np.einsum("qjs,jcs->qjc", Q.reshape(len(Q), m, sub), books)
-
-    out_schema = StructType(
-        [
-            StructField("qid", LongType()),
-            StructField("nid", LongType()),
-            StructField("approx_cosine", DoubleType()),
-        ]
-    )
-
-    def search(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)  # [B, m]
-            nids = pdf["nid"].to_numpy(dtype=np.int64)
-            rnorms = pdf["rnorm"].to_numpy(dtype=np.float64)
-            frames = []
-            for qi in range(len(Q)):
-                # Gather: adc[b] = sum_j LUT[qi, j, codes[b, j]]
-                adc = lut[qi][np.arange(m)[None, :], codes].sum(axis=1)
-                denom = qnorms[qi] * np.where(rnorms > 0, rnorms, np.inf)
-                sims = adc / denom
-                mask = nids != qids[qi]
-                order = np.argsort(-sims[mask])[:k]  # per-partition top-k
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "qid": qids[qi],
-                            "nid": nids[mask][order],
-                            "approx_cosine": sims[mask][order],
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames)
-
-    sims = encoded.mapInPandas(search, out_schema)
-    w = Window.partitionBy("qid").orderBy(F.desc("approx_cosine"), F.asc("nid"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", F.round("approx_cosine", 4).alias("approx_cosine"))
-    )
-
-
 def semantic_dedup(
     vectors: DataFrame,
     id_col: str = "vec_id",
@@ -975,242 +333,6 @@ def semantic_dedup(
     return vectors.select(id_col).join(
         dropped.withColumn("sem_dropped", F.lit(True)), id_col, "left"
     ).select(id_col, F.coalesce("sem_dropped", F.lit(False)).alias("sem_dropped"))
-
-
-def ivf_pq_build_index(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    m: int = 16,
-    n_codes: int = 32,
-    seed: int = 7,
-    max_train_sample: int = 100_000,
-) -> dict | None:
-    """The IVF-PQ index.add half, split out of :func:`ivf_pq_ann_topk`
-    (the same build/search split as sq8_decode_pool / ivf_exact_index):
-    train the coarse quantizer and residual codebooks, encode the
-    corpus, and return {'cent_mat', 'books', 'encoded'} for repeated
-    searches. ``None`` for an empty corpus. Callers should checkpoint
-    ``encoded`` (the corpus-scale relation) before reusing it."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    sample = (
-        vectors.filter(F.col(id_col) % 4 == 0)
-        .select(vec_col)
-        .limit(max_train_sample)
-        .collect()
-    )
-    if not sample:
-        sample = vectors.orderBy(id_col).select(vec_col).limit(256).collect()
-    if not sample:
-        return None
-    X = np.array([r[vec_col] for r in sample], dtype=np.float64)
-    d = X.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    sub = d // m
-    n_centroids = min(n_centroids, len(X))
-
-    # Coarse quantizer: seeded Lloyd on the sample (same recipe as
-    # ivf_ann_topk — few iterations; balanced cells, not convergence).
-    rng = np.random.default_rng(seed)
-    cent_mat = X[rng.choice(len(X), size=n_centroids, replace=False)].copy()
-    for _ in range(5):
-        d2 = _float_d2_chunked(X, cent_mat)
-        labels = d2.argmin(axis=1)
-        for c in range(n_centroids):
-            members = X[labels == c]
-            if len(members):
-                cent_mat[c] = members.mean(axis=0)
-
-    # PQ codebooks on RESIDUALS of the training sample.
-    resid = X - cent_mat[_float_d2_chunked(X, cent_mat).argmin(axis=1)]
-    books = _pq_train(resid, m, n_codes, seed)
-
-    enc_schema = StructType(
-        [
-            StructField("nid", LongType()),
-            StructField("cell", IntegerType()),
-            StructField("codes", ArrayType(IntegerType())),
-            StructField("rnorm", DoubleType()),
-        ]
-    )
-    cent_t = cent_mat.T.copy()
-    cent_sq = (cent_mat**2).sum(axis=1)
-
-    def encode(it):
-        # Fused assign+encode: one Arrow pass computes the cell argmin and
-        # the per-subspace residual codes for the whole batch.
-        for pdf in it:
-            if not len(pdf):
-                continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            cells = np.argmin(cent_sq - 2.0 * (V @ cent_t), axis=1)
-            R = V - cent_mat[cells]
-            codes = np.empty((len(V), m), dtype=np.int32)
-            recon = np.empty((len(V), d), dtype=np.float64)
-            for j in range(m):
-                Rj = R[:, j * sub : (j + 1) * sub]
-                d2 = ((Rj[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                cj = d2.argmin(axis=1)
-                codes[:, j] = cj
-                recon[:, j * sub : (j + 1) * sub] = books[j][cj]
-            recon += cent_mat[cells]
-            yield pd.DataFrame(
-                {
-                    "nid": pdf[id_col].to_numpy(dtype=np.int64),
-                    "cell": cells.astype(np.int32),
-                    "codes": list(codes),
-                    "rnorm": np.linalg.norm(recon, axis=1),
-                }
-            )
-
-    encoded = vectors.select(id_col, vec_col).mapInPandas(encode, enc_schema)
-    return {"cent_mat": cent_mat, "books": books, "encoded": encoded}
-
-
-def ivf_pq_ann_topk(
-    vectors: DataFrame,
-    query_ids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    n_probe: int = 2,
-    m: int = 16,
-    n_codes: int = 32,
-    k: int = 3,
-    seed: int = 7,
-    max_train_sample: int = 100_000,
-    index: dict | None = None,
-) -> DataFrame:
-    """IVF-PQ: the composed FAISS production index — coarse cells prune
-    the candidate set (IVF) AND product-quantized RESIDUALS compress it
-    (PQ), i.e. ``IndexIVFPQ`` semantics (Jégou et al. TPAMI'11 §V).
-
-    Residual encoding is the load-bearing detail: PQ codebooks quantize
-    ``x - centroid[cell]`` rather than ``x``, so the codebook only has to
-    cover the within-cell spread — reconstruction error drops roughly by
-    the between-cell variance. ADC then decomposes as
-    ``q · recon = q · centroid[cell] + Σ_j LUT[q, j, code_j]`` — one
-    scalar per (query, cell) plus ``m`` table lookups per candidate.
-
-    Spark shape: both trainings (Lloyd cells, per-subspace codebooks) are
-    the driver-side bounded-sample idiom (state, not data); the corpus
-    passes are one Arrow assignment+encode stage and one cogrouped
-    per-cell ADC search keyed on cell — |cell| work per probe, candidate
-    set ~n_probe/n_centroids of the corpus, 16 bytes/vector in flight
-    instead of 512. No all-pairs stream, no shuffle of raw vectors at
-    search time.
-
-    ``index``: a prebuilt :func:`ivf_pq_build_index` dict — the
-    index.add-once split; repeated searches skip training and the
-    corpus-scale encode entirely (checkpoint ``encoded`` when reusing).
-    """
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    if index is None:
-        index = ivf_pq_build_index(
-            vectors, id_col, vec_col, n_centroids, m, n_codes, seed,
-            max_train_sample,
-        )
-    if index is None:
-        return vectors.sparkSession.createDataFrame(
-            [], "qid long, nid long, rank int, approx_cosine double, cell int"
-        )
-    cent_mat = index["cent_mat"]
-    books = index["books"]
-    encoded = index["encoded"]
-    m = books.shape[0]
-    sub = books.shape[2]
-
-    # Query side: bounded-Q contract (same as cosine_topk / pq_ann_topk);
-    # probe expansion stays a DataFrame so the search join shuffles on cell.
-    probes = _cell_assignments(
-        vectors.join(F.broadcast(query_ids.select(id_col)), id_col),
-        id_col,
-        vec_col,
-        cent_mat,
-        n_probe,
-    ).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"), "cell"
-    )
-
-    out_schema = StructType(
-        [
-            StructField("qid", LongType()),
-            StructField("nid", LongType()),
-            StructField("approx_cosine", DoubleType()),
-            StructField("cell", IntegerType()),
-        ]
-    )
-    empty = pd.DataFrame({"qid": [], "nid": [], "approx_cosine": [], "cell": []})
-
-    def search(key, qpdf, npdf):
-        if not len(qpdf) or not len(npdf):
-            return empty
-        (cell,) = key
-        Q = np.array(qpdf["qvec"].tolist(), dtype=np.float64)
-        qids = qpdf["qid"].to_numpy(dtype=np.int64)
-        codes = np.array(npdf["codes"].tolist(), dtype=np.int64)
-        nids = npdf["nid"].to_numpy(dtype=np.int64)
-        rnorms = npdf["rnorm"].to_numpy(dtype=np.float64)
-        qnorms = np.linalg.norm(Q, axis=1)
-        # ADC decomposition: q·recon = q·centroid[cell] + Σ_j LUT[j, code_j]
-        qc = Q @ cent_mat[int(cell)]
-        lut = np.einsum("qjs,jcs->qjc", Q.reshape(len(Q), m, sub), books)
-        frames = []
-        denom_n = np.where(rnorms > 0, rnorms, np.inf)
-        for qi in range(len(Q)):
-            adc = qc[qi] + lut[qi][np.arange(m)[None, :], codes].sum(axis=1)
-            sims = adc / (qnorms[qi] * denom_n)
-            mask = nids != qids[qi]
-            ids, vals = nids[mask], sims[mask]
-            if not len(ids):
-                continue
-            order = np.lexsort((ids, -vals))[:k]
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "qid": qids[qi],
-                        "nid": ids[order],
-                        "approx_cosine": vals[order],
-                        "cell": int(cell),
-                    }
-                )
-            )
-        return pd.concat(frames) if frames else empty
-
-    sims = probes.groupBy("cell").cogroup(encoded.groupBy("cell")).applyInPandas(
-        search, out_schema
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("approx_cosine"), F.asc("nid"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "qid",
-            "nid",
-            "rank",
-            F.round("approx_cosine", 4).alias("approx_cosine"),
-            "cell",
-        )
-    )
 
 
 def semantic_dedup_by_quality(
@@ -1371,19 +493,15 @@ def positive_pair_mining(
 def pq_rerank_topk(
     vectors: DataFrame,
     query_ids: DataFrame,
+    shortlist: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = 16,
-    n_codes: int = 32,
-    candidates: int = 50,
     k: int = 3,
-    seed: int = 7,
-    shortlist: DataFrame | None = None,
 ) -> DataFrame:
     """Two-stage retrieval: PQ ADC shortlist → EXACT re-rank — the
     standard compressed-index serving pattern (FAISS refine / ScaNN
-    reordering): the cheap quantized pass keeps only ``candidates`` ids
-    per query, then full vectors are fetched for just that shortlist and
+    reordering): the cheap quantized pass keeps a few candidate ids per
+    query, then full vectors are fetched for just that shortlist and
     re-scored with exact cosine.
 
     Why this shape at scale: exact scoring touches candidates×queries
@@ -1393,22 +511,11 @@ def pq_rerank_topk(
     join on (query, candidate) pairs. Recovers most of the recall PQ
     loses while paying PQ's scan cost.
 
-    ``shortlist``: a prebuilt (qid, nid) candidate relation — callers
-    that already ran an ADC pass (the recall audit derives both the
-    plain-PQ answer and the re-rank input from ONE k=candidates search)
-    skip the internal PQ search entirely.
+    ``shortlist``: the (qid, nid) candidate relation of an ADC pass,
+    e.g. :func:`pq_ann_topk_exact` at ``k=50`` — one search then serves
+    both the plain-PQ answer (its ``rank <= k`` prefix) and this
+    re-rank's input.
     """
-    if shortlist is None:
-        shortlist = pq_ann_topk(
-            vectors,
-            query_ids,
-            id_col,
-            vec_col,
-            m=m,
-            n_codes=n_codes,
-            k=candidates,
-            seed=seed,
-        )
     shortlist = shortlist.select("qid", "nid")
     q = (
         vectors.join(F.broadcast(query_ids.select(id_col)), id_col)
@@ -1515,8 +622,8 @@ def margin_bitext_pairs(
     the (<= |queries| x k) candidate-target set broadcasts back against
     the source pool — two broadcast passes, the big pools never shuffle.
     For corpus-x-corpus mining swap each broadcast pass for the
-    LSH/IVF-bucketed search (lsh_ann_topk / ivf_ann_topk) exactly as the
-    ANN tiers do; the margin arithmetic is unchanged.
+    LSH/IVF-bucketed search (lsh_ann_topk / ivf_ann_topk_exact) exactly
+    as the ANN tiers do; the margin arithmetic is unchanged.
 
     Output: (src_id, tgt_id, cosine, margin, accepted), one row per
     mined source.
@@ -1592,8 +699,8 @@ def sq8_bounds(
     Exact corpus-wide extremes (a |dim|-row aggregate — min/max are
     mergeable, so this is one map-side-combined pass), not a sample: the
     quantizer is therefore DETERMINISTIC, which is what lets the whole
-    SQ8 tier value-hash against SQL — the property the k-means tiers
-    (IVF/PQ) cannot have.
+    SQ8 tier value-hash against SQL (the k-means tiers get the same
+    property from integer-lattice training).
     """
     dims = vectors.select(F.posexplode(F.col(vec_col)).alias("pos", "v"))
     stats = dims.groupBy("pos").agg(
@@ -1757,15 +864,14 @@ def sq8_ann_topk(
 
 
 # ---------------------------------------------------------------------------
-# Integer-lattice exact-replay k-means — the deterministic IVF / PQ tiers.
+# Integer-lattice exact-replay k-means — the IVF / PQ / IVF-PQ tiers.
 #
-# The float k-means tiers above (train_ivf_centroids, _pq_train) are
-# engine-specific: centroid means are float sums whose summation order no
-# SQL engine reproduces, so their catalog entries could only ever be
-# rows-only. This section removes that limitation the same way the unigram
-# tokenizer and DSIR did (integer bit-surprisals): move the QUANTIZER into
-# integer arithmetic, where every sum, division, and argmin is exact and
-# order-free, so a DuckDB oracle replays training bit-for-bit.
+# A k-means quantizer trained in floating point is engine-specific:
+# centroid means are float sums whose summation order no SQL engine
+# reproduces. These tiers train in integer arithmetic instead (as the
+# unigram tokenizer and DSIR do with integer bit-surprisals), where every
+# sum, division, and argmin is exact and order-free, so a DuckDB oracle
+# replays training bit-for-bit.
 #
 # The lattice: q_i = floor(v_i * 1024) + 2^20. The scale is a POWER OF TWO,
 # so v * 1024 merely shifts the IEEE exponent — quantization involves no
@@ -1795,8 +901,8 @@ def sq8_ann_topk(
 LATTICE_SCALE = 1024
 LATTICE_OFFSET = 1 << 20
 
-#: Lloyd iterations for the exact tiers — few on purpose, like the float
-#: tiers: a coarse quantizer needs roughly balanced cells, not convergence.
+#: Lloyd iterations for the exact tiers — few on purpose: a coarse
+#: quantizer needs roughly balanced cells, not convergence.
 LATTICE_ITERS = 4
 
 
@@ -1892,8 +998,8 @@ def lattice_cell_assign(
 ) -> DataFrame:
     """Arrow-vectorized nearest-cell assignment on the INTEGER lattice:
     (id_col, vec_col, cell[, probe_rank]). Distances are exact int64, so
-    — unlike the float `_cell_assignments` — this path is bit-identical
-    to the SQL fold and to any other evaluation order. ``n_probe > 1``
+    this path is bit-identical to the SQL fold and to any other
+    evaluation order. ``n_probe > 1``
     emits each id's ``n_probe`` nearest cells with ``probe_rank`` 1..p
     (ties to the lowest cell on every rank)."""
     import pandas as pd
@@ -2016,11 +1122,14 @@ def ivf_ann_topk_exact(
     iters: int = LATTICE_ITERS,
     index: tuple["np.ndarray", DataFrame] | None = None,
 ) -> DataFrame:
-    """IVF approximate top-k on the deterministic integer-lattice index —
-    same search semantics as :func:`ivf_ann_topk` (probe the n_probe
-    nearest cells, rank members by exact cosine), but every stage
-    (quantize → Lloyd → assign → probe → rank) replays bit-for-bit in a
-    SQL oracle. Output: (qid, nid, rank, cosine, cell)."""
+    """IVF (inverted-file) approximate top-k on the deterministic
+    integer-lattice index: each query probes its ``n_probe`` nearest
+    cells and ranks only those cells' members by exact cosine, so the
+    candidate set shrinks to ~n_probe/n_centroids of the corpus. Every
+    stage (quantize → Lloyd → assign → probe → rank) replays
+    bit-for-bit in a SQL oracle. Output: (qid, nid, rank, cosine,
+    cell). Raises ``ValueError("empty training sample")`` when no id
+    passes the sample modulus."""
     cent, assigned = index if index is not None else ivf_exact_index(
         vectors, id_col, vec_col, n_centroids, iters
     )
@@ -2138,9 +1247,10 @@ def pq_ann_topk_exact(
     iters: int = LATTICE_ITERS,
     recon: DataFrame | None = None,
 ) -> DataFrame:
-    """PQ ADC top-k on deterministic integer-lattice codebooks — the
-    :func:`pq_ann_topk` semantics (full-precision query vs quantized
-    corpus) with every stage SQL-replayable. approx_cosine =
+    """Product-quantization ANN (Jégou et al. TPAMI'11) on deterministic
+    integer-lattice codebooks: Asymmetric Distance Computation ranks a
+    full-precision query against the quantized corpus, with every stage
+    SQL-replayable. approx_cosine =
     cos(query, reconstruction), ranked per query with a zero-norm guard
     (sentinel -2.0, the NaN-free cross-engine form). Output:
     (qid, nid, rank, approx_cosine).
@@ -2294,7 +1404,7 @@ def ivf_pq_ann_topk_exact(
     """IVF-PQ search on the deterministic lattice index: queries probe
     their ``n_probe`` nearest coarse cells (integer distances, ties to
     the lowest cell) and rank cell members by the fold-cosine ADC
-    against the residual reconstructions — :func:`ivf_pq_ann_topk`
+    against the residual reconstructions — FAISS ``IndexIVFPQ``
     semantics, fully SQL-replayable. Output: (qid, nid, rank,
     approx_cosine, cell). ``index``: a prebuilt (centroids, recon)
     pair from :func:`ivf_pq_exact_index` (checkpoint the recon when

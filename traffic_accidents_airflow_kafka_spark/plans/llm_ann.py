@@ -908,7 +908,7 @@ def embedding_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(audited by pq_recall_audit). Scale: the memory tier — at rest "
     "the corpus stores m int codes per vector (16x smaller); encoding "
     "is one Arrow map pass; search broadcasts the bounded query set; "
-    "composes with IVF cells as IVF-PQ (the float residual variant).",
+    "composes with IVF cells as IVF-PQ (embedding_ivfpq_ann).",
 )
 def embedding_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")

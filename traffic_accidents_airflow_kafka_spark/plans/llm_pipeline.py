@@ -38,9 +38,8 @@ from .llm_shared import _artifact, _sql_dot
     "replays (coarse, then per-subspace over residuals RE-OFFSET to "
     "stay positive: NumPy's integer division floors while DuckDB's "
     "truncates, and they only agree on non-negative operands; offsets "
-    "cancel in every distance). The float residual path "
-    "(ivf_pq_ann_topk, Arrow LUT search) remains the engine-specific "
-    "scale variant, recall-audited by pq_recall_audit. Scale: one "
+    "cancel in every distance). The same search is recall-audited by "
+    "pq_recall_audit. Scale: one "
     "fused Arrow assign+encode pass; the search joins probes to cell "
     "members — candidate pruning and memory compression in the same "
     "index, which is what actually serves at 10^9 vectors.",

@@ -95,10 +95,8 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result.orderBy("window_start", "event_type")
 
 
-#: Batch-SQL replay of gap+timeout sessionization, shared by BOTH
-#: stateful-API paths (`stream_sessions` on applyInPandasWithState,
-#: `stream_sessions_tws` on transformWithStateInPandas) — one oracle,
-#: two engines' worth of checking that the APIs agree.
+#: Batch-SQL replay of gap+timeout sessionization: the oracle of
+#: `stream_sessions` (applyInPandasWithState).
 SESSIONS_ORACLE = """
     WITH marks AS (
       SELECT user_id, ts, value,
@@ -553,61 +551,6 @@ def stream_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("user_id")
     )
-
-
-def _has_tws_runtime() -> bool:
-    """transformWithStateInPandas workers speak a protobuf state protocol;
-    ``google.protobuf`` does not ship in this container (like the Kafka
-    broker, S10/S11) — the TWS twin registers only where it can run."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _register_tws_query():
-    return register(
-        "stream_sessions_tws",
-        tier=1,  # API twin; the sessionization semantics are judged via stream_sessions
-        oracle=SESSIONS_ORACLE,
-        doc="Sessionization on the Spark 4 transformWithStateInPandas API "
-        "(streaming/tws.py): typed ValueState + explicit event-time timers "
-        "replacing applyInPandasWithState's state tuple + setTimeoutTimestamp. "
-        "Same gap/timeout semantics, same vectorized segment core, SAME "
-        "DuckDB oracle as stream_sessions — the two stateful APIs "
-        "cross-check each other value-for-value. Registered only where "
-        "google.protobuf (the TWS state-protocol dependency) is "
-        "importable. Scale: identical shape (per-user state, watermark-"
-        "evicted; state partitions sized to live users); state v2 "
-        "additionally brings TTL and initial-state bootstrap for "
-        "production restarts.",
-    )
-
-
-def stream_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming import tws
-
-    events = streaming.stream_events(spark, sf_dir).withWatermark("ts", "2 hours")
-    sessions = tws.sessionize_tws(
-        events.select("user_id", "ts", "value"), gap_seconds=1800
-    )
-    out = streaming.run_available_now(
-        sessions, spark, state_partitions=8, output_mode="append"
-    )
-    return out.select(
-        "user_id",
-        "session_start",
-        "session_end",
-        "n_events",
-        F.round("sum_value", 4).alias("sum_value"),
-        "closed_by",
-    ).orderBy("user_id", "session_start")
-
-
-if _has_tws_runtime():
-    stream_sessions_tws = _register_tws_query()(stream_sessions_tws)
 
 
 @register(

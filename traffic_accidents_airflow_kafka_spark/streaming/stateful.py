@@ -135,10 +135,8 @@ def segment_batch(
 
 
 def session_frame(user_id, sessions) -> pd.DataFrame:
-    """One output frame per group call in the _SESSION_US_SCHEMA layout —
-    shared by BOTH stateful APIs (sessionize here, tws.SessionProcessor)
-    so the twins cannot drift in the exact layer their cross-check test
-    pins. ``sessions``: (start_us, end_us, n_events, sum_value, closed_by)."""
+    """One output frame per group call in the _SESSION_US_SCHEMA layout.
+    ``sessions``: (start_us, end_us, n_events, sum_value, closed_by)."""
     return pd.DataFrame(
         {
             "user_id": user_id,
