@@ -191,9 +191,9 @@ def main() -> None:
             "with keys, unlike the windowed-count entries whose group "
             "cardinality is fixed at 24×|types| regardless of volume). "
             "The cure at real scale is the knob `SCALE.md` already "
-            "documents — state partitions are a per-query decision "
-            "(`state_partitions=` in `run_available_now`), sized to "
-            "live-key cardinality × throughput — plus Spark's stock "
+            "documents — more state stores, which `run_available_now` "
+            "sizes from the cores (`streaming/core.py:state_partitions`) "
+            "— plus Spark's stock "
             "RocksDB state-store provider for key sets past executor "
             "memory; neither changes the plan.\n"
         )

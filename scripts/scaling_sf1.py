@@ -32,6 +32,7 @@ import os
 import shutil
 import sys
 import time
+from contextlib import nullcontext
 
 sys.path.insert(0, ".")
 
@@ -45,7 +46,7 @@ from traffic_accidents_airflow_kafka_spark.plans.llm import (  # noqa: E402
     artifact_keys,
     evict_artifacts,
 )
-from traffic_accidents_airflow_kafka_spark.session import get_spark  # noqa: E402
+from traffic_accidents_airflow_kafka_spark.session import get_spark, scoped_conf  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
 DST = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -234,11 +235,8 @@ def _run_sessions(
         stateful,
     )
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    if rocksdb:
-        spark.conf.set(key, _ROCKSDB)
-    try:
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    with scoped_conf(spark, provider, _ROCKSDB) if rocksdb else nullcontext():
         events = streaming.stream_events(spark, sf_dir).withWatermark(
             "ts", "2 hours"
         )
@@ -255,12 +253,6 @@ def _run_sessions(
             "user_id", "session_start", "session_end", "n_events",
             F.round("sum_value", 4).alias("sum_value"), "closed_by",
         ).orderBy("user_id", "session_start").collect()
-    finally:
-        if rocksdb:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
 
 
 def _time_sessions_tuned(
@@ -295,10 +287,11 @@ def main() -> None:
         print(f"{name}: sf0.1 {t01:.3f}s  sf1.0 {t10:.3f}s  x{growth:.2f}")
 
     # The stream_sessions state knobs, MEASURED not asserted (r8 VERDICT
-    # #3): the decade row above runs the catalog entry's sf0.1-tuned
-    # config (state_partitions=16, default in-memory provider); these
-    # rows re-run the identical plan on the same 10x key domain with the
-    # knobs SCALING.md documents. The r9 sweep's finding (see the
+    # #3): the decade row above runs the catalog entry's config
+    # (streaming/core.py:state_partitions, half the cores: 16 on
+    # local[32]; default in-memory provider); these rows re-run the
+    # identical plan on the same 10x key domain with the knobs
+    # SCALING.md documents. The r9 sweep's finding (see the
     # narrative above the table): on local[32] NONE of them improves the
     # step, because the local step is not state-store-bound.
     tuned_rows = []
@@ -337,8 +330,9 @@ def main() -> None:
         "stream_sessions STATE-KNOB rows (r8 VERDICT #3 asked the "
         "documented cure to be demonstrated rather than asserted — the "
         "r9 measurement ANSWERS it, in the negative for this host): the "
-        "plain row runs the catalog entry's config (state_partitions="
-        "16, default in-memory provider) against the 10x live-key "
+        "plain row runs the catalog entry's config (the host rule "
+        "streaming/core.py:state_partitions, half the cores: 16 on "
+        "local[32]; default in-memory provider) against the 10x live-key "
         "domain; the bracketed rows re-run the identical plan with the "
         "documented knobs. Measured on local[32]: sp=16 remains optimal "
         "(sweep: sp4 ~51 s, sp8 ~26 s, sp16 ~16-21 s, sp24 ~18 s, sp32 "
@@ -356,7 +350,7 @@ def main() -> None:
         "them would be fiction. The honest local statement stands on "
         "the measured sweep: the step is sub-linear, its composition "
         "is known, and the config that matters locally (sp=16) is the "
-        "one the catalog entry ships.",
+        "one the host rule gives on local[32].",
         "",
         "| query | sf0.1 | sf1.0 | x@1.0 | artifacts rebuilt in timed run |",
         "|---|---|---|---|---|",

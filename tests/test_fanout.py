@@ -153,6 +153,7 @@ def test_bucketed_enrichment_no_exchange_on_orders_side(spark, sf_dir, tmp_path)
     from traffic_accidents_airflow_kafka_spark.plans.registry import (
         QUERY_REGISTRY,
     )
+    from traffic_accidents_airflow_kafka_spark.session import scoped_conf
     from traffic_accidents_airflow_kafka_spark.streaming import fanout
     from traffic_accidents_airflow_kafka_spark.streaming.core import (
         run_foreach_batch,
@@ -171,9 +172,6 @@ def test_bucketed_enrichment_no_exchange_on_orders_side(spark, sf_dir, tmp_path)
     )
     sink = str(tmp_path / "t3_bucketed")
     plans: list[str] = []
-    # Disable broadcast so the join would otherwise shuffle BOTH sides —
-    # the assert below then isolates what bucketing saves.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     def drain(batch, batch_id):
         enriched = partial(
@@ -187,10 +185,12 @@ def test_bucketed_enrichment_no_exchange_on_orders_side(spark, sf_dir, tmp_path)
             os.path.join(sink, f"batch={batch_id}")
         )
 
+    # Disable broadcast so the join would otherwise shuffle BOTH sides —
+    # the assert below then isolates what bucketing saves.
     try:
-        run_foreach_batch(li_stream, spark, drain)
+        with scoped_conf(spark, "spark.sql.autoBroadcastJoinThreshold", -1):
+            run_foreach_batch(li_stream, spark, drain)
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
     assert plans, "stream delivered no batches"

@@ -19,10 +19,20 @@ SOURCES = [ROOT / "bench.py", *sorted((ROOT / "scripts").glob("*.py"))]
 
 def package_imports(path: Path) -> list[tuple[str, str]]:
     """(module, name) for every ``from <package>… import name`` in the
-    file, including imports nested in functions."""
+    file, including imports nested in functions and imports inside string
+    constants that parse as Python (code a script hands to a child
+    interpreter, like ``isolate.py``'s ``_CHILD_SNIPPET``)."""
+    trees = [ast.parse(path.read_text(), str(path))]
+    for node in list(ast.walk(trees[0])):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            try:
+                trees.append(ast.parse(node.value))
+            except SyntaxError:
+                pass
     return [
         (node.module, alias.name)
-        for node in ast.walk(ast.parse(path.read_text(), str(path)))
+        for tree in trees
+        for node in ast.walk(tree)
         if isinstance(node, ast.ImportFrom)
         and node.level == 0
         and (node.module == PACKAGE or node.module.startswith(PACKAGE + "."))

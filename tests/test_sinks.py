@@ -7,6 +7,7 @@ import os
 
 import pyspark.sql.functions as F
 
+from traffic_accidents_airflow_kafka_spark.session import scoped_conf
 from traffic_accidents_airflow_kafka_spark.sources import sinks
 
 
@@ -81,14 +82,13 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     sinks.save_bucketed(left, "bl", "k", num_buckets=8)
     sinks.save_bucketed(right, "br", "k", num_buckets=8)
     # Disable broadcast so the join would otherwise shuffle both sides.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = spark.table("bl").join(spark.table("br"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan}"
-        assert joined.count() > 0
+        with scoped_conf(spark, "spark.sql.autoBroadcastJoinThreshold", -1):
+            joined = spark.table("bl").join(spark.table("br"), "k")
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan, f"bucketed join still shuffles:\n{plan}"
+            assert joined.count() > 0
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.sql("DROP TABLE IF EXISTS bl")
         spark.sql("DROP TABLE IF EXISTS br")
 

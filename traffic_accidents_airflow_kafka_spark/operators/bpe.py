@@ -36,6 +36,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..session import SHUFFLE_PARTITIONS, scoped_conf
 from .text import bpe_ish_tokens
 
 
@@ -117,6 +118,11 @@ def apply_merge(syms_col: str | Column, lhs: str, rhs: str) -> Column:
     )
 
 
+#: Shuffle partitions for the vocabulary-sized merge rounds: the pair
+#: table is bounded by the vocabulary, not the corpus.
+VOCAB_PARTITIONS = 4
+
+
 #: Trained merge lists keyed on the corpus PLAN (semanticHash) + params —
 #: the FAISS-index idiom: a tokenizer is trained once and reused across
 #: encodes. Like any index, it
@@ -135,17 +141,15 @@ def train_bpe(
     text_col: str = "text",
     n_merges: int = 12,
     min_freq: int = 2,
-    vocab_partitions: int = 4,
     use_cache: bool = True,
 ) -> DataFrame:
     """Train ``n_merges`` BPE merges; returns (rank, lhs, rhs, pair_count).
 
     Stops early when the best remaining pair's count drops below
     ``min_freq``. The per-round driver traffic is exactly one row (the
-    argmax pair); all counting stays distributed. Shuffle partitions are
-    pinned to ``vocab_partitions`` for the vocabulary-sized rounds (the
-    corpus-sized word count keeps the session default) and restored
-    after.
+    argmax pair); all counting stays distributed. The vocabulary-sized
+    rounds shuffle on ``VOCAB_PARTITIONS`` partitions (the corpus-sized
+    word count keeps the session default).
 
     Trained merge tables memoize on (corpus plan, params) — a tokenizer,
     like an ANN index, is trained once and reused by every encode
@@ -162,30 +166,28 @@ def train_bpe(
         .select("f", initial_symbols("word").alias("syms"))
         .localCheckpoint()
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(vocab_partitions))
     merges: list[tuple[int, str, str, int]] = []
     last_ckpt = symtab
-    try:
-        for rank in range(n_merges):
-            top = (
-                pair_counts(last_ckpt)
-                .orderBy(F.desc("pair_count"), "lhs", "rhs")
-                .limit(1)
-                .collect()
-            )
-            if not top or top[0]["pair_count"] < min_freq:
-                break
-            lhs, rhs, cnt = top[0]["lhs"], top[0]["rhs"], top[0]["pair_count"]
-            merges.append((rank, lhs, rhs, int(cnt)))
-            new_tab = last_ckpt.withColumn(
-                "syms", apply_merge("syms", lhs, rhs)
-            ).localCheckpoint()
+    with scoped_conf(spark, SHUFFLE_PARTITIONS, VOCAB_PARTITIONS):
+        try:
+            for rank in range(n_merges):
+                top = (
+                    pair_counts(last_ckpt)
+                    .orderBy(F.desc("pair_count"), "lhs", "rhs")
+                    .limit(1)
+                    .collect()
+                )
+                if not top or top[0]["pair_count"] < min_freq:
+                    break
+                lhs, rhs, cnt = top[0]["lhs"], top[0]["rhs"], top[0]["pair_count"]
+                merges.append((rank, lhs, rhs, int(cnt)))
+                new_tab = last_ckpt.withColumn(
+                    "syms", apply_merge("syms", lhs, rhs)
+                ).localCheckpoint()
+                last_ckpt.unpersist()
+                last_ckpt = new_tab
+        finally:
             last_ckpt.unpersist()
-            last_ckpt = new_tab
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        last_ckpt.unpersist()
     if use_cache:
         _BPE_MERGE_CACHE[cache_key] = merges
     return spark.createDataFrame(merges, schema)

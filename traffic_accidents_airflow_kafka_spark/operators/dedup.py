@@ -33,6 +33,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..session import SHUFFLE_PARTITIONS, scoped_conf
+from .graph import loop_partitions
+
 
 def text_hash(col: Column | str) -> Column:
     """32-hex md5 digest of the text — the exact-dedup key. md5 over other
@@ -587,13 +590,10 @@ def connected_components(
     # produced it, and per-round fixed cost scales with task count
     # (measured: 2 rounds over a few hundred edges take 1.07 s at 32
     # shuffle partitions vs 0.55 s at 1). Count is free here — edges is
-    # already materialized. Restored after the loop.
+    # already materialized.
     spark = pairs.sparkSession
     n_edges = edges.count()
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(prev_parts), n_edges // 500_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, n_edges)):
         comp = edges.select(F.col("e_src").alias("id")).distinct().select(
             "id", F.col("id").alias("component")
         )
@@ -614,8 +614,6 @@ def connected_components(
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return comp
 
 
@@ -711,10 +709,7 @@ def connected_components_star(
 
     spark = pairs.sparkSession
     n_edges = edges.count()
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(prev_parts), n_edges // 500_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, n_edges)):
         prev_sig = None
         for _ in range(max_iter):
             edges = _small_star(_large_star(edges)).localCheckpoint()
@@ -738,8 +733,6 @@ def connected_components_star(
             "id", F.coalesce("component", F.col("id")).alias("component")
         )
         return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def simhash64(

@@ -19,6 +19,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import SHUFFLE_PARTITIONS, scoped_conf
+
 
 def _edge_relation(
     pairs: DataFrame, src: str, dst: str, symmetrize: bool
@@ -78,32 +80,25 @@ def prepare_pair_graph(
     return PairGraph(edges_deg, nodes, n_nodes, edges_deg.count())
 
 
-def _loop_partitions(spark: SparkSession, n_edges: int) -> tuple[str, int]:
-    """(previous setting, loop-sized shuffle-partition count): candidate-
+def loop_partitions(spark: SparkSession, n_edges: int) -> int:
+    """The shuffle-partition count for an iterative graph loop: candidate-
     pair graphs are orders of magnitude smaller than the corpus that
-    produced them, so iteration rounds shuffle on a graph-sized count,
-    not the session default. Shared by both PageRank variants.
+    produced them, so rounds shuffle on a graph-sized count (one
+    partition per 500k edges), capped at the session default. Shared by
+    both PageRank variants and both connected-components loops, each of
+    which runs its rounds under ``scoped_conf`` at this count.
 
-    Why this stays a session-conf set/restore (r11, VERDICT r10 #6
-    measured and REJECTED both alternatives): an explicit
+    Why this stays a session-conf scope (r11, VERDICT r10 #6 measured
+    and REJECTED both alternatives): an explicit
     ``repartition(loop_parts, key)`` on the per-round rank relation
     inserts an unconditional extra Exchange every round (the old form's
     groupBy output already satisfied the join's distribution), and
     removing the sizing entirely to let AQE coalesce costs one adaptive
     re-planning wait per shuffle stage per round — both measured ~30%
     slower on dedup_pagerank_exact (1.04-1.10 s conf → 1.34-1.46 s
-    repartition → 1.38-1.40 s AQE-only, min-of-3 warm at sf0.1).
-
-    CONCURRENT loops instead follow the pin-outside protocol
-    (plans/llm_graph.py:pagerank_rank_audit): the caller computes
-    loop_parts from the shared prepared graph, sets the session conf
-    ONCE around the overlapped region, and the loops' own set/restore
-    becomes an idempotent no-op (every inner set writes the value the
-    outer pin already set; every inner restore writes the prev it read
-    inside the pinned region — the same value), so no interleaving can
-    leak a stale setting."""
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    return prev_parts, max(1, min(int(prev_parts), n_edges // 500_000 + 1))
+    repartition → 1.38-1.40 s AQE-only, min-of-3 warm at sf0.1)."""
+    session_parts = int(spark.conf.get(SHUFFLE_PARTITIONS))
+    return max(1, min(session_parts, n_edges // 500_000 + 1))
 
 
 class _RoundCheckpointer:
@@ -205,9 +200,7 @@ def pagerank(
             has_dangling = dangling_nodes.count() > 0
         n_edges = edges_deg.count()
 
-    prev_parts, loop_parts = _loop_partitions(spark, n_edges)
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, n_edges)):
         base = (1.0 - damping) / n_nodes
         ranks = nodes.select("id", F.lit(1.0 / n_nodes).alias("rank"))
         # Lineage truncated every 3 rounds (_RoundCheckpointer): each
@@ -269,8 +262,6 @@ def pagerank(
                 prev_probe = ranks
                 if delta is not None and delta < tol:
                     break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return ranks
 
 
@@ -400,9 +391,7 @@ def pagerank_fixedpoint(
     init = scale // n_nodes
     base = ((damp_den - damp_num) * init) // damp_den
 
-    prev_parts, loop_parts = _loop_partitions(spark, n_edges)
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, n_edges)):
         ranks = nodes.select("id", F.lit(init).cast("long").alias("rank_u"))
         ckpt = _RoundCheckpointer(3)
         for it in range(iters):
@@ -420,6 +409,4 @@ def pagerank_fixedpoint(
                 .alias("rank_u")
             )
             ranks = ckpt.maybe(new_ranks, it, iters)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return ranks

@@ -856,6 +856,24 @@ def _lattice_pq_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lattice_ivfpq_index(spark: SparkSession, sf_dir: str):
+    """The deterministic lattice IVF-PQ index (16 cells, residuals in 32
+    subspaces x 64 codes) as a build-once artifact: (int64 centroids,
+    checkpointed recon) — embedding_ivfpq_ann and pq_recall_audit both
+    search it. Stored as a dict so evict_artifacts unpersists the
+    DataFrame."""
+    emb = load_table(spark, sf_dir, "embeddings")
+
+    def build():
+        cent, recon = similarity.ivf_pq_exact_index(
+            emb, "vec_id", "embedding", n_centroids=16, m=32, n_codes=64
+        )
+        return {"cent": cent, "recon": recon.localCheckpoint(eager=True)}
+
+    art = _artifact(spark, sf_dir, "lattice-ivfpq-16x32x64", build)
+    return art["cent"], art["recon"]
+
+
 @register(
     "embedding_ivf_ann",
     tier=0,  # r8 self-rotation INTO the judged window: the integer-lattice

@@ -19,7 +19,7 @@ from ..operators import (
 )
 from ..sources.tables import load_table
 from .registry import register
-from .llm_ann import _lattice_ivf_index, _lattice_pq_recon
+from .llm_ann import _lattice_ivf_index, _lattice_ivfpq_index, _lattice_pq_recon
 from .llm_retrieval import (
     _SPAN_REPORT_SELECT,
     _exact_top3_q20,
@@ -172,36 +172,31 @@ def pq_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the rank<=3 prefix is exactly the k=3 search answer (identical
     # ranking, longer cut), and the full 50 rows are the re-rank
     # shortlist — the shared-candidate idiom the nprobe curve uses,
-    # applied across audit variants. r10: the audit's five driver-side
-    # jobs (ground-truth count, shortlist checkpoint, three recall
-    # counts) ran SEQUENTIALLY; they are independent given the
-    # checkpointed shortlist, so the counts now overlap in a small
-    # thread pool (guide §2.6 — back-fill the tail of one job with the
-    # next) — exact counts, order-free, results unchanged.
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_total = pool.submit(exact_pairs.count)
-        f_ivfpq = pool.submit(
-            lambda: hits(
-                similarity.ivf_pq_ann_topk_exact(
-                    emb, qids, n_centroids=16, n_probe=4, m=32, n_codes=64,
-                    k=3,
-                )
+    # applied across audit variants. r10: the audit's driver-side jobs
+    # (ground-truth count, recall counts) are independent given the
+    # checkpointed shortlist, so they overlap in a thread pool (guide
+    # §2.6 — back-fill the tail of one job with the next) — exact
+    # counts, order-free, results unchanged.
+    shortlist = similarity.pq_ann_topk_exact(
+        emb, qids, m=32, n_codes=64, k=50,
+        recon=_lattice_pq_recon(spark, sf_dir),
+    ).localCheckpoint(eager=True)
+    counts = (
+        exact_pairs.count,
+        lambda: hits(shortlist.filter(F.col("rank") <= 3)),
+        lambda: hits(
+            similarity.ivf_pq_ann_topk_exact(
+                emb, qids, n_centroids=16, n_probe=4, m=32, n_codes=64, k=3,
+                index=_lattice_ivfpq_index(spark, sf_dir),
             )
-        )
-        shortlist = similarity.pq_ann_topk_exact(
-            emb, qids, m=32, n_codes=64, k=50,
-            recon=_lattice_pq_recon(spark, sf_dir),
-        ).localCheckpoint(eager=True)
-        f_pq = pool.submit(lambda: hits(shortlist.filter(F.col("rank") <= 3)))
-        f_rerank = pool.submit(
-            lambda: hits(
-                similarity.pq_rerank_topk(emb, qids, k=3, shortlist=shortlist)
-            )
-        )
-        total = f_total.result()
-        r_pq = f_pq.result() / total if total else 1.0
-        r_ivfpq = f_ivfpq.result() / total if total else 1.0
-        r_rerank = f_rerank.result() / total if total else 1.0
+        ),
+        lambda: hits(
+            similarity.pq_rerank_topk(emb, qids, k=3, shortlist=shortlist)
+        ),
+    )
+    with ThreadPoolExecutor(max_workers=len(counts)) as pool:
+        total, *n_hits = pool.map(lambda count: count(), counts)
+    r_pq, r_ivfpq, r_rerank = (n / total if total else 1.0 for n in n_hits)
     rows = [
         ("pq_adc", r_pq >= 0.5, r_rerank >= r_pq),
         ("ivf_pq", r_ivfpq >= 0.15, r_rerank >= r_pq),

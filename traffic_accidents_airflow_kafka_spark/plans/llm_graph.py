@@ -257,42 +257,22 @@ def pagerank_rank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged by construction — prepare_pair_graph builds
     # byte-identical relations.
     g = graph.prepare_pair_graph(pairs, "d1", "d2")
-    # r11 (guide §2.6 overlap independent jobs — the twice-rejected
-    # overlap, now safe): both loops set/restore the session-global
-    # shuffle-partition conf, so running them concurrently used to race.
-    # The pin-outside protocol (operators/graph.py:_loop_partitions)
-    # removes the race without touching the loops: both variants share
-    # ONE prepared graph, hence the identical loop_parts — pinning the
-    # conf here for the overlapped region makes every inner set/restore
-    # an idempotent no-op whatever the interleaving. Each thread fully
-    # materializes its rank relation (cache + count) so the two
-    # 10-round driver-coordinated loops genuinely interleave their
-    # per-round jobs instead of serializing on the later collects.
+    # r11 (guide §2.6 overlap independent jobs): both loops run at the
+    # same graph-sized shuffle width (one prepared graph), so their
+    # scoped_conf holds on it are shared. Each thread fully materializes
+    # its rank relation (cache + count) so the two 10-round
+    # driver-coordinated loops genuinely interleave their per-round jobs
+    # instead of serializing on the later collects.
     from concurrent.futures import ThreadPoolExecutor
 
-    prev_parts, loop_parts = graph._loop_partitions(spark, g.n_edges)
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
+    def _run(rank_loop):
+        df = rank_loop(pairs, "d1", "d2", iters=10, prepared=g).cache()
+        df.count()
+        return df
 
-            def _run(fn):
-                df = fn(
-                    pairs, "d1", "d2", iters=10, prepared=g
-                ).cache()
-                df.count()
-                return df
-
-            f_fl = pool.submit(
-                lambda: _run(
-                    lambda p, s, d, iters, prepared: graph.pagerank(
-                        p, s, d, damping=0.85, iters=iters, prepared=prepared
-                    )
-                )
-            )
-            f_fx = pool.submit(lambda: _run(graph.pagerank_fixedpoint))
-            fl, fx = f_fl.result(), f_fx.result()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    loops = (graph.pagerank, graph.pagerank_fixedpoint)
+    with ThreadPoolExecutor(max_workers=len(loops)) as pool:
+        fl, fx = pool.map(_run, loops)
     scale = float(10**12)
     stats = (
         fl.join(fx, "id", "full_outer")

@@ -21,7 +21,7 @@ from ..operators import (
 )
 from ..sources.tables import load_table
 from .registry import register
-from .llm_ann import _ivf_pq_exact_oracle
+from .llm_ann import _ivf_pq_exact_oracle, _lattice_ivfpq_index
 from .llm_shared import _artifact, _sql_dot
 
 @register(
@@ -48,7 +48,8 @@ def embedding_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     qids = emb.select("vec_id").filter(F.col("vec_id") < 100)
     return similarity.ivf_pq_ann_topk_exact(
-        emb, qids, n_centroids=16, n_probe=4, m=32, n_codes=64, k=3
+        emb, qids, n_centroids=16, n_probe=4, m=32, n_codes=64, k=3,
+        index=_lattice_ivfpq_index(spark, sf_dir),
     ).orderBy("qid", "rank")
 
 

@@ -35,15 +35,14 @@ from .registry import register
     "contract of kafka/consumer.py:30-36 — then compared against the "
     "batch equivalent (tumbling window ≡ date_trunc group). Scale: "
     "watermark bounds state to live windows; availableNow is also the "
-    "backfill path (same code, bounded replay); state partitions sized "
-    "to live-window cardinality, not the batch shuffle default.",
+    "backfill path (same code, bounded replay); state stores sized to "
+    "the host's cores (streaming/core.py:state_partitions), not the "
+    "batch shuffle default.",
 )
 def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = streaming.stream_events(spark, sf_dir)
     windowed = streaming.windowed_event_counts(events, "1 hour", "2 hours")
-    # ~|hours in stream| × |event types| live groups — single digits of
-    # thousands; 8 state stores ample (each costs setup + fsync per batch).
-    result = streaming.run_available_now(windowed, spark, state_partitions=8)
+    result = streaming.run_available_now(windowed, spark)
     return result.orderBy("window_start", "event_type")
 
 
@@ -91,7 +90,7 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    result = streaming.run_available_now(windowed, spark, state_partitions=8)
+    result = streaming.run_available_now(windowed, spark)
     return result.orderBy("window_start", "event_type")
 
 
@@ -149,15 +148,7 @@ def stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions = stateful.sessionize(
         events.select("user_id", "ts", "value"), gap_seconds=1800
     )
-    # 16 state partitions: round-4 sweep at sf0.1 measured 2→6.9 s,
-    # 4→4.5 s, 8→3.8 s, 16→3.25 s, 32→3.8 s (min-of-2, warm session).
-    # The 8-vs-16 ordering flips between rounds (±0.5 s host noise); the
-    # stable facts are that <8 serializes the per-group Python round-trips
-    # and 32 pays per-store setup + checkpoint fsync for idle stores. On a
-    # real cluster, re-derive from live-user count.
-    out = streaming.run_available_now(
-        sessions, spark, state_partitions=16, output_mode="append"
-    )
+    out = streaming.run_available_now(sessions, spark, output_mode="append")
     return out.select(
         "user_id",
         "session_start",
@@ -233,9 +224,7 @@ def stream_native_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    out = streaming.run_available_now(
-        sessions, spark, state_partitions=8, output_mode="append"
-    )
+    out = streaming.run_available_now(sessions, spark, output_mode="append")
     return out.orderBy("user_id", "session_start")
 
 
@@ -293,9 +282,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         lower_bound_expr="click_ts >= buy_ts - INTERVAL 30 MINUTES",
         upper_bound_expr="click_ts <= buy_ts",
     )
-    drained = streaming.run_available_now(
-        joined, spark, state_partitions=8, output_mode="append"
-    )
+    drained = streaming.run_available_now(joined, spark, output_mode="append")
     return (
         drained.groupBy(F.hour("buy_ts").cast("int").alias("buy_hour"))
         .agg(
@@ -384,9 +371,7 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         upper_bound_expr="click_ts <= buy_ts",
         how="left_outer",
     )
-    drained = streaming.run_available_now(
-        joined, spark, state_partitions=8, output_mode="append"
-    )
+    drained = streaming.run_available_now(joined, spark, output_mode="append")
     return (
         drained.groupBy(F.hour("buy_ts").cast("int").alias("buy_hour"))
         .agg(
@@ -438,9 +423,7 @@ def stream_dedup_unique_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = streaming.dedup_stream(
         keyed, ["user_id", "event_type", "bucket"], ts_col="ts", watermark="2 hours"
     ).select("user_id", "event_type", "bucket")
-    drained = streaming.run_available_now(
-        deduped, spark, state_partitions=8, output_mode="append"
-    )
+    drained = streaming.run_available_now(deduped, spark, output_mode="append")
     return (
         drained.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique"))
@@ -494,7 +477,7 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("window_start"), "nation", "n_events", "sum_value")
     )
-    result = streaming.run_available_now(windowed, spark, state_partitions=8)
+    result = streaming.run_available_now(windowed, spark)
     return result.orderBy("window_start", "nation")
 
 
@@ -527,8 +510,7 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events. The integer-cents contract makes state folds and the flag "
     "comparison order-independent integer arithmetic, so the oracle "
     "replays them exactly as decimal window sums. Scale: O(1) state per "
-    "key, flags emitted in-stream (append mode), state partitions sized "
-    "to live-key cardinality.",
+    "key, flags emitted in-stream (append mode).",
 )
 def stream_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import stateful
@@ -540,9 +522,7 @@ def stream_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
     )
     flags = stateful.anomaly_flags(events)
-    out = streaming.run_available_now(
-        flags, spark, state_partitions=8, output_mode="append"
-    )
+    out = streaming.run_available_now(flags, spark, output_mode="append")
     return (
         out.groupBy("user_id")
         .agg(
@@ -608,7 +588,7 @@ def stream_pyds_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("ts_us")
     )
     windowed = streaming.windowed_event_counts(raw, "1 hour", "2 hours")
-    result = streaming.run_available_now(windowed, spark, state_partitions=8)
+    result = streaming.run_available_now(windowed, spark)
     return result.orderBy("window_start", "event_type")
 
 
@@ -663,7 +643,7 @@ def stream_cms_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("wt"))
         .select(F.col("w.start").alias("window_start"), "depth", "bucket", "wt")
     )
-    grid = streaming.run_available_now(cells, spark, state_partitions=8)
+    grid = streaming.run_available_now(cells, spark)
     return (
         grid.groupBy("window_start")
         .agg(
@@ -854,7 +834,7 @@ def stream_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("width").cast("bigint").alias("total_width"),
         F.max("height").cast("int").alias("max_height"),
     )
-    result = streaming.run_available_now(agg, spark, state_partitions=4)
+    result = streaming.run_available_now(agg, spark)
     return result.orderBy("mime")
 
 
@@ -972,7 +952,7 @@ def stream_topics_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 7 independent tiny collect jobs over checkpointed dashboards —
     # submitted concurrently rather than paying sequential job latency.
-    with ThreadPoolExecutor(max_workers=7) as pool:
+    with ThreadPoolExecutor(max_workers=len(streaming.TOPICS)) as pool:
         rows = list(pool.map(compare, streaming.TOPICS))
     return spark.createDataFrame(
         rows, "topic string, n_rows long, rows_match boolean"

@@ -12,16 +12,68 @@ correctness-first local runs but scale-out safe:
 - Shuffle partitions default to the local core count; on a real cluster pass
   ``shuffle_partitions`` ≈ 2-3× total executor cores (or rely on AQE to
   coalesce from a higher initial number).
+
+Code that needs a session conf for the length of one job (a graph loop's
+shuffle width, a drain's state-store count) sets it through
+:func:`scoped_conf`, the one writer of temporary session conf.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import warnings
+from contextlib import contextmanager
+from typing import Iterator
 
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "traffic-accidents-spark-engine"
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+#: Temporary confs in force: key -> (value, previous value or None if
+#: the key was unset, number of holders). Session conf is shared by
+#: every thread of the process, so the holds are too.
+_HOLDS: dict[str, tuple[str, str | None, int]] = {}
+_HOLDS_LOCK = threading.Lock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: object) -> Iterator[None]:
+    """Set session conf ``key`` to ``value`` for the body, then restore it.
+
+    Threads that enter with the value already held share it: the last to
+    leave restores the previous value, or unsets a key that was unset,
+    also when its body raises. Entering with a different value raises
+    ``RuntimeError`` and leaves the held value in force, so two jobs that
+    disagree on a session-wide setting fail instead of running one of
+    them with the other's value. The lock covers only this bookkeeping;
+    bodies run concurrently.
+    """
+    value = str(value)
+    with _HOLDS_LOCK:
+        held, prev, holders = _HOLDS.get(key, (value, None, 0))
+        if held != value:
+            raise RuntimeError(
+                f"{key} is held at {held!r}; cannot scope it to {value!r}"
+            )
+        if not holders:
+            prev = spark.conf.get(key, None)
+            spark.conf.set(key, value)
+        _HOLDS[key] = (value, prev, holders + 1)
+    try:
+        yield
+    finally:
+        with _HOLDS_LOCK:
+            _, prev, holders = _HOLDS.pop(key)
+            if holders > 1:
+                _HOLDS[key] = (value, prev, holders - 1)
+            elif prev is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prev)
 
 
 def _default_parallelism() -> int:
@@ -76,7 +128,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(SHUFFLE_PARTITIONS, str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
