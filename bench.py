@@ -135,7 +135,7 @@ def main() -> None:
         "tier1_total": round(total - tier0_total, 4),
         "n_queries": len(timings),
         "tier0_only": tier0_only,
-        # Build-once artifact memos (plans/llm.py:_artifact) are built
+        # Build-once artifact memos (sources/memo.py:_artifact) are built
         # during the FIRST consumer's untimed warmup, so per-query
         # timings above are steady-state consumer cost only. This field
         # makes that accounting explicit: the one-time build seconds per

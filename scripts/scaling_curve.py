@@ -20,23 +20,12 @@ import sys
 
 sys.path.insert(0, ".")
 
-from traffic_accidents_airflow_kafka_spark.operators.bpe import (  # noqa: E402
-    clear_bpe_merge_cache,
-)
 from traffic_accidents_airflow_kafka_spark.plans import QUERY_REGISTRY  # noqa: E402
 from traffic_accidents_airflow_kafka_spark.plans.llm import (  # noqa: E402
     evict_artifacts,
 )
 from traffic_accidents_airflow_kafka_spark.session import get_spark  # noqa: E402
 
-
-def _clear_memo_caches() -> None:
-    """Scaling curves measure the REAL per-SF cost — trained-index memo
-    caches (BPE merges, and the session artifacts: lattice IVF/PQ
-    indexes, SQ8 decoded pools, exact baselines) would otherwise hide
-    the train/build step behind the first warmup."""
-    clear_bpe_merge_cache()
-    evict_artifacts()
 
 SF_DIRS = [
     ("0.001", "/root/testdata/sf0.001"),
@@ -130,7 +119,10 @@ def main() -> None:
             spec.fn(spark, sf_dir).collect()  # warmup (codegen, broadcast)
             best = float("inf")
             for _ in range(2):
-                _clear_memo_caches()  # measure the real train/index cost
+                # Scaling curves measure the real per-SF cost: memoized
+                # artifacts (trained merges, lattice indexes, SQ8 pools)
+                # would hide the build behind the warm-up.
+                evict_artifacts()
                 t0 = time.perf_counter()
                 spec.fn(spark, sf_dir).collect()
                 best = min(best, time.perf_counter() - t0)

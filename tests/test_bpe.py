@@ -79,6 +79,27 @@ def test_train_bpe_matches_pure_python_reference(spark):
     assert got == expected
 
 
+def test_train_bpe_follows_a_corpus_rewritten_in_place(spark, tmp_path):
+    """A corpus file rewritten at the same path, so the read plan is the
+    same: training returns the new corpus's merges, not the old ones."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from traffic_accidents_airflow_kafka_spark.sources.tables import load_table
+
+    def train(texts: list[str]) -> list[tuple[int, str, str, int]]:
+        pq.write_table(pa.table({"text": texts}), str(tmp_path / "documents.parquet"))
+        docs = load_table(spark, str(tmp_path), "documents")
+        return [
+            (r["rank"], r["lhs"], r["rhs"], r["pair_count"])
+            for r in bpe.train_bpe(docs, n_merges=4).orderBy("rank").collect()
+        ]
+
+    assert train(CORPUS) == _ref_train(CORPUS, n_merges=4)[0]
+    rewritten = ["qq qq qq", "ww ww ww"]
+    assert train(rewritten) == _ref_train(rewritten, n_merges=4)[0]
+
+
 def test_train_bpe_stops_below_min_freq(spark):
     docs = spark.createDataFrame([("ab zq",)], "text STRING")
     # every pair occurs once; with min_freq=2 no merge is learned

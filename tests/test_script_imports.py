@@ -1,6 +1,7 @@
-"""Every package name that ``bench.py`` and ``scripts/*.py`` import still
-exists. No test runs a script, so a deleted or renamed function would
-otherwise break a script silently. The scripts are parsed, not run: the
+"""Every package name that ``bench.py``, ``scripts/*.py`` and
+``perfbench/*.py`` import still exists. No test runs a script, so a
+deleted or renamed function would otherwise break a script, or the
+benchmark, silently. The scripts are parsed, not run: the
 check imports only the package modules they name and starts no Spark
 session."""
 
@@ -14,7 +15,11 @@ import pytest
 
 PACKAGE = "traffic_accidents_airflow_kafka_spark"
 ROOT = Path(__file__).resolve().parent.parent
-SOURCES = [ROOT / "bench.py", *sorted((ROOT / "scripts").glob("*.py"))]
+SOURCES = [
+    ROOT / "bench.py",
+    *sorted((ROOT / "scripts").glob("*.py")),
+    *sorted((ROOT / "perfbench").glob("*.py")),
+]
 
 
 def package_imports(path: Path) -> list[tuple[str, str]]:

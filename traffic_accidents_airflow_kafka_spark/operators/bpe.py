@@ -123,25 +123,11 @@ def apply_merge(syms_col: str | Column, lhs: str, rhs: str) -> Column:
 VOCAB_PARTITIONS = 4
 
 
-#: Trained merge lists keyed on the corpus PLAN (semanticHash) + params —
-#: the FAISS-index idiom: a tokenizer is trained once and reused across
-#: encodes. Like any index, it
-#: goes stale if the table's files change under the same plan — call
-#: :func:`clear_bpe_merge_cache` after a data refresh.
-_BPE_MERGE_CACHE: dict[tuple, list[tuple[int, str, str, int]]] = {}
-
-
-def clear_bpe_merge_cache() -> None:
-    """Drop every cached merge table (explicit tokenizer rebuild)."""
-    _BPE_MERGE_CACHE.clear()
-
-
 def train_bpe(
     docs: DataFrame,
     text_col: str = "text",
     n_merges: int = 12,
     min_freq: int = 2,
-    use_cache: bool = True,
 ) -> DataFrame:
     """Train ``n_merges`` BPE merges; returns (rank, lhs, rhs, pair_count).
 
@@ -151,16 +137,12 @@ def train_bpe(
     rounds shuffle on ``VOCAB_PARTITIONS`` partitions (the corpus-sized
     word count keeps the session default).
 
-    Trained merge tables memoize on (corpus plan, params) — a tokenizer,
-    like an ANN index, is trained once and reused by every encode
-    (see ``_BPE_MERGE_CACHE`` / :func:`clear_bpe_merge_cache`);
-    ``use_cache=False`` forces a retrain.
+    Every call trains. Callers that reuse one merge table across encodes
+    hold it in the build-once memo, which retrains when the corpus files
+    change (``plans/tokenizer.py:_trained_merges``).
     """
     spark = docs.sparkSession
     schema = "rank INT, lhs STRING, rhs STRING, pair_count BIGINT"
-    cache_key = (docs.semanticHash(), text_col, n_merges, min_freq)
-    if use_cache and cache_key in _BPE_MERGE_CACHE:
-        return spark.createDataFrame(_BPE_MERGE_CACHE[cache_key], schema)
     symtab = (
         word_freq(docs, text_col)
         .select("f", initial_symbols("word").alias("syms"))
@@ -188,8 +170,6 @@ def train_bpe(
                 last_ckpt = new_tab
         finally:
             last_ckpt.unpersist()
-    if use_cache:
-        _BPE_MERGE_CACHE[cache_key] = merges
     return spark.createDataFrame(merges, schema)
 
 

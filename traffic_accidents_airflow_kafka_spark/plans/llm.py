@@ -38,24 +38,21 @@ Segments, in registration order:
 - ``llm_retrieval`` — BM25, hybrid RRF, JL, repeated spans, arrivals
 - ``llm_audits`` — recall curves/audits, quotas, bitext, SQ8, metrics
 
-Shared engine-parity helpers and the artifact memo live in
-``llm_shared`` (no registrations — import order there is not
-load-bearing).
+Shared engine-parity helpers live in ``llm_shared`` (no registrations —
+import order there is not load-bearing); the artifact memo is
+``sources/memo.py``.
 """
 
 from __future__ import annotations
 
+from ..sources.memo import artifact_build_times, artifact_keys, evict_artifacts  # noqa: F401
 from .llm_shared import (  # noqa: F401 — re-exported infra surface
     _NUM_HASHES,
     _SHINGLE_CTE,
-    _artifact,
     _neardup_pairs,
     _sql_dot,
     _sql_fold_dot,
     _sql_vnorm,
-    artifact_build_times,
-    artifact_keys,
-    evict_artifacts,
 )
 
 # Segment imports REGISTER the catalog entries — this order is

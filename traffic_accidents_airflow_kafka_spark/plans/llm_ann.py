@@ -15,10 +15,11 @@ from ..operators import (
     multimodal,
     similarity,
 )
+from ..sources.memo import _artifact
 from ..sources.tables import load_table
 from .registry import register
 from .llm_dedup import _topk_oracle
-from .llm_shared import _artifact, _sql_dot, _sql_fold_dot, _sql_vnorm
+from .llm_shared import _sql_dot, _sql_fold_dot, _sql_vnorm
 
 @register(
     "embedding_topk",

@@ -17,6 +17,7 @@ from ..operators import (
     similarity,
     text as text_ops,
 )
+from ..sources.memo import _artifact
 from ..sources.tables import load_table
 from .registry import register
 from .llm_ann import _lattice_ivf_index, _lattice_ivfpq_index, _lattice_pq_recon
@@ -25,7 +26,6 @@ from .llm_retrieval import (
     _exact_top3_q20,
     _repeated_span_ctes,
 )
-from .llm_shared import _artifact
 
 @register(
     "ivf_nprobe_recall_curve",
@@ -670,6 +670,8 @@ def incremental_sq8_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     history = emb.filter(F.col("vec_id") % 5 != 4)
     arrivals = emb.filter(F.col("vec_id") % 5 == 4)
     qids = arrivals.select("vec_id").filter(F.col("vec_id") < 100)
+    # Not embedding_sq8_ann's pool-full: calibrating on the frozen history
+    # gives other bounds, codes and exact baselines.
     decoded = _artifact(
         spark,
         sf_dir,

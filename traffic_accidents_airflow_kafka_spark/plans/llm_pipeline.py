@@ -19,10 +19,11 @@ from ..operators import (
     similarity,
     text as text_ops,
 )
+from ..sources.memo import _artifact
 from ..sources.tables import load_table
 from .registry import register
 from .llm_ann import _ivf_pq_exact_oracle, _lattice_ivfpq_index
-from .llm_shared import _artifact, _sql_dot
+from .llm_shared import _sql_dot
 
 @register(
     "embedding_ivfpq_ann",

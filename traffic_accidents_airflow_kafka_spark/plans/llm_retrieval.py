@@ -17,13 +17,13 @@ from ..operators import (
     similarity,
     text as text_ops,
 )
+from ..sources.memo import _artifact
 from ..sources.tables import load_table
 from .registry import register
 from .llm_analysis import _BM25_B, _BM25_K1, _BM25_SQL_CTES, _BM25_TERMS
 from .llm_shared import (
     _NUM_HASHES,
     _SHINGLE_CTE,
-    _artifact,
     _neardup_pairs,
     _sql_dot,
 )

@@ -14,6 +14,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.memo import _artifact
 from ..streaming import core as streaming
 from .registry import register
 
@@ -789,7 +790,6 @@ def _stream_asset_base(spark: SparkSession) -> str:
 def stream_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal
     from ..sources.tables import load_table
-    from .llm import _artifact
 
     # The landed drop directory is corpus PREP, not the streaming query —
     # build it once per (session, sf_dir) like every other input artifact
@@ -912,7 +912,6 @@ def stream_topics_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     from ..streaming.fanout import run_topics_fanout
-    from .llm import _artifact
     from .registry import QUERY_REGISTRY
 
     merged = run_topics_fanout(spark, sf_dir)
@@ -1045,7 +1044,7 @@ def _stream_dsir_oracle(n_buckets: int = 64, limit: int = 150) -> str:
 def stream_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dsir
     from ..sources.tables import load_table
-    from .llm import DSIR_SELECT_CENTIBITS, _artifact
+    from .llm import DSIR_SELECT_CENTIBITS
 
     docs = load_table(spark, sf_dir, "documents")
     frozen = _artifact(

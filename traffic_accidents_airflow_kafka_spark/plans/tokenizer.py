@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators import bpe
 from ..operators.text import BPE_ISH_PATTERN
 from ..operators.unigram import MAX_WORD_LEN as UNI_MAX_WORD_LEN
+from ..sources.memo import _artifact
 from ..sources.tables import load_table
 from .registry import register
 
@@ -52,12 +53,10 @@ def _trained_merges(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
     config, as a build-once artifact: three encoder entries
     (bpe_segmentations, bpe_token_counts, bpe_oov_audit) consume the
     IDENTICAL merge list — a deployment trains the tokenizer once and
-    every encoder loads the artifact (r6 VERDICT #6). Keyed per
-    (session, sf_dir) by the same memo the SQ8/near-dup artifacts use;
-    bpe_train_merges itself stays un-memoized so the bench still times
+    every encoder loads the artifact (r6 VERDICT #6). Held by the
+    build-once memo (``sources/memo.py``) until a table under ``sf_dir``
+    changes; bpe_train_merges itself is not memoized, so the bench times
     the real training loop."""
-    from .llm import _artifact
-
     return _artifact(
         spark,
         sf_dir,
@@ -567,7 +566,6 @@ def unigram_seed_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def unigram_viterbi_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import unigram
-    from .llm import _artifact
 
     docs = load_table(spark, sf_dir, "documents")
     wf = bpe.word_freq(docs)
@@ -759,7 +757,6 @@ UNI_PRUNE_KEEP = 40
 )
 def unigram_prune_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import unigram
-    from .llm import _artifact
 
     docs = load_table(spark, sf_dir, "documents")
     wf = bpe.word_freq(docs)
@@ -821,7 +818,6 @@ def unigram_prune_round(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def unigram_doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import unigram
-    from .llm import _artifact
 
     docs = load_table(spark, sf_dir, "documents")
     wf = bpe.word_freq(docs)
@@ -933,7 +929,6 @@ UNI_SURPRISAL_CENTIBITS = 760
 )
 def unigram_surprisal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import unigram
-    from .llm import _artifact
 
     docs = load_table(spark, sf_dir, "documents")
     wf = bpe.word_freq(docs)

@@ -17,8 +17,8 @@ equivalents:
 - ``memoized_write`` (S12) = idempotent skip-if-committed, replacing the
   reference's os.path.exists guards (:170-173, 369-372).
 - ``file_snapshot`` keys the memos over files (the ETL star-load memo,
-  the streaming footer sniffs), so a rewritten file is never served
-  from a stale entry.
+  the build-once memo in ``sources/memo.py``), so a rewritten file is
+  never served from a stale entry.
 """
 
 from __future__ import annotations

@@ -39,7 +39,7 @@ from pyspark.sql.types import (
 )
 
 from ..session import SHUFFLE_PARTITIONS, scoped_conf
-from ..sources.sinks import file_snapshot
+from ..sources.memo import _artifact
 from ..topic_specs import TOPIC_SPECS
 
 #: The 7 result topics (kafka/consumer.py:6-14), in spec-table order.
@@ -74,29 +74,15 @@ def ephemeral_dir(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
-#: (normalized table path, ``file_snapshot``) -> resolved parquet schema.
-#: The footer sniff is a driver-side read costing 0.14-0.26 s, paid by ~12
-#: streaming entries on EVERY plan build and by every fan-out run; the
-#: schema — pure metadata, never data or results — memoizes per file
-#: state, so a file rewritten in place (e.g. with the other timestamp
-#: unit) is sniffed again instead of served a stale schema (guide §7.3
-#: driver-side planning cost; the artifact-memo pattern's metadata-only
-#: sibling).
-_SCHEMA_MEMO: dict = {}
-
-
 def table_schema(spark: SparkSession, sf_dir: str, table: str) -> StructType:
     """``{table}.parquet``'s schema as the batch reader resolves it
-    (footer only, no data scan), memoized per path and file state (see
-    ``_SCHEMA_MEMO``)."""
+    (footer only, no data scan), held by the build-once memo: the sniff
+    is a driver-side read of 0.14-0.26 s that ~12 streaming entries pay
+    on every plan build and the fan-out on every run, and a table
+    rewritten in place (e.g. with the other timestamp unit) is sniffed
+    again."""
     path = os.path.join(sf_dir, f"{table}.parquet")
-    key = (os.path.normpath(os.path.abspath(path)), file_snapshot(path))
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        if key[1] is not None:
-            _SCHEMA_MEMO[key] = schema
-    return schema
+    return _artifact(spark, sf_dir, f"schema-{table}", lambda: spark.read.parquet(path).schema)
 
 
 def _events_stream_schema(spark: SparkSession, sf_dir: str) -> StructType:
@@ -239,10 +225,12 @@ def run_available_now(
                 .start()
             )
             q.awaitTermination()
+        return spark.table(name)
     finally:
-        # The memory-sink result outlives the checkpoint; reclaim the tmpfs.
+        # The returned frame holds the memory sink's rows itself; neither
+        # the checkpoint nor the sink's temp view outlives this call.
         shutil.rmtree(checkpoint, ignore_errors=True)
-    return spark.table(name)
+        spark.catalog.dropTempView(name)
 
 
 def dedup_stream(

@@ -47,6 +47,7 @@ from urllib.parse import urlparse
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.memo import _artifact
 from ..sources.tables import load_table
 from ..topic_specs import TOPIC_SPECS, TopicSpec, merge, partial, rollup
 from . import core as streaming
@@ -189,8 +190,6 @@ def _orders_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not silently switch topic 3 to the fallback plan.
     from py4j.protocol import Py4JJavaError
     from pyspark.errors import AnalysisException
-
-    from ..plans.llm_shared import _artifact
 
     table = bucketed_orders_table(sf_dir)
     try:

@@ -13,22 +13,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans import QUERY_REGISTRY
-from ..topic_specs import TOPIC_SPECS
-from .core import kafka_sink_options, to_kafka_array_envelope, to_kafka_payload
-
-#: topic → catalog query name: each topic spec registers one batch query
-#: under its own name (plans/topics.py).
-TOPIC_QUERIES: dict[str, str] = {spec.name: spec.name for spec in TOPIC_SPECS}
+from .core import TOPICS, kafka_sink_options, to_kafka_array_envelope, to_kafka_payload
 
 
 def publish_plan(
     spark: SparkSession, sf_dir: str, array_envelope: bool = False
 ) -> dict[str, DataFrame]:
     """Render every topic's payload DataFrame (no broker needed —
-    this is the dry-run surface the tests drive)."""
+    this is the dry-run surface the tests drive). Each topic's catalog
+    query is registered under the topic's name (plans/topics.py)."""
     out: dict[str, DataFrame] = {}
-    for topic, qname in TOPIC_QUERIES.items():
-        result = QUERY_REGISTRY[qname].fn(spark, sf_dir)
+    for topic in TOPICS:
+        result = QUERY_REGISTRY[topic].fn(spark, sf_dir)
         out[topic] = (
             to_kafka_array_envelope(result) if array_envelope else to_kafka_payload(result)
         )
