@@ -39,12 +39,14 @@ class TestConnectedComponents:
         assert comp.count() == 0
 
     def test_long_chain_converges(self, spark):
-        # 20-node path: worst-case diameter for min propagation; the
-        # fixpoint probe (not the iteration cap) must terminate the loop.
-        pairs = _pairs(spark, [(i, i + 1) for i in range(100, 119)])
+        # 41-node path 100-101-...-140: worst-case diameter for min
+        # propagation, 40 label rounds. A loop that stops at a fixed
+        # round count r labels node 100 + i with 100 + max(0, i - r);
+        # only running to the fixpoint labels every node 100.
+        pairs = _pairs(spark, [(i, i + 1) for i in range(100, 140)])
         comp = dedup.connected_components(pairs)
         rows = comp.collect()
-        assert len(rows) == 20
+        assert len(rows) == 41
         assert all(r["component"] == 100 for r in rows)
 
 
@@ -386,6 +388,8 @@ class TestWeightedSample:
 
 
 class TestStarConnectedComponents:
+    """Union-find cross-checks of :func:`dedup.connected_components`."""
+
     def _union_find_labels(self, edges):
         parent = {}
 
@@ -415,29 +419,11 @@ class TestStarConnectedComponents:
         edges = [(rng.randrange(80), rng.randrange(80)) for _ in range(60)]
         edges = [(a, b) for a, b in edges if a != b]
         pairs = spark.createDataFrame(edges, "d1 long, d2 long")
-        want = self._union_find_labels(edges)
-        star = {
-            r["id"]: r["component"]
-            for r in dedup.connected_components_star(pairs).collect()
-        }
         label = {
             r["id"]: r["component"]
             for r in dedup.connected_components(pairs).collect()
         }
-        assert star == want
-        assert label == want
-
-    def test_long_chain_converges_in_log_rounds(self, spark):
-        """The case the star variant exists for: a 200-node chain has
-        diameter 200 (min-label would need ~200 rounds) but must collapse
-        within the 20-alternation default budget."""
-        edges = [(i, i + 1) for i in range(200)]
-        pairs = spark.createDataFrame(edges, "d1 long, d2 long")
-        got = {
-            r["id"]: r["component"]
-            for r in dedup.connected_components_star(pairs).collect()
-        }
-        assert got == {i: 0 for i in range(201)}
+        assert label == self._union_find_labels(edges)
 
     def test_two_components_and_isolated_pair(self, spark):
         pairs = spark.createDataFrame(
@@ -445,7 +431,7 @@ class TestStarConnectedComponents:
         )
         got = {
             r["id"]: r["component"]
-            for r in dedup.connected_components_star(pairs).collect()
+            for r in dedup.connected_components(pairs).collect()
         }
         assert got == {3: 3, 5: 3, 9: 3, 20: 20, 21: 20}
 

@@ -1044,13 +1044,17 @@ def test_pmi_prefers_bound_phrase_over_independent_pair(spark, tmp_path):
 
 def test_pagerank_star_center_dominates_and_mass_conserves(spark):
     """On a 5-node star the hub out-ranks every leaf; total rank mass
-    sums to 1 (teleport + dangling redistribution)."""
-    from traffic_accidents_airflow_kafka_spark.operators.graph import pagerank
+    sums to 1 (teleport + damped flow, no dangling node)."""
+    from traffic_accidents_airflow_kafka_spark.operators.graph import (
+        pagerank,
+        prepare_pair_graph,
+    )
 
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4), (1, 5)], "d1 long, d2 long"
     )
-    ranks = {r["id"]: r["rank"] for r in pagerank(pairs, iters=15).collect()}
+    g = prepare_pair_graph(pairs)
+    ranks = {r["id"]: r["rank"] for r in pagerank(g, iters=15).collect()}
     assert set(ranks) == {1, 2, 3, 4, 5}
     assert abs(sum(ranks.values()) - 1.0) < 1e-9
     hub = ranks[1]
@@ -1061,47 +1065,31 @@ def test_pagerank_star_center_dominates_and_mass_conserves(spark):
     assert max(leaves) - min(leaves) < 1e-12
 
 
-def test_pagerank_prepared_graph_matches_solo_paths(spark):
-    """The r10 shared-graph path (prepare_pair_graph + prepared=) must be
-    bit-identical to each variant building its own relations: exact
-    equality for the fixed-point ranks (pure int64 arithmetic), and the
-    float ranks equal too on this tiny graph (same expressions, same
-    relations, single partition)."""
+def test_pagerank_graph_ignores_pair_order_duplicates_and_self_loops(spark):
+    """prepare_pair_graph symmetrizes and dedups: pairs listed reversed,
+    repeated or as self-loops give both variants exactly the ranks of
+    the clean pair list, and one graph serves both loops."""
     from traffic_accidents_airflow_kafka_spark.operators.graph import (
         pagerank,
         pagerank_fixedpoint,
         prepare_pair_graph,
     )
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 3), (4, 5), (5, 6)], "d1 long, d2 long"
-    )
-    g = prepare_pair_graph(pairs)
-    fx_solo = {r["id"]: r["rank_u"] for r in pagerank_fixedpoint(pairs).collect()}
-    fx_prep = {
-        r["id"]: r["rank_u"]
-        for r in pagerank_fixedpoint(pairs, prepared=g).collect()
-    }
-    assert fx_solo == fx_prep
-    fl_solo = {r["id"]: r["rank"] for r in pagerank(pairs).collect()}
-    fl_prep = {r["id"]: r["rank"] for r in pagerank(pairs, prepared=g).collect()}
-    assert set(fl_solo) == set(fl_prep)
-    for k in fl_solo:
-        assert abs(fl_solo[k] - fl_prep[k]) < 1e-12
-
-
-def test_pagerank_directed_dangling_mass_redistributes(spark):
-    """Directed chain 1->2->3: node 3 dangles; ranks still sum to 1 and
-    order follows the flow (3 >= 2 >= 1)."""
-    from traffic_accidents_airflow_kafka_spark.operators.graph import pagerank
-
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], "d1 long, d2 long")
-    ranks = {
-        r["id"]: r["rank"]
-        for r in pagerank(pairs, iters=25, symmetrize=False).collect()
-    }
-    assert abs(sum(ranks.values()) - 1.0) < 1e-9
-    assert ranks[3] > ranks[2] > ranks[1]
+    clean = [(1, 2), (1, 3), (2, 3), (4, 5), (5, 6)]
+    noisy = clean + [(2, 1), (3, 1), (1, 2), (6, 5), (4, 4), (7, 7)]
+    schema = "d1 long, d2 long"
+    g_clean = prepare_pair_graph(spark.createDataFrame(clean, schema))
+    g_noisy = prepare_pair_graph(spark.createDataFrame(noisy, schema))
+    assert (g_noisy.n_nodes, g_noisy.n_edges) == (6, 10)
+    fx = [
+        {r["id"]: r["rank_u"] for r in pagerank_fixedpoint(g).collect()}
+        for g in (g_clean, g_noisy)
+    ]
+    assert fx[0] == fx[1]
+    fl = [{r["id"]: r["rank"] for r in pagerank(g).collect()} for g in (g_clean, g_noisy)]
+    assert set(fl[0]) == set(fl[1]) == set(fx[0]) == {1, 2, 3, 4, 5, 6}
+    for k in fl[0]:
+        assert abs(fl[0][k] - fl[1][k]) < 1e-12
 
 
 def test_leakfree_split_keeps_neardup_family_together(spark, tmp_path):
@@ -1172,14 +1160,15 @@ def test_pagerank_fixedpoint_matches_integer_reference(spark):
     from traffic_accidents_airflow_kafka_spark.operators.graph import (
         pagerank,
         pagerank_fixedpoint,
+        prepare_pair_graph,
     )
 
     raw_pairs = [(1, 2), (1, 3), (1, 4), (1, 5), (4, 5)]
-    pairs = spark.createDataFrame(raw_pairs, "d1 long, d2 long")
+    g = prepare_pair_graph(spark.createDataFrame(raw_pairs, "d1 long, d2 long"))
     iters, scale, dn, dd = 10, 10**12, 85, 100
     got = {
         r["id"]: r["rank_u"]
-        for r in pagerank_fixedpoint(pairs, iters=iters, scale=scale).collect()
+        for r in pagerank_fixedpoint(g, iters=iters, scale=scale).collect()
     }
 
     # Pure-Python replay of the documented recurrence.
@@ -1200,7 +1189,7 @@ def test_pagerank_fixedpoint_matches_integer_reference(spark):
     assert got == ranks
 
     # Ranking parity with the float variant (hub >> leaves).
-    fl = {r["id"]: r["rank"] for r in pagerank(pairs, iters=iters).collect()}
+    fl = {r["id"]: r["rank"] for r in pagerank(g, iters=iters).collect()}
     order_int = sorted(got, key=lambda n: (-got[n], n))
     order_fl = sorted(fl, key=lambda n: (-fl[n], n))
     assert order_int == order_fl

@@ -97,8 +97,8 @@ def test_multiprobe_lsh_recall_at_least_single_probe(spark, sf_dir):
     }
     multi = {
         r["qid"]: r["nid"]
-        for r in similarity.lsh_ann_topk_multiprobe(
-            emb, query_ids=qids, n_planes=6, k=1
+        for r in similarity.lsh_ann_topk(
+            emb, query_ids=qids, n_planes=6, k=1, multiprobe=True
         ).collect()
     }
     hits_single = sum(1 for q, n in exact_top1.items() if single.get(q) == n)

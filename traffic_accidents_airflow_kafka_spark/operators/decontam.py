@@ -71,8 +71,8 @@ def _word_ngram_key_rows(
 ) -> DataFrame:
     """(id, __gh) rows — one per word-``n``-gram INSTANCE, keyed by the
     xxhash64 of the n-long slice of per-word xxhash64s instead of the
-    md5 of the built gram string (the r10 hash-slice keying the
-    positional-ngram/shingle/Gopher families already use: the gram text
+    md5 of the built gram string (the hash-slice keying the
+    positional-ngram/shingle/Gopher families also use: the gram text
     was only ever an equality key here, so the explode and the join
     carry 8-byte longs and the n-word concat string is never built).
     Each word is hashed once into a per-row long array in its OWN
@@ -83,7 +83,7 @@ def _word_ngram_key_rows(
     collisions (birthday-bounded at ~2^32 distinct grams); the DuckDB
     oracles match md5 over the literal gram text, so green parity
     doubles as the collision check — at the benchmark scales actually
-    run. SCALE BOUND (ADVICE r10): at the advertised 100 TB corpus
+    run. SCALE BOUND: at the advertised 100 TB corpus
     (~10^13 distinct 8-grams) expected spurious cross-side hits under a
     single 64-bit key reach order-1 per ~10^6-row eval set — enough to
     perturb n_hit by a few counts but ~never to flip a contaminated
@@ -127,18 +127,15 @@ def contamination(
     only aggregation is the per-doc count, which combines partially
     before any exchange.
     """
-    # r10: both sides keyed on the gram's word-hash-slice xxhash64 (see
-    # _word_ngram_key_rows) — the gram text and its md5 were only ever
-    # the join equality key, and never building the 8-word concat string
-    # per instance cuts the dominant per-row cost
-    # (benchmark_ngram_digests keeps the md5 form for any caller that
-    # needs an engine-stable digest).
-    # r11 (ADVICE r10 medium): the bench side only contributes its gram
-    # KEYS, so it must not be required to carry the TRAIN corpus's id
-    # column — eval suites are often keyed differently or unkeyed. A
-    # constant stands in as the id (pruned away by the select below),
-    # restoring the pre-r10 contract that only text_col is read from
-    # ``bench``.
+    # Both sides key on the gram's word-hash-slice xxhash64 (see
+    # _word_ngram_key_rows) — the gram text is only a join equality key,
+    # and never building the 8-word concat string per instance cuts the
+    # dominant per-row cost (benchmark_ngram_digests keeps the md5 form
+    # for any caller that needs an engine-stable digest).
+    # The bench side only contributes its gram KEYS, so it need not
+    # carry the TRAIN corpus's id column — eval suites are often keyed
+    # differently or unkeyed. A constant stands in as the id (pruned
+    # away by the select below): only text_col is read from ``bench``.
     digests = F.broadcast(
         _word_ngram_key_rows(
             bench.select(F.lit(0).alias("__bench_id"), F.col(text_col)),
@@ -300,15 +297,14 @@ def semantic_contamination(
     smallest-qid tie-break — order-free, so collect_list
     nondeterminism is harmless). ZERO shuffle: the corpus is scored in
     a single map pass; only the report's TakeOrdered moves rows. The
-    per-pair cosine is the exact-parity fold (operators/similarity.py:
-    _dot_double), so the whole audit value-hashes against SQL.
+    per-pair cosine is operators/similarity.py:cosine (the exact-parity
+    fold), so the whole audit value-hashes against SQL.
 
-    Zero-norm vectors (either side) score a sentinel -2.0 instead of
-    0/0 = NaN — NaN would compare GREATER than every value in Spark
-    while DuckDB's NaN ordering could disagree at the threshold, a
-    latent cross-engine divergence (r7 advisory).
+    Zero-norm vectors (either side) score that helper's sentinel -2.0
+    instead of 0/0 = NaN — NaN would compare GREATER than every value in
+    Spark while DuckDB's NaN ordering could disagree at the threshold.
     """
-    from .similarity import _dot_double, vector_norm
+    from .similarity import cosine, vector_norm
 
     ev = eval_emb.select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
@@ -325,10 +321,7 @@ def semantic_contamination(
     )
 
     def step(acc: Column, e: Column) -> Column:
-        denom = F.col("nnorm") * e["qnorm"]
-        cos = F.when(
-            denom > 0, _dot_double(F.col("nvec"), e["qvec"]) / denom
-        ).otherwise(F.lit(-2.0))
+        cos = cosine("nvec", e["qvec"], "nnorm", e["qnorm"])
         better = (cos > acc["c"]) | (
             (cos == acc["c"]) & (e["qid"] < acc["q"])
         )
@@ -356,7 +349,7 @@ def semantic_contamination_lsh(
     dim: int = 64,
     seed: int = 7,
 ) -> DataFrame:
-    """The 100 TB form of :func:`semantic_contamination` (r7 VERDICT #5):
+    """The 100 TB form of :func:`semantic_contamination`:
     LSH-BUCKETED candidate generation instead of the broadcast-array
     fold, for eval suites past the broadcast bound (the exact fold
     carries ~100k x 768-dim eval items as a ~300 MB broadcast and does
@@ -366,8 +359,9 @@ def semantic_contamination_lsh(
     Shape: both sides bucket by the seeded sign-pattern hyperplanes
     (operators/similarity.py:lsh_bucket — plan literals, pure codegen);
     the SMALL side (eval) multi-probes its home bucket plus the
-    n_planes Hamming-1 neighbors (the lsh_ann_topk_multiprobe recall
-    fix, applied to the cheap side so the corpus buckets exactly once);
+    n_planes Hamming-1 neighbors (similarity.probe_buckets, the
+    multi-probe recall fix of lsh_ann_topk, applied to the cheap side so
+    the corpus buckets exactly once);
     candidates join on bucket equality with the eval side broadcast;
     cosines are the exact-parity sequential fold with the zero-norm
     sentinel; per-corpus-row best = max cosine, ties to the lowest
@@ -385,29 +379,23 @@ def semantic_contamination_lsh(
     and plane count without changing the plan shape.
     """
     from .similarity import (
-        _dot_double,
+        cosine,
         hyperplane_planes,
         lsh_bucket,
+        probe_buckets,
         vector_norm,
     )
 
     planes = hyperplane_planes(dim, n_planes, seed)
-    ev = (
+    evp = (
         eval_emb.select(
             F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
         )
         .withColumn("qnorm", vector_norm("qvec"))
-        .withColumn("home", lsh_bucket(F.col("qvec"), planes))
-    )
-    probe_buckets = F.array(
-        F.col("home"),
-        *[
-            F.col("home").bitwiseXOR(F.lit(1 << i)).cast("long")
-            for i in range(n_planes)
-        ],
-    )
-    evp = ev.select(
-        "qid", "qvec", "qnorm", F.explode(probe_buckets).alias("bucket")
+        .withColumn(
+            "bucket",
+            F.explode(probe_buckets(lsh_bucket(F.col("qvec"), planes), n_planes)),
+        )
     )
     corpus = (
         corpus_emb.select(
@@ -416,12 +404,8 @@ def semantic_contamination_lsh(
         .withColumn("nnorm", vector_norm("nvec"))
         .withColumn("bucket", lsh_bucket(F.col("nvec"), planes))
     )
-    denom = F.col("nnorm") * F.col("qnorm")
     cand = corpus.join(F.broadcast(evp), "bucket").withColumn(
-        "__cos",
-        F.when(
-            denom > 0, _dot_double(F.col("nvec"), F.col("qvec")) / denom
-        ).otherwise(F.lit(-2.0)),
+        "__cos", cosine("nvec", "qvec", "nnorm", "qnorm")
     )
     # argmax cosine with lowest-qid tie-break as ONE order-free
     # aggregate: max over (cos, -qid) structs — identical selection to

@@ -327,8 +327,8 @@ def word_shingle_keys(
     own Project, so the optimizer cannot inline the array build into
     the per-gram lambda) and each shingle key is the xxhash64 of the
     n-long slice — n longs hashed per gram instead of a concat-string
-    build + hash (the r10 positional_ngrams optimization applied to
-    the distinct-shingle relation).
+    build + hash (the positional_ngrams keying applied to the
+    distinct-shingle relation).
 
     Equivalence to hashing word_shingles' strings: concat_ws(' ') over
     split(' ') words is injective (words cannot contain the separator),
@@ -366,7 +366,7 @@ def jaccard_pairs(
     # shuffle carries 8-byte longs instead of n-gram text. A cross-shingle
     # hash collision would need ~2^32 distinct shingles to become likely
     # (birthday bound) — far beyond any per-corpus shingle vocabulary.
-    # Input may be pre-keyed (word_shingle_keys' __sh column — the r10
+    # Input may be pre-keyed (word_shingle_keys' __sh column — the
     # fast path that never builds the gram string at all); the
     # frequency cap then groups by the key, identical to grouping by
     # the string under the same injectivity argument.
@@ -548,10 +548,7 @@ def lsh_cross_pairs(
 
 
 def connected_components(
-    pairs: DataFrame,
-    src: str = "d1",
-    dst: str = "d2",
-    max_iter: int = 25,
+    pairs: DataFrame, src: str = "d1", dst: str = "d2"
 ) -> DataFrame:
     """Connected components over an undirected pair relation — the
     clustering step every production dedup pipeline runs after candidate
@@ -560,21 +557,18 @@ def connected_components(
 
     Iterative min-label propagation: every node starts labeled with its
     own id; each round pushes labels across edges and keeps the per-node
-    minimum; at fixpoint every node carries the minimum id of its
-    component. Rounds = component diameter, so near-dup graphs (small,
-    dense clusters) converge in 2-3 rounds. The driver coordinates the
-    loop — the idiomatic Spark shape for iterative graph algorithms —
-    with ``localCheckpoint`` truncating the growing lineage each round
-    and a single scalar aggregate (sum of labels, monotonically
-    non-increasing) as the convergence probe, so per-round driver traffic
-    is one row regardless of graph size.
+    minimum. Labels only ever decrease, so an unchanged label sum means
+    no label changed: the loop runs until the sum stops changing, which
+    is at most diameter + 1 rounds (2-3 for near-dup cliques), and every
+    node then carries the minimum id of its component. There is no round
+    cap, so a long chain costs rounds, never wrong labels. The driver
+    coordinates the loop with ``localCheckpoint`` truncating the lineage
+    each round; the sum is one scalar row per round whatever the graph
+    size.
 
     Scale: each round is one shuffle join (edges × labels, keyed on the
-    8-byte node id) plus a groupBy-min. For pathological high-diameter
-    graphs (long chains — not the near-dup shape) the round count grows;
-    the large-star/small-star variant (Kiveris et al., "Connected
-    Components in MapReduce and Beyond") bounds rounds at O(log n) with
-    the same per-round plan and drops in here unchanged.
+    8-byte node id) plus a groupBy-min, at the graph-sized shuffle width
+    of :func:`graph.loop_partitions`.
 
     Returns (id, component) for every node that appears in ``pairs``.
     """
@@ -585,12 +579,6 @@ def connected_components(
     # candidate-pair plan per iteration.
     edges = fwd.union(rev).distinct().localCheckpoint()
 
-    # Size the loop's shuffles to the GRAPH, not the session default: the
-    # pair graph is orders of magnitude smaller than the corpus that
-    # produced it, and per-round fixed cost scales with task count
-    # (measured: 2 rounds over a few hundred edges take 1.07 s at 32
-    # shuffle partitions vs 0.55 s at 1). Count is free here — edges is
-    # already materialized.
     spark = pairs.sparkSession
     n_edges = edges.count()
     with scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, n_edges)):
@@ -598,7 +586,7 @@ def connected_components(
             "id", F.col("id").alias("component")
         )
         prev_sum = None
-        for _ in range(max_iter):
+        while True:
             msgs = edges.join(
                 comp.withColumnRenamed("id", "e_src"), "e_src"
             ).select(F.col("e_dst").alias("id"), "component")
@@ -612,127 +600,8 @@ def connected_components(
             comp = new_comp
             cur_sum = comp.agg(F.sum("component")).first()[0]
             if cur_sum == prev_sum:
-                break
+                return comp
             prev_sum = cur_sum
-    return comp
-
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """One large-star round: every node points its STRICTLY LARGER
-    neighbors at the minimum of its closed neighborhood."""
-    sym = edges.union(
-        edges.select(F.col("e_dst").alias("e_src"), F.col("e_src").alias("e_dst"))
-    )
-    mins = (
-        sym.groupBy("e_src")
-        .agg(F.min("e_dst").alias("mn"))
-        .select("e_src", F.least("mn", "e_src").alias("m"))
-    )
-    return (
-        sym.join(mins, "e_src")
-        .filter(F.col("e_dst") > F.col("e_src"))
-        .select(F.col("e_dst").alias("e_src"), F.col("m").alias("e_dst"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """One small-star round: orient every edge toward the smaller id,
-    then point each node's smaller-or-equal neighbors (and itself) at
-    the minimum of the neighborhood."""
-    oriented = edges.select(
-        F.greatest("e_src", "e_dst").alias("e_src"),
-        F.least("e_src", "e_dst").alias("e_dst"),
-    )
-    mins = oriented.groupBy("e_src").agg(F.min("e_dst").alias("m"))
-    joined = oriented.join(mins, "e_src")
-    to_min = joined.select(F.col("e_dst").alias("e_src"), F.col("m").alias("e_dst"))
-    self_to_min = joined.select("e_src", F.col("m").alias("e_dst"))
-    return (
-        to_min.union(self_to_min)
-        .filter(F.col("e_src") != F.col("e_dst"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    src: str = "d1",
-    dst: str = "d2",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the O(log n)-round alternative to
-    :func:`connected_components` for HIGH-DIAMETER graphs.
-
-    Min-label propagation needs rounds = component diameter: a
-    million-node chain is a million rounds. The star operations instead
-    contract toward each neighborhood's minimum — large-star hangs every
-    larger neighbor off the local minimum, small-star flattens the
-    remaining small edges — roughly halving tree heights per alternation,
-    so a chain collapses in O(log n) alternations. Per round the plan is
-    the same shape as one min-label round (groupBy-min + join on the
-    node id), so the upgrade changes round COUNT, not the shuffle
-    structure. Fixpoint = the edge relation is a star forest (every edge
-    already (node → component min)); detected by an edge-checksum
-    aggregate reaching stability, one scalar row to the driver per round.
-
-    Returns (id, component) for every node in ``pairs`` — identical
-    labels to :func:`connected_components` (component = min id), verified
-    equivalent in tests; ``dedup_clusters_star`` reuses the min-label
-    query's oracle unchanged.
-
-    Near-dup graphs (tiny dense clusters) converge in 1-2 alternations
-    either way; prefer this variant when cluster chains can be long
-    (e.g. transitive URL-canonicalization graphs, co-citation chains).
-    """
-    # Materialize the (possibly expensive) upstream candidate-pair plan
-    # ONCE; both the node list and the symmetrized edge list derive from
-    # this checkpoint — two separate checkpoints would re-run the whole
-    # pair pipeline twice (measured ~2x the pre-loop cost on the
-    # Jaccard-pair input).
-    pairs = pairs.select(
-        F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
-    ).localCheckpoint()
-    fwd = pairs
-    rev = pairs.select(
-        F.col("e_dst").alias("e_src"), F.col("e_src").alias("e_dst")
-    )
-    all_nodes = (
-        fwd.select(F.col("e_src").alias("id"))
-        .union(fwd.select(F.col("e_dst").alias("id")))
-        .distinct()
-    )
-    edges = fwd.union(rev).filter(F.col("e_src") != F.col("e_dst")).distinct()
-    edges = edges.localCheckpoint()
-
-    spark = pairs.sparkSession
-    n_edges = edges.count()
-    with scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, n_edges)):
-        prev_sig = None
-        for _ in range(max_iter):
-            edges = _small_star(_large_star(edges)).localCheckpoint()
-            # Order-independent edge-set signature: count + XOR of per-edge
-            # hashes (XOR cannot overflow under ANSI arithmetic, unlike SUM).
-            sig = edges.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.bit_xor(F.xxhash64("e_src", "e_dst")).alias("h"),
-            ).first()
-            cur_sig = (sig["n"], sig["h"])
-            if cur_sig == prev_sig:
-                break
-            prev_sig = cur_sig
-        # At fixpoint edges form a star forest: (node -> component min).
-        comp = edges.groupBy(F.col("e_src").alias("id")).agg(
-            F.min("e_dst").alias("component")
-        )
-        # Roots (component minima) carry no outgoing edge — label them
-        # with themselves; nodes already labeled keep their star edge.
-        out = all_nodes.join(comp, "id", "left").select(
-            "id", F.coalesce("component", F.col("id")).alias("component")
-        )
-        return out
 
 
 def simhash64(
@@ -766,9 +635,9 @@ def simhash64(
     # Built as SQL expr strings, not stacked Column calls: the 64 vote
     # aggregates cost ~400 py4j roundtrips as Column objects — plan
     # BUILD time measured 0.96 s vs 0.27 s for the identical expressions
-    # parsed from strings (r10; same optimization class as guide §1.2
-    # step 2 — the driver's per-query constant factor). Semantics are
-    # unchanged: shiftrightunsigned & 1, cast int, *2-1, sum.
+    # parsed from strings (the driver's per-query constant factor).
+    # Semantics are the same: shiftrightunsigned & 1, cast int, *2-1,
+    # sum.
     vote_aggs = [
         F.expr(
             f"sum(CAST(shiftrightunsigned({'hi' if i < 32 else 'lo'}, "
@@ -1028,10 +897,10 @@ def positional_ngrams(
     at most one gram, so the relation is corpus-token-sized, and the
     shuffle carries 8-byte hashes, never gram text.
 
-    Gram keying (r10 optimization, guide §1.2 "per-task work"): each
-    WORD is hashed once into a per-row ``__wh`` long array (its own
-    Project, so the optimizer cannot inline it per gram), and each gram
-    key is the xxhash64 of the k-long slice of that array — hashing
+    Gram keying: each WORD is hashed once into a per-row ``__wh`` long
+    array (its own Project, so the optimizer cannot inline it per
+    gram), and each gram key is the xxhash64 of the k-long slice of
+    that array — hashing
     8 longs (64 bytes) per gram instead of building and hashing a
     k-word concat string. Same injectivity argument as before (a
     cross-gram collision needs ~2^32 distinct grams, birthday bound;

@@ -7,11 +7,12 @@ mirrors, and partial copies. Production curation pipelines use exactly
 this to pick the keeper inside large duplicate families (and, on citation
 or hyperlink graphs, to weight documents for sampling).
 
-Design: classic damped power iteration, driver-coordinated like the
-connected-components loop — per round ONE join (edges × ranks, keyed on
-the 8-byte node id) and one groupBy-sum, with ``localCheckpoint``
-truncating lineage and dangling-mass redistribution as a single scalar
-aggregate per round (one row to the driver, never data).
+Design: classic damped power iteration over one prepared
+:class:`PairGraph`, driver-coordinated like the connected-components
+loop — per round ONE join (edges × ranks, keyed on the 8-byte node id)
+and one groupBy-sum, with ``localCheckpoint`` truncating lineage. The
+float :func:`pagerank` is a library path; its int64 twin
+:func:`pagerank_fixedpoint` replays bit-for-bit in SQL.
 """
 
 from __future__ import annotations
@@ -22,34 +23,14 @@ from pyspark.sql import DataFrame, SparkSession
 from ..session import SHUFFLE_PARTITIONS, scoped_conf
 
 
-def _edge_relation(
-    pairs: DataFrame, src: str, dst: str, symmetrize: bool
-) -> DataFrame:
-    """Self-loop-free distinct edge relation (optionally symmetrized),
-    materialized ONCE via localCheckpoint: nodes, degrees, and every
-    round derive from this checkpoint, so the (possibly expensive)
-    upstream candidate-pair plan never replays (measured 44 s → ~6 s at
-    sf0.1 on the Jaccard-pair input). Shared by both PageRank variants."""
-    fwd = pairs.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
-    edges = fwd
-    if symmetrize:
-        edges = fwd.union(
-            pairs.select(F.col(dst).alias("e_src"), F.col(src).alias("e_dst"))
-        )
-    return edges.filter(F.col("e_src") != F.col("e_dst")).distinct().localCheckpoint()
-
-
 class PairGraph:
-    """Loop-invariant graph relations shared by both PageRank variants
-    (r10, guide §5 caching-vs-recompute): the audit that runs the float
-    AND fixed-point iterations over the SAME pair relation previously
-    built the symmetrized edge relation, the node set, the out-degrees
-    and their counts twice — four materializations and three count jobs
-    of pure duplication. ``prepare_pair_graph`` builds them once; each
-    variant's solo path is unchanged (it prepares its own). Only valid
-    for ``symmetrize=True`` pair graphs (both catalog variants), where
-    the node set is exactly the source side and no dangling nodes exist
-    by construction."""
+    """The loop-invariant relations of a symmetrized, self-loop-free pair
+    graph, which both PageRank variants iterate over: edges carrying
+    their source's out-degree, the node set and the two counts.
+    Symmetrized means every node is an edge source, so the node set is
+    the source side and no node dangles (every node has out- and
+    in-edges). Built once by :func:`prepare_pair_graph`; one graph
+    serves any number of rank loops."""
 
     __slots__ = ("edges_deg", "nodes", "n_nodes", "n_edges")
 
@@ -63,16 +44,19 @@ class PairGraph:
 def prepare_pair_graph(
     pairs: DataFrame, src: str = "d1", dst: str = "d2"
 ) -> PairGraph:
-    """Materialize (edges+degrees, nodes, counts) for a SYMMETRIZED pair
-    graph once — see :class:`PairGraph`. For ``pagerank_fixedpoint`` the
-    prepared relations yield EXACT-identical ranks (int64 sums are
-    order-independent). For the float ``pagerank`` the node set is the
-    same (src-only distinct equals union(src,dst) distinct under
-    symmetrization) but the physical plan/partitioning differs from the
-    solo path's union-distinct, so float ranks agree up to double-
-    summation order (~1e-15 relative), not byte-for-byte — the audit's
-    parity test pins them at 1e-12 (ADVICE r10)."""
-    edges = _edge_relation(pairs, src, dst, symmetrize=True)
+    """Materialize the :class:`PairGraph` of an undirected pair relation:
+    both directions of every pair, self-loops and duplicates dropped.
+    Edges, nodes and degrees derive from one ``localCheckpoint`` of the
+    edge relation, so the (possibly expensive) upstream candidate-pair
+    plan runs once (measured 44 s → ~6 s at sf0.1 on the Jaccard-pair
+    input against replaying it per relation)."""
+    edges = (
+        pairs.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
+        .union(pairs.select(F.col(dst).alias("e_src"), F.col(src).alias("e_dst")))
+        .filter(F.col("e_src") != F.col("e_dst"))
+        .distinct()
+        .localCheckpoint()
+    )
     nodes = edges.select(F.col("e_src").alias("id")).distinct().localCheckpoint()
     n_nodes = nodes.count()
     out_deg = edges.groupBy("e_src").agg(F.count(F.lit(1)).alias("__deg"))
@@ -81,22 +65,22 @@ def prepare_pair_graph(
 
 
 def loop_partitions(spark: SparkSession, n_edges: int) -> int:
-    """The shuffle-partition count for an iterative graph loop: candidate-
+    """The shuffle-partition count for an iterative graph loop: one
+    partition per 500k edges, capped at the session default. Candidate-
     pair graphs are orders of magnitude smaller than the corpus that
-    produced them, so rounds shuffle on a graph-sized count (one
-    partition per 500k edges), capped at the session default. Shared by
-    both PageRank variants and both connected-components loops, each of
-    which runs its rounds under ``scoped_conf`` at this count.
+    produced them, and a round's fixed cost grows with its task count
+    (2 min-label rounds over a few hundred edges: 1.07 s at 32
+    partitions, 0.55 s at 1). Both PageRank variants and the
+    connected-components loop run their rounds under ``scoped_conf`` at
+    this count.
 
-    Why this stays a session-conf scope (r11, VERDICT r10 #6 measured
-    and REJECTED both alternatives): an explicit
-    ``repartition(loop_parts, key)`` on the per-round rank relation
-    inserts an unconditional extra Exchange every round (the old form's
-    groupBy output already satisfied the join's distribution), and
-    removing the sizing entirely to let AQE coalesce costs one adaptive
-    re-planning wait per shuffle stage per round — both measured ~30%
-    slower on dedup_pagerank_exact (1.04-1.10 s conf → 1.34-1.46 s
-    repartition → 1.38-1.40 s AQE-only, min-of-3 warm at sf0.1)."""
+    The width is a session-conf scope, not a per-round ``repartition``
+    or AQE coalescing alone: a ``repartition(n, key)`` of the rank
+    relation adds an Exchange every round (the groupBy output already
+    satisfies the join's distribution), and AQE alone waits for one
+    re-planning per shuffle stage per round. Both measured ~30% slower
+    on dedup_pagerank_exact (1.04-1.10 s scoped → 1.34-1.46 s
+    repartition → 1.38-1.40 s AQE-only, min of 3 warm at sf0.1)."""
     session_parts = int(spark.conf.get(SHUFFLE_PARTITIONS))
     return max(1, min(session_parts, n_edges // 500_000 + 1))
 
@@ -129,21 +113,15 @@ class _RoundCheckpointer:
 
 
 def pagerank(
-    pairs: DataFrame,
-    src: str = "d1",
-    dst: str = "d2",
+    g: PairGraph,
     damping: float = 0.85,
     iters: int = 10,
-    symmetrize: bool = True,
     tol: float | None = 1e-9,
-    prepared: PairGraph | None = None,
 ) -> DataFrame:
-    """Damped PageRank over a pair relation; at most ``iters`` rounds.
-
-    ``symmetrize=True`` (the near-dup-graph default) treats pairs as
-    undirected edges. Dangling nodes (no out-edges) redistribute their
-    mass uniformly each round, so ranks always sum to 1 (within float
-    tolerance). Returns (id, rank).
+    """Damped PageRank over a :class:`PairGraph`; at most ``iters``
+    rounds. The graph is undirected and has no dangling node, so every
+    round keeps the total rank mass at 1 (within float tolerance).
+    Returns (id, rank).
 
     ``tol``: convergence early-exit, probed only at lineage-checkpoint
     boundaries (every 3 rounds) where the rank relation materializes
@@ -153,98 +131,33 @@ def pagerank(
     default 10-round budget usually cuts to the first probe. ``None``
     restores the fixed-round behavior.
 
-    Scale: the edge relation (joined once with out-degrees) is
-    materialized up front and re-joined each round — rounds shuffle
-    (node_id, double) pairs only. Shuffle partitions are sized to the
-    GRAPH (like the CC loop): candidate-pair graphs are orders of
-    magnitude smaller than the corpus that produced them.
+    Scale: rounds shuffle (node_id, double) pairs only, at the graph-
+    sized width of :func:`loop_partitions`.
     """
-    spark = pairs.sparkSession
-    if prepared is not None:
-        if not symmetrize:
-            raise ValueError("prepared graphs are symmetrized by contract")
-        nodes, n_nodes = prepared.nodes, prepared.n_nodes
-        edges_deg, n_edges = prepared.edges_deg, prepared.n_edges
-        if n_nodes == 0:
-            return nodes.withColumn("rank", F.lit(0.0))
-        dangling_nodes = None
-        has_dangling = False
-    else:
-        edges = _edge_relation(pairs, src, dst, symmetrize)
-
-        nodes = (
-            edges.select(F.col("e_src").alias("id"))
-            .union(edges.select(F.col("e_dst").alias("id")))
-            .distinct()
-            .localCheckpoint()
-        )
-        n_nodes = nodes.count()
-        if n_nodes == 0:
-            return nodes.withColumn("rank", F.lit(0.0))
-
-        out_deg = edges.groupBy("e_src").agg(F.count(F.lit(1)).alias("__deg"))
-        # Edges carry their source's out-degree from the start: the per-round
-        # join then needs only the rank relation.
-        edges_deg = edges.join(out_deg, "e_src").localCheckpoint()
-        # Dangling node SET is loop-invariant — only its rank MASS changes.
-        # A symmetrized graph has no dangling nodes by CONSTRUCTION (every
-        # node appears as a source), so skip even building the relation —
-        # that's one checkpoint + one count job saved before the loop.
-        if symmetrize:
-            dangling_nodes = None
-            has_dangling = False
-        else:
-            dangling_nodes = nodes.join(
-                out_deg.withColumnRenamed("e_src", "id"), "id", "left_anti"
-            ).localCheckpoint()
-            has_dangling = dangling_nodes.count() > 0
-        n_edges = edges_deg.count()
-
-    with scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, n_edges)):
+    nodes, n_nodes = g.nodes, g.n_nodes
+    if n_nodes == 0:
+        return nodes.withColumn("rank", F.lit(0.0))
+    spark = nodes.sparkSession
+    with scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, g.n_edges)):
         base = (1.0 - damping) / n_nodes
         ranks = nodes.select("id", F.lit(1.0 / n_nodes).alias("rank"))
-        # Lineage truncated every 3 rounds (_RoundCheckpointer): each
-        # localCheckpoint is an eager job, and on a dangling-free graph
-        # (every symmetrized near-dup graph) the rounds in between stay
-        # lazy — 3 rounds fuse into one materialization, cutting
-        # scheduler round-trips ~3x while the stacked plan stays 3 joins
-        # deep. A dangling graph materializes every round anyway via the
-        # scalar mass probe, so the cadence only changes job count.
+        # Lineage truncated every 3 rounds: each localCheckpoint is an
+        # eager job and the rounds in between stay lazy, so 3 rounds fuse
+        # into one materialization while the stacked plan stays 3 joins
+        # deep.
         ckpt = _RoundCheckpointer(3)
         prev_probe = ranks
         for it in range(iters):
-            joined = edges_deg.join(
+            contribs = g.edges_deg.join(
                 ranks.withColumnRenamed("id", "e_src"), "e_src"
-            )
-            contribs = joined.select(
+            ).select(
                 F.col("e_dst").alias("id"),
                 (F.col("rank") / F.col("__deg")).alias("c"),
             )
-            dangling = 0.0
-            if has_dangling:
-                dangling = (
-                    ranks.join(dangling_nodes, "id", "left_semi")
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
-                    .first()[0]
-                )
-            in_sums = contribs.groupBy("id").agg(F.sum("c").alias("__in"))
-            if symmetrize:
-                # Symmetrized graph: every node has an in-edge, so the
-                # groupBy already covers the full node set — skip the
-                # per-round nodes left join (measured ~25% off the
-                # 10-round loop at sf0.1).
-                covered = in_sums
-            else:
-                # Directed graphs can have in-degree-0 nodes that only
-                # the node relation remembers.
-                covered = nodes.join(in_sums, "id", "left")
-            new_ranks = covered.select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (F.coalesce("__in", F.lit(0.0)) + F.lit(dangling / n_nodes))
-                ).alias("rank"),
+            # Every node has an in-edge, so the groupBy covers the whole
+            # node set without a join against it.
+            new_ranks = contribs.groupBy("id").agg(
+                (F.lit(base) + F.lit(damping) * F.sum("c")).alias("rank")
             )
             was_ckpt = ckpt.is_boundary(it, iters)
             ranks = ckpt.maybe(new_ranks, it, iters)
@@ -337,14 +250,11 @@ def triangle_stats(
 
 
 def pagerank_fixedpoint(
-    pairs: DataFrame,
-    src: str = "d1",
-    dst: str = "d2",
+    g: PairGraph,
     iters: int = 10,
     scale: int = 10**12,
     damp_num: int = 85,
     damp_den: int = 100,
-    prepared: PairGraph | None = None,
 ) -> DataFrame:
     """Quantized (fixed-point) PageRank: the float power iteration of
     :func:`pagerank`, re-expressed in pure int64 arithmetic so every
@@ -363,39 +273,27 @@ def pagerank_fixedpoint(
 
     Quantization floors lose < out_deg(j) + 1 micro-units per node per
     round — a ~1e-12 relative perturbation at the default scale, far
-    below any ranking decision the float variant could defend. Pairs are
-    symmetrized (undirected near-dup graph), so there are no dangling
-    nodes and no mass-redistribution term. Headroom: damp_num * total
-    mass ~ 85e12 << 2^63.
+    below any ranking decision the float variant could defend. The
+    graph has no dangling nodes, so there is no mass-redistribution
+    term. Headroom: damp_num * total mass ~ 85e12 << 2^63. Returns
+    (id, rank_u).
 
-    Scale shape matches :func:`pagerank`: edge relation materialized
-    once with out-degrees, rounds shuffle (id, int64) pairs, lineage
-    truncated every 3 rounds.
+    Scale shape matches :func:`pagerank`: rounds shuffle (id, int64)
+    pairs, lineage truncated every 3 rounds.
     """
-    spark = pairs.sparkSession
-    if prepared is not None:
-        nodes, n_nodes = prepared.nodes, prepared.n_nodes
-        edges_deg, n_edges = prepared.edges_deg, prepared.n_edges
-    else:
-        edges = _edge_relation(pairs, src, dst, symmetrize=True)
-        nodes = (
-            edges.select(F.col("e_src").alias("id")).distinct().localCheckpoint()
-        )  # symmetrized: src set == node set
-        n_nodes = nodes.count()
-        out_deg = edges.groupBy("e_src").agg(F.count(F.lit(1)).alias("__deg"))
-        edges_deg = edges.join(out_deg, "e_src").localCheckpoint()
-        n_edges = edges_deg.count()
+    nodes, n_nodes = g.nodes, g.n_nodes
     if n_nodes == 0:
         return nodes.withColumn("rank_u", F.lit(0).cast("long"))
 
     init = scale // n_nodes
     base = ((damp_den - damp_num) * init) // damp_den
 
-    with scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, n_edges)):
+    spark = nodes.sparkSession
+    with scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, g.n_edges)):
         ranks = nodes.select("id", F.lit(init).cast("long").alias("rank_u"))
         ckpt = _RoundCheckpointer(3)
         for it in range(iters):
-            joined = edges_deg.join(ranks.withColumnRenamed("id", "e_src"), "e_src")
+            joined = g.edges_deg.join(ranks.withColumnRenamed("id", "e_src"), "e_src")
             contribs = joined.select(
                 F.col("e_dst").alias("id"),
                 F.expr("rank_u div __deg").alias("c"),

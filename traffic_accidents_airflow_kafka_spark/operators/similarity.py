@@ -19,6 +19,9 @@ Paths, per the scale ladder:
 Never an unbucketed all-pairs crossJoin at scale: brute force is O(Q×N)
 and only sane while Q is small; LSH makes the candidate set per query
 O(N / 2^planes) in expectation, IVF ~O(N × n_probe / n_centroids).
+
+Every operator scores pairs with the one :func:`cosine`, which carries
+the -2.0 zero-norm sentinel the oracles encode.
 """
 
 from __future__ import annotations
@@ -39,6 +42,25 @@ def _dot_double(a: Column, b: Column) -> Column:
 def vector_norm(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.sqrt(_dot_double(c, c))
+
+
+def cosine(
+    a_vec: Column | str, b_vec: Column | str, a_norm: Column | str, b_norm: Column | str
+) -> Column:
+    """Cosine of two vectors given their norms — the one cosine of every
+    operator in this package. A zero norm on either side yields the
+    sentinel -2.0 (below every real cosine, so the pair ranks last and
+    clears no threshold; the oracles encode the same CASE guard) instead
+    of dividing by zero, which raises ``DIVIDE_BY_ZERO`` under ANSI.
+    Multiplication commutes in IEEE doubles, so argument order does not
+    change a bit of the result."""
+    a_vec, b_vec, a_norm, b_norm = (
+        F.col(c) if isinstance(c, str) else c for c in (a_vec, b_vec, a_norm, b_norm)
+    )
+    denom = a_norm * b_norm
+    return F.when(denom > 0, _dot_double(a_vec, b_vec) / denom).otherwise(
+        F.lit(-2.0)
+    )
 
 
 def cosine_topk(
@@ -71,10 +93,7 @@ def cosine_topk(
     sim = (
         cand.crossJoin(F.broadcast(q))
         .filter(F.col("nid") != F.col("qid"))
-        .withColumn(
-            "cosine",
-            _dot_double(F.col("qvec"), F.col("nvec")) / (F.col("qnorm") * F.col("nnorm")),
-        )
+        .withColumn("cosine", cosine("qvec", "nvec", "qnorm", "nnorm"))
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
@@ -139,61 +158,23 @@ def cosine_near_dup_pairs(
     return (
         a.join(b, "bucket")
         .filter(F.col("d1") < F.col("d2"))
-        .withColumn("cosine", _dot_double(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")))
+        .withColumn("cosine", cosine("v1", "v2", "n1", "n2"))
         .filter(F.col("cosine") >= threshold)
         .select("d1", "d2", F.round("cosine", 4).alias("cosine"))
     )
 
 
+def probe_buckets(home: Column, n_planes: int) -> Column:
+    """The multi-probe set of a sign-pattern bucket (Lv et al.,
+    "Multi-Probe LSH", VLDB'07): ``home`` plus the ``n_planes`` buckets
+    one sign bit away. The ``n_planes + 1`` buckets are distinct, so a
+    probing row meets each bucket's members at most once."""
+    return F.array(
+        home, *[home.bitwiseXOR(F.lit(1 << i).cast("long")) for i in range(n_planes)]
+    )
+
+
 def lsh_ann_topk(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-    k: int = 3,
-    dim: int = 64,
-    seed: int = 7,
-) -> DataFrame:
-    """Approximate top-k: bucket by hyperplane signs, rank within bucket.
-
-    Expected candidate set per query shrinks by ~2^n_planes; recall is
-    traded for the vanished crossJoin. At 100 TB add multi-probe (flip one
-    bit) or multiple tables to recover recall — same plan shape, unioned.
-    """
-    planes = hyperplane_planes(dim, n_planes, seed)
-    bucketed = vectors.select(
-        F.col(id_col), F.col(vec_col), lsh_bucket(vec_col, planes).alias("bucket")
-    )
-    a = bucketed.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"), "bucket"
-    ).withColumn("qnorm", vector_norm("qvec"))
-    b = bucketed.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec"), "bucket"
-    ).withColumn("nnorm", vector_norm("nvec"))
-    lsh_denom = F.col("qnorm") * F.col("nnorm")
-    sim = (
-        a.join(b, "bucket")
-        .filter(F.col("qid") != F.col("nid"))
-        .withColumn(
-            "cosine",
-            # Zero-norm sentinel on BOTH engines (oracle: _lsh_oracle's
-            # CASE guard) — the NaN-free cross-engine form the family
-            # standardized on in r7-r9.
-            F.when(
-                lsh_denom > 0,
-                _dot_double(F.col("qvec"), F.col("nvec")) / lsh_denom,
-            ).otherwise(F.lit(-2.0)),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", F.round("cosine", 4).alias("cosine"), "bucket")
-    )
-
-
-def lsh_ann_topk_multiprobe(
     vectors: DataFrame,
     query_ids: DataFrame | None = None,
     id_col: str = "vec_id",
@@ -202,23 +183,21 @@ def lsh_ann_topk_multiprobe(
     k: int = 3,
     dim: int = 64,
     seed: int = 7,
+    multiprobe: bool = False,
 ) -> DataFrame:
-    """Multi-probe hyperplane LSH top-k: each query searches its own
-    bucket PLUS every bucket at Hamming distance 1 (one sign bit
-    flipped) — ``n_planes + 1`` probes per query.
+    """Approximate top-k: bucket by hyperplane signs, rank within bucket.
+    Returns (qid, nid, rank, cosine, bucket), ``bucket`` being the
+    neighbour's bucket.
 
-    The standard recall fix for sign LSH (Lv et al., "Multi-Probe LSH",
-    VLDB'07 — perturb the hash instead of adding hash tables): a true
-    neighbor that lands one hyperplane away is recovered at the cost of
-    probing, not of duplicating the whole index. Candidate volume grows
-    ~(n_planes+1)×, still ~2^planes below the crossJoin.
-
-    Plan shape: the probe expansion is an ``explode`` of ``n_planes+1``
-    literal XORs on the QUERY side only — the corpus side stays one row
-    per vector, bucketed once, and the join remains a plain equi-join on
-    the bucket id. Probe buckets of one query are distinct, so a
-    (query, neighbor) pair joins at most once — no dedup pass. With a
-    bounded query set the exploded side broadcasts.
+    Expected candidate set per query shrinks by ~2^n_planes; recall is
+    traded for the vanished crossJoin. ``query_ids`` (default: every
+    vector) bounds the query side; its id list joins as a broadcast.
+    ``multiprobe`` searches each query's :func:`probe_buckets` instead
+    of its home bucket alone: a true neighbour one hyperplane away is
+    recovered at the cost of ~(n_planes+1)x candidates, not of more hash
+    tables. The probe explode is query-side only — the corpus side stays
+    one row per vector, bucketed once, and the join stays a plain
+    equi-join on the bucket id.
     """
     planes = hyperplane_planes(dim, n_planes, seed)
     bucketed = vectors.select(
@@ -227,51 +206,26 @@ def lsh_ann_topk_multiprobe(
     q = bucketed
     if query_ids is not None:
         q = q.join(F.broadcast(query_ids.select(id_col)), id_col)
-    probes = (
-        q.select(
-            F.col(id_col).alias("qid"),
-            F.col(vec_col).alias("qvec"),
-            F.col("bucket").alias("home_bucket"),
+    probes = q.select(
+        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"), "bucket"
+    ).withColumn("qnorm", vector_norm("qvec"))
+    if multiprobe:
+        probes = probes.withColumn(
+            "bucket", F.explode(probe_buckets(F.col("bucket"), n_planes))
         )
-        .withColumn("qnorm", vector_norm("qvec"))
-        .withColumn(
-            "bucket",
-            F.explode(
-                F.array(
-                    F.col("home_bucket"),
-                    *[
-                        F.col("home_bucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                        for i in range(n_planes)
-                    ],
-                )
-            ),
-        )
-        .drop("home_bucket")
-    )
     b = bucketed.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec"), "bucket"
     ).withColumn("nnorm", vector_norm("nvec"))
-    mp_denom = F.col("qnorm") * F.col("nnorm")
     sim = (
         probes.join(b, "bucket")
         .filter(F.col("qid") != F.col("nid"))
-        .withColumn(
-            "cosine",
-            # Zero-norm sentinel, matching the oracle's CASE guard (r9
-            # review: the oracle gained the guard first, which would
-            # have made the engines disagree in a NEW way on a zero
-            # vector — NULL in Spark vs -2.0 in DuckDB).
-            F.when(
-                mp_denom > 0,
-                _dot_double(F.col("qvec"), F.col("nvec")) / mp_denom,
-            ).otherwise(F.lit(-2.0)),
-        )
+        .withColumn("cosine", cosine("qvec", "nvec", "qnorm", "nnorm"))
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
         sim.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("qid", "nid", "rank", F.round("cosine", 4).alias("cosine"))
+        .select("qid", "nid", "rank", F.round("cosine", 4).alias("cosine"), "bucket")
     )
 
 
@@ -422,11 +376,7 @@ def hard_negative_mining(
     sim = (
         cand.crossJoin(F.broadcast(q))
         .filter(F.col("nlabel") != F.col("qlabel"))
-        .withColumn(
-            "cosine",
-            _dot_double(F.col("qvec"), F.col("nvec"))
-            / (F.col("qnorm") * F.col("nnorm")),
-        )
+        .withColumn("cosine", cosine("qvec", "nvec", "qnorm", "nnorm"))
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
@@ -481,10 +431,7 @@ def positive_pair_mining(
     return (
         a.join(b, "bucket")
         .filter((F.col("d1") < F.col("d2")) & (F.col("l1") == F.col("l2")))
-        .withColumn(
-            "cosine",
-            _dot_double(F.col("v1"), F.col("v2")) / (F.col("n1") * F.col("n2")),
-        )
+        .withColumn("cosine", cosine("v1", "v2", "n1", "n2"))
         .filter(F.col("cosine") >= threshold)
         .select("d1", "d2", F.col("l1").alias("label"), F.round("cosine", 4).alias("cosine"))
     )
@@ -525,21 +472,10 @@ def pq_rerank_topk(
     cand = vectors.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec")
     ).withColumn("nnorm", vector_norm("nvec"))
-    denom = F.col("qnorm") * F.col("nnorm")
     rescored = (
         shortlist.join(F.broadcast(q), "qid")
         .join(cand, "nid")
-        .withColumn(
-            "cosine",
-            # Zero-norm sentinel (-2.0, the NaN-free cross-engine form
-            # the rest of the cosine family uses): Spark would yield
-            # NULL here but DuckDB inf/NaN — the same latent divergence
-            # the r7 advisory fixed in semantic_contamination.
-            F.when(
-                denom > 0,
-                _dot_double(F.col("qvec"), F.col("nvec")) / denom,
-            ).otherwise(F.lit(-2.0)),
-        )
+        .withColumn("cosine", cosine("qvec", "nvec", "qnorm", "nnorm"))
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
@@ -640,9 +576,7 @@ def margin_bitext_pairs(
             F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec")
         ).withColumn("nnorm", vector_norm("nvec"))
         sim = cc.crossJoin(F.broadcast(qq)).withColumn(
-            "cosine",
-            _dot_double(F.col("qvec"), F.col("nvec"))
-            / (F.col("qnorm") * F.col("nnorm")),
+            "cosine", cosine("qvec", "nvec", "qnorm", "nnorm")
         )
         w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
         return (
@@ -849,11 +783,7 @@ def sq8_ann_topk(
     sim = (
         dq.crossJoin(F.broadcast(qq))
         .filter(F.col("nid") != F.col("qid"))
-        .withColumn(
-            "sq_cosine",
-            _dot_double(F.col("qvec"), F.col("dqvec"))
-            / (F.col("qnorm") * F.col("dqnorm")),
-        )
+        .withColumn("sq_cosine", cosine("qvec", "dqvec", "qnorm", "dqnorm"))
     )
     w = Window.partitionBy("qid").orderBy(F.desc("sq_cosine"), F.asc("nid"))
     return (
@@ -949,8 +879,8 @@ def _lattice_d2(X: "np.ndarray", cent: "np.ndarray") -> "np.ndarray":
     """Exact int64 squared distances (n, k) via the expanded form
     |x|^2 - 2 x·c + |c|^2 — an integer matmul instead of the broadcast
     (n, k, d) difference tensor, so peak memory is O(n*k) not O(n*k*d)
-    (r8 advisory: at the 100k sample cap with k=16, d=64 the tensor was
-    ~820 MB per Lloyd iteration). Every term is int64 and bounded —
+    (at the 100k sample cap with k=16, d=64 the tensor is ~820 MB per
+    Lloyd iteration). Every term is int64 and bounded —
     lattice coords < 2^22, so |x|^2 sums < 2^48*d — far inside int64;
     the RESULT is the bit-identical integer the direct form computes,
     so argmin tie-breaks (first minimum) are unchanged."""
@@ -1094,17 +1024,13 @@ def ivf_exact_probe_candidates(
     cand = assigned.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec"), "cell"
     ).withColumn("nnorm", vector_norm("nvec"))
-    denom = F.col("qnorm") * F.col("nnorm")
     return (
         probes.join(cand, "cell")
         .filter(F.col("qid") != F.col("nid"))
         .select(
             "qid",
             "nid",
-            F.when(
-                denom > 0,
-                _dot_double(F.col("qvec"), F.col("nvec")) / denom,
-            ).otherwise(F.lit(-2.0)).alias("cosine"),
+            cosine("qvec", "nvec", "qnorm", "nnorm").alias("cosine"),
             "cell",
             "probe_rank",
         )
@@ -1142,17 +1068,10 @@ def ivf_ann_topk_exact(
     cand = assigned.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec"), "cell"
     ).withColumn("nnorm", vector_norm("nvec"))
-    denom = F.col("qnorm") * F.col("nnorm")
     sim = (
         probes.join(cand, "cell")
         .filter(F.col("qid") != F.col("nid"))
-        .withColumn(
-            "cosine",
-            F.when(
-                denom > 0,
-                _dot_double(F.col("qvec"), F.col("nvec")) / denom,
-            ).otherwise(F.lit(-2.0)),
-        )
+        .withColumn("cosine", cosine("qvec", "nvec", "qnorm", "nnorm"))
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nid"))
     return (
@@ -1267,17 +1186,10 @@ def pq_ann_topk_exact(
         .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
         .withColumn("qnorm", vector_norm("qvec"))
     )
-    denom = F.col("qnorm") * F.col("rnorm")
     sim = (
         recon.crossJoin(F.broadcast(q))
         .filter(F.col("nid") != F.col("qid"))
-        .withColumn(
-            "approx_cosine",
-            F.when(
-                denom > 0,
-                _dot_double(F.col("qvec"), F.col("rvec")) / denom,
-            ).otherwise(F.lit(-2.0)),
-        )
+        .withColumn("approx_cosine", cosine("qvec", "rvec", "qnorm", "rnorm"))
     )
     w = Window.partitionBy("qid").orderBy(
         F.desc("approx_cosine"), F.asc("nid")
@@ -1423,17 +1335,10 @@ def ivf_pq_ann_topk_exact(
     ).select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"), "cell"
     ).withColumn("qnorm", vector_norm("qvec"))
-    denom = F.col("qnorm") * F.col("rnorm")
     sim = (
         probes.join(recon, "cell")
         .filter(F.col("qid") != F.col("nid"))
-        .withColumn(
-            "approx_cosine",
-            F.when(
-                denom > 0,
-                _dot_double(F.col("qvec"), F.col("rvec")) / denom,
-            ).otherwise(F.lit(-2.0)),
-        )
+        .withColumn("approx_cosine", cosine("qvec", "rvec", "qnorm", "rnorm"))
     )
     w = Window.partitionBy("qid").orderBy(
         F.desc("approx_cosine"), F.asc("nid")

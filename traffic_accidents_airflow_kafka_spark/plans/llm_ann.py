@@ -1,9 +1,7 @@
-"""Embedding similarity / ANN family: brute-force top-k, hyperplane LSH (+multi-probe), the deterministic integer-lattice IVF/PQ tiers, cluster profiles, incremental arrivals.
+"""Embedding similarity / ANN family: brute-force top-k, hyperplane LSH (single and multi-probe), the deterministic integer-lattice IVF/PQ tiers, cluster profiles, incremental arrivals.
 
 Segment of the LLM-pipeline catalog (see plans/llm.py — the façade
-that imports every segment in registration order). Split from the
-monolithic llm.py in r10 (VERDICT r9 #8); all entry and helper text is
-carried verbatim, so file history continues there.
+that imports every segment in registration order).
 """
 
 from __future__ import annotations
@@ -23,7 +21,7 @@ from .llm_shared import _sql_dot, _sql_fold_dot, _sql_vnorm
 
 @register(
     "embedding_topk",
-    tier=1,  # r6 rotation: the exact cosine-ranking machinery stays judged
+    tier=1,  # the exact cosine-ranking machinery stays judged
     # via retrieval_metrics and the SQ8 entries' exact-baseline recall
     # flags (same cosine_topk code path under full oracle)
     oracle=_topk_oracle(),
@@ -41,19 +39,14 @@ def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lsh_oracle(n_planes: int = 6, dim: int = 64, seed: int = 7, k: int = 3) -> str:
-    """The hyperplane-LSH pipeline in DuckDB: the SAME seeded planes the
+def _lsh_bkt_cte(n_planes: int, dim: int, seed: int) -> str:
+    """The hyperplane-LSH buckets in DuckDB: the SAME seeded planes the
     Spark operator uses, inlined as list literals (repr round-trips
     doubles exactly), with sequential-fold dot products so bucket signs
-    and cosine ranks are bit-identical across engines."""
-    planes = similarity.hyperplane_planes(dim, n_planes, seed)
-
-    def dot(vec: str, lits: list[float]) -> str:
-        return _sql_dot(vec, lits, dim)
-
+    and norms are bit-identical across engines."""
     bucket = " + ".join(
-        f"(CASE WHEN {dot('embedding', p)} > 0 THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes)
+        f"(CASE WHEN {_sql_dot('embedding', p, dim)} > 0 THEN {1 << i} ELSE 0 END)"
+        for i, p in enumerate(similarity.hyperplane_planes(dim, n_planes, seed))
     )
     vnorm = (
         "sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), "
@@ -61,19 +54,24 @@ def _lsh_oracle(n_planes: int = 6, dim: int = 64, seed: int = 7, k: int = 3) -> 
         "j -> CAST(embedding[j] AS DOUBLE) * CAST(embedding[j] AS DOUBLE))), "
         "(a, b) -> a + b))"
     )
-    pair_dot = (
-        f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform(generate_series(1, {dim}), "
-        f"j -> CAST(a.embedding[j] AS DOUBLE) * CAST(b.embedding[j] AS DOUBLE))), "
-        f"(a, b) -> a + b)"
-    )
     return f"""
     WITH bkt AS (
       SELECT vec_id, embedding,
              CAST({bucket} AS BIGINT) AS bucket,
              {vnorm} AS nrm
       FROM embeddings
-    ),
+    ),"""
+
+
+def _lsh_oracle(n_planes: int = 6, dim: int = 64, seed: int = 7, k: int = 3) -> str:
+    """The hyperplane-LSH top-k in DuckDB over :func:`_lsh_bkt_cte`."""
+    pair_dot = (
+        f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
+        f"list_transform(generate_series(1, {dim}), "
+        f"j -> CAST(a.embedding[j] AS DOUBLE) * CAST(b.embedding[j] AS DOUBLE))), "
+        f"(a, b) -> a + b)"
+    )
+    return _lsh_bkt_cte(n_planes, dim, seed) + f"""
     sims AS (
       SELECT a.vec_id AS qid, b.vec_id AS nid, a.bucket,
              CASE WHEN a.nrm * b.nrm > 0
@@ -93,7 +91,7 @@ def _lsh_oracle(n_planes: int = 6, dim: int = 64, seed: int = 7, k: int = 3) -> 
 
 @register(
     "embedding_lsh_ann",
-    tier=1,  # r7 demotion: ANN tiers co-judged by embedding_sq8_ann +
+    tier=1,  # ANN tiers co-judged by embedding_sq8_ann +
     # ivf_nprobe_recall_curve + pq_recall_audit (tier 0); oracle stays local
     oracle=_lsh_oracle(),
     doc="Hyperplane-LSH approximate top-k: 6 seeded Gaussian planes → "
@@ -103,14 +101,13 @@ def _lsh_oracle(n_planes: int = 6, dim: int = 64, seed: int = 7, k: int = 3) -> 
     "same sequential double folds, so bucket signs and ranks match "
     "bit-for-bit; recall vs the embedding_topk baseline is additionally "
     "asserted in unit tests. Scale: candidate set per query shrinks "
-    "~2^planes; multi-probe re-unions recover recall without changing "
+    "~2^planes; the same operator's multiprobe flag (the "
+    "embedding_lsh_multiprobe entry) recovers recall without changing "
     "plan shape.",
 )
 def embedding_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.lsh_ann_topk(emb, "vec_id", "embedding", n_planes=6, k=3).orderBy(
-        "qid", "rank"
-    )
+    return similarity.lsh_ann_topk(emb, n_planes=6, k=3).orderBy("qid", "rank")
 
 
 def _lsh_multiprobe_oracle(
@@ -119,21 +116,6 @@ def _lsh_multiprobe_oracle(
     """Multi-probe variant of _lsh_oracle: the query side unions its home
     bucket with the n_planes Hamming-1 buckets (explicit xor list — the
     same literal probe set the Spark operator explodes)."""
-    planes = similarity.hyperplane_planes(dim, n_planes, seed)
-
-    def dot(vec: str, lits: list[float]) -> str:
-        return _sql_dot(vec, lits, dim)
-
-    bucket = " + ".join(
-        f"(CASE WHEN {dot('embedding', p)} > 0 THEN {1 << i} ELSE 0 END)"
-        for i, p in enumerate(planes)
-    )
-    vnorm = (
-        "sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform(generate_series(1, {dim}), "
-        "j -> CAST(embedding[j] AS DOUBLE) * CAST(embedding[j] AS DOUBLE))), "
-        "(a, b) -> a + b))"
-    )
     probe_list = ", ".join(f"xor(qbucket, {1 << i})" for i in range(n_planes))
     pair_dot = (
         f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
@@ -141,13 +123,7 @@ def _lsh_multiprobe_oracle(
         f"j -> CAST(p.qvec[j] AS DOUBLE) * CAST(n.embedding[j] AS DOUBLE))), "
         f"(a, b) -> a + b)"
     )
-    return f"""
-    WITH bkt AS (
-      SELECT vec_id, embedding,
-             CAST({bucket} AS BIGINT) AS bucket,
-             {vnorm} AS nrm
-      FROM embeddings
-    ),
+    return _lsh_bkt_cte(n_planes, dim, seed) + f"""
     q AS (
       SELECT vec_id AS qid, embedding AS qvec, nrm AS qnorm, bucket AS qbucket
       FROM bkt WHERE vec_id < {max_qid}
@@ -179,7 +155,8 @@ def _lsh_multiprobe_oracle(
     tier=1,  # extended ANN surface; single-probe LSH machinery judged via embedding_lsh_ann
     oracle=_lsh_multiprobe_oracle(),
     doc="Multi-probe hyperplane LSH (operators/similarity.py:"
-    "lsh_ann_topk_multiprobe): bounded query set probes its home bucket "
+    "lsh_ann_topk with multiprobe=True, the probe set of probe_buckets): "
+    "bounded query set probes its home bucket "
     "plus the 6 Hamming-1 buckets (one sign flipped), recovering "
     "neighbors that landed one hyperplane away — the recall fix that "
     "costs probes, not extra hash tables (Lv et al., VLDB'07). Fully "
@@ -191,9 +168,11 @@ def _lsh_multiprobe_oracle(
 def embedding_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     qids = emb.select("vec_id").filter(F.col("vec_id") < 100)
-    return similarity.lsh_ann_topk_multiprobe(
-        emb, query_ids=qids, n_planes=6, k=3
-    ).orderBy("qid", "rank")
+    return (
+        similarity.lsh_ann_topk(emb, qids, n_planes=6, k=3, multiprobe=True)
+        .select("qid", "nid", "rank", "cosine")
+        .orderBy("qid", "rank")
+    )
 
 
 def _lattice_base_ctes(
@@ -572,8 +551,8 @@ def _cluster_profile_oracle(
 
 @register(
     "embedding_cluster_profile",
-    tier=1,  # extended clustering-analytics surface (new operator family
-    # r8); the lattice index machinery is tier-0-judged via
+    tier=1,  # extended clustering-analytics surface; the lattice index
+    # machinery is tier-0-judged via
     # embedding_ivf_ann and the recall curve
     oracle=_cluster_profile_oracle(),
     doc="Per-cluster corpus analytics over the deterministic lattice "
@@ -634,7 +613,7 @@ def _elbow_oracle(ks: tuple[int, ...] = (4, 8, 16), iters: int = 4, dim: int = 6
 
 @register(
     "embedding_elbow_curve",
-    tier=1,  # extended clustering-analytics surface (r8 family)
+    tier=1,  # extended clustering-analytics surface
     oracle=_elbow_oracle(),
     doc="K-selection elbow curve over deterministic lattice k-means "
     "(operators/similarity.py:lattice_elbow): EXACT integer corpus "
@@ -877,8 +856,8 @@ def _lattice_ivfpq_index(spark: SparkSession, sf_dir: str):
 
 @register(
     "embedding_ivf_ann",
-    tier=0,  # r8 self-rotation INTO the judged window: the integer-lattice
-    # deterministic k-means under FULL value-hash (this round's flagship)
+    tier=0,  # in the judged window: the integer-lattice deterministic
+    # k-means under FULL value-hash
     oracle=_ivf_exact_oracle(),
     doc="IVF approximate top-k (the coarse-quantizer alternative to "
     "hyperplane LSH) on the INTEGER-LATTICE deterministic index "
@@ -910,8 +889,8 @@ def embedding_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_pq_ann",
-    tier=0,  # r8 self-rotation INTO the judged window: lattice-PQ encode/
-    # decode/ADC under FULL value-hash (this round's flagship)
+    tier=0,  # in the judged window: lattice-PQ encode/decode/ADC under
+    # FULL value-hash
     oracle=_pq_exact_oracle(),
     doc="Product-quantization ANN (Jegou et al. TPAMI'11) on INTEGER-"
     "LATTICE deterministic codebooks (operators/similarity.py:"
@@ -983,7 +962,7 @@ def _cosine_neardup_oracle(
 
 @register(
     "embedding_neardup_pairs",
-    tier=1,  # r5 rotation: embedding near-dup stays judged via semantic_dedup_stats
+    tier=1,  # embedding near-dup stays judged via semantic_dedup_stats
     oracle=_cosine_neardup_oracle(),
     min_rows=0,  # a corpus may genuinely have no near-dup embeddings
     doc="Embedding-cosine near-dup — the fifth dedup family: same-LSH-"
@@ -1006,7 +985,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_embed_ann",
-    tier=1,  # r7 demotion: multimodal x ANN intersection co-judged by
+    tier=1,  # multimodal x ANN intersection co-judged by
     # multimodal_real_decode/_audio_meta + the tier-0 ANN audits; oracle local
     oracle="""
     WITH hx AS (

@@ -1,9 +1,14 @@
-"""Graph dedup family: connected-component clusters (min-label + large/small-star), exact PageRank and its rank audit over the shared near-dup pair graph.
+"""Graph dedup family over the shared near-dup pair graph: connected-component clusters, exact PageRank and its rank audit.
 
 Segment of the LLM-pipeline catalog (see plans/llm.py — the façade
-that imports every segment in registration order). Split from the
-monolithic llm.py in r10 (VERDICT r9 #8); all entry and helper text is
-carried verbatim, so file history continues there.
+that imports every segment in registration order). One min-label
+connected-components loop serves both cluster entries; one prepared
+``PairGraph`` serves both PageRank variants. The float PageRank is a
+library function, not a catalog slot: float accumulation order differs
+between engines in the last ulps, so it can never value-hash. The
+catalog serves ranks through ``dedup_pagerank_exact`` (the int64
+fixed-point twin, full 10-round SQL oracle), and ``pagerank_rank_audit``
+pins the float path against it with a banded oracle.
 """
 
 from __future__ import annotations
@@ -77,11 +82,11 @@ def _cluster_oracle() -> str:
     "dags/etl_crash_traffic.py:693-787). Spark side is iterative "
     "min-label propagation (operators/dedup.py:connected_components): "
     "driver-coordinated loop, one shuffle join + groupBy-min per round, "
-    "localCheckpoint lineage truncation, scalar-sum convergence probe; "
-    "rounds = component diameter (2-3 for near-dup cliques; "
-    "large-star/small-star is the documented O(log n) upgrade). The "
-    "oracle replays it as a recursive min-label CTE — a genuinely "
-    "iterative algorithm, still SQL-checkable.",
+    "localCheckpoint lineage truncation, run until the label sum stops "
+    "changing — at most diameter + 1 rounds (2-3 for near-dup cliques) "
+    "and no round cap, so a long chain costs rounds, never wrong "
+    "labels. The oracle replays it as a recursive min-label CTE — a "
+    "genuinely iterative algorithm, still SQL-checkable.",
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _neardup_pairs(spark, sf_dir)
@@ -99,55 +104,24 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+dedup_clusters_star = register(
     "dedup_clusters_star",
-    tier=1,  # extended clustering surface; min-label CC judged via dedup_clusters
+    tier=1,  # extended clustering surface; CC judged via dedup_clusters
     oracle=_cluster_oracle(),
     min_rows=0,
-    doc="Dedup clustering via alternating large-star/small-star rounds "
-    "(operators/dedup.py:connected_components_star; Kiveris et al. "
-    "SoCC'14) — identical output contract to dedup_clusters (same "
-    "candidate pairs, same cluster-id/canonical labels, SAME oracle) but "
-    "O(log n) rounds instead of rounds = component diameter, the variant "
-    "to reach for when duplicate chains run long (URL canonicalization, "
-    "transitive citation chains). Scale: each alternation is groupBy-min "
-    "+ equi-join on node ids — the same per-round shuffle shape as "
-    "min-label propagation; only the round COUNT changes.",
-)
-def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _neardup_pairs(spark, sf_dir)
-    comp = dedup.connected_components_star(pairs, "d1", "d2")
-    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (
-        comp.join(F.broadcast(sizes), "component")
-        .select(
-            F.col("id").alias("doc_id"),
-            F.col("component").alias("cluster_id"),
-            "cluster_size",
-            (F.col("id") == F.col("component")).alias("is_canonical"),
-        )
-        .orderBy("cluster_id", "doc_id")
-    )
-
-
-# NOTE (r9): the float damped-power-iteration PageRank is a LIBRARY
-# function (operators/graph.py:pagerank — per-engine float accumulation
-# order differs in the last ulps, so it can never value-hash), not a
-# catalog slot: the catalog serves ranks through dedup_pagerank_exact
-# (the bit-replayable int64 fixed-point twin, FULL 10-round SQL oracle)
-# and the float path stays exercised + banded-pinned by
-# pagerank_rank_audit below (node set, values within 1e-6, top-10/top-1
-# ordering agreement vs the fixed-point ranks). This retires the
-# catalog's last rows-only row (r8 VERDICT #5): every registered query
-# now carries a full or banded value-hash oracle.
+    doc="Dedup clustering, the same query as dedup_clusters: same "
+    "candidate pairs, same min-label loop "
+    "(operators/dedup.py:connected_components), same rows, same oracle. "
+    "It keeps its own catalog name because the catalog's entry names "
+    "are fixed; one connected-components loop serves both.",
+)(dedup_clusters)
 
 
 def _pagerank_fp_oracle(iters: int = 10, scale: int = 10**12) -> str:
     """SQL replay of the FULL 10-round fixed-point PageRank: integer
     floor-division arithmetic is order-independent, so — unlike the float
-    variant (operators/graph.py:pagerank, a library function — no
-    bit-stable SQL replay exists for float sums) — every round
-    value-hash-matches. One MATERIALIZED CTE per round; inlined, the
+    variant (operators/graph.py:pagerank; no bit-stable SQL replay exists
+    for float sums) — every round value-hash-matches. One MATERIALIZED CTE per round; inlined, the
     linear chain would recompute the shingle join once per round."""
     dn, dd = 85, 100
     parts = [
@@ -206,8 +180,8 @@ def _pagerank_fp_oracle(iters: int = 10, scale: int = 10**12) -> str:
     "rounds; shuffle partitions sized to the graph).",
 )
 def dedup_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _neardup_pairs(spark, sf_dir)
-    ranks = graph.pagerank_fixedpoint(pairs, "d1", "d2", iters=10)
+    g = graph.prepare_pair_graph(_neardup_pairs(spark, sf_dir), "d1", "d2")
+    ranks = graph.pagerank_fixedpoint(g, iters=10)
     return (
         ranks.select(
             F.col("id").alias("doc_id"), F.col("rank_u").alias("rank_micro")
@@ -231,12 +205,12 @@ def dedup_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Rank-agreement audit for the float PageRank library path "
     "(operators/graph.py:pagerank — a library function, not a catalog "
-    "slot, since r9: float accumulation order can never value-hash) — "
+    "slot: float accumulation order can never value-hash) — "
     "the banded-oracle companion that pins it against its bit-exact "
     "fixed-point twin (same pattern as the ANN recall "
     "audits): n_nodes is EXACTLY SQL-replayed (the near-dup edge CTE); "
     "both_rank_all_nodes asserts the two variants rank the identical "
-    "node set (guaranteed — same symmetrized edge relation); "
+    "node set (guaranteed — both iterate one prepared PairGraph); "
     "values_close asserts max |float_rank − rank_u/1e12| < 1e-6 over "
     "every node (quantization floors perturb ~1e-12 relative and the "
     "float early-exit residual is ≤ tol/(1−d) ≈ 7e-9, both orders of "
@@ -244,29 +218,22 @@ def dedup_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sf0.001-0.1); top10_overlap_ok (≥8 of top-10 doc_ids shared, "
     "scaled down for tiny graphs) and top1_agree band the ordering "
     "itself. A float-path regression that moves any rank by more than "
-    "noise hash-mismatches. Scale: two graph-sized rank relations "
-    "(each the documented PageRank shape), one outer join + scalar "
-    "aggregate, two bounded limit-10 collects — nothing corpus-sized "
-    "reaches the driver.",
+    "noise hash-mismatches. Scale: one prepared graph, two graph-sized "
+    "rank relations (each the documented PageRank shape), one outer "
+    "join + scalar aggregate, two bounded limit-10 collects — nothing "
+    "corpus-sized reaches the driver.",
 )
 def pagerank_rank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _neardup_pairs(spark, sf_dir)
-    # r10 (guide §5): both variants consume the IDENTICAL symmetrized
-    # edge relation, node set and out-degrees — prepare them once
-    # instead of materializing + counting them twice. Ranks are
-    # unchanged by construction — prepare_pair_graph builds
-    # byte-identical relations.
-    g = graph.prepare_pair_graph(pairs, "d1", "d2")
-    # r11 (guide §2.6 overlap independent jobs): both loops run at the
-    # same graph-sized shuffle width (one prepared graph), so their
-    # scoped_conf holds on it are shared. Each thread fully materializes
-    # its rank relation (cache + count) so the two 10-round
-    # driver-coordinated loops genuinely interleave their per-round jobs
-    # instead of serializing on the later collects.
+    g = graph.prepare_pair_graph(_neardup_pairs(spark, sf_dir), "d1", "d2")
+    # The two loops are independent driver-coordinated jobs on one graph,
+    # hence at one shuffle width, so their scoped_conf holds agree and
+    # they run side by side: each thread materializes its ranks (cache +
+    # count), interleaving the two loops' per-round jobs instead of
+    # serializing them on the collects below.
     from concurrent.futures import ThreadPoolExecutor
 
     def _run(rank_loop):
-        df = rank_loop(pairs, "d1", "d2", iters=10, prepared=g).cache()
+        df = rank_loop(g, iters=10).cache()
         df.count()
         return df
 
