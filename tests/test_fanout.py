@@ -1,6 +1,7 @@
 """Topic fan-out streaming job (streaming/fanout.py): convergence under
-at-least-once redelivery — the guarantee the batch-id-keyed overwrite
-sinks exist for — and exact merging of partials across micro-batches.
+at-least-once redelivery — the guarantee the batch-id-keyed partial map
+exists for — exact merging of partials across micro-batches, and no
+partial left pinned after a run, failed or not.
 The value-hash parity of the normal path is pinned by the
 stream_topics_fanout catalog oracle; these tests exercise the paths the
 oracle can't: a replayed batch id, and one micro-batch split into two."""
@@ -13,9 +14,9 @@ import pytest
 @pytest.mark.parametrize("delivery", ["replay", "split"])
 def test_fanout_converges_under_redelivery(spark, sf_dir, monkeypatch, delivery):
     """``replay``: deliver every micro-batch TWICE (foreachBatch's
-    at-least-once contract made concrete) — the batch=<id> overwrite
-    sinks must rewrite identical partials instead of double-appending,
-    so the merged dashboards still equal the batch topic plans exactly.
+    at-least-once contract made concrete) — a redelivered batch id must
+    replace its in-memory partials instead of adding a second copy, so
+    the merged dashboards still equal the batch topic plans exactly.
 
     ``split``: deliver every micro-batch as two disjoint batch ids (on
     ``pmod(hash(payload), 2)``), so each topic's merge adds partials of
@@ -84,9 +85,10 @@ def test_fanout_converges_under_redelivery(spark, sf_dir, monkeypatch, delivery)
 
 
 def test_full_tmpfs_keeps_streaming_dirs_on_disk(spark, sf_dir, monkeypatch, capfd):
-    """A tmpfs below the free-space floor must not receive the fan-out's
-    sinks or any availableNow checkpoint: they go to the default temp
-    dir instead, with one stderr line saying so."""
+    """A tmpfs below the free-space floor must not receive any streaming
+    checkpoint: they go to the default temp dir instead, with one stderr
+    line saying so. The fan-out's partials stay in memory, so it makes
+    no directory of its own."""
     import os
     import tempfile
 
@@ -116,10 +118,49 @@ def test_full_tmpfs_keeps_streaming_dirs_on_disk(spark, sf_dir, monkeypatch, cap
     assert merged["accidents_by_time"].count() > 0 and counted.count() > 0
 
     names = [os.path.basename(p) for p in made]
-    assert any(n.startswith("fanout_") for n in names), made
+    assert not any(n.startswith("fanout_") for n in names), made
     assert sum(n.startswith("ckpt_") for n in names) >= 2, made
     assert not [p for p in made if p.startswith("/dev/shm")], made
     assert "below the" in capfd.readouterr().err
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+@pytest.mark.parametrize("failing_topic", [None, "lesions_by_county"])
+def test_fanout_releases_every_partial(spark, sf_dir, monkeypatch, failing_topic):
+    """After a run, the session's persistent RDDs grow by exactly the 7
+    returned merges: every per-batch partial, env and parse cache is
+    released. A run whose topic-5 partial raises (topic 1 rolls up from
+    it) fails and leaves nothing pinned."""
+    from traffic_accidents_airflow_kafka_spark.streaming import fanout
+
+    fanout._orders_at_rest(spark, sf_dir)  # build the artifact outside the count
+    if failing_topic is not None:
+        real = fanout.partial
+
+        def partial(spec, rels):
+            if spec.name == failing_topic:
+                raise RuntimeError(f"{spec.name} partial failed (synthetic)")
+            return real(spec, rels)
+
+        monkeypatch.setattr(fanout, "partial", partial)
+
+    before = _persistent_rdd_ids(spark)
+    if failing_topic is not None:
+        with pytest.raises(Exception, match="synthetic"):
+            fanout.run_topics_fanout(spark, sf_dir)
+        assert _persistent_rdd_ids(spark) - before == set()
+        return
+    merged = fanout.run_topics_fanout(spark, sf_dir)
+    held = {df._jdf.queryExecution().analyzed().rdd().id() for df in merged.values()}
+    try:
+        assert _persistent_rdd_ids(spark) - before == held
+        assert len(held) == len(fanout.streaming.TOPICS)
+    finally:
+        for df in merged.values():
+            fanout._release(df)
 
 
 def test_parity_collect_refuses_high_cardinality(spark, monkeypatch):

@@ -892,16 +892,17 @@ def _bounded_collect(df: DataFrame, name: str) -> list:
     "and events file-streamed, JSON-enveloped and UNIONED into one "
     "heterogeneous record stream (the wire shape of one Kafka topic), "
     "drained with trigger(availableNow=True) through foreachBatch into "
-    "seven parquet sinks. The per-batch partials, the topic-1 roll-up "
-    "from topic 5's partial and the final merges are generated from the "
+    "seven in-memory partial sets keyed by batch id. The per-batch "
+    "partials, the topic-1 roll-up from topic 5's partial and the final "
+    "merges are generated from the "
     "same spec table as the batch topic queries (topic_specs.py): counts "
     "and exact decimal sums add across micro-batches, and the one "
     "distinct count keeps (brand, partkey)-grain partials and "
     "re-distincts at merge. Each merged dashboard is then compared "
     "multiset-exactly (row-tuple Counter equality over the dim-bounded "
     "dashboards) against its batch topic query, and the per-topic row "
-    "count + parity flag is what the oracle value-hashes. Scale: sinks "
-    "hold |groups|-sized partials, never raw facts; topic 3 joins the "
+    "count + parity flag is what the oracle value-hashes. Scale: "
+    "partials are |groups|-sized, never raw facts; topic 3 joins the "
     "lineitem stream to orders-at-rest bucketed on o_orderkey (no "
     "Exchange above the at-rest scan; broadcast only as the "
     "warehouse-unwritable fallback), and every parity collect is capped "

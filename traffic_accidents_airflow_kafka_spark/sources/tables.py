@@ -4,7 +4,8 @@ Parquet is the engine's native storage (columnar, predicate-pushdown,
 partition-prunable); the reference used PostgreSQL tables + CSV
 intermediates (SURVEY.md §2.1 S1-S7). Reads stay lazy: column pruning and
 filter pushdown reach the scan via Catalyst, so callers should never
-pre-collect or cache here.
+pre-collect or cache here. Every read carries the table's memoized footer
+schema (:func:`table_schema`), so no read runs a schema-inference job.
 """
 
 from __future__ import annotations
@@ -13,6 +14,9 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from .memo import _artifact
 
 TESTDATA_TABLES = (
     "region",
@@ -32,8 +36,28 @@ TESTDATA_TABLES = (
 SMALL_DIM_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"})
 
 
+def table_schema(spark: SparkSession, sf_dir: str, table: str) -> StructType:
+    """``{table}.parquet``'s schema as the batch reader resolves it
+    (footer only, no data scan), held by the build-once memo: the sniff
+    is a one-task inference job of 0.14-0.26 s that every batch read and
+    every streaming plan build would otherwise pay, and a table rewritten
+    in place (e.g. with another column set or timestamp unit) is sniffed
+    again. ``events`` is sniffed under ``nanosAsLong``, the setting every
+    events read runs under, so a TIMESTAMP(NANOS) ``ts`` resolves to a
+    long here too."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
+
+    def sniff() -> StructType:
+        if table == "events":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return spark.read.parquet(path).schema
+
+    return _artifact(spark, sf_dir, f"schema-{table}", sniff)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one synthetic table as a lazy DataFrame.
+    """Load one synthetic table as a lazy DataFrame, read with its
+    memoized :func:`table_schema`.
 
     ``events.parquet`` stores ``ts`` as parquet TIMESTAMP(NANOS), which the
     vectorized reader rejects; we read it as nanos-since-epoch long
@@ -47,15 +71,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # engine's factory didn't build (runtime-settable conf).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = table_schema(spark, sf_dir, name)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        return df
-    return spark.read.parquet(path)
+    df = spark.read.schema(schema).parquet(path)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
 
 
 def scan(

@@ -39,24 +39,23 @@ from pyspark.sql.types import (
 )
 
 from ..session import SHUFFLE_PARTITIONS, scoped_conf
-from ..sources.memo import _artifact
+from ..sources.tables import table_schema
 from ..topic_specs import TOPIC_SPECS
 
 #: The 7 result topics (kafka/consumer.py:6-14), in spec-table order.
 TOPICS = tuple(spec.name for spec in TOPIC_SPECS)
 
 #: Free tmpfs below which ephemeral streaming directories go to disk. A
-#: fan-out run holds 46 KB of sinks plus a 1.3 KB checkpoint at sf0.01 and
-#: 350 KB of sinks at sf0.1 (topic 6's part-grain partials grow with the
-#: scale factor); 64 MiB is about 180x the sf0.1 figure, so the sinks fit
-#: to about sf10 at that growth, and a nearly full tmpfs, which other
-#: processes share, is left to them.
+#: fan-out run's checkpoint holds 1.3 KB at sf0.01 (offsets and commits
+#: only; its partials stay in memory), so the floor is not about fitting
+#: one run: a nearly full tmpfs, which other processes share, is left to
+#: them.
 TMPFS_FLOOR_BYTES = 64 << 20
 
 
 def ephemeral_dir(prefix: str) -> str:
     """A fresh directory for state that dies with its run (availableNow
-    checkpoints, fan-out sinks): on ``/dev/shm`` when it has at least
+    and foreachBatch checkpoints): on ``/dev/shm`` when it has at least
     ``TMPFS_FLOOR_BYTES`` free, so per-batch commits never touch disk,
     else in the default temp dir."""
     base = None
@@ -72,17 +71,6 @@ def ephemeral_dir(prefix: str) -> str:
                 file=sys.stderr,
             )
     return tempfile.mkdtemp(prefix=prefix, dir=base)
-
-
-def table_schema(spark: SparkSession, sf_dir: str, table: str) -> StructType:
-    """``{table}.parquet``'s schema as the batch reader resolves it
-    (footer only, no data scan), held by the build-once memo: the sniff
-    is a driver-side read of 0.14-0.26 s that ~12 streaming entries pay
-    on every plan build and the fan-out on every run, and a table
-    rewritten in place (e.g. with the other timestamp unit) is sniffed
-    again."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    return _artifact(spark, sf_dir, f"schema-{table}", lambda: spark.read.parquet(path).schema)
 
 
 def _events_stream_schema(spark: SparkSession, sf_dir: str) -> StructType:

@@ -11,25 +11,30 @@ come from, so the streaming form is not a second hand-written copy:
   as file streams, JSON-encoded into a ``(src, payload)`` envelope and
   unioned into one streaming relation — the wire shape of a single Kafka
   topic carrying heterogeneous JSON records.
-- **One availableNow drain, seven sinks.** ``foreachBatch`` parses each
-  micro-batch by record type, projects each source to the columns its
-  specs read, and writes every topic's generated ``partial`` to its own
-  parquet sink. A topic ``derived_from`` another is rolled up from that
-  topic's just-written partial instead of re-running its joins. Each
-  delivery OVERWRITES its own ``batch=<id>`` partition, so a redelivered
-  batch id rewrites identical partials: with mergeable partials, restarts
-  and multi-batch drains stay exact.
-- **One merge per topic.** After the drain, each sink is reduced by the
-  generated ``merge`` to exactly the batch query's schema.
+- **One availableNow drain, seven in-memory partial sets.**
+  ``foreachBatch`` parses each micro-batch by record type, projects each
+  source to the columns its specs read, and materializes every topic's
+  generated ``partial`` (``localCheckpoint``) into a driver-side map
+  keyed by batch id. A topic ``derived_from`` another is rolled up from
+  that topic's partial of the same batch id instead of re-running its
+  joins. A redelivered batch id REPLACES its entry, so it contributes
+  identical partials once: with mergeable partials, redeliveries and
+  multi-batch drains stay exact. That is all Structured Streaming asks
+  of a sink — idempotence per batch id within the query's life — and
+  the query's life is this call (its checkpoint is thrown away).
+- **One merge per topic.** After the drain, the union of each topic's
+  partials is reduced by the generated ``merge`` to exactly the batch
+  query's schema, and every partial is released.
   ``stream_topics_fanout`` (``plans/streaming_plans.py``) compares the
   result multiset-exactly against the batch queries.
 
 Scale: per-batch work is the topic queries' own shape (broadcast dim
-joins, grid binning); sinks hold |groups|-sized partials, never raw
-facts. Topic 3 joins the lineitem stream to orders-at-rest saved
-bucketed on ``o_orderkey`` once per (session, sf_dir), so the at-rest
-side has no Exchange in any micro-batch; a broadcast join is the loud
-fallback when that table cannot be written.
+joins, grid binning); partials are |groups|-sized, never raw facts, so
+the map holds |groups| x batches rows per topic. Topic 3 joins the
+lineitem stream to orders-at-rest saved bucketed on ``o_orderkey`` once
+per (session, sf_dir), so the at-rest side has no Exchange in any
+micro-batch; a broadcast join is the loud fallback when that table
+cannot be written.
 """
 
 from __future__ import annotations
@@ -40,15 +45,15 @@ import re
 import shutil
 import sys
 import time
-import uuid
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.memo import _artifact
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_schema
 from ..topic_specs import TOPIC_SPECS, TopicSpec, merge, partial, rollup
 from . import core as streaming
 
@@ -69,7 +74,7 @@ _RESPREAD_KEYS = {"orders": "o_orderkey", "lineitem": "l_orderkey", "events": "e
 
 #: Metadata of the LAST run_topics_fanout call in this process:
 #: ``orders_join_path`` ("bucketed" | "broadcast": which topic-3 plan
-#: ran), ``topic_sec`` (per-topic sink-job seconds summed over
+#: ran), ``topic_sec`` (per-topic partial-job seconds summed over
 #: micro-batches; the jobs run concurrently, so compare a topic with
 #: itself across runs, never sum them), and the phase walls ``env_sec``,
 #: ``parse_sec``, ``drain_wall_sec`` and ``merge_sec``.
@@ -113,7 +118,7 @@ def envelope_stream(
 
     parts = []
     for src in ("orders", "lineitem"):
-        schema = (schemas or {}).get(src) or streaming.table_schema(spark, sf_dir, src)
+        schema = (schemas or {}).get(src) or table_schema(spark, sf_dir, src)
         raw = respread(streaming.stream_table_source(spark, sf_dir, src, schema), src)
         parts.append(raw.select(F.lit(src).alias("src"), F.to_json(F.struct(*raw.columns)).alias("payload")))
     ev = respread(streaming.stream_events(spark, sf_dir), "events")
@@ -217,13 +222,20 @@ def _meter(key: str, t0: float) -> None:
     _LAST_RUN_META[key] = _LAST_RUN_META.get(key, 0.0) + time.perf_counter() - t0
 
 
+def _release(frame: DataFrame) -> None:
+    """Free a ``localCheckpoint``ed frame's blocks now. ``unpersist()``
+    does not: the blocks belong to the checkpointed RDD under the plan's
+    ``LogicalRDD``, which the cache manager never saw."""
+    frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def run_topics_fanout(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Drain the envelope stream once into one partial-aggregate sink per
-    topic, merge each sink and return {topic: merged DataFrame} with
-    exactly the batch topic queries' schemas. Merged results are eagerly
-    materialized (localCheckpoint) so the sinks can be reclaimed before
-    the caller reads them."""
-    wire = {src: streaming.table_schema(spark, sf_dir, src) for src in ("orders", "lineitem")}
+    """Drain the envelope stream once into per-batch partial aggregates
+    held in memory, merge each topic's partials and return {topic: merged
+    DataFrame} with exactly the batch topic queries' schemas. Merged
+    results are eagerly materialized (localCheckpoint), so every partial
+    is released before the caller reads them, on failure as well."""
+    wire = {src: table_schema(spark, sf_dir, src) for src in ("orders", "lineitem")}
     wire["events"] = _EVENTS_WIRE
     reads = {
         src: set().union(*(s.columns_read() for s in TOPIC_SPECS if s.source == src))
@@ -235,12 +247,13 @@ def run_topics_fanout(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     # The one fact-fact join (topic 3's, not broadcast) reads orders at rest.
     at_rest["orders"] = _orders_at_rest(spark, sf_dir)
     derived = {r.name: [s for s in TOPIC_SPECS if s.derived_from and s.derived_from[0] == r.name] for r in TOPIC_SPECS}
-    # A root with derived topics runs a chain of sink jobs, so it is
+    # A root with derived topics runs a chain of partial jobs, so it is
     # submitted first: the scheduler is FIFO across concurrent jobs.
     roots = sorted((s for s in TOPIC_SPECS if s.derived_from is None), key=lambda r: not derived[r.name])
     parts = envelope_parts(spark)
-    base = streaming.ephemeral_dir(f"fanout_{uuid.uuid4().hex[:8]}_")
-    sinks = {t: os.path.join(base, t) for t in streaming.TOPICS}
+    # {topic: {batch_id: materialized partial}}; each topic's dict is
+    # written only by its root's job thread.
+    partials: dict[str, dict[int, DataFrame]] = {t: {} for t in streaming.TOPICS}
 
     def drain(batch: DataFrame, batch_id: int) -> None:
         # The topic jobs all read this micro-batch: cache the envelope once
@@ -255,20 +268,20 @@ def run_topics_fanout(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             rel = _parse(env, src, wire[src])
             parsed[src] = rel.select(*(c for c in rel.columns if c in reads[src])).persist()
 
-        def batch_dir(topic: str) -> str:
-            return os.path.join(sinks[topic], f"batch={batch_id}")
-
         def job(root: TopicSpec) -> None:
             # Gated on its own source's parse only; the meter starts after
-            # the gate, so it reads sink-job seconds, not parse wait.
+            # the gate, so it reads partial-job seconds, not parse wait.
             parses[root.source].result()
             for spec in (root, *derived[root.name]):
                 t0 = time.perf_counter()
                 if spec.derived_from:
-                    df = rollup(spec, spark.read.parquet(batch_dir(spec.derived_from[0])))
+                    df = rollup(spec, partials[spec.derived_from[0]][batch_id])
                 else:
                     df = partial(spec, {**at_rest, spec.source: parsed[spec.source]})
-                df.coalesce(1).write.mode("overwrite").parquet(batch_dir(spec.name))
+                stale = partials[spec.name].get(batch_id)
+                partials[spec.name][batch_id] = df.coalesce(1).localCheckpoint(eager=True)
+                if stale is not None:  # a redelivered batch id
+                    _release(stale)
                 _LAST_RUN_META["topic_sec"][spec.name] += time.perf_counter() - t0
 
         try:
@@ -294,11 +307,16 @@ def run_topics_fanout(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         t0 = time.perf_counter()
         with ThreadPoolExecutor(max_workers=len(TOPIC_SPECS)) as pool:
             futs = {
-                s.name: pool.submit(merge(s, spark.read.parquet(sinks[s.name])).localCheckpoint, eager=True)
+                s.name: pool.submit(
+                    merge(s, reduce(DataFrame.unionByName, partials[s.name].values())).localCheckpoint,
+                    eager=True,
+                )
                 for s in TOPIC_SPECS
             }
             out = {name: fut.result() for name, fut in futs.items()}
         _meter("merge_sec", t0)
         return out
     finally:
-        shutil.rmtree(base, ignore_errors=True)
+        for by_batch in partials.values():
+            for frame in by_batch.values():
+                _release(frame)
