@@ -99,3 +99,20 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
             assert _cell_equal(a, b), (
                 f"{name}: value mismatch row {i} col {c}: spark={a!r} oracle={b!r}"
             )
+
+
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs the session holds blocks for: caches and
+    checkpoints alike."""
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def read_rdd_ids(df) -> set[int]:
+    """Ids of the RDDs under the ``LogicalRDD`` leaves of ``df``'s
+    analyzed plan: the checkpoints (and micro-batches) it reads."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {
+        int(leaf.rdd().id())
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.getClass().getSimpleName() == "LogicalRDD"
+    }

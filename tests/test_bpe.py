@@ -148,6 +148,30 @@ def test_encode_stats_applies_merges_in_training_order(spark):
         assert n == len(syms)
 
 
+def test_encode_stats_over_several_fold_chunks_matches_reference(spark):
+    """More merges than one fold chain holds, so the chunked checkpoint
+    path runs: pairs that never match fill the first chunk and the
+    trained merges after them span the chunk boundary. Every word's
+    symbols equal the pure-Python fold of the whole list."""
+    docs = _docs(spark)
+    trained = [
+        (r["lhs"], r["rhs"])
+        for r in bpe.train_bpe(docs, n_merges=12).orderBy("rank").collect()
+    ]
+    merges = [("#", str(i)) for i in range(bpe.MERGES_PER_CHECKPOINT - 4)] + trained
+    assert len(merges) > bpe.MERGES_PER_CHECKPOINT
+    ref_freq = _ref_word_freq(CORPUS)
+    enc = {r["word"]: r for r in bpe.encode_stats(docs, merges).collect()}
+    assert set(enc) == set(ref_freq)
+    for w, f in ref_freq.items():
+        syms = list(w)
+        for lhs, rhs in merges:
+            syms = _ref_merge_word(syms, lhs, rhs)
+        assert enc[w]["symbols"] == syms, w
+        assert enc[w]["n_symbols"] == len(syms)
+        assert enc[w]["f"] == f
+
+
 def test_apply_merge_random_cases_match_reference(spark):
     """300 seeded-random symbol arrays × 3 merge pairs, evaluated in ONE
     Spark job, each compared against the pure-Python greedy scan —

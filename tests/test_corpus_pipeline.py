@@ -16,8 +16,14 @@ from traffic_accidents_airflow_kafka_spark.pipeline.corpus_job import (
 
 
 def test_corpus_pipeline_end_to_end_and_idempotent(spark, sf_dir, tmp_path):
+    from tests.oracle_utils import persistent_rdd_ids
+
     out = str(tmp_path / "corpus")
+    before = persistent_rdd_ids(spark)
     r1 = run_corpus_pipeline(spark, sf_dir, out)
+    # Every stage reads back what it wrote: no cache or checkpoint
+    # outlives the run.
+    assert persistent_rdd_ids(spark) - before == set()
 
     # Stage monotonicity: every curation stage can only shrink the corpus.
     assert r1["ingest_rows"] > 0

@@ -124,16 +124,14 @@ def test_full_tmpfs_keeps_streaming_dirs_on_disk(spark, sf_dir, monkeypatch, cap
     assert "below the" in capfd.readouterr().err
 
 
-def _persistent_rdd_ids(spark) -> set[int]:
-    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
-
-
 @pytest.mark.parametrize("failing_topic", [None, "lesions_by_county"])
 def test_fanout_releases_every_partial(spark, sf_dir, monkeypatch, failing_topic):
     """After a run, the session's persistent RDDs grow by exactly the 7
     returned merges: every per-batch partial, env and parse cache is
     released. A run whose topic-5 partial raises (topic 1 rolls up from
     it) fails and leaves nothing pinned."""
+    from tests.oracle_utils import persistent_rdd_ids
+    from traffic_accidents_airflow_kafka_spark.session import release
     from traffic_accidents_airflow_kafka_spark.streaming import fanout
 
     fanout._orders_at_rest(spark, sf_dir)  # build the artifact outside the count
@@ -147,20 +145,19 @@ def test_fanout_releases_every_partial(spark, sf_dir, monkeypatch, failing_topic
 
         monkeypatch.setattr(fanout, "partial", partial)
 
-    before = _persistent_rdd_ids(spark)
+    before = persistent_rdd_ids(spark)
     if failing_topic is not None:
         with pytest.raises(Exception, match="synthetic"):
             fanout.run_topics_fanout(spark, sf_dir)
-        assert _persistent_rdd_ids(spark) - before == set()
+        assert persistent_rdd_ids(spark) - before == set()
         return
     merged = fanout.run_topics_fanout(spark, sf_dir)
     held = {df._jdf.queryExecution().analyzed().rdd().id() for df in merged.values()}
     try:
-        assert _persistent_rdd_ids(spark) - before == held
+        assert persistent_rdd_ids(spark) - before == held
         assert len(held) == len(fanout.streaming.TOPICS)
     finally:
-        for df in merged.values():
-            fanout._release(df)
+        release(*merged.values())
 
 
 def test_parity_collect_refuses_high_cardinality(spark, monkeypatch):

@@ -41,6 +41,33 @@ def test_artifact_is_rebuilt_after_a_rewrite_in_place(spark, tmp_path):
     assert not second.is_cached
 
 
+def test_a_checkpoint_value_is_freed_on_rebuild_and_eviction(spark, tmp_path):
+    """A ``localCheckpoint`` value holds blocks no cache entry tracks: a
+    rebuild after a rewrite in place frees the stale value's RDD, and
+    eviction frees the current one."""
+    from tests.oracle_utils import persistent_rdd_ids, read_rdd_ids
+
+    sf = str(tmp_path)
+
+    def build():
+        docs = spark.read.parquet(os.path.join(sf, "documents.parquet"))
+        return docs.localCheckpoint(eager=True)
+
+    _write_docs(sf, ["a b"])
+    before = persistent_rdd_ids(spark)
+    try:
+        first = memo._artifact(spark, sf, "docs", build)
+        assert persistent_rdd_ids(spark) - before == read_rdd_ids(first)
+
+        _write_docs(sf, ["a b", "c d e"])
+        second = memo._artifact(spark, sf, "docs", build)
+        assert second is not first
+        assert persistent_rdd_ids(spark) - before == read_rdd_ids(second)
+    finally:
+        memo.evict_artifacts(sf)
+    assert persistent_rdd_ids(spark) - before == set()
+
+
 def test_artifact_over_an_uncommitted_table_dir_is_not_stored(spark, tmp_path):
     """A table directory without ``_SUCCESS`` has no trusted snapshot."""
     sf = str(tmp_path)

@@ -52,6 +52,15 @@ def test_upsert_append_leaves_a_caller_cached_batch_cached(spark, tmp_path):
         batch.unpersist()
 
 
+def test_upsert_append_leaves_a_caller_checkpoint_readable(spark, tmp_path):
+    """A checkpointed batch upserted into an empty path (so the batch
+    itself is what gets counted and written) can still be read after:
+    the upsert frees only the cache it took."""
+    batch = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string").localCheckpoint()
+    assert sinks.upsert_append(batch, str(tmp_path / "u"), "id", spark) == 2
+    assert batch.count() == 2
+
+
 def test_memoized_write_skips_existing(spark, tmp_path):
     path = str(tmp_path / "m")
     df1 = spark.range(5)

@@ -19,10 +19,11 @@ word-count shuffle up front, then ``n_merges`` vocabulary-sized rounds:
 4. ``apply_merge``: a native array fold rewrites each word's symbol
    array greedily left-to-right — no UDF, stays JVM-side.
 
-Rounds materialize via ``localCheckpoint`` (the pagerank/CC idiom in
-this repo: truncate lineage so round N's plan doesn't replay rounds
-1..N-1) and shuffle-partition count is sized to the vocabulary, not
-inherited from the corpus-sized session default.
+Rounds materialize through :class:`session.Rounds` (truncate lineage so
+round N's plan doesn't replay rounds 1..N-1, and release each round's
+checkpoint once no later round reads it) and shuffle-partition count is
+sized to the vocabulary, not inherited from the corpus-sized session
+default.
 
 Reference anchor: the reference repo has no tokenizer (its pipeline ends
 at SQL dashboards); this extends the engine's training-data surface the
@@ -36,7 +37,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from ..session import SHUFFLE_PARTITIONS, scoped_conf
+from ..session import SHUFFLE_PARTITIONS, Rounds, release, scoped_conf
 from .text import bpe_ish_tokens
 
 
@@ -143,18 +144,15 @@ def train_bpe(
     """
     spark = docs.sparkSession
     schema = "rank INT, lhs STRING, rhs STRING, pair_count BIGINT"
-    symtab = (
-        word_freq(docs, text_col)
-        .select("f", initial_symbols("word").alias("syms"))
-        .localCheckpoint()
-    )
     merges: list[tuple[int, str, str, int]] = []
-    last_ckpt = symtab
-    with scoped_conf(spark, SHUFFLE_PARTITIONS, VOCAB_PARTITIONS):
-        try:
+    with Rounds() as rounds:
+        tab = rounds.checkpoint(
+            word_freq(docs, text_col).select("f", initial_symbols("word").alias("syms"))
+        )
+        with scoped_conf(spark, SHUFFLE_PARTITIONS, VOCAB_PARTITIONS):
             for rank in range(n_merges):
                 top = (
-                    pair_counts(last_ckpt)
+                    pair_counts(tab)
                     .orderBy(F.desc("pair_count"), "lhs", "rhs")
                     .limit(1)
                     .collect()
@@ -163,21 +161,24 @@ def train_bpe(
                     break
                 lhs, rhs, cnt = top[0]["lhs"], top[0]["rhs"], top[0]["pair_count"]
                 merges.append((rank, lhs, rhs, int(cnt)))
-                new_tab = last_ckpt.withColumn(
-                    "syms", apply_merge("syms", lhs, rhs)
-                ).localCheckpoint()
-                last_ckpt.unpersist()
-                last_ckpt = new_tab
-        finally:
-            last_ckpt.unpersist()
+                tab = rounds.checkpoint(tab.withColumn("syms", apply_merge("syms", lhs, rhs)))
+        # The merge table is built on the driver: no checkpoint outlives
+        # the call.
+        release(tab)
     return spark.createDataFrame(merges, schema)
+
+
+#: Merges per fold chain before the symbol table materializes: one
+#: unbounded chain blows the JVM stack around ~1000 nested folds
+#: (measured: StackOverflowError in the column converter), and
+#: production merge tables are 10^4-10^5 deep.
+MERGES_PER_CHECKPOINT = 64
 
 
 def encode_stats(
     docs: DataFrame,
     merges: list[tuple[str, str]],
     text_col: str = "text",
-    materialize_every: int = 64,
 ) -> DataFrame:
     """Apply a trained merge list to the corpus vocabulary and report
     per-word segmentations: (word, f, n_symbols, symbols).
@@ -187,30 +188,22 @@ def encode_stats(
     then doc-level token counts are a (word → n_symbols) broadcast join
     away. Merge application order matters and is preserved.
 
-    Fold chains materialize every ``materialize_every`` merges: one
-    unbounded expression chain blows the JVM stack around ~1000 nested
-    folds (measured: StackOverflowError in the column converter), and
-    production merge tables are 10^4-10^5 deep. Chunked checkpoints keep
-    expression depth constant while staying vocabulary-sized; merge
-    lists at or below the chunk size (the catalog queries) build exactly
-    the old single-chain plan.
+    Fold chains materialize every ``MERGES_PER_CHECKPOINT`` merges, which
+    keeps expression depth constant while staying vocabulary-sized; the
+    result reads the last checkpoint only. Merge lists at or below the
+    chunk size (the catalog queries) build one fold chain and no
+    checkpoint.
     """
     tab = word_freq(docs, text_col).select(
         "word", "f", initial_symbols("word").alias("syms")
     )
     col: Column = F.col("syms")
-    pending = 0
-    prev_ckpt = None
-    for lhs, rhs in merges:
-        if pending == materialize_every:
-            tab = tab.withColumn("syms", col).localCheckpoint()
-            if prev_ckpt is not None:
-                prev_ckpt.unpersist()
-            prev_ckpt = tab
-            col = F.col("syms")
-            pending = 0
-        col = apply_merge(col, lhs, rhs)
-        pending += 1
+    with Rounds() as rounds:
+        for i, (lhs, rhs) in enumerate(merges):
+            if i and i % MERGES_PER_CHECKPOINT == 0:
+                tab = rounds.checkpoint(tab.withColumn("syms", col))
+                col = F.col("syms")
+            col = apply_merge(col, lhs, rhs)
     return tab.select(
         "word",
         "f",

@@ -33,7 +33,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from ..session import SHUFFLE_PARTITIONS, scoped_conf
+from ..session import SHUFFLE_PARTITIONS, Rounds, release, scoped_conf
 from .graph import loop_partitions
 
 
@@ -562,9 +562,9 @@ def connected_components(
     is at most diameter + 1 rounds (2-3 for near-dup cliques), and every
     node then carries the minimum id of its component. There is no round
     cap, so a long chain costs rounds, never wrong labels. The driver
-    coordinates the loop with ``localCheckpoint`` truncating the lineage
-    each round; the sum is one scalar row per round whatever the graph
-    size.
+    coordinates the loop with :class:`session.Rounds` checkpoints
+    truncating the lineage each round; the sum is one scalar row per
+    round whatever the graph size.
 
     Scale: each round is one shuffle join (edges × labels, keyed on the
     8-byte node id) plus a groupBy-min, at the graph-sized shuffle width
@@ -578,30 +578,32 @@ def connected_components(
     # round and must not re-derive its upstream (possibly expensive)
     # candidate-pair plan per iteration.
     edges = fwd.union(rev).distinct().localCheckpoint()
-
     spark = pairs.sparkSession
-    n_edges = edges.count()
-    with scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, n_edges)):
-        comp = edges.select(F.col("e_src").alias("id")).distinct().select(
-            "id", F.col("id").alias("component")
-        )
-        prev_sum = None
-        while True:
-            msgs = edges.join(
-                comp.withColumnRenamed("id", "e_src"), "e_src"
-            ).select(F.col("e_dst").alias("id"), "component")
-            new_comp = (
-                comp.unionByName(msgs)
-                .groupBy("id")
-                .agg(F.min("component").alias("component"))
-                .localCheckpoint()
+    try:
+        n_edges = edges.count()
+        with (
+            scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, n_edges)),
+            Rounds() as rounds,
+        ):
+            comp = edges.select(F.col("e_src").alias("id")).distinct().select(
+                "id", F.col("id").alias("component")
             )
-            comp.unpersist()
-            comp = new_comp
-            cur_sum = comp.agg(F.sum("component")).first()[0]
-            if cur_sum == prev_sum:
-                return comp
-            prev_sum = cur_sum
+            prev_sum = None
+            while True:
+                msgs = edges.join(
+                    comp.withColumnRenamed("id", "e_src"), "e_src"
+                ).select(F.col("e_dst").alias("id"), "component")
+                comp = rounds.checkpoint(
+                    comp.unionByName(msgs)
+                    .groupBy("id")
+                    .agg(F.min("component").alias("component"))
+                )
+                cur_sum = comp.agg(F.sum("component")).first()[0]
+                if cur_sum == prev_sum:
+                    return comp
+                prev_sum = cur_sum
+    finally:
+        release(edges)
 
 
 def simhash64(

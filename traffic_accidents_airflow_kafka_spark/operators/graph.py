@@ -10,7 +10,8 @@ or hyperlink graphs, to weight documents for sampling).
 Design: classic damped power iteration over one prepared
 :class:`PairGraph`, driver-coordinated like the connected-components
 loop — per round ONE join (edges × ranks, keyed on the 8-byte node id)
-and one groupBy-sum, with ``localCheckpoint`` truncating lineage. The
+and one groupBy-sum, with :class:`session.Rounds` checkpoints truncating
+lineage and releasing every round the next one no longer reads. The
 float :func:`pagerank` is a library path; its int64 twin
 :func:`pagerank_fixedpoint` replays bit-for-bit in SQL.
 """
@@ -20,7 +21,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import SHUFFLE_PARTITIONS, scoped_conf
+from ..session import SHUFFLE_PARTITIONS, Rounds, release, scoped_conf
 
 
 class PairGraph:
@@ -49,7 +50,9 @@ def prepare_pair_graph(
     Edges, nodes and degrees derive from one ``localCheckpoint`` of the
     edge relation, so the (possibly expensive) upstream candidate-pair
     plan runs once (measured 44 s → ~6 s at sf0.1 on the Jaccard-pair
-    input against replaying it per relation)."""
+    input against replaying it per relation). That checkpoint is released
+    once the graph's two relations are materialized; the caller releases
+    ``edges_deg`` and ``nodes`` when no result reads them."""
     edges = (
         pairs.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
         .union(pairs.select(F.col(dst).alias("e_src"), F.col(src).alias("e_dst")))
@@ -57,11 +60,13 @@ def prepare_pair_graph(
         .distinct()
         .localCheckpoint()
     )
-    nodes = edges.select(F.col("e_src").alias("id")).distinct().localCheckpoint()
-    n_nodes = nodes.count()
-    out_deg = edges.groupBy("e_src").agg(F.count(F.lit(1)).alias("__deg"))
-    edges_deg = edges.join(out_deg, "e_src").localCheckpoint()
-    return PairGraph(edges_deg, nodes, n_nodes, edges_deg.count())
+    try:
+        nodes = edges.select(F.col("e_src").alias("id")).distinct().localCheckpoint()
+        out_deg = edges.groupBy("e_src").agg(F.count(F.lit(1)).alias("__deg"))
+        edges_deg = edges.join(out_deg, "e_src").localCheckpoint()
+    finally:
+        release(edges)
+    return PairGraph(edges_deg, nodes, nodes.count(), edges_deg.count())
 
 
 def loop_partitions(spark: SparkSession, n_edges: int) -> int:
@@ -85,31 +90,10 @@ def loop_partitions(spark: SparkSession, n_edges: int) -> int:
     return max(1, min(session_parts, n_edges // 500_000 + 1))
 
 
-class _RoundCheckpointer:
-    """Truncate loop lineage every ``every`` rounds (each localCheckpoint
-    is an eager job; rounds in between stay lazy and fuse). The last TWO
-    checkpoints stay alive — the grandparent is released when a new one
-    lands — so a convergence probe can still join the previous
-    checkpointed relation after the current one materializes. Shared
-    loop bookkeeping for both PageRank variants."""
-
-    def __init__(self, every: int = 3):
-        self.every = every
-        self._last: DataFrame | None = None
-        self._prev: DataFrame | None = None
-
-    def is_boundary(self, it: int, iters: int) -> bool:
-        """Whether round ``it`` materializes — the single source of truth
-        for the cadence, shared with callers' convergence probes."""
-        return it % self.every == self.every - 1 or it == iters - 1
-
-    def maybe(self, df: DataFrame, it: int, iters: int) -> DataFrame:
-        if self.is_boundary(it, iters):
-            df = df.localCheckpoint()
-            if self._prev is not None:
-                self._prev.unpersist()
-            self._prev, self._last = self._last, df
-        return df
+#: PageRank rounds per lineage checkpoint. Each checkpoint is an eager
+#: job and the rounds in between stay lazy, so 3 rounds fuse into one
+#: materialization while the stacked plan stays 3 joins deep.
+ROUNDS_PER_CHECKPOINT = 3
 
 
 def pagerank(
@@ -138,14 +122,12 @@ def pagerank(
     if n_nodes == 0:
         return nodes.withColumn("rank", F.lit(0.0))
     spark = nodes.sparkSession
-    with scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, g.n_edges)):
+    with (
+        scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, g.n_edges)),
+        Rounds() as rounds,
+    ):
         base = (1.0 - damping) / n_nodes
         ranks = nodes.select("id", F.lit(1.0 / n_nodes).alias("rank"))
-        # Lineage truncated every 3 rounds: each localCheckpoint is an
-        # eager job and the rounds in between stay lazy, so 3 rounds fuse
-        # into one materialization while the stacked plan stays 3 joins
-        # deep.
-        ckpt = _RoundCheckpointer(3)
         prev_probe = ranks
         for it in range(iters):
             contribs = g.edges_deg.join(
@@ -159,12 +141,14 @@ def pagerank(
             new_ranks = contribs.groupBy("id").agg(
                 (F.lit(base) + F.lit(damping) * F.sum("c")).alias("rank")
             )
-            was_ckpt = ckpt.is_boundary(it, iters)
-            ranks = ckpt.maybe(new_ranks, it, iters)
+            if (it + 1) % ROUNDS_PER_CHECKPOINT and it < iters - 1:
+                ranks = new_ranks
+                continue
+            ranks = rounds.checkpoint(new_ranks)
             # Convergence probe at checkpoint boundaries only: both sides
             # are materialized relations, so the probe is one in-memory
             # (id, double) join + a scalar max to the driver.
-            if tol is not None and was_ckpt and it < iters - 1:
+            if tol is not None and it < iters - 1:
                 delta = (
                     ranks.join(
                         prev_probe.withColumnRenamed("rank", "__prev"), "id"
@@ -289,9 +273,11 @@ def pagerank_fixedpoint(
     base = ((damp_den - damp_num) * init) // damp_den
 
     spark = nodes.sparkSession
-    with scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, g.n_edges)):
+    with (
+        scoped_conf(spark, SHUFFLE_PARTITIONS, loop_partitions(spark, g.n_edges)),
+        Rounds() as rounds,
+    ):
         ranks = nodes.select("id", F.lit(init).cast("long").alias("rank_u"))
-        ckpt = _RoundCheckpointer(3)
         for it in range(iters):
             joined = g.edges_deg.join(ranks.withColumnRenamed("id", "e_src"), "e_src")
             contribs = joined.select(
@@ -306,5 +292,8 @@ def pagerank_fixedpoint(
                 .cast("long")
                 .alias("rank_u")
             )
-            ranks = ckpt.maybe(new_ranks, it, iters)
+            if (it + 1) % ROUNDS_PER_CHECKPOINT and it < iters - 1:
+                ranks = new_ranks
+            else:
+                ranks = rounds.checkpoint(new_ranks)
     return ranks

@@ -42,6 +42,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..session import Rounds, release
+
 #: Lexicographic-objective encoding: combined = cost * PIECE_BASE +
 #: n_pieces. Valid while segmented words stay under PIECE_BASE pieces —
 #: enforced by MAX_WORD_LEN on the oracled path and safe far beyond it
@@ -395,140 +397,137 @@ def hard_em_train(
     per-iteration stats).
 
     Determinism: integer costs, integer counts, lexicographic
-    tie-breaks — every round replays identically. Rounds materialize via
-    ``localCheckpoint`` (the bpe/pagerank idiom: truncate lineage so
-    round N never replays rounds 1..N-1). Characters never drop out of
-    the vocabulary; a character unused by any best path keeps count 1
-    (the SentencePiece required-char floor).
+    tie-breaks — every round replays identically. Rounds materialize
+    through :class:`session.Rounds` (truncate lineage so round N never
+    replays rounds 1..N-1); every checkpoint but the returned costs is
+    released before the call returns, also when it raises. Characters
+    never drop out of the vocabulary; a character unused by any best path
+    keeps count 1 (the SentencePiece required-char floor).
 
     Scale: each round is one word-vocab-sized lattice join + DP,
     reduced to a VOCAB-sized (piece, count) table before anything
     materializes; per-round stats are derived from that table joined
     with the (vocab-sized) cost table — corpus cost = Σ cnt·cost(piece)
     over best-path pieces, pieces emitted = Σ cnt — so the path DP runs
-    EXACTLY ONCE per round and nothing word-vocab-sized is collected or
-    checkpointed (r9 restructure: the prior shape ran the DP twice per
-    non-final round — once for the stats aggregate, once replayed under
-    the recount — and the final round carried the piece arrays it never
-    read; the last round now uses the cheaper non-path ``viterbi_
-    combined``). Stats collect one scalar row per round.
+    exactly once per round and nothing word-vocab-sized is collected or
+    checkpointed. The last round reports stats only, through the
+    cheaper non-path ``viterbi_combined``. Stats collect one scalar row
+    per round.
     """
     from concurrent.futures import ThreadPoolExecutor
 
     wf = word_freq.localCheckpoint(eager=True)
-    # r11 (guide §2.6 overlap independent jobs): the trainer is
-    # JOB-LATENCY-bound, not compute-bound — the phase profile reads
-    # ~14 eager materializations/collects of 0.1-0.5 s each with no
-    # duplicated subtree left (wf 0.22 / chars 0.20 / corpus_words 0.10
-    # / seed+costs 0.56 / per-round path DP 0.43-0.46, stats 0.13-0.16,
-    # refresh 0.38-0.46 s at sf0.1). The independent ones overlap on a
-    # small pool: the char floor and the word-conservation scalar run
-    # while the seed costs materialize (all three depend only on the
-    # checkpointed wf), and each non-final round's stats row (used x
-    # the round's OWN costs) collects while the NEXT round's refreshed
-    # costs checkpoint — independent by construction. This reorders job
-    # submission, never arithmetic: every count, cost, and tie-break is
-    # computed from the same relations as before.
-    pool = ThreadPoolExecutor(max_workers=2)
+    # Jobs overlap only when they are independent. The trainer is bound
+    # by job latency, not compute: ~14 eager materializations or collects
+    # of 0.1-0.5 s each at sf0.1, none of them repeated. The char floor
+    # and the word-conservation scalar run while the seed costs
+    # materialize (all three read only the checkpointed wf), and each
+    # non-final round's stats row (used x the round's own costs) collects
+    # while the next round's costs checkpoint. Only job submission is
+    # reordered: every count, cost and tie-break comes from the same
+    # relations.
+    chars = used = None
     try:
-        # The required-char count is a loop invariant (characters never
-        # drop out); surfaced in every stats row so consumers — the
-        # banded-oracle catalog entry bounds vocab_size with it — read
-        # it off the already-materialized char set instead of
-        # re-deriving it with another corpus pass.
-        def _build_chars():
-            c = (
-                substring_counts(wf, 1)
-                .select("piece")
-                .localCheckpoint(eager=True)
-            )
-            return c, c.count()
-
-        f_chars = pool.submit(_build_chars)
-        # Word conservation: every round segments the same word table,
-        # so corpus_words is a loop invariant too — one tiny aggregate
-        # on the checkpointed counts instead of a per-round
-        # corpus-side SUM.
-        f_words = pool.submit(
-            lambda: int(wf.agg(F.sum("f").alias("__w")).first()["__w"])
-        )
-        vocab = seed_vocab(wf, max_piece_len, vocab_size)
-        costs = with_costs(vocab).localCheckpoint(eager=True)
-        n_vocab = costs.count()
-        chars, n_chars = f_chars.result()
-        corpus_words = f_words.result()
-        stats: list[dict] = []
-        for it in range(n_iters):
-            new_costs = new_n_vocab = None
-            if it < n_iters - 1:
-                # (piece, cnt): best-path piece counts — the ONLY
-                # consumer of the path-carrying DP, materialized once
-                # at vocab size.
-                used = (
-                    viterbi_segments(wf, costs, max_piece_len)
-                    .select("f", F.explode("pieces").alias("piece"))
-                    .groupBy("piece")
-                    .agg(F.sum("f").alias("cnt"))
+        with Rounds() as rounds, ThreadPoolExecutor(max_workers=2) as pool:
+            # The required-char count is a loop invariant (characters never
+            # drop out); surfaced in every stats row so consumers — the
+            # banded-oracle catalog entry bounds vocab_size with it — read
+            # it off the already-materialized char set instead of
+            # re-deriving it with another corpus pass.
+            def _build_chars():
+                c = (
+                    substring_counts(wf, 1)
+                    .select("piece")
                     .localCheckpoint(eager=True)
                 )
-                # ccost packs cost·PIECE_BASE + 1 per piece and words
-                # are <= MAX_WORD_LEN < PIECE_BASE pieces long, so the
-                # per-word floor(Σccost / PIECE_BASE) equals Σ piece
-                # costs exactly — the corpus objective re-aggregates
-                # from the piece counts. Collected on the pool while
-                # the refresh below materializes (it reads this
-                # round's costs; the refresh builds next round's).
-                f_row = pool.submit(
-                    lambda u=used, oc=costs: u.join(
-                        F.broadcast(oc.select("piece", "cost")), "piece"
-                    )
-                    .agg(
-                        F.sum(F.col("cnt") * F.col("cost")).alias(
-                            "corpus_cost"
-                        ),
-                        F.sum("cnt").alias("corpus_pieces"),
-                    )
-                    .first()
-                )
-                topk = top_k_pieces(used, vocab_size)
-                refreshed = (
-                    topk.unionByName(
-                        chars.join(used, "piece", "left").select(
-                            "piece",
-                            F.coalesce("cnt", F.lit(1)).alias("cnt"),
-                        )
-                    )
-                    .groupBy("piece")
-                    .agg(F.max("cnt").alias("cnt"))
-                )
-                new_costs = with_costs(refreshed).localCheckpoint(
-                    eager=True
-                )
-                new_n_vocab = new_costs.count()
-                row = f_row.result()
-            else:
-                # Final round reports stats only — the non-path DP
-                # carries (cost, n_pieces) integers instead of
-                # piece-string arrays.
-                row = viterbi_combined(wf, costs, max_piece_len).agg(
-                    F.sum(F.col("f") * F.col("cost")).alias("corpus_cost"),
-                    F.sum(F.col("f") * F.col("n_pieces")).alias(
-                        "corpus_pieces"
-                    ),
-                ).first()
-            stats.append(
-                {
-                    "iteration": it,
-                    "vocab_size": int(n_vocab),
-                    "corpus_cost_bits": int(row["corpus_cost"]),
-                    "corpus_pieces": int(row["corpus_pieces"]),
-                    "corpus_words": corpus_words,
-                    "n_chars": int(n_chars),
-                }
+                return c, c.count()
+
+            f_chars = pool.submit(_build_chars)
+            # Word conservation: every round segments the same word table,
+            # so corpus_words is a loop invariant too — one tiny aggregate
+            # on the checkpointed counts instead of a per-round
+            # corpus-side SUM.
+            f_words = pool.submit(
+                lambda: int(wf.agg(F.sum("f").alias("__w")).first()["__w"])
             )
-            if it == n_iters - 1:
-                break
-            costs, n_vocab = new_costs, new_n_vocab
+            vocab = seed_vocab(wf, max_piece_len, vocab_size)
+            costs = rounds.checkpoint(with_costs(vocab))
+            n_vocab = costs.count()
+            chars, n_chars = f_chars.result()
+            corpus_words = f_words.result()
+            stats: list[dict] = []
+            for it in range(n_iters):
+                new_costs = new_n_vocab = None
+                if it < n_iters - 1:
+                    # (piece, cnt): best-path piece counts — the ONLY
+                    # consumer of the path-carrying DP, materialized once
+                    # at vocab size.
+                    used = (
+                        viterbi_segments(wf, costs, max_piece_len)
+                        .select("f", F.explode("pieces").alias("piece"))
+                        .groupBy("piece")
+                        .agg(F.sum("f").alias("cnt"))
+                        .localCheckpoint(eager=True)
+                    )
+                    # ccost packs cost·PIECE_BASE + 1 per piece and words
+                    # are <= MAX_WORD_LEN < PIECE_BASE pieces long, so the
+                    # per-word floor(Σccost / PIECE_BASE) equals Σ piece
+                    # costs exactly — the corpus objective re-aggregates
+                    # from the piece counts. Collected on the pool while
+                    # the refresh below materializes (it reads this
+                    # round's costs; the refresh builds next round's).
+                    f_row = pool.submit(
+                        lambda u=used, oc=costs: u.join(
+                            F.broadcast(oc.select("piece", "cost")), "piece"
+                        )
+                        .agg(
+                            F.sum(F.col("cnt") * F.col("cost")).alias(
+                                "corpus_cost"
+                            ),
+                            F.sum("cnt").alias("corpus_pieces"),
+                        )
+                        .first()
+                    )
+                    topk = top_k_pieces(used, vocab_size)
+                    refreshed = (
+                        topk.unionByName(
+                            chars.join(used, "piece", "left").select(
+                                "piece",
+                                F.coalesce("cnt", F.lit(1)).alias("cnt"),
+                            )
+                        )
+                        .groupBy("piece")
+                        .agg(F.max("cnt").alias("cnt"))
+                    )
+                    # This round's costs stay held through this
+                    # checkpoint: the stats row above still reads them.
+                    new_costs = rounds.checkpoint(with_costs(refreshed))
+                    new_n_vocab = new_costs.count()
+                    row = f_row.result()
+                    release(used)
+                else:
+                    # Final round reports stats only — the non-path DP
+                    # carries (cost, n_pieces) integers instead of
+                    # piece-string arrays.
+                    row = viterbi_combined(wf, costs, max_piece_len).agg(
+                        F.sum(F.col("f") * F.col("cost")).alias("corpus_cost"),
+                        F.sum(F.col("f") * F.col("n_pieces")).alias(
+                            "corpus_pieces"
+                        ),
+                    ).first()
+                stats.append(
+                    {
+                        "iteration": it,
+                        "vocab_size": int(n_vocab),
+                        "corpus_cost_bits": int(row["corpus_cost"]),
+                        "corpus_pieces": int(row["corpus_pieces"]),
+                        "corpus_words": corpus_words,
+                        "n_chars": int(n_chars),
+                    }
+                )
+                if it == n_iters - 1:
+                    break
+                costs, n_vocab = new_costs, new_n_vocab
     finally:
-        pool.shutdown(wait=True)
+        release(wf, *(df for df in (chars, used) if df is not None))
     return costs, stats

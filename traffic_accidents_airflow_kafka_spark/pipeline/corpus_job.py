@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import decontam, dedup, sampling
 from ..operators import text as text_ops
+from ..session import release
 from ..sources.sinks import memoized_write, upsert_append
 from ..sources.tables import load_table
 
@@ -104,7 +105,10 @@ def run_corpus_pipeline(
     )
     neardup = exact.join(non_canonical, "doc_id", "left_anti")
     neardup_path = f"{out_dir}/docs_neardup"
-    neardup.write.mode("overwrite").parquet(neardup_path)
+    try:
+        neardup.write.mode("overwrite").parquet(neardup_path)
+    finally:
+        release(comp)
     neardup = spark.read.parquet(neardup_path)
     report["neardup_rows"] = neardup.count()
 

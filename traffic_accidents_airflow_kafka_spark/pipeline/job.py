@@ -67,6 +67,7 @@ from functools import partial
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import release
 from ..sources.sinks import file_snapshot, memoized_write, observed_metrics, upsert_append
 from . import ingest, merge, osm
 from .star_domain import (
@@ -152,10 +153,9 @@ def _star_load(spark: SparkSession, cleaned: DataFrame, summary: DataFrame, out_
             # The FK-integrity check that replaced Postgres constraints.
             report["fk_violations"] = fk_integrity_report(final, dims, fact=fact)
         finally:
-            fact.unpersist()
+            release(fact)
     finally:
-        for dim in dims.values():
-            dim.unpersist()
+        release(*dims.values())
     return report
 
 

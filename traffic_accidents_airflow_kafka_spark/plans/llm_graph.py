@@ -20,6 +20,7 @@ from ..operators import (
     dedup,
     graph,
 )
+from ..session import release
 from .registry import register
 from .llm_shared import _SHINGLE_CTE, _neardup_pairs
 
@@ -227,39 +228,43 @@ def pagerank_rank_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = graph.prepare_pair_graph(_neardup_pairs(spark, sf_dir), "d1", "d2")
     # The two loops are independent driver-coordinated jobs on one graph,
     # hence at one shuffle width, so their scoped_conf holds agree and
-    # they run side by side: each thread materializes its ranks (cache +
-    # count), interleaving the two loops' per-round jobs instead of
-    # serializing them on the collects below.
+    # they run side by side, interleaving their per-round jobs. Each
+    # returns its last round's checkpoint, materialized. The result is
+    # built on the driver, so the graph and both rank relations are
+    # released before it returns.
     from concurrent.futures import ThreadPoolExecutor
 
+    held = [g.edges_deg, g.nodes]
+
     def _run(rank_loop):
-        df = rank_loop(g, iters=10).cache()
-        df.count()
+        df = rank_loop(g, iters=10)
+        held.append(df)
         return df
 
     loops = (graph.pagerank, graph.pagerank_fixedpoint)
-    with ThreadPoolExecutor(max_workers=len(loops)) as pool:
-        fl, fx = pool.map(_run, loops)
-    scale = float(10**12)
-    stats = (
-        fl.join(fx, "id", "full_outer")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                (F.col("rank").isNull() | F.col("rank_u").isNull()).cast("int")
-            ).alias("n_onesided"),
-            F.max(F.abs(F.col("rank") - F.col("rank_u") / scale)).alias(
-                "max_diff"
-            ),
+    try:
+        with ThreadPoolExecutor(max_workers=len(loops)) as pool:
+            fl, fx = pool.map(_run, loops)
+        scale = float(10**12)
+        stats = (
+            fl.join(fx, "id", "full_outer")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(
+                    (F.col("rank").isNull() | F.col("rank_u").isNull()).cast("int")
+                ).alias("n_onesided"),
+                F.max(F.abs(F.col("rank") - F.col("rank_u") / scale)).alias(
+                    "max_diff"
+                ),
+            )
+            .collect()[0]
         )
-        .collect()[0]
-    )
-    topf = [r["id"] for r in fl.orderBy(F.desc("rank"), "id").limit(10).collect()]
-    topx = [
-        r["id"] for r in fx.orderBy(F.desc("rank_u"), "id").limit(10).collect()
-    ]
-    for df in (fl, fx):
-        df.unpersist()
+        topf = [r["id"] for r in fl.orderBy(F.desc("rank"), "id").limit(10).collect()]
+        topx = [
+            r["id"] for r in fx.orderBy(F.desc("rank_u"), "id").limit(10).collect()
+        ]
+    finally:
+        release(*held)
     k = min(len(topf), len(topx))
     overlap = len(set(topf) & set(topx))
     row = (

@@ -14,6 +14,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import Rounds, release
 from ..sources.memo import _artifact
 from ..streaming import core as streaming
 from .registry import register
@@ -915,7 +916,6 @@ def stream_topics_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.fanout import run_topics_fanout
     from .registry import QUERY_REGISTRY
 
-    merged = run_topics_fanout(spark, sf_dir)
     # The 7 BATCH baselines are the parity ground truth — a build-once
     # artifact holding each dashboard as a COLLECTED row multiset
     # (column order + Counter of row tuples). Dashboards are dim-bounded
@@ -942,6 +942,8 @@ def stream_topics_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     )
 
+    merged = run_topics_fanout(spark, sf_dir)
+
     def compare(name: str) -> tuple:
         cols, want = baselines[name]
         got = Counter(
@@ -952,8 +954,12 @@ def stream_topics_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 7 independent tiny collect jobs over checkpointed dashboards —
     # submitted concurrently rather than paying sequential job latency.
-    with ThreadPoolExecutor(max_workers=len(streaming.TOPICS)) as pool:
-        rows = list(pool.map(compare, streaming.TOPICS))
+    # The result is built on the driver, so the dashboards are released.
+    try:
+        with ThreadPoolExecutor(max_workers=len(streaming.TOPICS)) as pool:
+            rows = list(pool.map(compare, streaming.TOPICS))
+    finally:
+        release(*merged.values())
     return spark.createDataFrame(
         rows, "topic string, n_rows long, rows_match boolean"
     ).orderBy("topic")
@@ -1163,7 +1169,6 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(-1).cast("long").alias("last_seq"),
             F.lit("u").alias("op"),
         )
-        .localCheckpoint(eager=True)
     )
     changes = events.filter(F.col("event_id") % 2 == 1).select(
         "user_id",
@@ -1184,14 +1189,15 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(STREAM_CDC_PATH)
     )
-    holder = {"state": state}
+    with Rounds() as rounds:
+        holder = {"state": rounds.checkpoint(state)}
 
-    def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        holder["state"] = apply_changes_versioned(
-            holder["state"], batch, ["user_id"], "last_seq", "op"
-        ).localCheckpoint(eager=True)
+        def merge_batch(batch: DataFrame, batch_id: int) -> None:
+            holder["state"] = rounds.checkpoint(
+                apply_changes_versioned(holder["state"], batch, ["user_id"], "last_seq", "op")
+            )
 
-    streaming.run_foreach_batch(feed, spark, merge_batch)
+        streaming.run_foreach_batch(feed, spark, merge_batch)
     return (
         current_state(holder["state"], "op")
         .select("user_id", "state_value", "last_seq")

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators import bpe
 from ..operators.text import BPE_ISH_PATTERN
 from ..operators.unigram import MAX_WORD_LEN as UNI_MAX_WORD_LEN
+from ..session import release
 from ..sources.memo import _artifact
 from ..sources.tables import load_table
 from .registry import register
@@ -660,12 +661,13 @@ def unigram_hard_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     wf = bpe.word_freq(docs).filter(
         F.length("word") <= unigram.MAX_WORD_LEN
     )
-    _, stats = unigram.hard_em_train(
+    costs, stats = unigram.hard_em_train(
         wf,
         vocab_size=UNI_VOCAB,
         max_piece_len=UNI_MAX_PIECE,
         n_iters=UNI_EM_ITERS,
     )
+    release(costs)  # the result is built from the stats, on the driver
     # The required-char count (constant across rounds: characters never
     # drop out) bounds every refreshed vocabulary from below; top-K ∪
     # chars bounds it from above. Read off the trainer's stats — the

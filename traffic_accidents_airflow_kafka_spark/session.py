@@ -16,6 +16,11 @@ correctness-first local runs but scale-out safe:
 Code that needs a session conf for the length of one job (a graph loop's
 shuffle width, a drain's state-store count) sets it through
 :func:`scoped_conf`, the one writer of temporary session conf.
+
+Materialized frames are freed through :func:`release`, the one way to
+drop a cache or a checkpoint's blocks, and a round loop's checkpoints
+through :class:`Rounds`. An operator releases every checkpoint it made
+that its result does not read, on success and on failure.
 """
 
 from __future__ import annotations
@@ -26,7 +31,7 @@ import warnings
 from contextlib import contextmanager
 from typing import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_APP_NAME = "traffic-accidents-spark-engine"
 
@@ -74,6 +79,54 @@ def scoped_conf(spark: SparkSession, key: str, value: object) -> Iterator[None]:
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, prev)
+
+
+def release(*frames: DataFrame) -> None:
+    """Free each frame's materialized blocks now, not when JVM GC lets
+    the ContextCleaner notice the handle died.
+
+    ``unpersist()`` drops a cache-manager entry (``persist``/``cache``).
+    A ``localCheckpoint`` is not one: its blocks belong to the RDD under
+    the frame's ``LogicalRDD`` plan, which only ``unpersist`` on that RDD
+    frees. A frame can be both (a ``foreachBatch`` micro-batch is a
+    ``LogicalRDD`` and may also be persisted), so every frame gets both.
+    Release only frames whose blocks the caller made: a released
+    checkpoint can no longer be read. Releasing a frame twice is
+    harmless."""
+    for df in frames:
+        df.unpersist()
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
+class Rounds:
+    """The lineage checkpoints of one round loop.
+
+    :meth:`checkpoint` materializes a frame with ``localCheckpoint`` and
+    releases the checkpoint before the previous one: the last two stay
+    alive, so a convergence probe can still join the previous round
+    after the current one materializes. A normal exit releases every
+    held checkpoint but the newest, which the loop may return; an exit
+    by exception releases all of them."""
+
+    def __init__(self) -> None:
+        self._held: list[DataFrame] = []
+
+    def __enter__(self) -> Rounds:
+        return self
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        df = df.localCheckpoint()
+        self._held.append(df)
+        if len(self._held) > 2:
+            release(self._held.pop(0))
+        return df
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        stale = self._held if exc_type is not None else self._held[:-1]
+        self._held = []
+        release(*stale)
 
 
 def _default_parallelism() -> int:

@@ -6,7 +6,8 @@ reused by every consumer until a file they were built from changes.
 Each entry records, before its build, the ``file_snapshot`` of every
 ``*.parquet`` table directly under its ``sf_dir``. A lookup over unchanged
 files is a hit; a lookup that sees another snapshot rebuilds the entry and
-unpersists the stale value. A snapshot that holds an uncommitted table
+frees the stale value with :func:`session.release`, which drops a cache
+and a checkpoint's blocks alike. A snapshot that holds an uncommitted table
 directory (``file_snapshot`` is ``None``) is never trusted: the value is
 built and not stored.
 
@@ -23,6 +24,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import release
 from .sinks import file_snapshot
 
 #: (applicationId, sf_dir, key) -> (tables snapshot, value).
@@ -46,15 +48,16 @@ def _tables_snapshot(sf_dir: str) -> tuple:
     return tuple((n, file_snapshot(os.path.join(sf_dir, n))) for n in names)
 
 
-def _release(value) -> None:
-    """Unpersist a DataFrame value, or a dict's DataFrame values, now
-    rather than when the ContextCleaner notices the handle died."""
-    for v in value.values() if isinstance(value, dict) else [value]:
-        if isinstance(v, DataFrame):
-            try:
-                v.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing to free
+def _evict(mkey: tuple) -> None:
+    """Drop ``mkey``'s entry and release its DataFrame value, or a dict's
+    DataFrame values, now rather than when the ContextCleaner notices
+    the handle died."""
+    value = _ARTIFACTS.pop(mkey)[1]
+    frames = value.values() if isinstance(value, dict) else [value]
+    try:
+        release(*(v for v in frames if isinstance(v, DataFrame)))
+    except Exception:
+        pass  # session already stopped — nothing to free
 
 
 def _artifact(spark: SparkSession, sf_dir: str, key: str, build):
@@ -66,8 +69,7 @@ def _artifact(spark: SparkSession, sf_dir: str, key: str, build):
     if held is not None and held[0] == snapshot:
         return held[1]
     if held is not None:
-        del _ARTIFACTS[mkey]
-        _release(held[1])
+        _evict(mkey)
     t0 = time.perf_counter()
     value = build()
     _ARTIFACT_BUILD_SEC[mkey] = round(
@@ -90,9 +92,9 @@ def artifact_build_times() -> dict[str, float]:
 
 def evict_artifacts(sf_dir: str | None = None) -> None:
     """Drop the memoized artifacts, all of them or those of one
-    ``sf_dir``, and unpersist their DataFrames now."""
+    ``sf_dir``, and release their DataFrames now."""
     for k in [k for k in _ARTIFACTS if sf_dir is None or k[1] == sf_dir]:
-        _release(_ARTIFACTS.pop(k)[1])
+        _evict(k)
 
 
 def artifact_keys() -> set[str]:

@@ -28,6 +28,8 @@ import os
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import release
+
 
 def write_parquet(
     df: DataFrame,
@@ -105,17 +107,19 @@ def upsert_append(
     else:
         novel = new_rows
     # Count once, write what was counted (avoid double computation). A
-    # batch the caller already cached stays cached: its owner unpersists it.
+    # batch the caller already cached stays cached: its owner releases it.
+    # The cache is taken on a projection of our own, so releasing it never
+    # frees a checkpoint the caller passed in as ``new_rows``.
     owned = novel.storageLevel == StorageLevel.NONE
     if owned:
-        novel = novel.persist()
+        novel = novel.select("*").persist()
     try:
         n = novel.count()
         if n:
             novel.write.mode("append").parquet(path)
     finally:
         if owned:
-            novel.unpersist()
+            release(novel)
     return n
 
 

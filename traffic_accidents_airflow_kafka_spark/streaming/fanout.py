@@ -52,6 +52,7 @@ from urllib.parse import urlparse
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import release
 from ..sources.memo import _artifact
 from ..sources.tables import load_table, table_schema
 from ..topic_specs import TOPIC_SPECS, TopicSpec, merge, partial, rollup
@@ -222,13 +223,6 @@ def _meter(key: str, t0: float) -> None:
     _LAST_RUN_META[key] = _LAST_RUN_META.get(key, 0.0) + time.perf_counter() - t0
 
 
-def _release(frame: DataFrame) -> None:
-    """Free a ``localCheckpoint``ed frame's blocks now. ``unpersist()``
-    does not: the blocks belong to the checkpointed RDD under the plan's
-    ``LogicalRDD``, which the cache manager never saw."""
-    frame._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
-
 def run_topics_fanout(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Drain the envelope stream once into per-batch partial aggregates
     held in memory, merge each topic's partials and return {topic: merged
@@ -281,7 +275,7 @@ def run_topics_fanout(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
                 stale = partials[spec.name].get(batch_id)
                 partials[spec.name][batch_id] = df.coalesce(1).localCheckpoint(eager=True)
                 if stale is not None:  # a redelivered batch id
-                    _release(stale)
+                    release(stale)
                 _LAST_RUN_META["topic_sec"][spec.name] += time.perf_counter() - t0
 
         try:
@@ -297,8 +291,7 @@ def run_topics_fanout(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         finally:
             # A failed drain must not leave four caches pinned for the
             # rest of the session.
-            for df in (*parsed.values(), env):
-                df.unpersist()
+            release(*parsed.values(), env)
 
     try:
         t0 = time.perf_counter()
@@ -317,6 +310,4 @@ def run_topics_fanout(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         _meter("merge_sec", t0)
         return out
     finally:
-        for by_batch in partials.values():
-            for frame in by_batch.values():
-                _release(frame)
+        release(*(frame for by_batch in partials.values() for frame in by_batch.values()))

@@ -66,6 +66,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.dedup import gram_support_index
+from ..session import release
 
 _BATCH_MARKER = "_last_applied_batch_id"
 _BUCKETS_FILE = "_n_buckets"
@@ -267,7 +268,7 @@ def gram_index_applier(
         os.replace(pointer_tmp, os.path.join(index_path, _POINTER))
         keep = {new_version} | ({current} if current else set())
         _gc_old_versions(index_path, keep)
-        batch_counts.unpersist()
+        release(batch_counts)
 
     return apply
 
