@@ -20,9 +20,11 @@ import os
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import Observation
 
 from traffic_accidents_airflow_kafka_spark.pipeline import ingest, merge, osm
 from traffic_accidents_airflow_kafka_spark.schemas import BBOX_COUNT_COLUMNS
+from traffic_accidents_airflow_kafka_spark.sources.sinks import upsert_append
 
 RAW_GLOB = "/root/reference/data/raw/bbox_*_osm.csv"
 GOLDEN = "/root/reference/data/processed/combined_bbox_summary_final.csv"
@@ -279,7 +281,7 @@ def test_ingest_clean_accidents(spark, accidents_csv):
     assert ingest.parse_failure_count(cleaned) == 1
 
 
-def test_merge_bins_labels_and_joins(spark, accidents_csv):
+def test_merge_bins_labels_and_joins(spark, accidents_csv, tmp_path):
     cleaned = ingest.clean_accidents(ingest.read_accidents_csv(spark, accidents_csv))
     # Minimal 2-bbox summary; id=1 lands in bbox_35.0_-81.0, id=2 in
     # bbox_-80.5_35.0 (floor semantics on the negative latitude).
@@ -301,8 +303,9 @@ def test_merge_bins_labels_and_joins(spark, accidents_csv):
     assert list(merged.columns) == list(merge.FINAL_COLUMNS)
 
     # Incremental anti-filter: nothing new once id=1 is "loaded" (J4).
-    existing = spark.createDataFrame([(1,)], "id int")
-    assert merge.incremental_new_rows(merged, existing).count() == 0
+    loaded = str(tmp_path / "loaded")
+    spark.createDataFrame([(1,)], "id int").write.parquet(loaded)
+    assert upsert_append(merged, loaded, "id", spark) == 0
 
 
 def test_negative_coord_floor_binning(spark, accidents_csv):
@@ -314,18 +317,18 @@ def test_negative_coord_floor_binning(spark, accidents_csv):
     assert r2["bbox_label"] == "bbox_-80.5_35.0"
 
 
-def _osm_and_geocode(spark, tmp_path, postcode="28054"):
-    """One OSM raw file for bbox_35.0_-81.0 (the filename carries the
-    label, matching the reference's per-file loop) and its geocode row."""
+def _osm_and_geocode(spark, tmp_path, postcode="28054", label="bbox_35.0_-81.0"):
+    """One OSM raw file for ``label`` (the filename carries the label,
+    matching the reference's per-file loop) and its geocode row."""
     osm_dir = tmp_path / "osm"
     osm_dir.mkdir()
-    (osm_dir / "bbox_35.0_-81.0_osm.csv").write_text(
+    (osm_dir / f"{label}_osm.csv").write_text(
         "bbox_label,category,latitude,longitude,tags\n"
         '35.0_-81.0,traffic_signals,35.1,-80.9,"{\'highway\': \'traffic_signals\'}"\n'
         '35.0_-81.0,school,35.2,-80.8,"{\'amenity\': \'school\'}"\n'
     )
     geocode = spark.createDataFrame(
-        [("bbox_35.0_-81.0", "Gastonia", "Gaston County", "North Carolina", postcode)],
+        [(label, "Gastonia", "Gaston County", "North Carolina", postcode)],
         "bbox_label string, city string, county string, state string, postcode string",
     )
     return str(osm_dir / "bbox_*_osm.csv"), geocode
@@ -442,7 +445,7 @@ def test_star_memo_ignores_a_marker_with_another_layout(spark, accidents_csv, tm
     out = str(tmp_path / "warehouse")
     r1 = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
     tables = _star_tables(spark, out)
-    marker_path = os.path.join(out, STAR_MEMO)
+    marker_path = os.path.join(out, STAR_MEMO.marker)
     with open(marker_path) as fh:
         marker = json.load(fh)
     marker["key"]["layout"]["fact_measures"].pop()
@@ -463,7 +466,7 @@ def test_star_memo_records_nothing_for_a_failed_load(spark, accidents_csv, tmp_p
 
     osm_glob, geocode = _osm_and_geocode(spark, tmp_path)
     out = str(tmp_path / "warehouse")
-    marker_path = os.path.join(out, job.STAR_MEMO)
+    marker_path = os.path.join(out, job.STAR_MEMO.marker)
     r1 = job.run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
     assert os.path.exists(marker_path)
     os.remove(f"{out}/dim_date/_SUCCESS")
@@ -564,9 +567,9 @@ def test_fk_report_matches_anti_join_counts_with_null_key_parts(spark, star_csv)
         name: {"dim_date": 1, "dim_location": 4, "dim_accident_type": 1}.get(name, 0)
         for name in star_domain.DIMENSIONS
     }
-    assert star_domain.fk_integrity_report(merged, dims) == anti
-    fact = star_domain.build_fact(merged, dims)
-    assert star_domain.fk_integrity_report(merged, dims, fact=fact) == anti
+    misses = Observation()
+    star_domain.build_fact(merged, dims).observe(misses, *star_domain.fk_miss_counts()).count()
+    assert star_domain.fk_integrity_report(misses) == anti
 
 
 def _marker_job_id(sc, group: str) -> int:
@@ -588,18 +591,19 @@ def _marker_job_id(sc, group: str) -> int:
     return max(ids)
 
 
-#: Spark jobs one replay of the fixture pipeline may submit (local[4],
-#: 8 shuffle partitions). With tasks 5-7 served by the stage-file memo the
-#: replay measured 6 jobs (the two source branches' read-backs and
-#: counts); the ceiling is that plus one.
-REPLAY_JOB_CEILING = 7
+#: Spark jobs a fresh run of the fixture pipeline may submit (local[4],
+#: 8 shuffle partitions). With every count observed on the write it
+#: counts, and every read-back given its schema, it measured 47; the
+#: ceiling is that plus 10%. Re-reading each stage to count it, with
+#: footer-inferred schemas, measured 67.
+FRESH_JOB_CEILING = 51
 
 #: Spark jobs a replay that loads the star again (its memo marker gone)
 #: may submit, same fixture and session. With each dimension computed
-#: once and cached it measured 66; the ceiling is that plus 10%.
+#: once and cached it measured 53; the ceiling is that plus 10%.
 #: Recomputing the dimensions for the fact join and again for 8
 #: per-dimension FK anti-joins measured 129.
-STAR_RELOAD_JOB_CEILING = 72
+STAR_RELOAD_JOB_CEILING = 58
 
 #: Spark jobs the OSM summary's memoized write may submit on the fixture
 #: (local[4], 8 shuffle partitions). The one-aggregate summary measured 3;
@@ -607,30 +611,123 @@ STAR_RELOAD_JOB_CEILING = 72
 SUMMARY_WRITE_JOBS = 3
 
 
-def test_run_pipeline_replay_job_count(spark, accidents_csv, tmp_path):
-    """Count the Spark jobs a replay submits: on the memo hit, and again
-    with the marker gone, so dimension recomputation cannot creep back
-    into the star load either."""
+def _run_jobs(spark, *args) -> tuple[dict, int]:
+    """``run_pipeline(spark, *args)`` and the number of Spark jobs it
+    submitted."""
     import uuid
 
-    from traffic_accidents_airflow_kafka_spark.pipeline.job import STAR_MEMO, run_pipeline
+    from traffic_accidents_airflow_kafka_spark.pipeline.job import run_pipeline
+
+    sc, tag = spark.sparkContext, uuid.uuid4().hex
+    before = _marker_job_id(sc, f"before-{tag}")
+    report = run_pipeline(spark, *args)
+    return report, _marker_job_id(sc, f"after-{tag}") - before - 1
+
+
+def test_run_pipeline_replay_job_count(spark, accidents_csv, tmp_path):
+    """Count the Spark jobs a run submits: fresh; replayed on the memo
+    hit, which submits none; and replayed with the star marker gone, so
+    dimension recomputation cannot creep back into the star load."""
+    from traffic_accidents_airflow_kafka_spark.pipeline.job import STAR_MEMO
+
+    osm_glob, geocode = _osm_and_geocode(spark, tmp_path)
+    args = (accidents_csv, osm_glob, geocode, str(tmp_path / "warehouse"))
+    report, jobs = _run_jobs(spark, *args)
+    assert report["star_loaded"] and 0 < jobs <= FRESH_JOB_CEILING, f"fresh run submitted {jobs}"
+
+    report, jobs = _run_jobs(spark, *args)
+    assert report["final_new_rows"] == report["fact_new_rows"] == 0
+    assert not report["star_loaded"] and jobs == 0, f"replay submitted {jobs} Spark jobs"
+    os.remove(os.path.join(args[-1], STAR_MEMO.marker))
+    report, jobs = _run_jobs(spark, *args)
+    assert report["final_new_rows"] == report["fact_new_rows"] == 0
+    assert report["star_loaded"] and 0 < jobs <= STAR_RELOAD_JOB_CEILING, f"star reload: {jobs}"
+
+
+@pytest.mark.parametrize("memo", ["INGEST_MEMO", "SUMMARY_MEMO"])
+def test_a_committed_stage_without_its_marker_is_counted_once(spark, accidents_csv, tmp_path, memo):
+    """A committed source stage whose marker is gone (written before the
+    marker existed, or the marker deleted) is counted from its file once:
+    the report is the same, and the marker is recorded again, so the next
+    replay submits no job."""
+    from traffic_accidents_airflow_kafka_spark.pipeline import job
 
     osm_glob, geocode = _osm_and_geocode(spark, tmp_path)
     out = str(tmp_path / "warehouse")
-    run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
+    args = (accidents_csv, osm_glob, geocode, out)
+    r1, _ = _run_jobs(spark, *args)
+    marker = os.path.join(out, getattr(job, memo).marker)
+    os.remove(marker)
 
-    def replay_jobs():
-        sc, tag = spark.sparkContext, uuid.uuid4().hex
-        before = _marker_job_id(sc, f"before-{tag}")
-        report = run_pipeline(spark, accidents_csv, osm_glob, geocode, out)
-        assert report["final_new_rows"] == report["fact_new_rows"] == 0
-        return report["star_loaded"], _marker_job_id(sc, f"after-{tag}") - before - 1
+    r2, jobs = _run_jobs(spark, *args)
+    assert r2 == {**_replay_of(r1), "star_loaded": False}
+    assert jobs > 0 and os.path.exists(marker)
+    assert _run_jobs(spark, *args) == (r2, 0)
 
-    loaded, jobs = replay_jobs()
-    assert not loaded and 0 < jobs <= REPLAY_JOB_CEILING, f"replay submitted {jobs} Spark jobs"
-    os.remove(os.path.join(out, STAR_MEMO))
-    loaded, jobs = replay_jobs()
-    assert loaded and 0 < jobs <= STAR_RELOAD_JOB_CEILING, f"star reload submitted {jobs} jobs"
+
+def test_a_rewritten_stage_file_misses_its_marker(spark, accidents_csv, tmp_path):
+    """A committed ingest stage rewritten outside the job keeps its
+    ``_SUCCESS``, so ``memoized_write`` skips it; its changed snapshot
+    misses both the ingest and the star marker, so the run counts the
+    file as it now stands and loads the star from it."""
+    osm_glob, geocode = _osm_and_geocode(spark, tmp_path)
+    out = str(tmp_path / "warehouse")
+    args = (accidents_csv, osm_glob, geocode, out)
+    r1, _ = _run_jobs(spark, *args)
+    assert (r1["ingest_rows"], r1["ingest_parse_failures"]) == (2, 1)
+    clean = spark.read.parquet(f"{out}/accidents_clean")
+    clean.filter(F.col("id") == 1).localCheckpoint().write.mode("overwrite").parquet(
+        f"{out}/accidents_clean"
+    )
+
+    r2, _ = _run_jobs(spark, *args)
+    assert not r2["ingest_wrote"] and r2["star_loaded"]
+    assert (r2["ingest_rows"], r2["ingest_parse_failures"]) == (1, 0)
+    assert r2["final_rows"] == r1["final_rows"] and r2["final_new_rows"] == 0
+    assert _run_jobs(spark, *args) == ({**r2, "star_loaded": False}, 0)
+
+
+def test_run_pipeline_with_an_empty_merge(spark, accidents_csv, tmp_path):
+    """No accident falls inside the one summarized bbox: the merge yields
+    0 rows, the wide table and the fact are written empty, and a replay
+    reports the same with 0 new rows."""
+    from traffic_accidents_airflow_kafka_spark.pipeline.star_domain import DIMENSIONS
+
+    osm_glob, geocode = _osm_and_geocode(spark, tmp_path, label="bbox_40.0_-75.0")
+    out = str(tmp_path / "warehouse")
+    args = (accidents_csv, osm_glob, geocode, out)
+    r1, _ = _run_jobs(spark, *args)
+    assert r1["star_loaded"] and r1["summary_rows"] == 1
+    assert r1["final_rows"] == r1["fact_rows"] == r1["final_new_rows"] == r1["fact_new_rows"] == 0
+    assert all(r1[f"{name}_rows"] == 0 for name in DIMENSIONS)
+    assert all(v == 0 for v in r1["fk_violations"].values())
+    assert spark.read.parquet(f"{out}/fact_accidents").count() == 0
+
+    r2, jobs = _run_jobs(spark, *args)
+    assert r2 == {**_replay_of(r1), "star_loaded": False} and jobs == 0
+
+
+def test_job_reads_parquet_only_with_a_known_schema():
+    """Every ``.read…parquet(`` in ``pipeline/job.py`` passes through
+    ``.schema(...)``: a read without one runs a footer-inference job."""
+    import ast
+    from pathlib import Path
+
+    from traffic_accidents_airflow_kafka_spark.pipeline import job
+
+    tree = ast.parse(Path(job.__file__).read_text())
+    reads = [
+        node for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute) and node.attr == "parquet"
+        and "read" in {n.attr for n in ast.walk(node.value) if isinstance(n, ast.Attribute)}
+    ]
+    assert reads
+    unschemaed = [
+        node.lineno for node in reads
+        if not (isinstance(node.value, ast.Call) and isinstance(node.value.func, ast.Attribute)
+                and node.value.func.attr == "schema")
+    ]
+    assert not unschemaed, f"pipeline/job.py reads parquet without a schema at {unschemaed}"
 
 
 def test_bbox_summary_write_job_count(spark, tmp_path):

@@ -38,12 +38,20 @@ def _cc(spark, sf_dir):
     return lambda: dedup.connected_components(pairs, "d1", "d2"), []
 
 
-def _pagerank(loop):
+def _pagerank(loop, n: int = 12):
     def setup(spark, sf_dir):
-        g = graph.prepare_pair_graph(_path_graph(spark, 12))
+        g = graph.prepare_pair_graph(_path_graph(spark, n))
         return lambda: loop(g, iters=10), [g.edges_deg, g.nodes]
 
     return setup
+
+
+def _dedup_pagerank_exact(spark, sf_dir):
+    from traffic_accidents_airflow_kafka_spark.plans.llm_graph import dedup_pagerank_exact
+    from traffic_accidents_airflow_kafka_spark.plans.llm_shared import _neardup_pairs
+
+    _neardup_pairs(spark, sf_dir)  # build the shared pair artifact outside the count
+    return lambda: dedup_pagerank_exact(spark, sf_dir), []
 
 
 def _train_bpe(spark, sf_dir):
@@ -83,6 +91,10 @@ CASES = {
     "connected_components": _cc,
     "pagerank": _pagerank(graph.pagerank),
     "pagerank_fixedpoint": _pagerank(graph.pagerank_fixedpoint),
+    # A one-node path has no edge: the graph is empty.
+    "pagerank_empty_graph": _pagerank(graph.pagerank, n=1),
+    "pagerank_fixedpoint_empty_graph": _pagerank(graph.pagerank_fixedpoint, n=1),
+    "dedup_pagerank_exact": _dedup_pagerank_exact,
     "train_bpe": _train_bpe,
     "encode_stats": _encode_stats,
     "hard_em_train": _hard_em,
@@ -94,8 +106,10 @@ CASES = {
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_operator_keeps_only_the_checkpoint_its_result_reads(spark, sf_dir, case):
     """The persistent RDDs an operator adds are the checkpoint its result
-    reads, at most one; ``train_bpe`` and ``stream_topics_fanout`` build
-    their results on the driver, so they add none."""
+    reads, at most one; ``train_bpe``, ``stream_topics_fanout`` and the
+    rank loops over an empty graph build their results on the driver, so
+    they add none. The result reads nothing its caller owns: it stays
+    readable after the caller releases those frames."""
     call, owned = CASES[case](spark, sf_dir)
     before = persistent_rdd_ids(spark)
     result = call()
@@ -103,6 +117,8 @@ def test_operator_keeps_only_the_checkpoint_its_result_reads(spark, sf_dir, case
         new = persistent_rdd_ids(spark) - before
         assert new <= read_rdd_ids(result), new
         assert len(new) <= 1
+        assert not read_rdd_ids(result) & set().union(*map(read_rdd_ids, owned))
+        release(*owned)
         result.count()  # what the result reads is still there
     finally:
         release(result, *owned)

@@ -61,6 +61,22 @@ def test_upsert_append_leaves_a_caller_checkpoint_readable(spark, tmp_path):
     assert batch.count() == 2
 
 
+def test_upsert_append_writes_an_empty_batch_into_a_missing_path(spark, tmp_path):
+    """An empty target takes the batch as it is, even an empty one: the
+    path then holds its schema and reads back as an empty table. An empty
+    batch upserted into a table that exists adds no file."""
+    from traffic_accidents_airflow_kafka_spark.sources.sinks import file_snapshot
+
+    path = str(tmp_path / "u")
+    empty = spark.createDataFrame([], "id int, v string")
+    assert sinks.upsert_append(empty, path, "id", spark) == 0
+    back = spark.read.parquet(path)
+    assert back.count() == 0 and back.schema.simpleString() == "struct<id:int,v:string>"
+    snapshot = file_snapshot(path)
+    assert sinks.upsert_append(empty, path, "id", spark) == 0
+    assert file_snapshot(path) == snapshot
+
+
 def test_memoized_write_skips_existing(spark, tmp_path):
     path = str(tmp_path / "m")
     df1 = spark.range(5)

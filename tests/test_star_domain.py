@@ -4,6 +4,7 @@ item 4): dims built, fact FK-resolved, referential integrity by anti-join."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Observation
 
 from traffic_accidents_airflow_kafka_spark.pipeline import ingest, merge, star_domain
 from traffic_accidents_airflow_kafka_spark.schemas import BBOX_COUNT_COLUMNS
@@ -57,9 +58,16 @@ def test_fact_resolves_all_fks(spark, merged):
     assert rows[1]["injuries_total"] == 1.0 and rows[1]["num_units"] == 2
 
 
+def _fk_report(merged, dims) -> dict[str, int]:
+    """The FK report observed on a job that consumes the resolved fact."""
+    misses = Observation()
+    star_domain.build_fact(merged, dims).observe(misses, *star_domain.fk_miss_counts()).count()
+    return star_domain.fk_integrity_report(misses)
+
+
 def test_fk_integrity_clean(spark, merged):
     dims = star_domain.build_dimensions(merged)
-    report = star_domain.fk_integrity_report(merged, dims)
+    report = _fk_report(merged, dims)
     assert report == {name: 0 for name in star_domain.DIMENSIONS}
 
 
@@ -69,6 +77,6 @@ def test_fk_integrity_detects_missing_dim_rows(spark, merged):
     import pyspark.sql.functions as F
 
     dims["dim_weather"] = dims["dim_weather"].filter(F.col("weather_condition") != "RAIN")
-    report = star_domain.fk_integrity_report(merged, dims)
+    report = _fk_report(merged, dims)
     assert report["dim_weather"] == 1
     assert sum(v for k, v in report.items() if k != "dim_weather") == 0

@@ -8,9 +8,9 @@ Spark-native shape:
 2. INNER broadcast join on bbox_label (J1/J2 — the summary is ≤36 rows;
    the 100 TB accident side never shuffles).
 3. Incremental anti-filter against already-loaded ids (J4/P6/S6) and
-   append — replacing the reference's per-row
-   ``INSERT … ON CONFLICT DO NOTHING`` loop (:647-653), its O(n)
-   round-trip bottleneck (SURVEY §3.1 step 5).
+   append, in ``sources/sinks.py:upsert_append`` — replacing the
+   reference's per-row ``INSERT … ON CONFLICT DO NOTHING`` loop
+   (:647-653), its O(n) round-trip bottleneck (SURVEY §3.1 step 5).
 """
 
 from __future__ import annotations
@@ -97,8 +97,3 @@ def merge_accidents(accidents: DataFrame, summary: DataFrame) -> DataFrame:
         *FINAL_COLUMNS
     )
 
-
-def incremental_new_rows(merged: DataFrame, existing_ids: DataFrame) -> DataFrame:
-    """J4 — rows not yet loaded (:619-621); pair with sinks.upsert_append
-    for the write."""
-    return merged.join(existing_ids.select("id"), "id", "left_anti")

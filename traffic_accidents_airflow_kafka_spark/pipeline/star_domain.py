@@ -24,14 +24,15 @@ every fact join is a broadcast left join — the fact table never shuffles
 (SURVEY §2.3 J3). The job (``pipeline/job.py``) computes each dimension
 once: it caches the 8 frames of ``build_dimensions``, writes them
 concurrently, resolves the fact against the cached frames, and counts FK
-misses on that same resolved fact — the reference's ``load_hechos``
-shape (build the 8 lookups once, probe every fact row against them).
+misses on that same resolved fact as its upsert consumes it — the
+reference's ``load_hechos`` shape (build the 8 lookups once, probe every
+fact row against them).
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 from ..functions import scalar as fn
 from ..operators.star import build_dimension
@@ -103,29 +104,29 @@ def build_fact(final: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
     return fact.select("id", *id_cols, *FACT_MEASURES)
 
 
-def fk_integrity_report(
-    final: DataFrame, dims: dict[str, DataFrame], fact: DataFrame | None = None
-) -> dict[str, int]:
+def fk_miss_counts() -> list[Column]:
+    """One aggregate per dimension, named after it: the resolved fact
+    rows whose FK is null."""
+    return [
+        F.count(F.when(F.col(id_col).isNull(), 1)).alias(name)
+        for name, (_cols, id_col) in DIMENSIONS.items()
+    ]
+
+
+def fk_integrity_report(misses: Observation) -> dict[str, int]:
     """Violations per dimension (the replacement for the Postgres FK
     constraints :138-145). All-zero ⇔ the star is referentially sound.
 
-    One aggregate over the resolved fact counts the rows whose FK is null.
-    That equals the per-dimension anti-join count
+    ``misses`` is an Observation of :func:`fk_miss_counts` on the resolved
+    fact (``build_fact``), attached below an action that consumed every
+    fact row (the job's fact upsert), so the report costs no job of its
+    own. The null-FK count equals the per-dimension anti-join count
     (``operators/star.py:fk_violations``) under the invariant that every
     dimension has unique natural keys and non-null ids — which
     ``build_dimension`` guarantees (dropDuplicates + row_number): each
     fact row then meets at most one dimension row in the left join, and a
     null id means no row matched. Both joins are null-unsafe, so a key
     with a NULL part is a miss in either form.
-
-    ``fact``: ``build_fact(final, dims)`` when the caller already holds it
-    (the job passes its cached fact; resolving the 8 joins again costs
-    about 0.3 s of driver-side analysis per call on a 4-core host).
     """
-    if fact is None:
-        fact = build_fact(final, dims)
-    misses = fact.agg(*[
-        F.count(F.when(F.col(id_col).isNull(), 1)).alias(name)
-        for name, (_cols, id_col) in DIMENSIONS.items()
-    ]).first()
-    return {name: int(misses[name]) for name in DIMENSIONS}
+    counts = misses.get
+    return {name: int(counts[name]) for name in DIMENSIONS}

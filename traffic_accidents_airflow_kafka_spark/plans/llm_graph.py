@@ -182,7 +182,11 @@ def _pagerank_fp_oracle(iters: int = 10, scale: int = 10**12) -> str:
 )
 def dedup_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = graph.prepare_pair_graph(_neardup_pairs(spark, sf_dir), "d1", "d2")
-    ranks = graph.pagerank_fixedpoint(g, iters=10)
+    try:
+        ranks = graph.pagerank_fixedpoint(g, iters=10)
+    finally:
+        # The result reads only the ranks, never the graph.
+        release(g.edges_deg, g.nodes)
     return (
         ranks.select(
             F.col("id").alias("doc_id"), F.col("rank_u").alias("rank_micro")

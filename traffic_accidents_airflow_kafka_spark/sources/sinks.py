@@ -16,17 +16,19 @@ equivalents:
   removes the shuffle entirely.
 - ``memoized_write`` (S12) = idempotent skip-if-committed, replacing the
   reference's os.path.exists guards (:170-173, 369-372).
-- ``file_snapshot`` keys the memos over files (the ETL star-load memo,
-  the build-once memo in ``sources/memo.py``), so a rewritten file is
-  never served from a stale entry.
+- ``file_snapshot`` keys the memos over files (the ETL job's stage
+  memos, the build-once memo in ``sources/memo.py``), so a rewritten file
+  is never served from a stale entry.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyspark.sql.functions as F
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..session import release
 
@@ -100,12 +102,31 @@ def upsert_append(
     multi-writer upserts use a table format with MERGE (Delta/Iceberg).
     The anti-join probe reads only the key column (column pruning), so the
     existing-data scan stays narrow at scale.
+
+    An empty target (no data file at ``path``) has no key to anti-join
+    against: the batch is written as it is, in one job that also counts
+    it (an Observation on the write), with no cache. So after an upsert
+    into a missing ``path`` the table holds exactly the rows written. An
+    empty batch still writes one part file holding the schema, so a table
+    that starts empty reads back as an empty table, not a missing path.
+
+    A non-empty target counts the novel rows first and appends only when
+    there are some: Spark's append of an empty frame still adds an empty
+    part file, which would change the directory's ``file_snapshot`` and
+    make an idempotent replay look like a rewrite. Its existing keys are
+    read with the batch's key type, so the probe runs no footer-inference
+    job: the batch's ``key`` column must have the type stored at ``path``
+    (every caller upserts batches of one plan into its own target), or
+    the Parquet read fails on the type mismatch.
     """
-    if _path_has_data(path):
-        existing_keys = spark.read.parquet(path).select(key)
-        novel = new_rows.join(existing_keys, key, "left_anti")
-    else:
-        novel = new_rows
+    if not _path_has_data(path):
+        return observed_metrics(
+            new_rows,
+            {"rows": F.count(F.lit(1))},
+            action=lambda observed: observed.write.mode("append").parquet(path),
+        )["rows"]
+    existing_keys = spark.read.schema(StructType([new_rows.schema[key]])).parquet(path)
+    novel = new_rows.join(existing_keys, key, "left_anti")
     # Count once, write what was counted (avoid double computation). A
     # batch the caller already cached stays cached: its owner releases it.
     # The cache is taken on a projection of our own, so releasing it never
@@ -130,10 +151,10 @@ def memoized_write(
     output yet. Returns True when a write happened. (The reference's
     ``os.path.exists`` guard, made format-aware.)
 
-    Committed means Spark's ``_SUCCESS`` marker is present: the job
-    commit writes it last, so part files without it are the leftovers of
-    a killed write and get overwritten, never trusted."""
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
+    Committed is :func:`is_committed`: part files without Spark's
+    ``_SUCCESS`` marker are the leftovers of a killed write and get
+    overwritten, never trusted."""
+    if is_committed(path):
         return False
     if fmt == "parquet":
         df.write.mode("overwrite").parquet(path)
@@ -151,11 +172,11 @@ def file_snapshot(path: str) -> tuple | None:
 
     ``None`` — a miss, never stored as a key — when ``path`` is missing or
     is a directory without Spark's ``_SUCCESS`` marker: uncommitted
-    output is never trusted (the ``memoized_write`` rule)."""
+    output is never trusted (:func:`is_committed`)."""
     if os.path.isfile(path):
         st = os.stat(path)
         return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    if not is_committed(path):
         return None
     files = []
     for root, dirs, names in os.walk(path):
@@ -166,6 +187,13 @@ def file_snapshot(path: str) -> tuple | None:
                 st = os.stat(full)
                 files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
     return tuple(sorted(files))
+
+
+def is_committed(path: str) -> bool:
+    """Whether the directory ``path`` holds committed output: Spark's job
+    commit writes the ``_SUCCESS`` marker last, so its presence means the
+    write completed."""
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 def _path_has_data(path: str) -> bool:
